@@ -6,6 +6,7 @@ integrity across the ★ tables, month-boundary validity windows,
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 from pathlib import Path
 
@@ -18,9 +19,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    """local[$SPARK_GRAFT_CPUS] (8 when unset), the width the engine's
+    own sessions use; the shuffle width stays 8 so partition-shaped
+    test expectations do not move with the host."""
     from vbb_data_pipeline_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("tests", cpus=cpus, shuffle_partitions=8)
     yield s
 
 

@@ -5,6 +5,8 @@ jumping) — the near-dup cluster-assembly stage
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from vbb_data_pipeline_spark.operators.dedup import connected_components
@@ -98,6 +100,17 @@ def test_cc_converges_with_60bit_ids(spark):
         assert r.cluster_id == (r.node // 2) * 2  # pair root = even id
 
 
+def _mega_family(spark):
+    """60 near-identical variants plus one unrelated document."""
+    base = (
+        "the quick brown fox jumps over the lazy dog near the river "
+        "bank while birds sing in the tall green trees all day long"
+    )
+    rows = [(i, f"v{i} " + base) for i in range(60)]
+    rows.append((1000, "a completely different document about trains"))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_star_pair_mode_collapses_mega_family(spark):
     """pair_mode='star': a family of near-identical variants (the
     mega-family shape of crawl corpora — measured 2.5e9 candidate
@@ -111,13 +124,7 @@ def test_star_pair_mode_collapses_mega_family(spark):
         minhash_signatures,
     )
 
-    base = (
-        "the quick brown fox jumps over the lazy dog near the river "
-        "bank while birds sing in the tall green trees all day long"
-    )
-    rows = [(i, f"v{i} " + base) for i in range(60)]
-    rows.append((1000, "a completely different document about trains"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = _mega_family(spark)
     sigs = minhash_signatures(df, "text", "doc_id", hash_mode="oracle")
     star = lsh_candidate_pairs(
         sigs, "doc_id", hash_mode="oracle", pair_mode="star"
@@ -252,3 +259,145 @@ def test_incremental_index_param_marker(spark, tmp_path):
     ).collect()
     with _pytest.raises(ValueError, match="mismatched"):
         dedup_index_write(df, p, num_hashes=16, bands=4, mode="append")
+
+
+# ---------------------------------------------------------------------------
+# Rewrites pinned against the constructions they replaced. The old form
+# of each operator is kept here, in the test, as the reference.
+
+
+def _mixed_corpus(spark, seed: int, n_docs: int = 240):
+    """Seeded corpus with every shape the dedup tier distinguishes:
+    near-dup families (one word appended or swapped), token-reordered
+    and token-repeated exact-ish duplicates (shared fingerprints),
+    zero-token documents (null fingerprint) and unrelated singletons.
+    Ids are unique and non-null, and their order is shuffled against
+    the content so the min-id survivor is not always the first copy."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)]
+    rows: list[str] = []
+    while len(rows) < n_docs:
+        words = rng.choices(vocab, k=rng.randint(8, 30))
+        kind = rng.random()
+        if kind < 0.3:  # near-dup family
+            rows.append(" ".join(words))
+            for _ in range(rng.randint(1, 6)):
+                v = list(words)
+                if rng.random() < 0.5:
+                    v.append(rng.choice(vocab))
+                else:
+                    v[rng.randrange(len(v))] = rng.choice(vocab)
+                rows.append(" ".join(v))
+        elif kind < 0.5:  # same token set: reordered / repeated copies
+            rows.append(" ".join(words))
+            for _ in range(rng.randint(1, 4)):
+                v = words + rng.choices(words, k=rng.randint(0, 3))
+                rng.shuffle(v)
+                rows.append(" ".join(v))
+        elif kind < 0.6:  # zero tokens: null fingerprint, never merged
+            rows.append(rng.choice(["", "!!! ???", "你好世界", "... -- ..."]))
+        else:
+            rows.append(" ".join(words))
+    ids = rng.sample(range(1, 10 * len(rows)), len(rows))
+    return spark.createDataFrame(
+        list(zip(ids, rows)), "doc_id long, text string"
+    )
+
+
+def _fingerprint_dedup_three_branch(df, text_col, id_col):
+    """The pre-rewrite fingerprint_dedup: fingerprint evaluated in the
+    not-null filter, the keep-min group and the null pass-through."""
+    from pyspark.sql import functions as F
+
+    from vbb_data_pipeline_spark.functions.text import fingerprint
+    from vbb_data_pipeline_spark.operators.dedup import exact_dedup
+
+    fp = df.withColumn("_fp", fingerprint(text_col))
+    deduped = exact_dedup(
+        fp.filter(F.col("_fp").isNotNull()), ["_fp"], id_col
+    ).drop("_fp")
+    return deduped.unionByName(fp.filter(F.col("_fp").isNull()).drop("_fp"))
+
+
+def _star_by_hub_join(sigs, id_col, num_hashes=16, bands=4, hash_mode="oracle"):
+    """The pre-rewrite star edges: a groupBy-min hub table joined back
+    onto the melted band buckets."""
+    from pyspark.sql import functions as F
+
+    from vbb_data_pipeline_spark.operators.dedup import _band_buckets
+
+    banded = sigs.select(
+        F.col(id_col), *_band_buckets(id_col, num_hashes, bands, hash_mode)
+    )
+    melted = banded.select(
+        F.col(id_col),
+        F.explode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias("_bucket"),
+    )
+    hubs = melted.groupBy("_bucket").agg(F.min(id_col).alias("_hub"))
+    return (
+        melted.join(hubs, "_bucket")
+        .filter(F.col(id_col) != F.col("_hub"))
+        .select(F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b"))
+        .distinct()
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("seed", [11, 12])
+def test_fingerprint_dedup_equals_three_branch_form(spark, seed):
+    from vbb_data_pipeline_spark.operators.dedup import fingerprint_dedup
+
+    df = _mixed_corpus(spark, seed)
+    got = _rows(fingerprint_dedup(df, "text", "doc_id"))
+    want = _rows(_fingerprint_dedup_three_branch(df, "text", "doc_id"))
+    assert got == want
+    # the corpus exercises every branch: duplicates removed, zero-token
+    # (null-fingerprint) docs kept
+    assert len(got) < df.count()
+    assert any(not re.search("[a-z0-9]", t.lower()) for _, t in got)
+
+
+@pytest.mark.parametrize("corpus", ["mega_family", "mixed"])
+def test_star_edges_equal_hub_join_construction(spark, corpus):
+    from vbb_data_pipeline_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    df = _mega_family(spark) if corpus == "mega_family" else _mixed_corpus(spark, 13)
+    sigs = minhash_signatures(df, "text", "doc_id", hash_mode="oracle")
+    got = _rows(lsh_candidate_pairs(sigs, "doc_id", hash_mode="oracle", pair_mode="star"))
+    want = _rows(_star_by_hub_join(sigs, "doc_id"))
+    assert got and got == want
+
+
+def test_star_candidates_plan_runs_minhash_once(spark):
+    """The executed star-candidate plan holds exactly one MinHash
+    aggregate — one final ``min`` over the shingle hashes, the
+    aggregate producing ``mh_0`` (the optimizer folds the mh_* columns
+    straight into the band buckets, so it is matched by its inputs).
+    The hub is a window over the banded signatures, so no second
+    branch re-runs the shingle/hash/groupBy(doc_id) lineage."""
+    from vbb_data_pipeline_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    df = _mixed_corpus(spark, 14)
+    sigs = minhash_signatures(df, "text", "doc_id", hash_mode="oracle")
+    star = lsh_candidate_pairs(sigs, "doc_id", hash_mode="oracle", pair_mode="star")
+    star.collect()
+    plan = star._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.partition("== Initial Plan ==")[0]
+    minhash_aggs = [
+        ln
+        for ln in final.splitlines()
+        if "Aggregate(" in ln and "functions=[min(((_h1#" in ln
+    ]
+    assert len(minhash_aggs) == 1, plan

@@ -1,13 +1,18 @@
 #!/usr/bin/env python
-"""Generate COVERAGE.md: SURVEY.md §2 operator rows → registry
-queries, operator modules and tests that implement them. Run after
-adding queries: python tools/gen_coverage.py > COVERAGE.md"""
+"""Print the coverage map: SURVEY.md §2 operator rows → registry
+queries, operator modules and tests that implement them, with each
+entry's latest green CORRECTNESS row. Printed on demand, not
+committed:
+
+    python tools/gen_coverage.py"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from vbb_data_pipeline_spark.queries import all_queries  # noqa: E402
 
@@ -51,34 +56,11 @@ R7_FOLDS = [
 
 def driver_rows() -> dict[str, str]:
     """Per registry entry: the latest round whose driver CORRECTNESS
-    artifact contains a fully-green row under the entry's name.
-
-    Only GIT-TRACKED artifacts are considered (r9 verdict item 2):
-    the driver drops CORRECTNESS_r{N}.json at round close, AFTER the
-    builder's last commit, so an untracked artifact must not flip the
-    stamps under the committed COVERAGE.md — that design made
-    tests/test_coverage_doc.py structurally red at every judging run.
-    The new artifact is picked up the round after, once committed.
-    """
+    artifact contains a fully-green row under the entry's name."""
     import glob
     import json
-    import os
-    import subprocess
 
-    try:
-        tracked = subprocess.run(
-            ["git", "ls-files", "CORRECTNESS_r*.json"],
-            cwd="/root/repo",
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
-        ).stdout.split()
-        paths = sorted(os.path.join("/root/repo", p) for p in tracked)
-    except (OSError, subprocess.SubprocessError):
-        # not a git checkout (e.g. an exported tree): fall back to all
-        paths = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
-
+    paths = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     latest: dict[str, str] = {}
     for path in paths:
         rnd = os.path.basename(path)[len("CORRECTNESS_"):-len(".json")]

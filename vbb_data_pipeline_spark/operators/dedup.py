@@ -38,6 +38,14 @@ from vbb_data_pipeline_spark.functions.text import fingerprint, ngrams, tokens
 #: Model-scale frames (centroids, vocab, per-round scalars) keep the
 #: default. (PySpark naming: MEMORY_AND_DISK is the SERIALIZED level;
 #: the deserialized DataFrame-cache default is MEMORY_AND_DISK_DESER.)
+#:
+#: Trade-off shared by every ``localCheckpoint`` in this module: the
+#: blocks exist only on the executor that computed them and the
+#: lineage behind them is cut, so losing an executor (preemption,
+#: dynamic allocation) loses the blocks and FAILS the job instead of
+#: recomputing them. A single-host run cannot lose an executor; a
+#: cluster deployment that expects executor loss should swap in a
+#: reliable ``checkpoint()`` at these call sites.
 CKPT_SER = StorageLevel.MEMORY_AND_DISK
 
 
@@ -68,12 +76,40 @@ def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     Docs with a NULL fingerprint (empty token set — see
     ``functions/text.fingerprint``) are kept AS-IS: no token evidence
     means no basis for calling two documents duplicates, so they pass
-    through rather than collapsing into one survivor."""
-    fp = df.withColumn("_fp", fingerprint(text_col))
-    deduped = exact_dedup(
-        fp.filter(F.col("_fp").isNotNull()), ["_fp"], id_col
-    ).drop("_fp")
-    return deduped.unionByName(fp.filter(F.col("_fp").isNull()).drop("_fp"))
+    through rather than collapsing into one survivor.
+
+    Each document is fingerprinted ONCE: a narrow ``(id, _fp)`` frame
+    is ``localCheckpoint``-ed and the survivor ids — the min id of
+    every non-null fingerprint group plus every null-fingerprint id —
+    are semi-joined back onto ``df``. Consumers of the result (E4's
+    MinHash branches, Jaccard sets and final anti-join) therefore
+    re-read the scan but never re-fingerprint it. Only the
+    id/fingerprint frame is pinned, never the text-bearing one
+    (pinned text starved execution memory at the 10 GB crawl decade —
+    the ``materialize_dir`` note in ``pipelines.e6_crawl_corpus``).
+    Losing an executor loses the checkpoint and fails the job (see
+    ``CKPT_SER``).
+
+    Equivalence with fingerprinting inside the keep-min group and the
+    null pass-through (``exact_dedup`` on the non-null rows, unioned
+    with the null rows): a row survives there iff its id is the min id
+    of its fingerprint group or its fingerprint is null; here iff its
+    id is in that same id set. The two agree whenever ids are unique
+    and non-null, which E4's output contract already requires. (A
+    duplicated id could survive here through another row's group; a
+    null id never matches the semi-join, so a null-id,
+    null-fingerprint row would drop.)"""
+    fp = df.select(
+        F.col(id_col), fingerprint(text_col).alias("_fp")
+    ).localCheckpoint(storageLevel=CKPT_SER)
+    keep_ids = (
+        fp.filter(F.col("_fp").isNotNull())
+        .groupBy("_fp")
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+        .unionByName(fp.filter(F.col("_fp").isNull()).select(id_col))
+    )
+    return df.join(keep_ids, id_col, "left_semi")
 
 
 #: Modulus for the double-hashing MinHash family: 2^59 keeps
@@ -223,9 +259,15 @@ def lsh_candidate_pairs(
         )
         melted = melted.join(ok, "_bucket", "left_semi")
     if pair_mode == "star":
-        hubs = melted.groupBy("_bucket").agg(F.min(id_col).alias("_hub"))
+        # The hub is a window min over the bucket, so ``melted`` — and
+        # the signature lineage under it (shingle, hash, the
+        # groupBy(doc_id) shuffle) — is read by ONE branch. A
+        # groupBy-min hub table joined back onto ``melted`` yields the
+        # same distinct (hub, member) edges but reads it twice, and
+        # AQE does not reuse that exchange.
+        hub = F.min(id_col).over(Window.partitionBy("_bucket"))
         return (
-            melted.join(hubs, "_bucket")
+            melted.withColumn("_hub", hub)
             .filter(F.col(id_col) != F.col("_hub"))
             .select(
                 F.col("_hub").alias("id_a"),
@@ -282,7 +324,7 @@ def jaccard_pairs(
     # pays a plan-tree comparison against it during physical planning
     # (measured: +3-30 s per query later in a bench run) with no way
     # to unpersist from here — checkpointed frames bypass the
-    # CacheManager entirely.
+    # CacheManager entirely. Executor loss fails the job (CKPT_SER).
     candidates = candidates.localCheckpoint(storageLevel=CKPT_SER)
     cand_ids = (
         candidates.select(F.col("id_a").alias(id_col))
@@ -506,7 +548,8 @@ def connected_components(
     # query's planning with a canonicalized-plan comparison for the
     # life of the loop — the round-2 bench-regression pattern. A
     # checkpoint also needs no paired unpersist, so an exception
-    # mid-loop can't leak a cache entry.
+    # mid-loop can't leak a cache entry. The cost: losing an executor
+    # loses the edge/label blocks and fails the job (CKPT_SER).
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -797,7 +840,8 @@ def span_removal_fixed_point(
     converge in 2–3 rounds in practice because round k only re-matches
     text adjacent to round k−1's cuts. Each round's output is
     ``localCheckpoint``-ed: without truncation round k would re-run
-    every earlier round's full span plan per consumer.
+    every earlier round's full span plan per consumer — at the price
+    that losing an executor fails the job (see ``CKPT_SER``).
     """
     cur = df.select(F.col(id_col), F.col(text_col).alias("text"))
     acc = df.select(
@@ -1069,7 +1113,10 @@ def dedup_index_write(
     # MEMORY_AND_DISK, and it sits AFTER the rebuilding sentinel so
     # the sentinel still lands before the rebuild's first Spark job
     # (the crash-ordering contract above is unchanged: bands first,
-    # fps last as the commit point, marker after both).
+    # fps last as the commit point, marker after both). Losing an
+    # executor mid-build loses the fp blocks and fails the write
+    # (see CKPT_SER); a re-run overwrite is the recovery, as for any
+    # other crash under the rebuilding sentinel.
     fp = fp.localCheckpoint()
     sig = minhash_signatures(
         df.join(

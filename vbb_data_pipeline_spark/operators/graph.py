@@ -87,6 +87,10 @@ def pagerank(
     # tiny tasks of constant overhead per stage) for a saving whose
     # only content is re-exchanging the skinny (node, rank) table,
     # the same magnitude as the unavoidable contribution aggregate.
+    # Trade-off of every localCheckpoint in this function: the blocks
+    # live only on the executor that computed them and the lineage is
+    # cut, so losing an executor (preemption, dynamic allocation)
+    # loses them and fails the job instead of recomputing.
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .repartition("src")

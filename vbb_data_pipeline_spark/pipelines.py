@@ -226,11 +226,19 @@ def e4_corpus_prep(
        the benchmark set (``operators/contamination.py``; eval grams
        broadcast, corpus text never shuffles).
     3. **Exact-ish dedup** — sorted-token-set fingerprint keep-lowest-id
-       (one hash aggregation; wide columns never shuffle).
+       (one hash aggregation; wide columns never shuffle). Each doc is
+       fingerprinted once: the narrow ``(doc_id, fingerprint)`` frame
+       is checkpointed and the survivor ids semi-join back onto the
+       text-bearing frame, so every later branch below reads survivors
+       without re-fingerprinting (``operators/dedup.fingerprint_dedup``).
     4. **Near-dup removal** — MinHash → LSH banding → exact-Jaccard
        re-rank → connected components; every non-canonical cluster
        member (cluster_id ≠ doc id) is dropped. Linear-cost at 100 TB:
-       no O(n²) stage anywhere (see operators/dedup.py). When
+       no O(n²) stage anywhere (see operators/dedup.py). MinHash runs
+       once per doc in both pair modes: ``lsh_pair_mode="star"`` takes
+       each bucket's hub as a window min over the banded signatures
+       instead of joining a hub table back onto them (the join's two
+       branches each re-ran the signature shuffle). When
        ``embedding_col`` names a vector column on ``docs``, SEMANTIC
        near-dup pairs (hyperplane-LSH-blocked cosine strictly above
        ``cosine_threshold``) union with the text pairs before cluster

@@ -968,9 +968,13 @@ def warc_to_documents(
     HTML responses, decode UTF-8 (replace), extract text.
 
     ``doc_id`` is a deterministic 60-bit hash of (file, record index)
-    — stable across reruns and engines, the id convention the dedup
-    operators key on. One Arrow stage for the extraction; everything
-    else is native columns.
+    — the id convention the dedup operators key on. ``file`` is the
+    archive's FULL path as read, so ids repeat across reruns and
+    engines only while the landing stays at the same path: moving or
+    re-staging the archives changes every id, and with it which copy
+    wins each min-id election (URL dedup, fingerprint and near-dup
+    survivors). One Arrow stage for the extraction; everything else
+    is native columns.
 
     ``extractor``: ``"naive"`` (all visible text, block tags → line
     breaks) or ``"density"`` (:func:`html_text_density` — block-level
