@@ -61,7 +61,7 @@ def test_escaped_string_literals_session(spark):
         (5, "'"),
     ]
     try:
-        for mode in ("true", "false"):
+        for mode in ("true", "false", "TRUE"):
             spark.conf.set(key, mode)
             got = sorted(
                 map(tuple, literal_rows_df(spark, tricky, "i long, s string").collect())

@@ -188,3 +188,42 @@ def test_bm25_shared_tf_parity(spark, docs):
         )
     )
     assert got == want
+
+
+def test_shared_tf_parity_with_null_id(spark, docs):
+    """A NULL-id row is no document on either path: BM25 and TF-IDF
+    computed from the battery's shared tf frame (which filters
+    ``doc_id IS NOT NULL``) equal their internal token-stream paths,
+    and neither returns a NULL id."""
+    from vbb_data_pipeline_spark.functions.text import tf_idf_top_terms, tokens
+
+    null_row = spark.createDataFrame(
+        [(None, "hash join batch small vector data hash join")],
+        "doc_id long, text string",
+    )
+    with_null = docs.unionByName(null_row)
+    tf_all = (
+        with_null.select(
+            F.col("doc_id"), F.explode(tokens("text")).alias("term")
+        )
+        .filter(F.col("doc_id").isNotNull() & F.col("term").isNotNull())
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    bm_int = sorted(map(tuple, bm25_topk(spark, with_null, QUERIES).collect()))
+    bm_tf = sorted(
+        map(tuple, bm25_topk(spark, with_null, QUERIES, tf_all=tf_all).collect())
+    )
+    assert bm_int == bm_tf
+    assert bm_int == sorted(map(tuple, bm25_topk(spark, docs, QUERIES).collect()))
+    ti_int = sorted(
+        map(tuple, tf_idf_top_terms(with_null, "text", "doc_id", k=3).collect())
+    )
+    ti_tf = sorted(
+        map(
+            tuple,
+            tf_idf_top_terms(with_null, "text", "doc_id", k=3, tf=tf_all).collect(),
+        )
+    )
+    assert ti_int == ti_tf
+    assert all(r[0] is not None for r in ti_int)

@@ -403,17 +403,18 @@ def test_crash_before_index_write_converges(spark, kw, monkeypatch):
     any earlier append. (The reverse order had an unclosable window:
     once survivors hit the index, a replay's step-0 guard removed
     them from the batch and their 'new' audit rows could never be
-    rebuilt.)"""
+    rebuilt.) The crash is injected at the core index writer the
+    ingest loop calls with its once-computed frames."""
     import vbb_data_pipeline_spark.operators.dedup as dd
 
-    real = dd.dedup_index_write
+    real = dd.dedup_index_write_frames
     calls = {"n": 0}
 
     def crashing(*a, **k):
         calls["n"] += 1
         raise RuntimeError("injected crash before index append")
 
-    monkeypatch.setattr(dd, "dedup_index_write", crashing)
+    monkeypatch.setattr(dd, "dedup_index_write_frames", crashing)
     batch = _docs(spark, [(1, GOOD), (2, GOOD2), (3, GOOD)])
     import pytest as _pytest
 
@@ -426,7 +427,7 @@ def test_crash_before_index_write_converges(spark, kw, monkeypatch):
     corpus_before = spark.read.parquet(kw["corpus_path"]).count()
 
     # replay (checkpoint never committed) with the crash removed
-    monkeypatch.setattr(dd, "dedup_index_write", real)
+    monkeypatch.setattr(dd, "dedup_index_write_frames", real)
     corpus_ingest_batch(batch, 0, **kw)
     assert spark.read.parquet(kw["corpus_path"]).count() == corpus_before
     assert _statuses(spark, kw["audit_path"]) == got  # no dup audit rows
@@ -458,3 +459,280 @@ def test_zero_token_redelivery_guarded_across_batches(spark, kw):
     # and the audit carries exactly one verdict for doc 7
     audit = spark.read.parquet(kw["audit_path"])
     assert audit.filter(F.col("doc_id") == 7).count() == 1
+
+
+def _fps_ids(spark, index_path):
+    return sorted(
+        r["doc_id"] for r in spark.read.parquet(f"{index_path}/fps").collect()
+    )
+
+
+def test_crash_between_bands_and_fps_converges(spark, kw, monkeypatch):
+    """Crash INSIDE the index append of a warm micro-batch: bands/ is
+    written, fps/ (the commit point) is not. The replay rebuilds the
+    batch (its ids are absent from fps/) and must converge: no
+    duplicate corpus or audit rows, the survivors' ids land in fps/,
+    and a later one-word edit of a survivor is a near-dup of it. The
+    replay's probe sees the survivor's own uncommitted bands/ rows and
+    must not call the survivor a near-dup of itself."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    corpus_ingest_batch(_docs(spark, [(1, GOOD)]), 0, **kw)
+    real = DataFrameWriter.parquet
+
+    def crashing(self, path, *a, **k):
+        if path.rstrip("/").endswith("/fps"):
+            raise RuntimeError("injected crash between bands/ and fps/")
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+    # 2: new; 3: batch_dup of 2; 4: exact_dup of 1
+    batch = _docs(spark, [(2, GOOD2), (3, GOOD2), (4, GOOD)])
+    with pytest.raises(RuntimeError, match="injected"):
+        corpus_ingest_batch(batch, 1, **kw)
+    bands_ids = {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{kw['index_path']}/bands").collect()
+    }
+    assert 2 in bands_ids and _fps_ids(spark, kw["index_path"]) == [1]
+    want = {1: "new", 2: "new", 3: "batch_dup", 4: "exact_dup"}
+    assert _statuses(spark, kw["audit_path"]) == want
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    corpus_ingest_batch(batch, 1, **kw)
+    corpus_ids = sorted(
+        r["doc_id"] for r in spark.read.parquet(kw["corpus_path"]).collect()
+    )
+    assert corpus_ids == [1, 2]
+    assert spark.read.parquet(kw["audit_path"]).count() == len(want)
+    assert _statuses(spark, kw["audit_path"]) == want
+    assert _fps_ids(spark, kw["index_path"]) == [1, 2]
+
+    edit = GOOD2.replace("umbrellas", "raincoats")
+    corpus_ingest_batch(_docs(spark, [(20, edit)]), 2, **kw)
+    row = (
+        spark.read.parquet(kw["audit_path"])
+        .filter(F.col("doc_id") == 20)
+        .collect()
+    )
+    assert [(r["status"], r["dup_of"]) for r in row] == [("near_dup", 2)]
+
+
+# ---------------------------------------------------------------------------
+# Each text derivative once per micro-batch: equivalence with the
+# per-consumer composition, and a count of the derivations
+# ---------------------------------------------------------------------------
+
+_ZERO_TOKEN = ["你好世界", "こんにちは世界", "Привет мир", "مرحبا بالعالم"]
+
+
+def _words(rng, n):
+    import string
+
+    return [
+        "".join(rng.choice(string.ascii_lowercase) for _ in range(6))
+        for _ in range(n)
+    ]
+
+
+def _text(rng, vocab, n=60):
+    return " ".join(rng.choice(vocab) for _ in range(n))
+
+
+def _seeded_batches(seed=7):
+    """Three micro-batches of (doc_id, text) covering every verdict:
+    new, batch_dup (a reordered copy within the batch), exact_dup and
+    near_dup (one appended word) of earlier batches' survivors,
+    low_quality, zero-token text (no fingerprint, no signature) and
+    NULL text."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = _words(rng, 400)
+    zt = iter(_ZERO_TOKEN)
+    kept: list[str] = []
+    batches = []
+    for b in range(3):
+        base = (b + 1) * 1000
+        rows = []
+        fresh = [_text(rng, vocab) for _ in range(6)]
+        rows += [(base + i, t) for i, t in enumerate(fresh)]
+        # reordered tokens: same fingerprint, different text
+        rows += [
+            (base + 100 + i, " ".join(reversed(t.split())))
+            for i, t in enumerate(fresh[:2])
+        ]
+        if kept:
+            rows += [(base + 200 + i, t) for i, t in enumerate(kept[-2:])]
+            rows += [
+                (base + 300 + i, f"{t} edit{b}{i}")
+                for i, t in enumerate(kept[:2])
+            ]
+        rows += [(base + 400, "!!! ??? ###"), (base + 401, "x ... ;;;")]
+        # zero-token text padded with spaces: no [a-z0-9] token, and a
+        # punctuation ratio low enough to clear the quality gate
+        rows += [(base + 500, next(zt) + " " * 60), (base + 501, None)]
+        rng.shuffle(rows)
+        kept += fresh
+        batches.append(rows)
+    return batches
+
+
+def _reference_ingest(batch, batch_id, *, corpus_path, index_path,
+                      audit_path, min_quality, hash_mode):
+    """The per-consumer composition the ingest loop replaced: the
+    quality score and the fingerprint derived in each branch, then
+    ``dedup_incremental`` + ``dedup_index_write`` re-deriving the
+    fingerprints and signatures from text. No replay guards: the
+    reference only ingests fresh batches."""
+    from pyspark.errors import AnalysisException
+
+    from vbb_data_pipeline_spark.functions.text import (
+        fingerprint,
+        quality_score,
+    )
+    from vbb_data_pipeline_spark.operators.dedup import (
+        dedup_incremental,
+        dedup_index_write,
+    )
+
+    spark = batch.sparkSession
+    try:
+        seen = spark.read.parquet(f"{index_path}/fps").select("doc_id")
+    except AnalysisException:
+        seen = None
+    scored = batch.withColumn("_q", quality_score("text"))
+    ok_pred = F.col("text").isNotNull() & (F.col("_q") >= min_quality)
+    low = scored.filter(~F.coalesce(ok_pred, F.lit(False)))
+    fped0 = scored.filter(ok_pred).drop("_q").withColumn(
+        "_fp", fingerprint("text")
+    )
+    nullfp = fped0.filter(F.col("_fp").isNull()).drop("_fp")
+    fped = fped0.filter(F.col("_fp").isNotNull())
+    keeper = fped.groupBy("_fp").agg(F.min("doc_id").alias("_keep"))
+    fped = fped.join(keeper, "_fp")
+    batch_dup = fped.filter(F.col("doc_id") != F.col("_keep"))
+    uniq = (
+        fped.filter(F.col("doc_id") == F.col("_keep"))
+        .drop("_fp", "_keep")
+        .unionByName(nullfp)
+    )
+    if seen is None:
+        verdicts = uniq.select(
+            "doc_id",
+            F.lit("new").alias("status"),
+            F.lit(None).cast("long").alias("dup_of"),
+            F.lit(None).cast("double").alias("similarity"),
+        )
+    else:
+        verdicts = dedup_incremental(
+            uniq, index_path, hash_mode=hash_mode
+        ).select("doc_id", "status", "dup_of", "similarity")
+    verdicts = verdicts.localCheckpoint()
+    survivors = uniq.join(
+        verdicts.filter(F.col("status") == "new").select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    survivors.withColumn(
+        "ingest_batch_id", F.lit(batch_id).cast("long")
+    ).write.partitionBy("ingest_batch_id").mode("append").parquet(
+        corpus_path
+    )
+    verdicts.unionByName(
+        low.select(
+            "doc_id",
+            F.lit("low_quality").alias("status"),
+            F.lit(None).cast("long").alias("dup_of"),
+            F.lit(None).cast("double").alias("similarity"),
+        )
+    ).unionByName(
+        batch_dup.select(
+            "doc_id",
+            F.lit("batch_dup").alias("status"),
+            F.col("_keep").cast("long").alias("dup_of"),
+            F.lit(1.0).alias("similarity"),
+        )
+    ).withColumn("batch_id", F.lit(batch_id).cast("long")).write.partitionBy(
+        "batch_id"
+    ).mode("append").parquet(audit_path)
+    dedup_index_write(survivors, index_path, hash_mode=hash_mode, mode="append")
+
+
+def _table_rows(spark, path):
+    def norm(v):
+        return tuple(v) if isinstance(v, list) else v
+
+    df = spark.read.parquet(path)
+    return sorted(
+        (tuple(norm(r[c]) for c in sorted(df.columns)) for r in df.collect()),
+        key=repr,
+    )
+
+
+def test_ingest_matches_per_consumer_composition(spark, tmp_path):
+    """Three seeded micro-batches through ``corpus_ingest_batch`` and
+    through the per-consumer reference: audit, corpus, fps/ and bands/
+    rows are identical, and every verdict kind occurs."""
+    batches = _seeded_batches()
+    for name, ingest in (
+        ("once", corpus_ingest_batch),
+        ("ref", _reference_ingest),
+    ):
+        corpus, index, audit = _paths(tmp_path / name)
+        for b, rows in enumerate(batches):
+            ingest(
+                _docs(spark, rows), b,
+                corpus_path=corpus, index_path=index, audit_path=audit,
+                min_quality=0.1, hash_mode="fast",
+            )
+    once, ref = _paths(tmp_path / "once"), _paths(tmp_path / "ref")
+    for a, b in (
+        (once[0], ref[0]),
+        (once[2], ref[2]),
+        (f"{once[1]}/fps", f"{ref[1]}/fps"),
+        (f"{once[1]}/bands", f"{ref[1]}/bands"),
+    ):
+        got, want = _table_rows(spark, a), _table_rows(spark, b)
+        assert got == want, a
+    statuses = set(_statuses(spark, once[2]).values())
+    assert statuses == {
+        "new", "batch_dup", "exact_dup", "near_dup", "low_quality"
+    }
+    # zero-token docs pass as new, NULL text is rejected
+    audit = spark.read.parquet(once[2]).collect()
+    zero_token = {r["status"] for r in audit if r["doc_id"] % 1000 == 500}
+    null_text = {r["status"] for r in audit if r["doc_id"] % 1000 == 501}
+    assert zero_token == {"new"} and null_text == {"low_quality"}
+
+
+def test_warm_batch_derives_fingerprint_and_minhash_once(
+    spark, kw, monkeypatch
+):
+    """A warm micro-batch (the index exists, so it is probed and then
+    appended to) builds ``fingerprint`` and ``minhash_signatures``
+    once each; the per-consumer composition built them 3 and 2
+    times."""
+    import vbb_data_pipeline_spark.functions.text as txt
+    import vbb_data_pipeline_spark.operators.dedup as dd
+
+    batches = _seeded_batches()
+    corpus_ingest_batch(_docs(spark, batches[0]), 0, **kw)
+    calls = {"fingerprint": 0, "minhash_signatures": 0}
+
+    def counting(name, fn):
+        def wrapped(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+
+        return wrapped
+
+    for mod, name in (
+        (txt, "fingerprint"),
+        (dd, "fingerprint"),
+        (dd, "minhash_signatures"),
+    ):
+        monkeypatch.setattr(mod, name, counting(name, getattr(mod, name)))
+    corpus_ingest_batch(_docs(spark, batches[1]), 1, **kw)
+    assert calls == {"fingerprint": 1, "minhash_signatures": 1}
+    assert "near_dup" in set(_statuses(spark, kw["audit_path"]).values())

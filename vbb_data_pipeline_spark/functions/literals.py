@@ -154,8 +154,11 @@ def literal_rows_df(
         return spark.range(0, 0, 1, 1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
         )
+    # Spark parses boolean confs case-insensitively ("TRUE" is on)
     esc = (
         spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        .strip()
+        .lower()
         == "true"
     )
     values = ",\n".join(

@@ -249,9 +249,12 @@ def tf_idf_top_terms(
     from pyspark.sql.window import Window
 
     if tf is None:
+        # NULL ids dropped, as the shared tf frame does: a NULL id is
+        # no document, and keeping it would move docfreq off the
+        # tf= path's
         toks = df.select(
             F.col(id_col), F.explode(tokens(text_col)).alias("term")
-        )
+        ).filter(F.col(id_col).isNotNull())
         tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     # N = documents contributing at least one term (zero-token docs
     # have no tf rows and no tfidf output, so they are outside the

@@ -1008,6 +1008,18 @@ def _write_index_params(spark, path: str, params: dict) -> None:
     hadoop_write_text(spark, marker, body)
 
 
+def _index_params(
+    num_hashes: int, bands: int, shingle_n: int, hash_mode: str
+) -> dict:
+    """The signature parameters ``_dedup_params.json`` records."""
+    return {
+        "num_hashes": int(num_hashes),
+        "bands": int(bands),
+        "shingle_n": int(shingle_n),
+        "hash_mode": hash_mode,
+    }
+
+
 def dedup_index_write(
     df: DataFrame,
     path: str,
@@ -1052,16 +1064,34 @@ def dedup_index_write(
     signatures of different widths, so every near-dup silently
     classifies ``'new'`` and the corpus fills with duplicates; the
     marker turns that silent decay into a ValueError.
+
+    This function derives the ``(id, fp)`` and signature frames from
+    ``df``'s text and hands them to :func:`dedup_index_write_frames`,
+    which does the checks and the writes; a caller that already holds
+    both frames (the streaming ingest loop) calls that core directly.
     """
-    params = {
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-        "shingle_n": int(shingle_n),
-        "hash_mode": hash_mode,
-    }
-    _check_index_params(
-        df.sparkSession, path, params, require_match=(mode == "append"),
-    )
+    params = _index_params(num_hashes, bands, shingle_n, hash_mode)
+    # An overwrite REBUILD over an existing marked index flips the
+    # marker to a 'rebuilding' sentinel FIRST: a crash at any point
+    # mid-rewrite leaves tables that may mix two parameter sets (bands
+    # overwritten, fps not yet), and with the old marker intact a
+    # same-params probe would validate against state the tables no
+    # longer hold. The sentinel makes every probe/append raise until a
+    # re-run overwrite completes and restores a real marker.
+    # Deliberate conservative trade (r9 advice): the sentinel lands
+    # BEFORE the rebuild's first Spark job (the fp checkpoint below),
+    # so a failure that dies before a single index byte is rewritten
+    # (e.g. a data-dependent error in the minhash/fingerprint plan)
+    # also locks a still-fully-consistent index behind mid-rebuild
+    # errors — an aborted-before-write rebuild requires a full re-run
+    # too. The alternative (flip after a pre-flight action proves the
+    # plan executes) narrows that spurious-lockout window but reopens
+    # a real one: anything the pre-flight didn't execute (a later
+    # stage's failure) crashes AFTER bands/ began rewriting with the
+    # old marker still asserting the old tables. Lockout is
+    # recoverable by re-running; a lying marker is silent data loss.
+    if mode == "overwrite":
+        _mark_index_rebuilding(df.sparkSession, path, params)
     # EVERY doc gets an fps row — including zero-token docs, whose
     # fingerprint is NULL. A NULL fp is inert for matching (the exact
     # tier's equi-join never matches NULL), but the row's id must be
@@ -1071,53 +1101,21 @@ def dedup_index_write(
     # id is redelivered in a later micro-batch. Zero-token docs stay
     # OUT of bands/: their degenerate zero-shingle signature is
     # identical for every such doc and would band-bucket them all
-    # together (see the matching batch-side skip in dedup_incremental).
-    fp = df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    # WRITE ORDER is load-bearing: bands first, fps last, marker
-    # after both. The streaming replay guard reads fps/, so fps must
-    # be the COMMIT POINT — a crash after bands but before fps means
-    # a replay rebuilds the whole batch (ids absent from fps) and
-    # re-appends bands rows, which the candidate tier's .distinct()
-    # absorbs. The reverse order is non-convergent: survivors in fps
-    # are anti-joined out of the replayed batch, their bands rows are
-    # never written, and near-dups against them are missed forever.
-    # The params marker lands only after both tables succeed, so a
-    # failed overwrite-with-new-params never leaves a marker
-    # asserting parameters the on-disk tables were not built with.
-    # An overwrite REBUILD over an existing marked index additionally
-    # flips the marker to a 'rebuilding' sentinel FIRST: a crash at
-    # any point mid-rewrite leaves tables that may mix two parameter
-    # sets (bands overwritten, fps not yet), and with the old marker
-    # intact a same-params probe would validate against state the
-    # tables no longer hold. The sentinel makes every probe/append
-    # raise until a re-run overwrite completes and restores a real
-    # marker. Deliberate conservative trade (r9 advice): the sentinel
-    # lands BEFORE the rebuild's first Spark job, so a failure that
-    # dies before a single index byte is rewritten (e.g. a data-
-    # dependent error in the minhash/fingerprint plan) also locks a
-    # still-fully-consistent index behind mid-rebuild errors — an
-    # aborted-before-write rebuild requires a full re-run too. The
-    # alternative (flip after a pre-flight action proves the plan
-    # executes) narrows that spurious-lockout window but reopens a
-    # real one: anything the pre-flight didn't execute (a later
-    # stage's failure) crashes AFTER bands/ began rewriting with the
-    # old marker still asserting the old tables. Lockout is
-    # recoverable by re-running; a lying marker is silent data loss.
-    if mode == "overwrite":
-        _mark_index_rebuilding(df.sparkSession, path, params)
+    # together (see the matching skip in dedup_incremental).
+    #
     # fp is checkpointed so ONE tokenize+fingerprint pass over the
     # corpus serves both tables (r11; before, the bands job recomputed
     # every fingerprint for its semi-join and the fps job ran the
     # whole pass again — two extra full-corpus text passes per build).
     # The checkpoint is (id, 32-char fp) per doc — constant bytes/doc,
     # MEMORY_AND_DISK, and it sits AFTER the rebuilding sentinel so
-    # the sentinel still lands before the rebuild's first Spark job
-    # (the crash-ordering contract above is unchanged: bands first,
-    # fps last as the commit point, marker after both). Losing an
-    # executor mid-build loses the fp blocks and fails the write
-    # (see CKPT_SER); a re-run overwrite is the recovery, as for any
-    # other crash under the rebuilding sentinel.
-    fp = fp.localCheckpoint()
+    # the sentinel still lands before the rebuild's first Spark job.
+    # Losing an executor mid-build loses the fp blocks and fails the
+    # write (see CKPT_SER); a re-run overwrite is the recovery, as for
+    # any other crash under the rebuilding sentinel.
+    fp = df.select(
+        F.col(id_col), fingerprint(text_col).alias("fp")
+    ).localCheckpoint()
     sig = minhash_signatures(
         df.join(
             fp.filter(F.col("fp").isNotNull()).select(id_col),
@@ -1126,6 +1124,57 @@ def dedup_index_write(
         ),
         text_col, id_col, num_hashes, shingle_n, hash_mode,
     )
+    dedup_index_write_frames(
+        fp, sig, path,
+        id_col=id_col,
+        num_hashes=num_hashes,
+        shingle_n=shingle_n,
+        bands=bands,
+        hash_mode=hash_mode,
+        mode=mode,
+    )
+
+
+def dedup_index_write_frames(
+    fp: DataFrame,
+    sig: DataFrame,
+    path: str,
+    *,
+    id_col: str = "doc_id",
+    num_hashes: int = 16,
+    shingle_n: int = 3,
+    bands: int = 4,
+    hash_mode: str = "fast",
+    mode: str = "append",
+) -> None:
+    """Write the dedup index of :func:`dedup_index_write` from frames
+    the caller already derived: ``fp`` is one ``(id_col, fp)`` row per
+    doc (NULL ``fp`` for zero-token docs), ``sig`` the
+    :func:`minhash_signatures` of the docs with a non-null ``fp``.
+
+    An append first checks the index's ``_dedup_params.json`` marker
+    against the parameters. An overwrite does not check; its caller
+    flips the ``rebuilding`` sentinel before deriving the frames
+    (:func:`dedup_index_write` does).
+
+    WRITE ORDER is load-bearing: bands first, fps last, marker after
+    both. The streaming replay guard reads fps/, so fps must be the
+    COMMIT POINT — a crash after bands but before fps means a replay
+    rebuilds the whole batch (ids absent from fps), re-appends its
+    bands rows (the candidate tier's ``.distinct()`` absorbs the
+    copies) and ignores them when probing the batch (a doc is never
+    its own near-dup, see :func:`dedup_incremental_frames`). The
+    reverse order is non-convergent: survivors in fps are anti-joined
+    out of the replayed batch, their bands rows are never written, and
+    near-dups against them are missed forever. The params marker lands
+    only after both tables succeed, so a failed overwrite-with-new-
+    params never leaves a marker asserting parameters the on-disk
+    tables were not built with.
+    """
+    spark = fp.sparkSession
+    params = _index_params(num_hashes, bands, shingle_n, hash_mode)
+    if mode == "append":
+        _check_index_params(spark, path, params, require_match=True)
     banded = sig.select(
         F.col(id_col),
         F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
@@ -1140,7 +1189,7 @@ def dedup_index_write(
     )
     melted.write.mode(mode).parquet(f"{path}/bands")
     fp.write.mode(mode).parquet(f"{path}/fps")
-    _write_index_params(df.sparkSession, path, params)
+    _write_index_params(spark, path, params)
 
 
 def dedup_incremental(
@@ -1183,25 +1232,18 @@ def dedup_incremental(
     ``id_col`` must be numeric (the corpus id convention everywhere in
     this package) — the near-dup tie-break negates it inside a
     max(struct) to pick the smallest matching corpus id.
+
+    This function derives the batch's ``(id, fp)`` and signature
+    frames from its text and hands them to
+    :func:`dedup_incremental_frames`, the probe proper.
     """
-    spark = new_df.sparkSession
-    _check_index_params(
-        spark, index_path,
-        {
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-            "shingle_n": int(shingle_n),
-            "hash_mode": hash_mode,
-        },
-        require_match=True,
-    )
     new_fp = new_df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
     # zero-token docs (NULL fingerprint) carry no content evidence in
     # EITHER tier: the exact join can't match them (NULL = never
     # equal), and their MinHash signature is the degenerate hash of
     # zero shingles — IDENTICAL for every such doc, so signature
     # agreement would classify all of them as mutual near-dups. They
-    # skip both tiers and fall through to 'new'.
+    # get no signature, skip both tiers and fall through to 'new'.
     with_tokens = new_df.join(
         new_fp.filter(F.col("fp").isNotNull()).select(id_col),
         id_col,
@@ -1209,6 +1251,51 @@ def dedup_incremental(
     )
     sig = minhash_signatures(
         with_tokens, text_col, id_col, num_hashes, shingle_n, hash_mode
+    )
+    return dedup_incremental_frames(
+        new_df, new_fp, sig, index_path,
+        id_col=id_col,
+        num_hashes=num_hashes,
+        shingle_n=shingle_n,
+        bands=bands,
+        threshold=threshold,
+        hash_mode=hash_mode,
+        max_bucket_size=max_bucket_size,
+    )
+
+
+def dedup_incremental_frames(
+    df: DataFrame,
+    fp: DataFrame,
+    sig: DataFrame,
+    index_path: str,
+    *,
+    id_col: str = "doc_id",
+    num_hashes: int = 16,
+    shingle_n: int = 3,
+    bands: int = 4,
+    threshold: float = 0.7,
+    hash_mode: str = "fast",
+    max_bucket_size: int | None = 100_000,
+) -> DataFrame:
+    """The probe of :func:`dedup_incremental` on frames the caller
+    already derived: ``fp`` is one ``(id_col, fp)`` row per batch doc
+    and ``sig`` the :func:`minhash_signatures` of the docs with a
+    non-null ``fp``. Returns ``df`` (any frame carrying ``id_col``)
+    with ``status``, ``dup_of`` and ``similarity`` appended.
+
+    A doc is never its own near-dup: candidate index rows carrying the
+    probed doc's own id are ignored. Such rows exist only when the doc
+    is already indexed (the exact tier then matches its fingerprint)
+    or when a crashed append wrote its bands/ rows but not the fps/
+    commit point — a replay of that batch must classify the doc as
+    the first attempt did, not as a copy of itself.
+    """
+    spark = df.sparkSession
+    _check_index_params(
+        spark, index_path,
+        _index_params(num_hashes, bands, shingle_n, hash_mode),
+        require_match=True,
     )
     new_banded = sig.select(
         F.col(id_col),
@@ -1219,7 +1306,7 @@ def dedup_incremental(
     # exact tier: fingerprint hash-join
     fps = spark.read.parquet(f"{index_path}/fps")
     exact = (
-        new_fp.join(fps.withColumnRenamed(id_col, "_old"), "fp")
+        fp.join(fps.withColumnRenamed(id_col, "_old"), "fp")
         .groupBy(id_col)
         .agg(F.min("_old").alias("dup_of"))
         .withColumn("status", F.lit("exact_dup"))
@@ -1252,6 +1339,7 @@ def dedup_incremental(
             ),
             "bucket",
         )
+        .filter(F.col("_old") != F.col(id_col))
         .select(id_col, "_old", "_nsig", "_osig")
         .distinct()
     )
@@ -1285,8 +1373,8 @@ def dedup_incremental(
         near.join(exact.select(id_col), id_col, "left_anti"),
         allowMissingColumns=False,
     )
-    return new_df.join(verdicts, id_col, "left").select(
-        new_df["*"],
+    return df.join(verdicts, id_col, "left").select(
+        df["*"],
         F.coalesce(F.col("status"), F.lit("new")).alias("status"),
         F.col("dup_of"),
         F.col("similarity"),

@@ -49,9 +49,13 @@ SCORE_SCALE = 1_000_000
 
 
 def _token_stream(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """One ``(doc_id, term)`` row per token. Rows with a NULL id are
+    dropped: a NULL id is no document, and dropping it here keeps the
+    internal path's n_docs/avgdl equal to the ``tf_all`` path's (the
+    battery's shared tf frame filters ``doc_id IS NOT NULL``)."""
     return df.select(
         F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
-    )
+    ).filter(F.col("doc_id").isNotNull())
 
 
 def build_postings(

@@ -30,13 +30,27 @@ reference's conflict-ignoring INSERT (``utils/__init__.py:55-56``),
 like ``sinks.write_stream_idempotent``. One documented wrinkle: a
 replay after the fps write may re-label an intra-batch duplicate
 ``exact_dup`` (probed from the index) instead of ``batch_dup`` — the
-rejection itself is identical.
+rejection itself is identical. A second: a crash between the index's
+bands/ and fps/ writes leaves the batch's bands rows uncommitted. The
+replay's probe ignores a doc's own rows, so survivors land in fps/ as
+before; but two survivors that are near-dups of EACH OTHER (the
+intra-batch tier is exact-only) can match each other's uncommitted
+rows and re-label ``near_dup`` — their corpus and ``new`` audit rows
+from the first attempt stand, and their ids stay out of fps/.
 
 Scale posture: per micro-batch work is (batch × index-probe) joins —
 the index read prunes to the batch's band buckets, the corpus text is
 never read, and appends are plain parquet file adds. State lives in
 storage, not executor memory, so the stream survives restarts and
-scales with the index, not the stream history.
+scales with the index, not the stream history. Each per-document text
+derivative is computed ONCE per micro-batch: the quality score and the
+fingerprint ride the batch's checkpoint, and one pinned MinHash
+signature frame serves both the index probe and the index append
+(``operators/dedup.dedup_incremental_frames`` /
+``dedup_index_write_frames``, the cores of the text-taking operators).
+The answer is the same as deriving them per consumer, because each
+is a deterministic function of ``(text, num_hashes, shingle_n,
+hash_mode)``.
 """
 
 from __future__ import annotations
@@ -45,43 +59,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _existing_ids(spark, index_path: str, id_col: str) -> DataFrame | None:
+def _read_or_none(spark, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when the path does not
+    exist yet. The existence probe goes through ``spark.read``, not
+    ``os.path.exists``: the latter is driver-local, so on HDFS/S3 it
+    is always False and every probe would take the bootstrap branch."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(f"{index_path}/fps").select(id_col)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
-
-
-def _vector_index_ids(spark, index_path: str, id_col: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path).select(id_col)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
-
-
-def _already_written(
-    spark, path: str, part_col: str, batch_id: int, id_col: str
-) -> DataFrame | None:
-    """Ids already committed to ``path`` for THIS batch partition, or
-    None when the table (or partition) doesn't exist yet. The filter
-    on the hive partition column prunes the read to one directory, so
-    a replay guard costs ∝ batch rows even on a 100 TB table."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return (
-            spark.read.parquet(path)
-            .filter(F.col(part_col) == F.lit(int(batch_id)))
-            .select(id_col)
-        )
+        return spark.read.parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
@@ -123,27 +109,56 @@ def corpus_ingest_batch(
     index (``operators/similarity.semdedup_incremental`` — catches
     paraphrases/translations that share no shingles); survivors'
     vectors append to that index partition-aligned.
+
+    Each text derivative is computed once per micro-batch: ``_q``
+    (quality score) and ``_fp`` (fingerprint) are columns of the
+    batch's checkpoint, read by the gate, the intra-batch group, the
+    audit branches and the probe; the MinHash signatures of uniq's
+    docs with a non-null fingerprint are built once and pinned, and
+    the probe and the index append both read them. This is
+    equivalent to the per-consumer derivation through
+    ``dedup_incremental`` + ``dedup_index_write``: ``_q``, ``_fp`` and
+    the signature are deterministic functions of ``(text, num_hashes,
+    shingle_n, hash_mode)``, so each doc gets the same value whether it
+    is computed once or once per branch, and the survivors'
+    signatures are uniq's signatures restricted to the survivors
+    (survivors are a subset of uniq).
     """
     from vbb_data_pipeline_spark.functions.text import (
         fingerprint,
         quality_score,
     )
     from vbb_data_pipeline_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
+        dedup_incremental_frames,
+        dedup_index_write_frames,
+        minhash_signatures,
     )
 
     spark = batch.sparkSession
     null_l = F.lit(None).cast("long")
     null_d = F.lit(None).cast("double")
+    sig_params = dict(
+        id_col=id_col,
+        num_hashes=num_hashes,
+        shingle_n=shingle_n,
+        bands=bands,
+        hash_mode=hash_mode,
+    )
 
     # 0. replay guard: ids already ingested contribute nothing
-    seen = _existing_ids(spark, index_path, id_col)
-    if seen is not None:
-        batch = batch.join(seen, id_col, "left_anti")
+    fps = _read_or_none(spark, f"{index_path}/fps")
+    if fps is not None:
+        batch = batch.join(fps.select(id_col), id_col, "left_anti")
     # the batch is re-read by several branches below; localCheckpoint
-    # keeps the file-source lineage from re-running per branch
-    batch = batch.localCheckpoint(eager=True)
+    # keeps the file-source lineage from re-running per branch. The
+    # quality score and the fingerprint ride along (~40 B per doc), so
+    # the gate, the intra-batch group, the audit branches, the probe
+    # and the index append read them instead of re-tokenizing the text
+    batch = batch.select(
+        "*",
+        quality_score(text_col).alias("_q"),
+        fingerprint(text_col).alias("_fp"),
+    ).localCheckpoint(eager=True)
 
     # 1. quality gate. NULL text must be REJECTED here, not scored:
     # quality_score(NULL) is 0.3 (the punctuation term fires on the
@@ -153,13 +168,12 @@ def corpus_ingest_batch(
     # variant that yields NULL would satisfy NEITHER filter branch,
     # silently losing the doc's verdict; ~coalesce(ok, false) keeps
     # every input doc on exactly one branch either way.
-    scored = batch.withColumn("_q", quality_score(text_col))
     ok_pred = (
         F.col(text_col).isNotNull()
         & (F.col("_q") >= F.lit(float(min_quality)))
     )
-    low = scored.filter(~F.coalesce(ok_pred, F.lit(False)))
-    ok = scored.filter(ok_pred).drop("_q")
+    low = batch.filter(~F.coalesce(ok_pred, F.lit(False)))
+    ok = batch.filter(ok_pred)
 
     # 2. intra-batch exact dedup (fingerprint keep-lowest-id). NULL
     # fingerprints (empty token set — fully non-Latin or
@@ -167,20 +181,29 @@ def corpus_ingest_batch(
     # uniq: the name-list join on _fp compiles to plain `=`, which
     # would silently drop them from BOTH branches, and grouping them
     # would collapse unrelated documents into one survivor.
-    fped0 = ok.withColumn("_fp", fingerprint(text_col))
-    nullfp = fped0.filter(F.col("_fp").isNull()).drop("_fp")
-    fped = fped0.filter(F.col("_fp").isNotNull())
+    nullfp = ok.filter(F.col("_fp").isNull())
+    fped = ok.filter(F.col("_fp").isNotNull())
     keeper = fped.groupBy("_fp").agg(F.min(id_col).alias("_keep"))
     fped = fped.join(F.broadcast(keeper), "_fp")
     batch_dup = fped.filter(F.col(id_col) != F.col("_keep"))
     uniq = (
         fped.filter(F.col(id_col) == F.col("_keep"))
-        .drop("_fp", "_keep")
+        .drop("_keep")
         .unionByName(nullfp)
     )
+    uniq_fp = uniq.select(F.col(id_col), F.col("_fp").alias("fp"))
+    # MinHash once: the signatures of uniq's docs that have tokens (a
+    # zero-token doc has no fingerprint and gets no signature, as in
+    # dedup_incremental) serve the probe and, restricted to the
+    # survivors, the index append. Narrow (id, mh_*) frame, pinned
+    # because both consumers read it.
+    sig = minhash_signatures(
+        uniq.filter(F.col("_fp").isNotNull()),
+        text_col, id_col, num_hashes, shingle_n, hash_mode,
+    ).localCheckpoint(eager=True)
 
     # 3. probe the at-rest index (first batch: everything is new)
-    if seen is None:
+    if fps is None:
         verdicts = uniq.select(
             F.col(id_col),
             F.lit("new").alias("status"),
@@ -188,16 +211,10 @@ def corpus_ingest_batch(
             null_d.alias("similarity"),
         )
     else:
-        verdicts = dedup_incremental(
-            uniq,
-            index_path,
-            text_col=text_col,
-            id_col=id_col,
-            num_hashes=num_hashes,
-            shingle_n=shingle_n,
-            bands=bands,
+        verdicts = dedup_incremental_frames(
+            uniq_fp, uniq_fp, sig, index_path,
             threshold=threshold,
-            hash_mode=hash_mode,
+            **sig_params,
         ).select(id_col, "status", "dup_of", "similarity")
     verdicts = verdicts.localCheckpoint(eager=True)
 
@@ -211,14 +228,11 @@ def corpus_ingest_batch(
 
         text_new = verdicts.filter(F.col("status") == "new").select(id_col)
         cand = uniq.join(F.broadcast(text_new), id_col, "left_semi")
-        # Existence probe via spark.read + AnalysisException (same
-        # pattern as the replay guards below): an os.path.exists probe
-        # is driver-local, so on HDFS/S3 it is always False and every
-        # micro-batch would silently take the bootstrap branch — the
-        # semantic tier would never engage and semantic dups would
-        # accumulate in the corpus with no error.
-        vec_index_ids = _vector_index_ids(spark, embedding_index_path, id_col)
-        if vec_index_ids is not None:
+        # probed through spark.read (_read_or_none): with a driver-local
+        # probe the semantic tier would never engage on HDFS/S3 and
+        # semantic dups would accumulate in the corpus with no error
+        vec_index = _read_or_none(spark, embedding_index_path)
+        if vec_index is not None:
             sem = semdedup_incremental(
                 cand.select(id_col, vec_col),
                 embedding_index_path,
@@ -256,14 +270,17 @@ def corpus_ingest_batch(
     # never ∝ corpus.
     new_ids = verdicts.filter(F.col("status") == "new").select(id_col)
     survivors = uniq.join(F.broadcast(new_ids), id_col, "left_semi")
-    corpus_out = survivors.withColumn(
+    corpus_out = survivors.drop("_q", "_fp").withColumn(
         "ingest_batch_id", F.lit(int(batch_id)).cast("long")
     )
-    done = _already_written(
-        spark, corpus_path, "ingest_batch_id", batch_id, id_col
-    )
+    done = _read_or_none(spark, corpus_path)
     if done is not None:
-        corpus_out = corpus_out.join(done, id_col, "left_anti")
+        corpus_out = corpus_out.join(
+            done.filter(F.col("ingest_batch_id") == F.lit(int(batch_id)))
+            .select(id_col),
+            id_col,
+            "left_anti",
+        )
     corpus_out.write.partitionBy("ingest_batch_id").mode("append").parquet(
         corpus_path
     )
@@ -277,9 +294,9 @@ def corpus_ingest_batch(
         # reuses step 3b's probe (same at-rest state: nothing has
         # appended to the index between the probe and this write), so
         # the index metadata isn't listed twice per micro-batch
-        if vec_index_ids is not None:
+        if vec_index is not None:
             vec_survivors = vec_survivors.join(
-                vec_index_ids, id_col, "left_anti"
+                vec_index.select(id_col), id_col, "left_anti"
             )
         ivf_write_index(
             vec_survivors.select(id_col, vec_col),
@@ -327,22 +344,25 @@ def corpus_ingest_batch(
         )
         .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
     )
-    audited = _already_written(spark, audit_path, "batch_id", batch_id, id_col)
+    audited = _read_or_none(spark, audit_path)
     if audited is not None:
-        audit = audit.join(audited, id_col, "left_anti")
+        audit = audit.join(
+            audited.filter(F.col("batch_id") == F.lit(int(batch_id)))
+            .select(id_col),
+            id_col,
+            "left_anti",
+        )
     audit.write.partitionBy("batch_id").mode("append").parquet(audit_path)
 
-    # 6. fps index append LAST (see the ordering argument above)
-    dedup_index_write(
-        survivors,
+    # 6. fps index append LAST (see the ordering argument above), from
+    # the once-computed fingerprints and signatures: survivors are a
+    # subset of uniq, so theirs are uniq's restricted to the new ids
+    dedup_index_write_frames(
+        uniq_fp.join(F.broadcast(new_ids), id_col, "left_semi"),
+        sig.join(F.broadcast(new_ids), id_col, "left_semi"),
         index_path,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-        bands=bands,
-        hash_mode=hash_mode,
         mode="append",
+        **sig_params,
     )
 
 
