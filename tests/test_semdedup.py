@@ -13,6 +13,7 @@ et al. 2023) on a hand-built corpus where the right answer is known:
 from __future__ import annotations
 
 import pytest
+from conftest import SF_DIR
 
 from vbb_data_pipeline_spark.operators.similarity import semantic_dedup
 
@@ -201,22 +202,84 @@ def test_small_corpus_trains_without_centroids(spark):
     assert not any(r["dropped"] for r in got2.values())
 
 
-def test_trainer_cache_is_namespaced_per_trainer(spark):
-    """Six trainers share one cache dict; the same cache_key through
-    two different trainers must NOT return the other trainer's
-    table (previously: wrong schema or a silently different model)."""
-    from vbb_data_pipeline_spark.operators.similarity import (
-        kmeans_centroids_local,
-        pq_train_local,
-    )
+def test_trainer_cache_is_namespaced_per_trainer(spark, monkeypatch):
+    """One cache dict serves every trainer. An entry is keyed by the
+    trainer, the caller's cache_key (the input data) and every other
+    trainer argument, so (a) the same cache_key through two trainers,
+    or through one trainer with different arguments, never returns the
+    other model; (b) two queries that train the same model share one
+    entry; (c) a warm semantic_dedup runs no Spark job to find its
+    quantizer (its corpus count sits inside the cached trainer)."""
+    import math
+    import random
+
+    from vbb_data_pipeline_spark.operators import similarity as sim
+    from vbb_data_pipeline_spark.queries import similarity_q as sq
+
+    cache: dict = {}
+    monkeypatch.setattr(sim, "_CENTROID_CACHE", cache)
 
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     df = _df(spark, rows)
     key = "shared-identity-123"
-    km = kmeans_centroids_local(df, n_cells=2, iters=1, cache_key=key)
-    pq = pq_train_local(
+    km = sim.kmeans_centroids_local(df, n_cells=2, iters=1, cache_key=key)
+    pq = sim.pq_train_local(
         df, n_subspaces=2, n_codes=2, iters=1, dim=DIM, cache_key=key
     )
     assert set(km.columns) != set(pq.columns)  # distinct models back
     assert "cell_id" in km.columns
     assert "subspace" in pq.columns
+
+    # (a) same trainer and cache_key, different iters: the second Lloyd
+    # round moves the 46° vector to cell 0 (cell 1's mean swings past
+    # 110° after round one), so the two models differ
+    angles = [0, 90, 46, 130, 140, 150]
+    arows = [
+        (i, [math.cos(math.radians(a)), math.sin(math.radians(a)), 0.0, 0.0])
+        for i, a in enumerate(angles)
+    ]
+    adf = _df(spark, arows)
+
+    def model(m):
+        return sorted((r[0], tuple(r[1])) for r in m.collect())
+
+    m1 = sim.kmeans_centroids_local(adf, n_cells=2, iters=1, cache_key="ang")
+    n = len(cache)
+    m2 = sim.kmeans_centroids_local(adf, n_cells=2, iters=2, cache_key="ang")
+    assert len(cache) == n + 1
+    assert model(m2) != model(m1)
+    assert model(m2) == model(sim.kmeans_centroids_local(adf, 2, 2))
+
+    # (b) md5 mode: sim_ivf_topk and the semdedup leg train the one
+    # IVF model; building both leaves one entry
+    monkeypatch.delenv("SPARK_GRAFT_FAST_HASH", raising=False)
+    cache.clear()
+    sq.sim_ivf_topk(spark, SF_DIR)
+    sq.sim_semantic_dedup(spark, SF_DIR)
+    assert len(cache) == 1
+
+    # (c) warm semantic_dedup(None, ...): no new entry, no Spark job
+    # until the result executes (checkpoint=False: the default
+    # checkpoint materializes the ranked assignment eagerly)
+    rng = random.Random(11)
+    cdf = _df(
+        spark,
+        [(i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(40)],
+    )
+    kw = dict(
+        dim=DIM, threshold=0.9, checkpoint=False,
+        train_cache_key="semdedup-warm",
+    )
+    cold = semantic_dedup(cdf, None, **kw).collect()
+    n = len(cache)
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-semdedup", "warm semantic_dedup")
+    try:
+        warm = semantic_dedup(cdf, None, **kw)
+        assert sc.statusTracker().getJobIdsForGroup("warm-semdedup") == []
+        assert len(cache) == n
+        assert sorted(warm.collect()) == sorted(cold)
+        assert sc.statusTracker().getJobIdsForGroup("warm-semdedup")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

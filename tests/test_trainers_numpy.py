@@ -88,16 +88,16 @@ def test_persisted_index_recall_with_numpy_models(emb, spark, tmp_path):
     assert len(g & t) / len(t) >= 0.6  # nprobe=4 of 8 cells + PQ loss
 
 
-def test_distributed_kmeans_rejects_gapped_seed_ids(spark):
-    """The distributed trainer must fail as loudly as its documented
-    bit-identical local twin on gapped ids below n_cells — it
-    previously trained fewer cells silently, degrading IVF recall
-    with no error."""
+def test_local_kmeans_rejects_partially_gapped_seed_ids(spark):
+    """Gapped ids below n_cells (3 of the 5 seed ids present) must
+    raise, not silently train fewer cells and degrade IVF recall."""
     import pytest as _pytest
 
-    from vbb_data_pipeline_spark.operators.similarity import kmeans_centroids
+    from vbb_data_pipeline_spark.operators.similarity import (
+        kmeans_centroids_local,
+    )
 
     rows = [(i, [float(i), 1.0]) for i in (0, 1, 2, 5, 9)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     with _pytest.raises(ValueError, match="kmeans seeding found 3"):
-        kmeans_centroids(df, n_cells=5, iters=1, dim=2)
+        kmeans_centroids_local(df, n_cells=5, iters=1)

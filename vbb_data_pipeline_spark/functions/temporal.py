@@ -81,13 +81,3 @@ def weekday_flag(day: Column, prefix: str = "") -> Column:
     """
     flags = F.array(*[F.col(prefix + c) for c in _WEEKDAY_COLS])
     return F.element_at(flags, iso_dow(day))
-
-
-def day_sequence(start: Column, end: Column) -> Column:
-    """Array of all dates in [start, end] inclusive — real DateType
-    arithmetic (correct across month/year boundaries, unlike
-    GtfsDAO.java:75-78). Explode with ``F.explode``.
-
-    DuckDB twin: ``unnest(generate_series(start, end, INTERVAL 1 DAY))``.
-    """
-    return F.sequence(start, end)

@@ -86,19 +86,6 @@ def ngrams(arr: Column, n: int) -> Column:
     return F.filter(out, lambda x: x.isNotNull())
 
 
-def char_ngrams(col: Column | str, n: int) -> Column:
-    """Character n-gram shingles of the lower-cased text."""
-    c = F.col(col) if isinstance(col, str) else col
-    low = F.lower(c)
-    return F.when(
-        F.length(low) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(low) - F.lit(n - 1)),
-            lambda i: low.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are not alphanumeric/space."""
     c = F.col(col) if isinstance(col, str) else col

@@ -13,7 +13,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def project(df: DataFrame, *cols: Column | str) -> DataFrame:
@@ -63,31 +62,11 @@ def aggregate(
     return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
 
-def global_sort(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """O1 total order (GtfsDAO.java:48) — range-partitioned sort; at
-    scale this is the one unavoidable full-data exchange, so callers
-    should sort only final, reduced outputs."""
-    return df.orderBy(*cols)
-
-
 def topk(df: DataFrame, k: int, *order: Column | str) -> DataFrame:
     """ORDER BY + LIMIT → Spark TakeOrderedAndProject (no full sort,
     per-partition heaps + driver merge). Include a unique tiebreaker in
     ``order`` for deterministic results."""
     return df.orderBy(*order).limit(k)
-
-
-def topk_per_group(
-    df: DataFrame, keys: Sequence[str], k: int, *order: Column | str
-) -> DataFrame:
-    """Top-k rows per group via row_number window; include a unique
-    tiebreaker for determinism."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -97,10 +76,6 @@ def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
 
 
 def distinct_rows(df: DataFrame) -> DataFrame:

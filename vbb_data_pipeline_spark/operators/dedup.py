@@ -501,16 +501,6 @@ def line_dedup_corpus(
     )
 
 
-def dedup_rank(
-    df: DataFrame, group_col: str, id_col: str, keep: str = "min"
-) -> DataFrame:
-    """Survivor selection within duplicate groups: rank by id and keep
-    the first (stable across runs/partitionings)."""
-    order = F.col(id_col).asc() if keep == "min" else F.col(id_col).desc()
-    w = Window.partitionBy(group_col).orderBy(order)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",

@@ -2,9 +2,8 @@
 
 The reference's Postgres schema enforces CHECK constraints
 (``05-create-schema.sh:154-155``) and a web of PK/FK constraints
-(§1.3). Spark enforces none, so the engine exposes them as explicit
-operators: violation filters and referential-integrity checks
-(left-anti join on the FK, expect zero rows).
+(§1.3). Spark enforces none, so the engine exposes the CHECKs as
+violation filters, next to one-pass table profiles.
 """
 
 from __future__ import annotations
@@ -14,55 +13,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vbb_data_pipeline_spark.functions.literals import literal_rows_df
-from vbb_data_pipeline_spark.schemas import FOREIGN_KEYS
-
 
 def check_range(df: DataFrame, col: str, lo: int, hi: int) -> DataFrame:
     """CHECK (col BETWEEN lo AND hi) as a violation-row filter
     (05-create-schema.sh:154-155 pickup_type/drop_off_type)."""
     c = F.col(col)
     return df.filter(~(c.between(lo, hi)) & c.isNotNull())
-
-
-def fk_violations(
-    child: DataFrame,
-    parent: DataFrame,
-    child_cols: Sequence[str],
-    parent_cols: Sequence[str],
-) -> DataFrame:
-    """FK orphans: child rows with no matching parent key.
-
-    Anti-join on the FK columns; an empty result certifies referential
-    integrity (the reference relied on Postgres + FK-safe load order,
-    database_loader/operators.py:136-141)."""
-    keyed_parent = parent.select(
-        *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
-    ).distinct()
-    return child.join(keyed_parent, list(child_cols), "left_anti")
-
-
-def gtfs_integrity_report(tables: dict[str, DataFrame]) -> DataFrame:
-    """Run every declared GTFS FK (schemas.FOREIGN_KEYS) and return one
-    row per constraint with its orphan count."""
-    spark = next(iter(tables.values())).sparkSession
-    rows = []
-    for child, ccols, parent, pcols in FOREIGN_KEYS:
-        if child not in tables or parent not in tables:
-            continue
-        n = fk_violations(tables[child], tables[parent], ccols, pcols).count()
-        rows.append((child, "->".join([child, parent]), n))
-    return literal_rows_df(
-        spark, rows, "table string, constraint string, orphans long"
-    )
-
-
-def dq_null_report(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Null-rate per column in one pass (conditional-count aggregates)."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c) for c in cols
-    ]
-    return df.agg(*aggs)
 
 
 #: Types whose min/max stringify deterministically across engines.

@@ -13,7 +13,9 @@ from md5 so the DuckDB oracle can reproduce them bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import inspect
 from math import sqrt as math_sqrt
 
 from pyspark.sql import Column, DataFrame
@@ -432,154 +434,53 @@ def ivf_assign_arrow(
 #: order-independent, cross-engine-identical components).
 KMEANS_SCALE = 1_000_000
 
-#: Trained-centroid tables keyed by (session UUID, caller-supplied
-#: identity) — see kmeans_centroids. Checked BEFORE any lineage is
-#: built, so a cache hit costs nothing. The session UUID in the key
-#: makes a stop/recreate cycle (test reruns, long-lived processes) a
-#: clean miss instead of returning a DataFrame bound to a dead
-#: session; FIFO-bounded so a parameter sweep can't grow it without
-#: limit (each entry pins a localCheckpoint's blocks on the executors
-#: for the life of its session).
-_CENTROID_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: Trained models (centroid tables, codebooks) keyed by (session UUID,
+#: trainer name, caller's ``cache_key``, the trainer's other non-DataFrame
+#: arguments after defaults) — see :func:`_cached_trainer`. Checked
+#: BEFORE any lineage is built, so a cache hit costs nothing. The
+#: session UUID in the key makes a stop/recreate cycle (test reruns,
+#: long-lived processes) a clean miss instead of returning a DataFrame
+#: bound to a dead session; FIFO-bounded so a parameter sweep can't grow
+#: it without limit.
+_CENTROID_CACHE: dict[tuple, DataFrame] = {}
 _CENTROID_CACHE_MAX = 16
 
 
-def _cache_get(spark, cache_key: str | None, ns: str) -> DataFrame | None:
-    """``ns`` namespaces the cache per TRAINER: six trainers share
-    this dict, and the docstrings all define ``cache_key`` as the
-    identity of (input, n_cells, iters, dim) with no trainer
-    component — without the namespace, training k-means then PQ under
-    the same identity returns the other trainer's table (wrong
-    schema, or a silently different model)."""
-    if cache_key is None:
-        return None
-    return _CENTROID_CACHE.get(
-        (spark._jsparkSession.sessionUUID(), ns, cache_key)
-    )
+def _cached_trainer(train):
+    """Train once, query many: memoize ``train`` in ``_CENTROID_CACHE``.
 
-
-def _cache_put(spark, cache_key: str | None, cent: DataFrame, ns: str) -> None:
-    if cache_key is None:
-        return
-    while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-        _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
-    _CENTROID_CACHE[
-        (spark._jsparkSession.sessionUUID(), ns, cache_key)
-    ] = cent
-
-
-def kmeans_centroids(
-    embeddings: DataFrame,
-    n_cells: int,
-    iters: int,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 5,
-    cache_key: str | None = None,
-) -> DataFrame:
-    """Deterministic Lloyd k-means over cosine similarity →
-    ``(cell_id, vec_col)`` centroid table.
-
-    Seeding is the ``n_cells`` lowest-id vectors; each of the
-    ``iters`` rounds broadcast-assigns every vector to its nearest
-    centroid (``ivf_assign`` — max(struct) argmax, rounded cosine,
-    tie on cell id) and recomputes centroids as per-dimension means.
-    The means use fixed-point integer sums (``KMEANS_SCALE``) so the
-    resulting components are bit-identical in any engine: integer sum
-    is exact and order-independent, and the two IEEE divisions happen
-    in a fixed order. Cells that lose all members drop out (both
-    engines' GROUP BY agrees).
-
-    Each round is one broadcast join + one groupBy with ``dim``
-    integer sums (map-side combine); at 100 TB the corpus is scanned
-    ``iters`` times and nothing else moves. The centroid table is
-    ``localCheckpoint``-ed after every round: the model is tiny
-    (``n_cells`` rows) but chaining rounds as one static plan would
-    nest ``iters`` corpus scans into a single expression tree whose
-    Catalyst analysis cost dwarfs the actual compute — truncating
-    lineage per round keeps planning O(1 round) and trains eagerly.
-
-    ``cache_key``: stable identity of (input, n_cells, iters, dim).
-    When supplied, a previously trained table for the same key is
-    returned immediately — before any lineage is rebuilt — giving the
-    train-once / query-many behavior a real ANN deployment has (at
-    scale you'd write the centroids to storage instead).
+    ``cache_key`` names only the trainer's INPUT DATA (its DataFrame
+    arguments, which cannot be hashed); the trainer's name and every
+    other argument, defaults applied, complete the key. So two trainers,
+    or one trainer under different ``iters``/``sample_n``/…, never share
+    an entry. No ``cache_key``, no cache. At scale you'd write the model
+    to storage instead.
     """
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="kmeans_centroids")
-    if cached is not None:
-        return cached
-    corpus = embeddings.select(F.col(id_col), F.col(vec_col))
-    cent = embeddings.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("long").alias("cell_id"),
-        F.col(vec_col),
-    )
-    # same loud failure as kmeans_centroids_local: gapped ids below
-    # n_cells would silently train fewer cells here while the
-    # documented bit-identical twin raises — the trainers must agree
-    # on the same input (the count is n_cells rows, one tiny job)
-    n_seeds = cent.count()
-    if n_seeds < n_cells:
-        raise ValueError(
-            f"kmeans seeding found {n_seeds} vectors with id < "
-            f"{n_cells}; the id<n_cells seed convention requires "
-            "contiguous ids from 0 — re-key the corpus or pass "
-            "pre-trained centroids"
+    sig = inspect.signature(train)
+
+    @functools.wraps(train)
+    def wrapper(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        args_ = bound.arguments
+        if args_["cache_key"] is None:
+            return train(*args, **kwargs)
+        key = (
+            args_["embeddings"].sparkSession._jsparkSession.sessionUUID(),
+            train.__name__,
+            *(
+                (k, v)
+                for k, v in args_.items()
+                if not isinstance(v, DataFrame)
+            ),
         )
-    for rnd in range(iters):
-        assigned = ivf_assign(
-            corpus, cent, dim, id_col, vec_col, round_digits, cell_col="cell_id"
-        )
-        # Per-dimension fixed-point means via posexplode → two small
-        # groupBys. An earlier revision built `dim` separate sum
-        # columns (one expression chain per dimension); that cost
-        # O(dim) driver-side Column construction (~1.5 s of py4j
-        # round-trips per round at dim=64) and an O(dim)-wide plan.
-        # The exploded form is a constant-size plan at any dim; the
-        # extra exchange carries (cell_id, pos, long) triples —
-        # n_members × dim tiny rows, map-side combined down to
-        # n_cells × dim before the shuffle.
-        per_dim = (
-            assigned.select(
-                "cell_id", F.posexplode(F.col(vec_col)).alias("_pos", "_x")
-            )
-            .groupBy("cell_id", "_pos")
-            .agg(
-                F.sum(
-                    F.round(F.col("_x").cast("double") * KMEANS_SCALE).cast(
-                        "long"
-                    )
-                ).alias("_s"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-        )
-        # array_sort on (pos, mean) structs: pos is unique per cell,
-        # so the component order is deterministic in any engine.
-        cent = per_dim.groupBy("cell_id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("_pos").alias("p"),
-                            (
-                                (F.col("_s").cast("double") / KMEANS_SCALE)
-                                / F.col("_n")
-                            ).alias("m"),
-                        )
-                    )
-                ),
-                lambda s: s["m"],
-            ).alias(vec_col)
-        )
-        # Truncate lineage periodically (and always for the final
-        # model): the per-round trees are small, but unbounded nesting
-        # across many Lloyd rounds would still grow analysis cost
-        # linearly, and every downstream consumer would replay the
-        # whole training chain.
-        if rnd == iters - 1 or rnd % 8 == 7:
-            cent = cent.localCheckpoint()
-    _cache_put(embeddings.sparkSession, cache_key, cent, ns="kmeans_centroids")
-    return cent
+        if key not in _CENTROID_CACHE:
+            while len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
+                _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
+            _CENTROID_CACHE[key] = train(*args, **kwargs)
+        return _CENTROID_CACHE[key]
+
+    return wrapper
 
 
 def _round_half_up(x: float, digits: int) -> float:
@@ -594,6 +495,7 @@ def _round_half_up(x: float, digits: int) -> float:
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
 
 
+@_cached_trainer
 def kmeans_centroids_local(
     embeddings: DataFrame,
     n_cells: int,
@@ -625,32 +527,16 @@ def kmeans_centroids_local(
     ``< n_cells``, cosines round HALF_UP at ``round_digits`` before
     the argmax (tie → smallest cell), means are fixed-point integer
     sums at ``KMEANS_SCALE`` — the identical arithmetic, in the
-    identical order, as the distributed :func:`kmeans_centroids` and
-    the DuckDB oracle that replays training in SQL (dot products are
-    sequential left-to-right sums in all three). When ``sample_n``
-    covers the whole corpus (test scale), the result is bit-identical
-    to full-corpus training.
+    identical order, as the DuckDB oracle that replays training in SQL
+    (dot products are sequential left-to-right sums in both). When
+    ``sample_n`` covers the whole corpus (test scale), the result is
+    bit-identical to full-corpus training.
 
-    ``cache_key``: see :func:`kmeans_centroids` (train once, query
-    many).
+    ``cache_key``: identity of the input corpus; see
+    :func:`_cached_trainer` (train once, query many).
     """
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="kmeans_centroids_local")
-    if cached is not None:
-        return cached
     spark = embeddings.sparkSession
-    rows = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).cast("long").alias("_id"), F.col(vec_col))
-        .orderBy("_id")
-        .limit(sample_n)  # TakeOrderedAndProject: one bounded job
-        .collect()
-    )
-    vecs = [(r[0], [float(x) for x in r[1]]) for r in rows]
-
-    dot_seq = _dot_seq  # the module's left-to-right sum — ONE copy of
-    # the arithmetic-order-critical primitive (two drifting copies
-    # would silently split the engines' parity contract)
-
+    vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
     cents: list[tuple[int, list[float]]] = [
         (int(i), v) for i, v in vecs if i < n_cells
     ]
@@ -665,21 +551,11 @@ def kmeans_centroids_local(
             "pre-trained centroids"
         )
     for _ in range(iters):
-        norms = [
-            (cid, cv, math_sqrt(dot_seq(cv, cv))) for cid, cv in cents
-        ]
-        # assignment: argmax of rounded cosine, tie → smallest cell id
+        norms = _with_norms(cents)
         sums: dict[int, list[int]] = {}
         counts: dict[int, int] = {}
         for _vid, v in vecs:
-            nv = math_sqrt(dot_seq(v, v))
-            best_cell, best_cos = None, None
-            for cid, cv, nc in norms:
-                c = _round_half_up(
-                    dot_seq(v, cv) / max(nv * nc, 1e-12), round_digits
-                )
-                if best_cos is None or c > best_cos:
-                    best_cell, best_cos = cid, c
+            best_cell = _nearest_cell(v, norms, round_digits)[0]
             acc = sums.get(best_cell)
             if acc is None:
                 acc = [0] * len(v)
@@ -694,13 +570,11 @@ def kmeans_centroids_local(
             )
             for cid in sorted(sums)
         ]
-    cent = literal_rows_df(
+    return literal_rows_df(
         spark,
         [(cid, cv) for cid, cv in cents],
         f"cell_id long, {vec_col} array<double>",
     )
-    _cache_put(spark, cache_key, cent, ns="kmeans_centroids_local")
-    return cent
 
 
 def _sample_matrix(
@@ -715,6 +589,7 @@ def _sample_matrix(
     return np.asarray([v for _, v in vecs], dtype="float64")
 
 
+@_cached_trainer
 def kmeans_centroids_numpy(
     embeddings: DataFrame,
     n_cells: int,
@@ -745,9 +620,6 @@ def kmeans_centroids_numpy(
     """
     import numpy as np
 
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="kmeans_centroids_numpy")
-    if cached is not None:
-        return cached
     spark = embeddings.sparkSession
     X = _sample_matrix(embeddings, id_col, vec_col, sample_n)
     if X.shape[0] < n_cells:
@@ -772,15 +644,14 @@ def kmeans_centroids_numpy(
         C = C.copy()
         C[live] = sums[live] / counts[live, None]
     live_cells = sorted(set(int(a) for a in assign))
-    cent = literal_rows_df(
+    return literal_rows_df(
         spark,
         [(cid, C[cid].tolist()) for cid in live_cells],
         f"cell_id long, {vec_col} array<double>",
     )
-    _cache_put(spark, cache_key, cent, ns="kmeans_centroids_numpy")
-    return cent
 
 
+@_cached_trainer
 def pq_train_numpy(
     embeddings: DataFrame,
     n_subspaces: int,
@@ -805,9 +676,6 @@ def pq_train_numpy(
     """
     import numpy as np
 
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="pq_train_numpy")
-    if cached is not None:
-        return cached
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
     X = _sample_matrix(embeddings, id_col, vec_col, sample_n)
@@ -833,11 +701,9 @@ def pq_train_numpy(
         out.extend(
             (j, c, C[c].tolist()) for c in range(n_codes)
         )
-    cb = literal_rows_df(
+    return literal_rows_df(
         spark, out, "subspace int, code long, subvec array<double>"
     )
-    _cache_put(spark, cache_key, cb, ns="pq_train_numpy")
-    return cb
 
 
 #: ivf_topk literal-assignment gate: max n_cells·dim before the
@@ -868,7 +734,7 @@ def ivf_topk(
     bucketed by cell_id) so a probe touches nprobe/n_cells of the data.
 
     ``centroids``: a ``(cell_id, vec_col)`` table — typically
-    :func:`kmeans_centroids`. Default: the ``n_cells`` lowest-id
+    :func:`kmeans_centroids_local`. Default: the ``n_cells`` lowest-id
     vectors (deterministic stand-in); the operator is agnostic to how
     centroids were produced.
 
@@ -1489,6 +1355,46 @@ def embedding_neardup_pairs(
     )
 
 
+@_cached_trainer
+def _semdedup_centroids(
+    embeddings: DataFrame,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    vecs_per_cell: int,
+    sample_n: int,
+    cache_key: str | None = None,
+) -> DataFrame | None:
+    """:func:`semantic_dedup`'s default quantizer: cells ∝ corpus via
+    the BLAS trainer, or ``None`` when no vector is non-NULL. The
+    corpus count that sizes the cells sits inside the cached trainer,
+    so a warm ``cache_key`` runs no Spark job at all."""
+    # size cells from NON-NULL vectors only (NULL-vector docs skip
+    # assignment entirely and would otherwise inflate n_cells), and
+    # cap n_cells so each cell trains on >= 4 sample vectors — the
+    # uncapped N/vecs_per_cell would exceed the trainer sample past
+    # ~sample_n*vecs_per_cell/4 corpus vectors and raise. For
+    # genuinely huge corpora raise ``sample_n`` with the corpus (FAISS
+    # guidance: ~100-1000 training points per cell).
+    n = embeddings.filter(F.col(vec_col).isNotNull()).count()
+    if n == 0:
+        return None
+    # never ask for more cells than there are vectors — the floor of 16
+    # previously made any corpus with < 16 non-null vectors raise
+    # inside the trainer instead of deduping it
+    n_cells = max(16, int(n // max(1, vecs_per_cell)))
+    n_cells = min(n_cells, max(16, sample_n // 4))
+    n_cells = min(n_cells, n)
+    return kmeans_centroids_numpy(
+        embeddings,
+        n_cells=n_cells,
+        iters=iters,
+        id_col=id_col,
+        vec_col=vec_col,
+        sample_n=sample_n,
+    )
+
+
 def semantic_dedup(
     embeddings: DataFrame,
     centroids: DataFrame | None,
@@ -1568,63 +1474,40 @@ def semantic_dedup(
     makes the per-cell pair stage quadratic in the corpus (the r5
     registry leg measured 26×/decade at its pinned n_cells=16) — pass
     explicit ``centroids`` only when replaying an oracle or reusing a
-    trained quantizer.
+    trained quantizer. ``train_cache_key`` names ``embeddings`` for the
+    trainer cache (:func:`_cached_trainer`): a warm key runs no
+    sizing count and no training.
     """
     if centroids is None:
-        # probe the trainer cache FIRST: a warm train_cache_key must
-        # not pay the full-corpus sizing count below (the cache's
-        # "a hit costs nothing" contract)
-        centroids = _cache_get(
-            embeddings.sparkSession, train_cache_key,
-            ns="kmeans_centroids_numpy",
+        centroids = _semdedup_centroids(
+            embeddings,
+            iters=train_iters,
+            id_col=id_col,
+            vec_col=vec_col,
+            vecs_per_cell=int(vecs_per_cell),
+            sample_n=int(train_sample_n),
+            cache_key=train_cache_key,
         )
     if centroids is None:
-        # size cells from NON-NULL vectors only (NULL-vector docs skip
-        # assignment entirely and would otherwise inflate n_cells),
-        # and cap n_cells so each cell trains on >= 4 sample vectors —
-        # the uncapped N/vecs_per_cell would exceed the trainer sample
-        # past ~sample_n*vecs_per_cell/4 corpus vectors and raise.
-        # For genuinely huge corpora raise ``train_sample_n`` with the
-        # corpus (FAISS guidance: ~100-1000 training points per cell).
-        n = embeddings.filter(F.col(vec_col).isNotNull()).count()
-        if n == 0:
-            # nothing to train on: every doc is a NULL-vector
-            # pass-through row. Empty centroid table + expression
-            # assignment (the BLAS path can't argmax over zero
-            # centroids) keeps the one-row-per-input-doc contract
-            # instead of the trainer raising.
-            from pyspark.sql import types as T
+        # nothing to train on: every doc is a NULL-vector pass-through
+        # row. Empty centroid table + expression assignment (the BLAS
+        # path can't argmax over zero centroids) keeps the
+        # one-row-per-input-doc contract instead of the trainer raising.
+        from pyspark.sql import types as T
 
-            centroids = literal_rows_df(
-                embeddings.sparkSession,
-                [],
-                T.StructType(
-                    [
-                        T.StructField("cell_id", T.LongType()),
-                        T.StructField(
-                            vec_col, embeddings.schema[vec_col].dataType
-                        ),
-                    ]
-                ),
-            )
-            assign = "expr"
-        else:
-            # never ask for more cells than there are vectors — the
-            # floor of 16 previously made any corpus with < 16
-            # non-null vectors raise inside the trainer instead of
-            # deduping it
-            n_cells = max(16, int(n // max(1, int(vecs_per_cell))))
-            n_cells = min(n_cells, max(16, int(train_sample_n) // 4))
-            n_cells = min(n_cells, n)
-            centroids = kmeans_centroids_numpy(
-                embeddings,
-                n_cells=n_cells,
-                iters=train_iters,
-                id_col=id_col,
-                vec_col=vec_col,
-                sample_n=int(train_sample_n),
-                cache_key=train_cache_key,
-            )
+        centroids = literal_rows_df(
+            embeddings.sparkSession,
+            [],
+            T.StructType(
+                [
+                    T.StructField("cell_id", T.LongType()),
+                    T.StructField(
+                        vec_col, embeddings.schema[vec_col].dataType
+                    ),
+                ]
+            ),
+        )
+        assign = "expr"
     if assign == "arrow":
         assigned = ivf_assign_arrow(
             embeddings,
@@ -1761,6 +1644,7 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
+@_cached_trainer
 def pq_train_local(
     embeddings: DataFrame,
     n_subspaces: int,
@@ -1791,17 +1675,12 @@ def pq_train_local(
     identical codes. When ``sample_n`` covers the corpus (test scale)
     the result is bit-identical to full-corpus training.
     """
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="pq_train_local")
-    if cached is not None:
-        return cached
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
     vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
-    cb = _pq_lloyd_from_vecs(
+    return _pq_lloyd_from_vecs(
         spark, vecs, n_subspaces, n_codes, iters, sub, round_digits
     )
-    _cache_put(spark, cache_key, cb, ns="pq_train_local")
-    return cb
 
 
 def _collect_sample(
@@ -1827,6 +1706,33 @@ def _dot_seq(a: list[float], b: list[float]) -> float:
     for x, y in zip(a, b):
         s += x * y
     return s
+
+
+def _with_norms(
+    cents: list[tuple[int, list[float]]],
+) -> list[tuple[int, list[float], float]]:
+    """``(cell, vec, ‖vec‖)`` per centroid, norms by :func:`_dot_seq`."""
+    return [(cid, cv, math_sqrt(_dot_seq(cv, cv))) for cid, cv in cents]
+
+
+def _nearest_cell(
+    v: list[float],
+    norms: list[tuple[int, list[float], float]],
+    round_digits: int,
+) -> tuple[int, list[float], float]:
+    """The deterministic trainers' cell assignment — ``ivf_assign``'s
+    recipe in driver Python: argmax of the cosine rounded HALF_UP at
+    ``round_digits`` over a ``max(‖v‖·‖c‖, 1e-12)`` denominator, tie →
+    first (smallest-id) cell of the cell-ordered ``norms``."""
+    nv = math_sqrt(_dot_seq(v, v))
+    best, best_cos = None, None
+    for cell in norms:
+        c = _round_half_up(
+            _dot_seq(v, cell[1]) / max(nv * cell[2], 1e-12), round_digits
+        )
+        if best_cos is None or c > best_cos:
+            best, best_cos = cell, c
+    return best
 
 
 def _pq_lloyd_from_vecs(
@@ -1890,6 +1796,7 @@ def _pq_lloyd_from_vecs(
     )
 
 
+@_cached_trainer
 def pq_train_residual_local(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -1916,34 +1823,22 @@ def pq_train_residual_local(
     are elementwise IEEE subtraction, and the per-subspace Lloyd loop
     is :func:`_pq_lloyd_from_vecs` verbatim.
     """
-    cached = _cache_get(embeddings.sparkSession, cache_key, ns="pq_train_residual_local")
-    if cached is not None:
-        return cached
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
     vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in centroids.select("cell_id", vec_col).collect()
-    ]
-    cents.sort(key=lambda t: t[0])
-    withn = [(cid, cv, math_sqrt(_dot_seq(cv, cv))) for cid, cv in cents]
+    norms = _with_norms(
+        sorted(
+            (int(r[0]), [float(x) for x in r[1]])
+            for r in centroids.select("cell_id", vec_col).collect()
+        )
+    )
     residuals: list[tuple[int, list[float]]] = []
     for vid, v in vecs:
-        nv = math_sqrt(_dot_seq(v, v))
-        best_cell, best_cos, best_cv = None, None, None
-        for cid, cv, nc in withn:
-            c = _round_half_up(
-                _dot_seq(v, cv) / max(nv * nc, 1e-12), round_digits
-            )
-            if best_cos is None or c > best_cos:
-                best_cell, best_cos, best_cv = cid, c, cv
-        residuals.append((vid, [x - y for x, y in zip(v, best_cv)]))
-    cb = _pq_lloyd_from_vecs(
+        cv = _nearest_cell(v, norms, round_digits)[1]
+        residuals.append((vid, [x - y for x, y in zip(v, cv)]))
+    return _pq_lloyd_from_vecs(
         spark, residuals, n_subspaces, n_codes, iters, sub, round_digits
     )
-    _cache_put(spark, cache_key, cb, ns="pq_train_residual_local")
-    return cb
 
 
 def _subspace_slices(

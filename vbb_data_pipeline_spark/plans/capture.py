@@ -36,10 +36,6 @@ _plans: list[tuple[str, str]] = []
 _orig_lcp = None
 
 
-def is_enabled() -> bool:
-    return _enabled
-
-
 def _record(label: str, plan: str) -> None:
     with _lock:
         _plans.append((label, plan))

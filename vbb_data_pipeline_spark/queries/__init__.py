@@ -282,15 +282,3 @@ def exact_sum(col, scale: int = 100):
 def exact_sum_sql(expr: str, scale: int = 100) -> str:
     """DuckDB twin of :func:`exact_sum`."""
     return f"(sum(CAST(round(({expr}) * {scale}) AS BIGINT)) / {scale}.0)"
-
-
-def exact_avg(col, count_col=None, scale: int = 100):
-    """Spark side: avg derived from the fixed-point sum (deterministic)."""
-    from pyspark.sql import functions as F
-
-    n = F.count(F.lit(1)) if count_col is None else count_col
-    return exact_sum(col, scale) / n
-
-
-def exact_avg_sql(expr: str, scale: int = 100) -> str:
-    return f"({exact_sum_sql(expr, scale)} / count(*))"

@@ -259,13 +259,6 @@ _BM25_ORACLE = f"""
     """
 
 
-def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbb_data_pipeline_spark.operators.retrieval import bm25_topk
-
-    d = load_table(spark, sf_dir, "documents")
-    return bm25_topk(spark, d, _BM25_QUERIES, k=_BM25_K)
-
-
 _TFIDF_ORACLE = """
     WITH toks AS (
         SELECT doc_id,

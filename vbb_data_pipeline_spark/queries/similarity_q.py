@@ -202,9 +202,24 @@ _IVF_PROBE = 4
 _KMEANS_ITERS = 2
 
 
+def _ivf_centroids(
+    e: DataFrame, sf_dir: str, sample_n: int = 1 << 18
+) -> DataFrame:
+    """The IVF coarse quantizer over ``_adv_embeddings(sf_dir)``, shared
+    by the ivf, semdedup and PQ legs through the trainer cache (one
+    model per ``sample_n``)."""
+    return sim.kmeans_centroids_local(
+        e,
+        n_cells=_IVF_CELLS,
+        iters=_KMEANS_ITERS,
+        sample_n=sample_n,
+        cache_key=f"adv1|{sf_dir}",
+    )
+
+
 def _kmeans_oracle() -> str:
-    """Generate the DuckDB twin of kmeans_centroids + ivf_topk: the
-    same fixed seed, the same ``_KMEANS_ITERS`` Lloyd rounds with
+    """Generate the DuckDB twin of kmeans_centroids_local + ivf_topk:
+    the same fixed seed, the same ``_KMEANS_ITERS`` Lloyd rounds with
     fixed-point per-dimension means, the same rounded-cosine argmax
     with cell-id tie-break."""
     from vbb_data_pipeline_spark.operators.similarity import KMEANS_SCALE
@@ -299,13 +314,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.4 s executor CPU).
     fast = default_hash_mode() == "fast"
     sample_n = max(512, 32 * _IVF_CELLS) if fast else 1 << 18
-    centroids = sim.kmeans_centroids_local(
-        e,
-        n_cells=_IVF_CELLS,
-        iters=_KMEANS_ITERS,
-        sample_n=sample_n,
-        cache_key=f"adv1|{sf_dir}|{_IVF_CELLS}|{_KMEANS_ITERS}|{DIM}|{sample_n}",
-    )
+    centroids = _ivf_centroids(e, sf_dir, sample_n)
     out = sim.ivf_topk(
         e,
         queries,
@@ -334,7 +343,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucket join + exact cosine re-rank (bucket equi-join replaces "
     "the cross join at scale); [ivf] TRAINED-centroid IVF — "
     "deterministic Lloyd k-means ({} rounds, lowest-id seeding, "
-    "fixed-point means: operators/similarity.kmeans_centroids), "
+    "fixed-point means: operators/similarity.kmeans_centroids_local), "
     "broadcast-centroid cell assignment, nprobe cell pruning, exact "
     "re-rank inside probed cells; the inverted-list partitioning is "
     "the 100 TB layout (corpus bucketed by cell_id, probes touch "
@@ -467,12 +476,7 @@ def sim_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _adv_embeddings(spark, sf_dir)
-    centroids = sim.kmeans_centroids_local(
-        e,
-        n_cells=_IVF_CELLS,
-        iters=_KMEANS_ITERS,
-        cache_key=f"adv1|{sf_dir}|{_IVF_CELLS}|{_KMEANS_ITERS}|{DIM}",
-    )
+    centroids = _ivf_centroids(e, sf_dir)
     # pinned constants (n_cells=16 quantizer, expression assignment)
     # for bit-for-bit DuckDB replay — the ORACLE configuration only.
     # The operator's production default (centroids=None) trains cells
@@ -496,8 +500,10 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near-duplicate pairs, LSH blocked (bucket equi-join, never a "
     "cross join; threshold 0.35); [semdedup] SemDeDup (Abbas et al. "
     "2023): k-means cells as the candidate blocks (same deterministic "
-    "trainer+cache as the ivf leg — train once, reuse), keep-priority "
-    "= LOW centroid cosine (the paper's keep-the-atypical policy), "
+    "trainer+cache as the ivf leg — train once, reuse; in fast hash "
+    "mode the ivf leg samples fewer vectors and trains its own), "
+    "keep-priority = LOW centroid cosine (the paper's "
+    "keep-the-atypical policy), "
     "drop when the upper-triangular within-cell max cosine to a "
     "better-ranked doc >= threshold; cells, not buckets, bound the "
     "quadratic stage — n_cells is the 100 TB lever (110k cells in "
@@ -532,6 +538,35 @@ _PQ_CODES = 16     # codewords per subspace
 _PQ_ITERS = 2
 _PQ_CAND = 20      # ADC candidates per query before exact re-rank
 _PQ_SAMPLE = 4096  # driver-side training sample bound
+
+
+def _pq_codebooks(e: DataFrame, sf_dir: str) -> DataFrame:
+    """PQ codebooks over ``_adv_embeddings(sf_dir)``, shared by the pq
+    and ivfpq legs through the trainer cache."""
+    return sim.pq_train_local(
+        e,
+        n_subspaces=_PQ_M,
+        n_codes=_PQ_CODES,
+        iters=_PQ_ITERS,
+        dim=DIM,
+        sample_n=_PQ_SAMPLE,
+        cache_key=f"adv1|{sf_dir}",
+    )
+
+
+def _residual_codebooks(e: DataFrame, sf_dir: str) -> DataFrame:
+    """PQ codebooks on residuals against :func:`_ivf_centroids` (the
+    cache key names the corpus; the centroids derive from it)."""
+    return sim.pq_train_residual_local(
+        e,
+        _ivf_centroids(e, sf_dir),
+        n_subspaces=_PQ_M,
+        n_codes=_PQ_CODES,
+        iters=_PQ_ITERS,
+        dim=DIM,
+        sample_n=_PQ_SAMPLE,
+        cache_key=f"adv1|{sf_dir}",
+    )
 
 
 def _pq_oracle() -> str:
@@ -660,15 +695,7 @@ def _pq_oracle() -> str:
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _adv_embeddings(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 10)
-    cb = sim.pq_train_local(
-        e,
-        n_subspaces=_PQ_M,
-        n_codes=_PQ_CODES,
-        iters=_PQ_ITERS,
-        dim=DIM,
-        sample_n=_PQ_SAMPLE,
-        cache_key=f"pq|adv1|{sf_dir}|{_PQ_M}|{_PQ_CODES}|{_PQ_ITERS}|{DIM}",
-    )
+    cb = _pq_codebooks(e, sf_dir)
     out = sim.pq_topk(
         e,
         queries,
@@ -869,21 +896,8 @@ def _ivfpq_oracle() -> str:
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _adv_embeddings(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 10)
-    centroids = sim.kmeans_centroids_local(
-        e,
-        n_cells=_IVF_CELLS,
-        iters=_KMEANS_ITERS,
-        cache_key=f"adv1|{sf_dir}|{_IVF_CELLS}|{_KMEANS_ITERS}|{DIM}",
-    )
-    cb = sim.pq_train_local(
-        e,
-        n_subspaces=_PQ_M,
-        n_codes=_PQ_CODES,
-        iters=_PQ_ITERS,
-        dim=DIM,
-        sample_n=_PQ_SAMPLE,
-        cache_key=f"pq|adv1|{sf_dir}|{_PQ_M}|{_PQ_CODES}|{_PQ_ITERS}|{DIM}",
-    )
+    centroids = _ivf_centroids(e, sf_dir)
+    cb = _pq_codebooks(e, sf_dir)
     out = sim.ivf_pq_topk(
         e,
         queries,
@@ -1123,22 +1137,8 @@ def _ivfpq_res_oracle() -> str:
 def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _adv_embeddings(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 10)
-    centroids = sim.kmeans_centroids_local(
-        e,
-        n_cells=_IVF_CELLS,
-        iters=_KMEANS_ITERS,
-        cache_key=f"adv1|{sf_dir}|{_IVF_CELLS}|{_KMEANS_ITERS}|{DIM}",
-    )
-    cb = sim.pq_train_residual_local(
-        e,
-        centroids,
-        n_subspaces=_PQ_M,
-        n_codes=_PQ_CODES,
-        iters=_PQ_ITERS,
-        dim=DIM,
-        sample_n=_PQ_SAMPLE,
-        cache_key=f"pqres|adv1|{sf_dir}|{_PQ_M}|{_PQ_CODES}|{_PQ_ITERS}|{DIM}",
-    )
+    centroids = _ivf_centroids(e, sf_dir)
+    cb = _residual_codebooks(e, sf_dir)
     out = sim.ivf_pq_residual_topk(
         e,
         queries,
@@ -1209,31 +1209,9 @@ def sim_pq_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (re-verified green at sf0.01/sf0.001 after this change).
     e = _adv_embeddings(spark, sf_dir)
     queries = e.filter(F.col("vec_id") < 10)
-    centroids = sim.kmeans_centroids_local(
-        e,
-        n_cells=_IVF_CELLS,
-        iters=_KMEANS_ITERS,
-        cache_key=f"adv1|{sf_dir}|{_IVF_CELLS}|{_KMEANS_ITERS}|{DIM}",
-    )
-    cb = sim.pq_train_local(
-        e,
-        n_subspaces=_PQ_M,
-        n_codes=_PQ_CODES,
-        iters=_PQ_ITERS,
-        dim=DIM,
-        sample_n=_PQ_SAMPLE,
-        cache_key=f"pq|adv1|{sf_dir}|{_PQ_M}|{_PQ_CODES}|{_PQ_ITERS}|{DIM}",
-    )
-    cb_res = sim.pq_train_residual_local(
-        e,
-        centroids,
-        n_subspaces=_PQ_M,
-        n_codes=_PQ_CODES,
-        iters=_PQ_ITERS,
-        dim=DIM,
-        sample_n=_PQ_SAMPLE,
-        cache_key=f"pqres|adv1|{sf_dir}|{_PQ_M}|{_PQ_CODES}|{_PQ_ITERS}|{DIM}",
-    )
+    centroids = _ivf_centroids(e, sf_dir)
+    cb = _pq_codebooks(e, sf_dir)
+    cb_res = _residual_codebooks(e, sf_dir)
     codes_shared = (
         sim.pq_encode_arrow(e, cb, _PQ_M, DIM)
         .filter(

@@ -19,8 +19,7 @@ Two families:
 ``PRIMARY_KEYS`` / ``FOREIGN_KEYS`` mirror the reference's PK/FK web
 (``05-create-schema.sh:39,59,76,95,118,136,157-160,174-181,192-194``).
 Spark does not enforce constraints; PKs drive idempotent-load dedup
-keys and FKs drive the referential-integrity check operator
-(operators/quality.py).
+keys and FKs document the join graph.
 """
 
 from __future__ import annotations

@@ -161,9 +161,3 @@ def write_stream_scd2(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def dedup_key_count(spark_df: DataFrame, key_cols: Sequence[str]) -> int:
-    """Distinct-key count of a sink — the invariant an idempotent sink
-    preserves across replays (test helper)."""
-    return spark_df.select(*[F.col(c) for c in key_cols]).distinct().count()
