@@ -71,7 +71,7 @@ def test_clustered_build_certifies_small_nprobe(spark, clustered, tmp_path):
         clustered, n_cells=40, iters=3, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        clustered, cents, path, dim=DIM, target_recall=0.9,
+        clustered, cents, path, target_recall=0.9,
         recall_kwargs={"k": K, "n_queries": 16},
     )
     rec = json.loads(
@@ -84,7 +84,7 @@ def test_clustered_build_certifies_small_nprobe(spark, clustered, tmp_path):
     # the auto probe actually delivers the certified recall
     q = clustered.filter(F.col("vec_id") < 8)
     auto = ivf_topk_from_index(
-        spark, path, q, cents, k=K, nprobe="auto", dim=DIM
+        spark, path, q, cents, k=K, nprobe="auto"
     )
     truth = brute_force_topk_arrow(clustered, q, k=K)
     assert _recall(auto, truth) >= 0.9
@@ -99,7 +99,7 @@ def test_uniform_build_enforces_exact_fallback(spark, uniform, tmp_path):
         uniform, n_cells=40, iters=3, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        uniform, cents, path, dim=DIM, target_recall=0.95,
+        uniform, cents, path, target_recall=0.95,
         # ladder capped below n_cells: no rung may scan everything,
         # mirroring production where nprobe == n_cells is not a probe
         recall_kwargs={"k": K, "n_queries": 16, "nprobe_ladder": (2, 4, 8)},
@@ -110,7 +110,7 @@ def test_uniform_build_enforces_exact_fallback(spark, uniform, tmp_path):
 
     q = uniform.filter(F.col("vec_id") < 8)
     auto = ivf_topk_from_index(
-        spark, path, q, cents, k=K, nprobe="auto", dim=DIM
+        spark, path, q, cents, k=K, nprobe="auto"
     )
     truth = brute_force_topk_arrow(uniform, q, k=K)
     assert _recall(auto, truth) == 1.0
@@ -160,15 +160,15 @@ def test_auto_without_marker_raises(spark, clustered, tmp_path):
     ).localCheckpoint()
     # target_recall=None is the r10 escape hatch: certification is
     # the DEFAULT build posture now, skipping it must be explicit
-    ivf_write_index(clustered, cents, path, dim=DIM, target_recall=None)
+    ivf_write_index(clustered, cents, path, target_recall=None)
     q = clustered.filter(F.col("vec_id") < 4)
     with pytest.raises(ValueError, match="recall marker"):
         ivf_topk_from_index(
-            spark, path, q, cents, k=K, nprobe="auto", dim=DIM
+            spark, path, q, cents, k=K, nprobe="auto"
         )
     # integer nprobe keeps working without a marker
     assert ivf_topk_from_index(
-        spark, path, q, cents, k=K, nprobe=4, dim=DIM
+        spark, path, q, cents, k=K, nprobe=4
     ).count() > 0
 
 
@@ -184,13 +184,13 @@ def test_default_build_certifies_and_default_probe_consumes(
         clustered, n_cells=40, iters=3, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        clustered, cents, path, dim=DIM,
+        clustered, cents, path,
         recall_kwargs={"k": K, "n_queries": 16},
     )
     rec = json.loads(open(f"{path}/{ANN_RECALL_MARKER}").read())
     assert rec["target_recall"] == 0.9
     q = clustered.filter(F.col("vec_id") < 8)
-    auto = ivf_topk_from_index(spark, path, q, cents, k=K, dim=DIM)
+    auto = ivf_topk_from_index(spark, path, q, cents, k=K)
     truth = brute_force_topk_arrow(clustered, q, k=K)
     assert _recall(auto, truth) >= 0.9
 
@@ -204,7 +204,7 @@ def test_fallback_marker_serves_any_k(spark, uniform, tmp_path):
         uniform, n_cells=40, iters=3, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        uniform, cents, path, dim=DIM, target_recall=0.95,
+        uniform, cents, path, target_recall=0.95,
         recall_kwargs={"k": K, "n_queries": 16, "nprobe_ladder": (2, 4, 8)},
     )
     rec = json.loads(open(f"{path}/{ANN_RECALL_MARKER}").read())
@@ -212,7 +212,7 @@ def test_fallback_marker_serves_any_k(spark, uniform, tmp_path):
     q = uniform.filter(F.col("vec_id") < 4)
     big_k = K + 11  # larger than the certified k: exact path must serve it
     got = ivf_topk_from_index(
-        spark, path, q, cents, k=big_k, nprobe="auto", dim=DIM
+        spark, path, q, cents, k=big_k, nprobe="auto"
     )
     truth = brute_force_topk_arrow(uniform, q, k=big_k)
     assert _recall(got, truth) == 1.0
@@ -224,7 +224,7 @@ def test_auto_kind_mismatch_raises(spark, clustered, tmp_path):
         clustered, n_cells=40, iters=2, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        clustered, cents, path, dim=DIM, target_recall=0.5,
+        clustered, cents, path, target_recall=0.5,
         recall_kwargs={"k": K, "n_queries": 8},
     )
     cbs = pq_train_numpy(
@@ -247,9 +247,9 @@ def test_estimator_standalone_no_marker(spark, clustered, tmp_path):
     cents = kmeans_centroids_numpy(
         clustered, n_cells=40, iters=2, sample_n=N
     ).localCheckpoint()
-    ivf_write_index(clustered, cents, path, dim=DIM, target_recall=None)
+    ivf_write_index(clustered, cents, path, target_recall=None)
     out = ann_recall_estimate(
-        spark, path, clustered, cents, DIM, k=K, n_queries=8,
+        spark, path, clustered, cents, k=K, n_queries=8,
         target_recall=0.9, write_marker=False,
     )
     assert out["curve"] and 0.0 <= out["curve"][0]["recall"] <= 1.0
@@ -266,24 +266,24 @@ def test_auto_k_larger_than_certified_raises(spark, clustered, tmp_path):
         clustered, n_cells=40, iters=3, sample_n=N
     ).localCheckpoint()
     ivf_write_index(
-        clustered, cents, path, dim=DIM, target_recall=0.9,
+        clustered, cents, path, target_recall=0.9,
         recall_kwargs={"k": K, "n_queries": 16},
     )
     q = clustered.filter(F.col("vec_id") < 4)
     with pytest.raises(ValueError, match="certified k="):
         ivf_topk_from_index(
-            spark, path, q, cents, k=K + 11, nprobe="auto", dim=DIM
+            spark, path, q, cents, k=K + 11, nprobe="auto"
         )
     # smaller-k probes ride the certification
     small = ivf_topk_from_index(
-        spark, path, q, cents, k=K - 4, nprobe="auto", dim=DIM
+        spark, path, q, cents, k=K - 4, nprobe="auto"
     )
     assert small.groupBy("query_id").count().agg(
         F.max("count")
     ).collect()[0][0] == K - 4
     # integer nprobe bypasses certification entirely
     assert ivf_topk_from_index(
-        spark, path, q, cents, k=K + 11, nprobe=8, dim=DIM
+        spark, path, q, cents, k=K + 11, nprobe=8
     ).count() > 0
 
 
@@ -299,11 +299,11 @@ def test_append_estimate_covers_full_index(spark, clustered, tmp_path):
     first = clustered.filter(F.col("vec_id") % 2 == 0)
     rest = clustered.filter(F.col("vec_id") % 2 == 1)
     ivf_write_index(
-        first, cents, path, dim=DIM, target_recall=0.9,
+        first, cents, path, target_recall=0.9,
         recall_kwargs={"k": K, "n_queries": 16},
     )
     ivf_write_index(
-        rest, cents, path, dim=DIM, mode="append", target_recall=0.9,
+        rest, cents, path, mode="append", target_recall=0.9,
         recall_kwargs={"k": K, "n_queries": 16},
     )
     rec = json.loads(open(f"{path}/{ANN_RECALL_MARKER}").read())
@@ -313,7 +313,7 @@ def test_append_estimate_covers_full_index(spark, clustered, tmp_path):
     assert rec["fallback"] is False
     q = clustered.filter(F.col("vec_id") < 8)
     auto = ivf_topk_from_index(
-        spark, path, q, cents, k=K, nprobe="auto", dim=DIM
+        spark, path, q, cents, k=K, nprobe="auto"
     )
     truth = brute_force_topk_arrow(clustered, q, k=K)
     assert _recall(auto, truth) >= 0.9

@@ -159,7 +159,7 @@ def test_cosine_pandas_udf_matches_native(spark):
     got = pairs.select(
         "ia",
         F.round(cosine_udf("va", "vb"), 6).alias("u"),
-        F.round(cosine(F.col("va"), F.col("vb"), dim=64), 6).alias("n"),
+        F.round(cosine(F.col("va"), F.col("vb")), 6).alias("n"),
     ).collect()
     assert len(got) > 0
     for r in got:

@@ -338,8 +338,7 @@ def test_shared_codes_and_assignment_parity(emb, codebooks):
         .repartition("vec_id")
     )
     assigned = sim.ivf_assign(
-        emb.filter(F.col("vec_id").isNotNull()), cents, DIM,
-        cell_col="cell_id",
+        emb.filter(F.col("vec_id").isNotNull()), cents,
     )
 
     want = sorted(map(tuple, sim.pq_topk(
@@ -372,3 +371,27 @@ def test_shared_codes_and_assignment_parity(emb, codebooks):
         n_codes=K, dim=DIM, centroids=cents, codebooks=cb_res,
         assigned=assigned).collect()))
     assert got == want
+
+
+def test_pq_battery_shares_exchanges(spark):
+    """sim_pq_battery's three rungs share one codes frame and one
+    assignment frame. Spark then runs each shared exchange once and
+    serves the other consumers with ReusedExchange. A change that
+    makes two pre-exchange subtrees differ silently loses the reuse
+    and runs an extra Arrow encode pass, so the counts in the final
+    adaptive plan are pinned."""
+    import re
+
+    from conftest import SF_DIR
+
+    from vbb_data_pipeline_spark.queries.similarity_q import sim_pq_battery
+
+    df = sim_pq_battery(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.partition("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bReusedExchange\b", final)) == 10, final
+    # one encode of the raw vectors (shared by the pq and ivfpq rungs)
+    # and one of the residuals
+    assert len(re.findall(r"\bMapInPandas\b", final)) == 2, final

@@ -56,7 +56,6 @@ def result(spark):
     out = semantic_dedup(
         _df(spark, rows),
         _cents(spark, cents),
-        dim=DIM,
         threshold=0.95,
     )
     return {r["vec_id"]: r.asDict() for r in out.collect()}
@@ -111,7 +110,7 @@ def test_threshold_is_inclusive(spark):
     rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0])]
     cents = [(0, [1.0, 0.0, 0.0, 0.0])]
     out = semantic_dedup(
-        _df(spark, rows), _cents(spark, cents), dim=DIM, threshold=1.0
+        _df(spark, rows), _cents(spark, cents), threshold=1.0
     )
     got = {r["vec_id"]: r["dropped"] for r in out.collect()}
     assert got[0] is False and got[1] is True
@@ -127,7 +126,6 @@ def test_max_cell_size_backstop(spark):
     out = semantic_dedup(
         _df(spark, rows),
         _cents(spark, cents),
-        dim=DIM,
         threshold=0.9,
         max_cell_size=3,
     )
@@ -145,7 +143,7 @@ def test_null_vectors_pass_through(spark):
     rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, None)]
     cents = [(0, [1.0, 0.0, 0.0, 0.0])]
     out = semantic_dedup(
-        _df(spark, rows), _cents(spark, cents), dim=DIM, threshold=0.9
+        _df(spark, rows), _cents(spark, cents), threshold=0.9
     )
     got = {r["vec_id"]: r for r in out.collect()}
     assert sorted(got) == [0, 1]
@@ -164,7 +162,7 @@ def test_arrow_assignment_parity(spark):
         (i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(80)
     ]
     cents = [(c, [rng.uniform(-1, 1) for _ in range(DIM)]) for c in range(5)]
-    kw = dict(dim=DIM, threshold=0.6)
+    kw = dict(threshold=0.6)
     a = semantic_dedup(
         _df(spark, rows), _cents(spark, cents), assign="expr", **kw
     ).collect()
@@ -187,7 +185,7 @@ def test_small_corpus_trains_without_centroids(spark):
         (2, [0.0, 0.0, 0.0, 1.0]),
         (3, None),                      # NULL vector: pass-through
     ]
-    out = semantic_dedup(_df(spark, rows), None, dim=DIM, threshold=0.99)
+    out = semantic_dedup(_df(spark, rows), None, threshold=0.99)
     got = {r["vec_id"]: r.asDict() for r in out.collect()}
     assert set(got) == {0, 1, 2, 3}          # one row per input doc
     assert got[3]["dropped"] is False        # NULL vec passes through
@@ -195,7 +193,7 @@ def test_small_corpus_trains_without_centroids(spark):
 
     # all-NULL corpus: nothing to train on, every doc passes through
     out2 = semantic_dedup(
-        _df(spark, [(7, None), (8, None)]), None, dim=DIM, threshold=0.99
+        _df(spark, [(7, None), (8, None)]), None, threshold=0.99
     )
     got2 = {r["vec_id"]: r.asDict() for r in out2.collect()}
     assert set(got2) == {7, 8}
@@ -267,7 +265,7 @@ def test_trainer_cache_is_namespaced_per_trainer(spark, monkeypatch):
         [(i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(40)],
     )
     kw = dict(
-        dim=DIM, threshold=0.9, checkpoint=False,
+        threshold=0.9, checkpoint=False,
         train_cache_key="semdedup-warm",
     )
     cold = semantic_dedup(cdf, None, **kw).collect()

@@ -49,7 +49,7 @@ def test_random_embeddings_match_oracle(spark, seed):
             r["dropped"],
         )
         for r in semantic_dedup(
-            df, cents, dim=DIM, threshold=_SD_THRESHOLD
+            df, cents, threshold=_SD_THRESHOLD
         ).collect()
     }
 

@@ -12,7 +12,6 @@ from vbb_data_pipeline_spark.operators.similarity import (
     semdedup_incremental,
 )
 
-DIM = 4
 THRESH = 0.95
 
 
@@ -40,13 +39,13 @@ def index(spark, tmp_path):
             (10, [0.0, 0.0, 0.0, 1.0]),  # cell 1
         ],
     )
-    ivf_write_index(corpus, _cents(spark), path, dim=DIM)
+    ivf_write_index(corpus, _cents(spark), path)
     return path
 
 
 def _probe(spark, index, rows):
     out = semdedup_incremental(
-        _vecs(spark, rows), index, _cents(spark), dim=DIM, threshold=THRESH
+        _vecs(spark, rows), index, _cents(spark), threshold=THRESH
     )
     return {r["vec_id"]: r.asDict() for r in out.collect()}
 
@@ -87,7 +86,6 @@ def test_deterministic_tiebreak_smallest_id(spark, index):
         _vecs(spark, [(5, [1.0, 0.0, 0.0, 0.0])]),
         _cents(spark),
         index,
-        dim=DIM,
         mode="append",
     )
     got = _probe(spark, index, [(103, [1.0, 0.0, 0.0, 0.0])])
@@ -101,7 +99,6 @@ def test_survivor_append_feeds_next_batch(spark, index):
         _vecs(spark, [(200, [0.5, 0.0, 0.86, 0.0])]),
         _cents(spark),
         index,
-        dim=DIM,
         mode="append",
     )
     second = _probe(spark, index, [(201, [0.5, 0.0, 0.86, 0.0])])
@@ -121,7 +118,6 @@ def test_index_read_prunes_to_batch_cells(spark, index):
         _vecs(spark, [(400, [1.0, 0.0, 0.0, 0.0])]),
         index,
         _cents(spark),
-        dim=DIM,
         threshold=THRESH,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()

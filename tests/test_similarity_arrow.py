@@ -25,7 +25,7 @@ def _key(rows):
 
 def test_arrow_topk_matches_expression_path(spark, emb):
     q = emb.filter(F.col("vec_id") < 10)
-    exp = brute_force_topk(emb, q, k=5, dim=64).collect()
+    exp = brute_force_topk(emb, q, k=5).collect()
     got = brute_force_topk_arrow(emb, q, k=5).collect()
     assert _key(got) == _key(exp)
 
@@ -34,7 +34,7 @@ def test_arrow_topk_respects_partition_boundaries(spark, emb):
     """Per-batch local top-k must still produce the global top-k after
     the re-rank, regardless of how the corpus is partitioned."""
     q = emb.filter(F.col("vec_id") < 3)
-    exp = _key(brute_force_topk(emb, q, k=7, dim=64).collect())
+    exp = _key(brute_force_topk(emb, q, k=7).collect())
     for nparts in (1, 13):
         got = _key(
             brute_force_topk_arrow(emb.repartition(nparts), q, k=7).collect()
@@ -94,10 +94,10 @@ def test_ivf_index_matches_inline_and_prunes(spark, emb, tmp_path):
     cent = kmeans_centroids_local(emb, n_cells=8, iters=1)
     q = emb.filter(F.col("vec_id") < 5)
     idx = str(tmp_path / "ivf_index")
-    ivf_write_index(emb, cent, idx, dim=64)
+    ivf_write_index(emb, cent, idx)
 
     got = ivf_topk_from_index(
-        spark, idx, q, cent, k=5, nprobe=2, dim=64
+        spark, idx, q, cent, k=5, nprobe=2
     )
     exp = ivf_topk(
         emb, q, k=5, n_cells=8, nprobe=2, dim=64, centroids=cent
@@ -111,6 +111,29 @@ def test_ivf_index_matches_inline_and_prunes(spark, emb, tmp_path):
         "cell_id" in seg[:200]
         for seg in plan.split("PartitionFilters")[1:]
     ), plan
+
+
+def test_ivf_topk_join_route_matches_literal_route(spark, emb, monkeypatch):
+    """Above IVF_LITERAL_MAX_EXPRS, ivf_topk assigns cells with a
+    broadcast join + argmax aggregate and selects probe cells with a
+    window instead of the literal expressions. Both routes return the
+    same rows."""
+    from vbb_data_pipeline_spark.operators import similarity as sim
+
+    cent = sim.kmeans_centroids_local(emb, n_cells=8, iters=1)
+    q = emb.filter(F.col("vec_id") < 5)
+    kw = dict(k=5, n_cells=8, nprobe=2, dim=64, centroids=cent)
+    literal = sim.ivf_topk(emb, q, **kw)
+    assert "BroadcastNestedLoopJoin" not in literal._jdf.queryExecution(
+    ).executedPlan().toString()
+    monkeypatch.setattr(sim, "IVF_LITERAL_MAX_EXPRS", 0)
+    joined = sim.ivf_topk(emb, q, **kw)
+    # the query x centroid probe join only exists on the join route
+    assert "BroadcastNestedLoopJoin" in joined._jdf.queryExecution(
+    ).executedPlan().toString()
+    got = joined.collect()
+    assert got
+    assert _key(got) == _key(literal.collect())
 
 
 def test_embedding_neardup_bucket_cap(spark, emb):
@@ -179,7 +202,7 @@ def test_expression_plan_is_dim_independent_and_arrow_wins_at_768(spark):
     for dim in (8, 768):
         e = mk(dim)
         q = e.filter(F.col("vec_id") < 5)
-        df = brute_force_topk(e, q, k=3, dim=dim)
+        df = brute_force_topk(e, q, k=3)
         plans[dim] = len(df._jdf.queryExecution().analyzed().toString())
         # both routes still run at each dim
         assert len(df.collect()) == len(brute_force_topk_arrow(e, q, k=3).collect())
@@ -199,16 +222,12 @@ def test_ivf_assign_arrow_matches_expression_path(spark, emb):
     )
 
     cent = kmeans_centroids_local(emb, n_cells=8, iters=2)
-    exp = ivf_assign(emb, cent, dim=64, cell_col="cell_id").collect()
-    got = ivf_assign_arrow(
-        emb, cent, dim=64, cell_col="cell_id"
-    ).collect()
+    exp = ivf_assign(emb, cent).collect()
+    got = ivf_assign_arrow(emb, cent).collect()
     key = lambda rows: sorted(  # noqa: E731
         (r.vec_id, r.cell_id, tuple(r.embedding)) for r in rows
     )
     assert key(got) == key(exp)
     # identical under different physical partitioning of the corpus
-    got13 = ivf_assign_arrow(
-        emb.repartition(13), cent, dim=64, cell_col="cell_id"
-    ).collect()
+    got13 = ivf_assign_arrow(emb.repartition(13), cent).collect()
     assert key(got13) == key(exp)

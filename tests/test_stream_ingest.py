@@ -171,7 +171,6 @@ def test_semantic_tier_catches_paraphrase(spark, tmp_path):
         vec_col="embedding",
         embedding_index_path=str(tmp_path / "ivf"),
         centroids=cents,
-        dim=4,
         semantic_threshold=0.98,
     )
 
@@ -242,7 +241,6 @@ def test_semantic_tier_engages_on_uri_schemed_paths(spark, tmp_path):
         vec_col="embedding",
         embedding_index_path=uri("ivf"),
         centroids=cents,
-        dim=4,
         semantic_threshold=0.98,
     )
 

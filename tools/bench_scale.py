@@ -147,7 +147,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     return semantic_dedup(
-        e, None, dim=64, threshold=0.35, max_cell_size=4096,
+        e, None, threshold=0.35, max_cell_size=4096,
         train_cache_key=f"{sf_dir}|semdedup|default",
     )
 

@@ -3,12 +3,23 @@
 Brute-force cosine top-k as the correctness baseline, and a
 random-hyperplane LSH bucketing (Charikar SimHash for vectors) as the
 100 TB path: candidate generation becomes a bucket equi-join instead
-of a cross join.
+of a cross join. IVF, PQ and IVF-PQ operators add cell probes and
+compressed codes on top.
 
-All vector math is native column expressions (``zip_with`` +
-``aggregate``) over ``array<float>`` cast to double — JVM-side, no
-Python in the hot path. Hyperplane components derive deterministically
-from md5 so the DuckDB oracle can reproduce them bit-for-bit.
+Vector math has two forms. Query-time operators use native column
+expressions (``zip_with`` + ``aggregate``) over ``array<float>`` cast
+to double, so they run JVM-side. The ``*_arrow`` operators (scale
+paths: index builds, encode, pair-free brute force) run a numpy matmul
+per Arrow batch inside ``mapInPandas`` instead, and round to the same
+values by the parity contracts in their docstrings. Hyperplane
+components derive deterministically from md5 so the DuckDB oracle can
+reproduce them bit-for-bit.
+
+Every ANN query operator runs the same stages, and each stage is one
+private helper below: probe cells (:func:`_probe_cells`), build the
+ADC lookup table (:func:`_adc_lut`), score candidates approximately
+(:func:`_approx_cos`), cut to the best and re-rank them exactly
+(:func:`_rerank_top_k`), rank the final top-k (:func:`_rank_top_k`).
 """
 
 from __future__ import annotations
@@ -24,12 +35,16 @@ from pyspark.sql.window import Window
 
 from vbb_data_pipeline_spark.functions.literals import literal_rows_df
 
+#: Decimal digits (HALF_UP) every similarity score here is rounded to
+#: before it ranks, ties or compares; the DuckDB oracles round the same.
+ROUND_DIGITS = 5
+
 
 def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ over float or double arrays (double math either way).
 
     One ``zip_with`` + ``aggregate`` expression: O(1) expression nodes
@@ -46,9 +61,6 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     path for corpus×corpus scoring). Summation order (left-to-right)
     and double arithmetic match DuckDB's ``list_dot_product`` on
     ``CAST(x AS DOUBLE[])``, keeping results bit-identical.
-
-    ``dim`` is accepted for signature stability; the expression no
-    longer depends on it.
     """
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -57,17 +69,107 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def l2_norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def _norm_ratio(num: Column, den: Column) -> Column:
+    """``num / max(den, 1e-12)``: the zero-norm floor of every cosine
+    here (and of the DuckDB oracles)."""
+    return num / F.greatest(den, F.lit(1e-12))
+
+
+def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two double arrays; NULL-safe via greatest(ε).
 
     For pairwise scoring prefer precomputing per-vector norms BEFORE
     the join (see brute_force_topk) — computing norms inside the pair
     expression redoes O(dim) work per pair instead of per vector."""
-    return dot(a, b, dim) / F.greatest(l2_norm(a, dim) * l2_norm(b, dim), F.lit(1e-12))
+    return _norm_ratio(dot(a, b), l2_norm(a) * l2_norm(b))
+
+
+def _rcos(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of array columns ``a`` and ``b`` from their precomputed
+    norms ``na`` and ``nb``, rounded at :data:`ROUND_DIGITS` so ranking
+    is stable across engines and summation orders."""
+    return F.round(
+        _norm_ratio(dot(F.col(a), F.col(b)), F.col(na) * F.col(nb)),
+        ROUND_DIGITS,
+    )
+
+
+def _query_vecs(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *lead: str,
+    v: str = "_qv",
+    n: str = "_qn",
+) -> DataFrame:
+    """``(*lead, query_id, v, n)``: each query's vector and its norm."""
+    return queries.select(
+        *lead,
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias(v),
+    ).withColumn(n, l2_norm(F.col(v)))
+
+
+def _neighbor_vecs(
+    df: DataFrame, id_col: str, vec_col: str, *lead: str, v: str = "_cv"
+) -> DataFrame:
+    """``(*lead, neighbor_id, v, _cn)``: each candidate neighbor's
+    vector and its norm."""
+    return df.select(
+        *lead,
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias(v),
+    ).withColumn("_cn", l2_norm(F.col(v)))
+
+
+def _centroid_vecs(centroids: DataFrame, vec_col: str) -> DataFrame:
+    """``(cell_id, _mv, _mn)``: each centroid's vector and its norm."""
+    return centroids.select(
+        F.col("cell_id"),
+        F.col(vec_col).alias("_mv"),
+    ).withColumn("_mn", l2_norm(F.col("_mv")))
+
+
+def _lowest_id_centroids(
+    embeddings: DataFrame, n_cells: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The ``n_cells`` lowest-id vectors as a ``(cell_id, vec_col)``
+    table: the deterministic stand-in when no centroids are passed."""
+    return embeddings.filter(F.col(id_col) < n_cells).select(
+        F.col(id_col).cast("long").alias("cell_id"), F.col(vec_col)
+    )
+
+
+def _rank_top_k(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """Each query's ``k`` best rows by ``(cosine desc, neighbor_id
+    asc)`` → ``(query_id, neighbor_id, cosine, *extra, rank)``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select(
+            "query_id", "neighbor_id", "cosine", *extra,
+            F.col("_rn").alias("rank"),
+        )
+    )
+
+
+def _exact_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k over candidate ``pairs`` carrying
+    ``(query_id, _qv, _qn, neighbor_id, _cv, _cn)``; no vector is its
+    own neighbor."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        _rcos("_qv", "_cv", "_qn", "_cn").alias("cosine"),
+    )
+    return _rank_top_k(scored, k)
 
 
 def brute_force_topk(
@@ -76,8 +178,6 @@ def brute_force_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
@@ -88,45 +188,12 @@ def brute_force_topk(
 
     Cosine is rounded before ranking so ordering is stable across
     engines/summation orders; ties break on neighbor id.
-
-    ``dim`` is accepted for signature stability only — the dot/norm
-    expressions are higher-order functions that no longer depend on
-    it (see :func:`dot`), so no inference job runs when it is absent
-    (the old fallback launched a one-row Spark job at
-    plan-construction time whose result was dead).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-    ).withColumn("_cn", l2_norm(F.col("_cv"), dim))
+    q = _query_vecs(queries, id_col, vec_col)
+    c = _neighbor_vecs(embeddings, id_col, vec_col)
     # norms are computed once per vector (before the join); the pairwise
     # expression is a single codegen'd dot product + divide
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv"), dim)
-                / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").alias("rank"))
-    )
+    return _exact_top_k(F.broadcast(q).crossJoin(c), k)
 
 
 def brute_force_topk_arrow(
@@ -135,7 +202,6 @@ def brute_force_topk_arrow(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Exact top-k cosine neighbors on the Arrow/numpy path — the
     scale formulation of :func:`brute_force_topk`.
@@ -199,7 +265,7 @@ def brute_force_topk_arrow(
             # digits). Sign-aware floor(|x|·10^d + 0.5): exact
             # half-ticks are dyadic, so |x|·10^d is computed exactly
             # and lands on .5 precisely, rounding up as HALF_UP does.
-            p = 10.0 ** round_digits
+            p = 10.0 ** ROUND_DIGITS
             scores = np.sign(scores) * np.floor(np.abs(scores) * p + 0.5) / p
             # self-match suppression + per-batch top-k per query
             for qi in range(nq):
@@ -221,19 +287,7 @@ def brute_force_topk_arrow(
     local_topk = embeddings.select(
         F.col(id_col).cast("long").alias(id_col), vec_col
     ).mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local_topk.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("_rn").cast("int").alias("rank"),
-        )
-    )
+    return _rank_top_k(local_topk, k)
 
 
 def hyperplanes(num_planes: int, dim: int) -> list[list[float]]:
@@ -269,7 +323,7 @@ def hyperplane_lsh_buckets(
     v = F.col(vec_col)
     bits = [
         F.when(
-            dot(v, F.array(*[F.lit(x) for x in plane]), dim) >= 0, F.lit("1")
+            dot(v, F.array(*[F.lit(x) for x in plane])) >= 0, F.lit("1")
         ).otherwise(F.lit("0"))
         for plane in planes
     ]
@@ -281,11 +335,8 @@ def hyperplane_lsh_buckets(
 def ivf_assign(
     embeddings: DataFrame,
     centroids: DataFrame,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
-    cell_col: str | None = None,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (IVF cell).
 
@@ -296,29 +347,20 @@ def ivf_assign(
     per vector down to 1 on the map side, so the exchange carries N
     rows instead of sorting N×C (and no sort at all). Ties break on
     smallest cell id after rounding (negated id in the struct) so any
-    engine reproduces the same partition.
-
-    ``cell_col``: name of the centroid-id column in ``centroids``
-    (default: ``id_col`` — centroids shaped like corpus rows).
+    engine reproduces the same partition. ``centroids`` is a
+    ``(cell_id, vec_col)`` table.
     """
-    cent = centroids.select(
-        F.col(cell_col or id_col).alias("cell_id"),
-        F.col(vec_col).alias("_mv"),
-    ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
+    cent = _centroid_vecs(centroids, vec_col)
     v = embeddings.select(
         F.col(id_col),
         F.col(vec_col),
         F.col(vec_col).alias("_v"),
-    ).withColumn("_n", l2_norm(F.col("_v"), dim))
+    ).withColumn("_n", l2_norm(F.col("_v")))
     scored = v.join(F.broadcast(cent)).select(
         id_col,
         vec_col,
         "cell_id",
-        F.round(
-            dot(F.col("_v"), F.col("_mv"), dim)
-            / F.greatest(F.col("_n") * F.col("_mn"), F.lit(1e-12)),
-            round_digits,
-        ).alias("_cos"),
+        _rcos("_v", "_mv", "_n", "_mn").alias("_cos"),
     )
     best = scored.groupBy(id_col).agg(
         F.max(
@@ -339,11 +381,8 @@ def ivf_assign(
 def ivf_assign_arrow(
     embeddings: DataFrame,
     centroids: DataFrame,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
-    cell_col: str | None = None,
     keep_cos: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment on the Arrow/numpy path — the
@@ -365,7 +404,7 @@ def ivf_assign_arrow(
     carried the argmax partials).
 
     Parity contract: identical cells to :func:`ivf_assign` — the same
-    rounded-cosine argmax (HALF_UP sign-aware at ``round_digits``;
+    rounded-cosine argmax (HALF_UP sign-aware at ``ROUND_DIGITS``;
     the ``max(nx·nc, 1e-12)`` denominator floor), ties → smallest
     cell id (centroid rows are cell-ordered and ``argmax`` returns
     the first maximum). BLAS summation order differs from the
@@ -377,9 +416,7 @@ def ivf_assign_arrow(
 
     cent_rows = sorted(
         (int(r[0]), [float(x) for x in r[1]])
-        for r in centroids.select(
-            F.col(cell_col or id_col), F.col(vec_col)
-        ).collect()
+        for r in centroids.select("cell_id", vec_col).collect()
     )
     cells = np.array([c for c, _ in cent_rows], dtype="int64")
     cmat = np.array([v for _, v in cent_rows], dtype="float64")
@@ -402,7 +439,7 @@ def ivf_assign_arrow(
         import pandas as pd
 
         cells_, cmat_, cnorm_ = bc.value
-        p = 10.0 ** round_digits
+        p = 10.0 ** ROUND_DIGITS
         for pdf in batches:
             pdf = pdf[pdf[vec_col].notna()]
             if not len(pdf):
@@ -502,7 +539,6 @@ def kmeans_centroids_local(
     iters: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -524,7 +560,7 @@ def kmeans_centroids_local(
 
     Deterministic and engine-replayable: the sample is the
     ``sample_n`` lowest-``id_col`` vectors, seeds are ids
-    ``< n_cells``, cosines round HALF_UP at ``round_digits`` before
+    ``< n_cells``, cosines round HALF_UP at ``ROUND_DIGITS`` before
     the argmax (tie → smallest cell), means are fixed-point integer
     sums at ``KMEANS_SCALE`` — the identical arithmetic, in the
     identical order, as the DuckDB oracle that replays training in SQL
@@ -555,7 +591,7 @@ def kmeans_centroids_local(
         sums: dict[int, list[int]] = {}
         counts: dict[int, int] = {}
         for _vid, v in vecs:
-            best_cell = _nearest_cell(v, norms, round_digits)[0]
+            best_cell = _nearest_cell(v, norms)[0]
             acc = sums.get(best_cell)
             if acc is None:
                 acc = [0] * len(v)
@@ -722,7 +758,6 @@ def ivf_topk(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate nearest neighbors.
@@ -746,9 +781,7 @@ def ivf_topk(
     embeddings = embeddings.filter(F.col(vec_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
     if centroids is None:
-        centroids = embeddings.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).cast("long").alias("cell_id"), F.col(vec_col)
-        )
+        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
 
     # r10 optimization (guide §2.4 — remove shuffles outright): with a
     # bounded trained centroid set, both centroid-facing steps fold
@@ -803,7 +836,7 @@ def ivf_topk(
                 f"round(aggregate(zip_with({vec}, {carr}, (x, y) -> "
                 "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
                 f"(acc, x) -> acc + x) / greatest({vnorm} * {_d(cn)}, "
-                f"{_d(1e-12)}), {int(round_digits)})"
+                f"{_d(1e-12)}), {ROUND_DIGITS})"
             )
 
         def _cell_structs_sql(vec: str, vnorm: str) -> list[str]:
@@ -813,10 +846,7 @@ def ivf_topk(
                 for cid, cv in cent_rows
             ]
 
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-        ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
+        q = _query_vecs(queries, id_col, vec_col)
         # ascending sort on (−cos, cell_id) ≡ (cos desc, cell_id asc);
         # negate as 0.0 − c, not −c: the window SortOrder this replaces
         # normalizes −0.0 = +0.0 before comparing, while array_sort's
@@ -847,7 +877,7 @@ def ivf_topk(
         cand = embeddings.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("_cv"),
-            l2_norm(F.col(vec_col), dim).alias("_cn"),
+            l2_norm(F.col(vec_col)).alias("_cn"),
         ).withColumn(
             "cell_id",
             F.expr(
@@ -857,76 +887,54 @@ def ivf_topk(
             ),
         )
     else:
-        assigned = ivf_assign(
-            embeddings, centroids, dim, id_col, vec_col, round_digits,
-            cell_col="cell_id",
-        )
+        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+        cent = _centroid_vecs(centroids, vec_col)
+        q = _query_vecs(queries, id_col, vec_col)
+        probes = _probe_cells(q, cent, nprobe, "_qv", "_qn")
+        cand = _neighbor_vecs(assigned, id_col, vec_col, "cell_id")
+    return _exact_top_k(F.broadcast(probes).join(cand, "cell_id"), k)
 
-        cent = centroids.select(
-            F.col("cell_id"),
-            F.col(vec_col).alias("_mv"),
-        ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-        ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-        probe_scored = q.join(F.broadcast(cent)).select(
-            "query_id",
-            "_qv",
-            "_qn",
-            "cell_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_mv"), dim)
-                / F.greatest(F.col("_qn") * F.col("_mn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("_cos"),
-        )
-        wp = Window.partitionBy("query_id").orderBy(
-            F.col("_cos").desc(), F.col("cell_id").asc()
-        )
-        probes = (
-            probe_scored.withColumn("_rn", F.row_number().over(wp))
-            .filter(F.col("_rn") <= nprobe)
-            .select("query_id", "_qv", "_qn", "cell_id")
-        )
 
-        cand = assigned.select(
-            "cell_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-        ).withColumn("_cn", l2_norm(F.col("_cv"), dim))
-    scored = (
-        F.broadcast(probes)
-        .join(cand, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv"), dim)
-                / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
+def _probe_cells(
+    q: DataFrame, cent: DataFrame, nprobe: int, *carry: str
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest cells → ``(query_id, *carry,
+    cell_id)``. ``q`` is a :func:`_query_vecs` frame and ``cent`` a
+    :func:`_centroid_vecs` frame (broadcast); cells rank by rounded
+    cosine, ties to the smaller cell id."""
+    scored = q.join(F.broadcast(cent)).select(
+        "query_id",
+        *carry,
+        "cell_id",
+        _rcos("_qv", "_mv", "_qn", "_mn").alias("_cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    wp = Window.partitionBy("query_id").orderBy(
+        F.col("_cos").desc(), F.col("cell_id").asc()
     )
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").alias("rank"))
+        scored.withColumn("_rn", F.row_number().over(wp))
+        .filter(F.col("_rn") <= nprobe)
+        .select("query_id", *carry, "cell_id")
     )
+
+
+def _read_cells(spark, index_path: str, frame: DataFrame) -> DataFrame:
+    """The persisted index's partitions for the cells ``frame`` holds:
+    the distinct cell ids (collected metadata, not data) become a
+    static ``cell_id IN (...)`` predicate, so the scan
+    partition-prunes before file listing."""
+    cells = sorted(
+        r.cell_id for r in frame.select("cell_id").distinct().collect()
+    )
+    return spark.read.parquet(index_path).filter(F.col("cell_id").isin(cells))
 
 
 def ivf_write_index(
     embeddings: DataFrame,
     centroids: DataFrame,
     path: str,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     mode: str = "overwrite",
     target_recall: float | None = 0.9,
     recall_kwargs: dict | None = None,
@@ -970,10 +978,7 @@ def ivf_write_index(
     whole corpus against ALL cells, the one place the expression
     form's O(N·C·dim) candidate pass dominates.
     """
-    assigned = ivf_assign_arrow(
-        embeddings, centroids, dim, id_col, vec_col, round_digits,
-        cell_col="cell_id",
-    )
+    assigned = ivf_assign_arrow(embeddings, centroids, id_col, vec_col)
     assigned.repartition(F.col("cell_id")).write.partitionBy(
         "cell_id"
     ).mode(mode).parquet(path)
@@ -993,10 +998,9 @@ def ivf_write_index(
             else embeddings
         )
         ann_recall_estimate(
-            spark, path, src, centroids, dim,
+            spark, path, src, centroids,
             kind="ivf", target_recall=target_recall, id_col=id_col,
-            vec_col=vec_col, round_digits=round_digits,
-            **(recall_kwargs or {}),
+            vec_col=vec_col, **(recall_kwargs or {}),
         )
 
 
@@ -1007,10 +1011,8 @@ def ivf_topk_from_index(
     centroids: DataFrame,
     k: int,
     nprobe: int | str = "auto",
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """ANN top-k against a persisted IVF index
     (:func:`ivf_write_index`).
@@ -1042,84 +1044,29 @@ def ivf_topk_from_index(
         nprobe, _ = _resolve_auto_probe(spark, index_path, "ivf", k)
         if nprobe is None:
             return exact_topk_from_index(
-                spark, index_path, queries, k, id_col=id_col,
-                vec_col=vec_col, round_digits=round_digits,
+                spark, index_path, queries, k, id_col=id_col, vec_col=vec_col
             )
-    cent = centroids.select(
-        F.col("cell_id"),
-        F.col(vec_col).alias("_mv"),
-    ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    probe_scored = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "_qv",
-        "_qn",
-        "cell_id",
-        F.round(
-            dot(F.col("_qv"), F.col("_mv"), dim)
-            / F.greatest(F.col("_qn") * F.col("_mn"), F.lit(1e-12)),
-            round_digits,
-        ).alias("_cos"),
+    cent = _centroid_vecs(centroids, vec_col)
+    q = _query_vecs(queries, id_col, vec_col)
+    probes = _probe_cells(q, cent, nprobe, "_qv", "_qn").localCheckpoint(
+        eager=True
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cell_id").asc()
+    # ^ two consumers (the collect of cell ids + the candidate
+    # join's broadcast side): materialize the |Q|*nprobe rows once or
+    # the centroid-scoring pass executes twice
+    cand = _neighbor_vecs(
+        _read_cells(spark, index_path, probes), id_col, vec_col, "cell_id"
     )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "_qv", "_qn", "cell_id")
-        # two consumers (driver collect of cell ids + the candidate
-        # join's broadcast side): materialize the |Q|*nprobe rows once
-        # or the centroid-scoring pass executes twice
-        .localCheckpoint(eager=True)
-    )
-    probed_cells = sorted(
-        {r.cell_id for r in probes.select("cell_id").distinct().collect()}
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin(probed_cells)
-    )
-    cand = index.select(
-        "cell_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-    ).withColumn("_cn", l2_norm(F.col("_cv"), dim))
-    scored = (
-        F.broadcast(probes)
-        .join(cand, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv"), dim)
-                / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").alias("rank"))
-    )
+    return _exact_top_k(F.broadcast(probes).join(cand, "cell_id"), k)
 
 
 def semdedup_incremental(
     new_df: DataFrame,
     index_path: str,
     centroids: DataFrame,
-    dim: int,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Incremental SemDeDup: classify a NEW batch of embeddings
     against the corpus's at-rest IVF index (:func:`ivf_write_index`)
@@ -1150,38 +1097,26 @@ def semdedup_incremental(
     vecs = new_df.filter(F.col(vec_col).isNotNull()).select(
         id_col, vec_col
     )
-    assigned = ivf_assign(
-        vecs, centroids, dim, id_col, vec_col, round_digits,
-        cell_col="cell_id",
-    ).localCheckpoint(eager=True)
+    assigned = ivf_assign(vecs, centroids, id_col, vec_col).localCheckpoint(
+        eager=True
+    )
     # ^ two consumers (driver collect of probed cells + the probe
     # join): materialize the batch-sized assignment once or the
     # broadcast-centroid scoring pass executes twice per micro-batch
-    batch_cells = sorted(
-        r.cell_id
-        for r in assigned.select("cell_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin(batch_cells)
-    )
+    index = _read_cells(spark, index_path, assigned)
     b = assigned.select(
         "cell_id", F.col(id_col), F.col(vec_col).alias("_v")
-    ).withColumn("_n", l2_norm(F.col("_v"), dim))
+    ).withColumn("_n", l2_norm(F.col("_v")))
     idx = index.select(
         "cell_id",
         F.col(id_col).alias("_old"),
         F.col(vec_col).alias("_ov"),
-    ).withColumn("_on", l2_norm(F.col("_ov"), dim))
-    cos = F.round(
-        dot(F.col("_v"), F.col("_ov"), dim)
-        / F.greatest(F.col("_n") * F.col("_on"), F.lit(1e-12)),
-        round_digits,
-    )
+    ).withColumn("_on", l2_norm(F.col("_ov")))
     best = (
         b.join(idx, "cell_id")
         .select(
             id_col,
-            cos.alias("_cos"),
+            _rcos("_v", "_ov", "_n", "_on").alias("_cos"),
             F.col("_old"),
         )
         .groupBy(id_col)
@@ -1237,7 +1172,6 @@ def lsh_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Approximate corpus×corpus top-k: candidates = same LSH bucket,
     re-ranked by exact cosine. Bucket join replaces the cross join.
@@ -1251,37 +1185,9 @@ def lsh_topk(
     """
     embeddings = embeddings.filter(F.col(vec_col).isNotNull())
     b = hyperplane_lsh_buckets(embeddings, num_planes, dim, id_col, vec_col)
-    a = b.select(
-        F.col("bucket"),
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    c = b.select(
-        F.col("bucket"),
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-    ).withColumn("_cn", l2_norm(F.col("_cv"), dim))
-    scored = (
-        a.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv"), dim)
-                / F.greatest(F.col("_qn") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").alias("rank"))
-    )
+    a = _query_vecs(b, id_col, vec_col, "bucket")
+    c = _neighbor_vecs(b, id_col, vec_col, "bucket")
+    return _exact_top_k(a.join(c, "bucket"), k)
 
 
 def embedding_neardup_pairs(
@@ -1334,11 +1240,11 @@ def embedding_neardup_pairs(
         b = b.join(ok, "bucket", "left_semi")
     bd = b.select(
         "bucket", F.col(id_col), F.col(vec_col).alias("_v")
-    ).withColumn("_n", l2_norm(F.col("_v"), dim))
+    ).withColumn("_n", l2_norm(F.col("_v")))
     a = bd.alias("a")
     c = bd.alias("c")
-    cos = dot(F.col("a._v"), F.col("c._v"), dim) / F.greatest(
-        F.col("a._n") * F.col("c._n"), F.lit(1e-12)
+    cos = _norm_ratio(
+        dot(F.col("a._v"), F.col("c._v")), F.col("a._n") * F.col("c._n")
     )
     return (
         a.join(
@@ -1350,7 +1256,7 @@ def embedding_neardup_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"c.{id_col}").alias("id_b"),
-            F.round(cos, 5).alias("cosine"),
+            F.round(cos, ROUND_DIGITS).alias("cosine"),
         )
     )
 
@@ -1398,11 +1304,9 @@ def _semdedup_centroids(
 def semantic_dedup(
     embeddings: DataFrame,
     centroids: DataFrame | None,
-    dim: int,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     max_cell_size: int | None = None,
     checkpoint: bool = True,
     assign: str = "arrow",
@@ -1445,7 +1349,7 @@ def semantic_dedup(
       rows.
 
     Deterministic and engine-replayable: centroid cosines round
-    HALF_UP at ``round_digits`` before ranking, pair cosines before
+    HALF_UP at ``ROUND_DIGITS`` before ranking, pair cosines before
     the max; the DuckDB oracle replays training, ranking and the
     upper-triangular max bit-for-bit.
 
@@ -1510,14 +1414,7 @@ def semantic_dedup(
         assign = "expr"
     if assign == "arrow":
         assigned = ivf_assign_arrow(
-            embeddings,
-            centroids,
-            dim,
-            id_col,
-            vec_col,
-            round_digits,
-            cell_col="cell_id",
-            keep_cos=True,
+            embeddings, centroids, id_col, vec_col, keep_cos=True
         ).select(
             id_col, "cell_id", "_ccos", F.col(vec_col).alias("_v")
         )
@@ -1525,19 +1422,15 @@ def semantic_dedup(
         cent = centroids.select(
             F.col("cell_id").cast("long").alias("cell_id"),
             F.col(vec_col).alias("_mv"),
-        ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
+        ).withColumn("_mn", l2_norm(F.col("_mv")))
         v = embeddings.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col), F.col(vec_col).alias("_v")
-        ).withColumn("_n", l2_norm(F.col("_v"), dim))
+        ).withColumn("_n", l2_norm(F.col("_v")))
         scored = v.join(F.broadcast(cent)).select(
             id_col,
             "_v",
             "cell_id",
-            F.round(
-                dot(F.col("_v"), F.col("_mv"), dim)
-                / F.greatest(F.col("_n") * F.col("_mn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("_ccos"),
+            _rcos("_v", "_mv", "_n", "_mn").alias("_ccos"),
         )
         assigned = scored.groupBy(id_col).agg(
             F.max(
@@ -1590,7 +1483,7 @@ def semantic_dedup(
         F.col("_ccos").asc(), F.col(id_col).asc()
     )
     ranked = assigned.withColumn("rnk", F.row_number().over(w)).withColumn(
-        "_vn", l2_norm(F.col("_v"), dim)
+        "_vn", l2_norm(F.col("_v"))
     )
     if checkpoint:
         # the ranked assignment feeds BOTH self-join sides and the
@@ -1601,11 +1494,7 @@ def semantic_dedup(
         ranked = ranked.localCheckpoint(eager=True)
     a = ranked.alias("a")  # candidate under test
     b = ranked.alias("b")  # better keep-priority docs in the same cell
-    pair_cos = F.round(
-        dot(F.col("a._v"), F.col("b._v"), dim)
-        / F.greatest(F.col("a._vn") * F.col("b._vn"), F.lit(1e-12)),
-        round_digits,
-    )
+    pair_cos = _rcos("a._v", "b._v", "a._vn", "b._vn")
     best = (
         a.join(
             b,
@@ -1653,7 +1542,6 @@ def pq_train_local(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -1667,7 +1555,7 @@ def pq_train_local(
     sample collected to the driver (FAISS-style: quantizer quality
     needs ~(100-1000)×n_codes points, never the corpus), seeds are the
     sample vectors with id < ``n_codes``, distances round HALF_UP at
-    ``round_digits`` before the argmin (tie → smallest code), means
+    ``ROUND_DIGITS`` before the argmin (tie → smallest code), means
     are fixed-point integer sums at ``KMEANS_SCALE``. The squared
     distance is evaluated as ``(x·x − 2·x·c) + c·c`` — that exact IEEE
     operation order — in this trainer, in :func:`pq_encode`'s column
@@ -1678,9 +1566,7 @@ def pq_train_local(
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
     vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
-    return _pq_lloyd_from_vecs(
-        spark, vecs, n_subspaces, n_codes, iters, sub, round_digits
-    )
+    return _pq_lloyd_from_vecs(spark, vecs, n_subspaces, n_codes, iters, sub)
 
 
 def _collect_sample(
@@ -1718,17 +1604,16 @@ def _with_norms(
 def _nearest_cell(
     v: list[float],
     norms: list[tuple[int, list[float], float]],
-    round_digits: int,
 ) -> tuple[int, list[float], float]:
     """The deterministic trainers' cell assignment — ``ivf_assign``'s
     recipe in driver Python: argmax of the cosine rounded HALF_UP at
-    ``round_digits`` over a ``max(‖v‖·‖c‖, 1e-12)`` denominator, tie →
+    ``ROUND_DIGITS`` over a ``max(‖v‖·‖c‖, 1e-12)`` denominator, tie →
     first (smallest-id) cell of the cell-ordered ``norms``."""
     nv = math_sqrt(_dot_seq(v, v))
     best, best_cos = None, None
     for cell in norms:
         c = _round_half_up(
-            _dot_seq(v, cell[1]) / max(nv * cell[2], 1e-12), round_digits
+            _dot_seq(v, cell[1]) / max(nv * cell[2], 1e-12), ROUND_DIGITS
         )
         if best_cos is None or c > best_cos:
             best, best_cos = cell, c
@@ -1742,7 +1627,6 @@ def _pq_lloyd_from_vecs(
     n_codes: int,
     iters: int,
     sub: int,
-    round_digits: int,
 ) -> DataFrame:
     """The shared per-subspace Lloyd loop over already-collected
     vectors (raw embeddings or residuals): squared-L2 assignment as
@@ -1775,7 +1659,7 @@ def _pq_lloyd_from_vecs(
                 best_code, best_d = None, None
                 for code, cv, cc in withn:
                     d = _round_half_up(
-                        (xx - 2 * _dot_seq(sv, cv)) + cc, round_digits
+                        (xx - 2 * _dot_seq(sv, cv)) + cc, ROUND_DIGITS
                     )
                     if best_d is None or d < best_d:
                         best_code, best_d = code, d
@@ -1806,7 +1690,6 @@ def pq_train_residual_local(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -1834,28 +1717,127 @@ def pq_train_residual_local(
     )
     residuals: list[tuple[int, list[float]]] = []
     for vid, v in vecs:
-        cv = _nearest_cell(v, norms, round_digits)[1]
+        cv = _nearest_cell(v, norms)[1]
         residuals.append((vid, [x - y for x, y in zip(v, cv)]))
     return _pq_lloyd_from_vecs(
-        spark, residuals, n_subspaces, n_codes, iters, sub, round_digits
+        spark, residuals, n_subspaces, n_codes, iters, sub
     )
 
 
-def _subspace_slices(
-    vec: Column, n_subspaces: int, sub: int
-) -> Column:
-    """``array<struct<subspace:int, _sv:array<double>>>`` of the
-    vector's coordinate blocks (1-based slice, matching DuckDB's
-    ``list_slice``)."""
-    return F.array(
+def _explode_subspaces(
+    df: DataFrame,
+    keys: list[str],
+    vec: str,
+    sv: str,
+    n_subspaces: int,
+    sub: int,
+) -> DataFrame:
+    """One row per (row, subspace) → ``(*keys, subspace, sv)``, where
+    ``sv`` is the ``vec`` column's ``sub``-wide coordinate block as
+    doubles (1-based slice, matching DuckDB's ``list_slice``)."""
+    slices = F.array(
         *[
             F.struct(
                 F.lit(j).alias("subspace"),
-                F.slice(_as_double(vec), j * sub + 1, sub).alias("_sv"),
+                F.slice(_as_double(F.col(vec)), j * sub + 1, sub).alias("_sv"),
             )
             for j in range(n_subspaces)
         ]
     )
+    return df.select(*keys, F.explode(slices).alias("_e")).select(
+        *keys,
+        F.col("_e.subspace").alias("subspace"),
+        F.col("_e._sv").alias(sv),
+    )
+
+
+def _fixed_dot(a: str, b: str) -> Column:
+    """``a·b`` as a ``KMEANS_SCALE`` fixed-point long: lookup-table
+    partials sum exactly and order-independently in any engine."""
+    return F.round(dot(F.col(a), F.col(b)) * KMEANS_SCALE).cast("long")
+
+
+def _adc_lut(
+    q: DataFrame, codebooks: DataFrame, n_subspaces: int, sub: int
+) -> DataFrame:
+    """Per-query ADC lookup table over the codebooks →
+    ``(query_id, _qn, subspace, code, _pd, _cn2)``: fixed-point
+    ``q_m·c`` and ``c·c`` per codeword. ``q`` is a :func:`_query_vecs`
+    frame."""
+    cb = codebooks.select("subspace", "code", F.col("subvec").alias("_cv"))
+    qex = _explode_subspaces(
+        q, ["query_id", "_qn"], "_qv", "_qsv", n_subspaces, sub
+    )
+    return qex.join(cb, "subspace").select(
+        "query_id",
+        "_qn",
+        "subspace",
+        "code",
+        _fixed_dot("_qsv", "_cv").alias("_pd"),
+        _fixed_dot("_cv", "_cv").alias("_cn2"),
+    )
+
+
+def _adc_sums(rows: DataFrame, id_col: str) -> DataFrame:
+    """Sum the looked-up partials per (query, vector) →
+    ``(query_id, id_col, _sd, _sn2, _qn)``."""
+    return rows.groupBy("query_id", id_col).agg(
+        F.sum("_pd").alias("_sd"),
+        F.sum("_cn2").alias("_sn2"),
+        F.max("_qn").alias("_qn"),
+    )
+
+
+def _approx_cos(sd: Column, n2: Column) -> Column:
+    """Rounded approximate cosine from fixed-point ``q·x̃`` (``sd``)
+    and ``|x̃|²`` (``n2``) sums and the query norm ``_qn``."""
+    return F.round(
+        _norm_ratio(
+            sd.cast("double") / KMEANS_SCALE,
+            F.col("_qn") * F.sqrt(n2.cast("double") / KMEANS_SCALE),
+        ),
+        ROUND_DIGITS,
+    )
+
+
+def _rerank_top_k(
+    adc: DataFrame,
+    approx: Column,
+    candidates: int,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The top-``candidates`` ``adc`` rows per query by ``approx``
+    (``approx_cosine desc``, id asc), re-ranked by exact cosine against
+    the full vectors in ``corpus`` → ``(query_id, neighbor_id, cosine,
+    approx_cosine, rank)``."""
+    wc = Window.partitionBy("query_id").orderBy(
+        F.col("approx_cosine").desc(), F.col(id_col).asc()
+    )
+    cand = (
+        adc.withColumn("approx_cosine", approx)
+        .withColumn("_rn", F.row_number().over(wc))
+        .filter(F.col("_rn") <= candidates)
+        .select(
+            "query_id", F.col(id_col).alias("neighbor_id"), "approx_cosine"
+        )
+    )
+    vecs = _neighbor_vecs(corpus, id_col, vec_col, v="_cvf")
+    qvec = _query_vecs(queries, id_col, vec_col, v="_qvf", n="_qnf")
+    rer = (
+        cand.join(vecs, "neighbor_id")
+        .join(F.broadcast(qvec), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "approx_cosine",
+            _rcos("_qvf", "_cvf", "_qnf", "_cn").alias("cosine"),
+        )
+    )
+    return _rank_top_k(rer, k, "approx_cosine")
 
 
 def pq_encode(
@@ -1865,7 +1847,6 @@ def pq_encode(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Quantize each vector → ``(id_col, subspace, code)``.
 
@@ -1883,27 +1864,20 @@ def pq_encode(
     # expression evaluates one dot instead of three, while the final
     # arithmetic keeps the exact cross-engine IEEE order
     # ``(x·x − 2·x·c) + c·c``.
-    ex = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(
-                _subspace_slices(F.col(vec_col), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            id_col,
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_sv"),
-        )
-        .withColumn("_xx", dot(F.col("_sv"), F.col("_sv")))
-    )
+    ex = _explode_subspaces(
+        embeddings.filter(F.col(vec_col).isNotNull()),
+        [id_col],
+        vec_col,
+        "_sv",
+        n_subspaces,
+        sub,
+    ).withColumn("_xx", dot(F.col("_sv"), F.col("_sv")))
     cb = codebooks.select(
         "subspace", "code", F.col("subvec").alias("_cv")
     ).withColumn("_cc", dot(F.col("_cv"), F.col("_cv")))
     d2 = F.round(
         (F.col("_xx") - 2 * dot(F.col("_sv"), F.col("_cv"))) + F.col("_cc"),
-        round_digits,
+        ROUND_DIGITS,
     )
     scored = ex.join(F.broadcast(cb), "subspace").select(
         id_col, "subspace", F.col("code"), d2.alias("_d2")
@@ -1923,7 +1897,6 @@ def pq_encode_arrow(
     dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Quantize each vector → ``(id_col, subspace, code)`` on the
     Arrow/numpy path — the scale formulation of :func:`pq_encode`
@@ -1944,7 +1917,7 @@ def pq_encode_arrow(
 
     Parity contract: identical codes to :func:`pq_encode` — the same
     ``(x·x − 2·x·c) + c·c`` arithmetic, the same HALF_UP rounding at
-    ``round_digits`` (sign-aware ``floor(|x|·10^d + 0.5)``; numpy's
+    ``ROUND_DIGITS`` (sign-aware ``floor(|x|·10^d + 0.5)``; numpy's
     default is half-to-even), ties → smallest code (argmin returns
     the first minimum and rows are code-ordered). numpy's pairwise
     summation can differ from the sequential expression dot below the
@@ -1976,7 +1949,7 @@ def pq_encode_arrow(
         import pandas as pd
 
         mats, cods = bc.value
-        p = 10.0 ** round_digits
+        p = 10.0 ** ROUND_DIGITS
         for pdf in batches:
             pdf = pdf[pdf[vec_col].notna()]
             if not len(pdf):
@@ -2024,7 +1997,6 @@ def pq_topk(
     codebooks: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     cache_key: str | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
@@ -2065,118 +2037,28 @@ def pq_topk(
             dim=dim,
             id_col=id_col,
             vec_col=vec_col,
-            round_digits=round_digits,
             cache_key=cache_key,
         )
-    sub = dim // n_subspaces
     if codes is None:
         # Arrow/BLAS encode (18x the expression path at sf10: 50.6 s ->
         # 2.8 s, PERF.md) — code-identical by the parity contract pinned
         # in tests/test_pq.py; the expression encoder remains the
         # zero-Python baseline.
         codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, id_col, vec_col,
-            round_digits,
+            embeddings, codebooks, n_subspaces, dim, id_col, vec_col
         )
-    cb = codebooks.select("subspace", "code", F.col("subvec").alias("_cv"))
-    qex = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-        )
-        .withColumn("_qn", l2_norm(F.col("_qv"), dim))
-        .select(
-            "query_id",
-            "_qn",
-            F.explode(
-                _subspace_slices(F.col("_qv"), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            "query_id",
-            "_qn",
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_qsv"),
-        )
-    )
-    lut = qex.join(cb, "subspace").select(
-        "query_id",
-        "_qn",
-        "subspace",
-        "code",
-        F.round(dot(F.col("_qsv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_pd"),
-        F.round(dot(F.col("_cv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_cn2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["subspace", "code"])
-        .groupBy("query_id", id_col)
-        .agg(
-            F.sum("_pd").alias("_sd"),
-            F.sum("_cn2").alias("_sn2"),
-            F.max("_qn").alias("_qn"),
-        )
-    )
-    approx = F.round(
-        (F.col("_sd").cast("double") / KMEANS_SCALE)
-        / F.greatest(
-            F.col("_qn")
-            * F.sqrt(F.col("_sn2").cast("double") / KMEANS_SCALE),
-            F.lit(1e-12),
-        ),
-        round_digits,
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        adc.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("approx_cosine", approx)
-        .withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= candidates)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "approx_cosine",
-        )
-    )
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvf")
-    ).withColumn("_cn", l2_norm(F.col("_cvf"), dim))
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvf")
-    ).withColumn("_qnf", l2_norm(F.col("_qvf"), dim))
-    rer = (
-        cand.join(corpus, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.round(
-                dot(F.col("_qvf"), F.col("_cvf"), dim)
-                / F.greatest(F.col("_qnf") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "approx_cosine",
-            F.col("_rn").alias("rank"),
-        )
+    q = _query_vecs(queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col)
+    lut = _adc_lut(q, codebooks, n_subspaces, dim // n_subspaces)
+    adc = _adc_sums(codes.join(F.broadcast(lut), ["subspace", "code"]), id_col)
+    return _rerank_top_k(
+        adc.filter(F.col("query_id") != F.col(id_col)),
+        _approx_cos(F.col("_sd"), F.col("_sn2")),
+        candidates,
+        embeddings,
+        queries,
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -2195,7 +2077,6 @@ def ivf_pq_topk(
     codebooks: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     codes: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -2206,12 +2087,11 @@ def ivf_pq_topk(
     top.
 
     Pipeline: nearest-centroid cell assignment (broadcast centroids,
-    ``max(struct)`` argmax), PQ encoding (global codebooks — the
-    residual-encoding refinement would subtract the cell centroid
-    before quantizing; omitted to keep the construction exactly
-    replayable in SQL, and documented here as the upgrade path), per-
-    query ``nprobe`` cell probes, then fixed-point ADC scoring of ONLY
-    the probed cells' codes, top-``candidates`` cut, exact re-rank.
+    ``max(struct)`` argmax), PQ encoding of the raw vectors with
+    global codebooks (:func:`ivf_pq_residual_topk` encodes the
+    residuals to the cell centroid instead), per-query ``nprobe`` cell
+    probes, then fixed-point ADC scoring of ONLY the probed cells'
+    codes, top-``candidates`` cut, exact re-rank.
 
     Scale shape: at rest the corpus is stored bucketed by ``cell_id``
     with its M-byte codes; a query touches ``nprobe/n_cells`` of the
@@ -2229,9 +2109,7 @@ def ivf_pq_topk(
     Returns ``(query_id, neighbor_id, cosine, approx_cosine, rank)``.
     """
     if centroids is None:
-        centroids = embeddings.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).cast("long").alias("cell_id"), F.col(vec_col)
-        )
+        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
     if codebooks is None:
         codebooks = pq_train_local(
             embeddings,
@@ -2241,79 +2119,17 @@ def ivf_pq_topk(
             dim=dim,
             id_col=id_col,
             vec_col=vec_col,
-            round_digits=round_digits,
         )
     if assigned is None:
-        assigned = ivf_assign(
-            embeddings, centroids, dim, id_col, vec_col, round_digits,
-            cell_col="cell_id",
-        )
+        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
     if codes is None:
-        # Arrow/BLAS encode (18x the expression path at sf10: 50.6 s ->
-        # 2.8 s, PERF.md) — code-identical by the parity contract pinned
-        # in tests/test_pq.py; the expression encoder remains the
-        # zero-Python baseline.
         codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, id_col, vec_col,
-            round_digits,
+            embeddings, codebooks, n_subspaces, dim, id_col, vec_col
         )
-
-    # per-query nprobe cell probes (identical construction to ivf_topk)
-    cent = centroids.select(
-        F.col("cell_id"), F.col(vec_col).alias("_mv")
-    ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    probe_scored = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "cell_id",
-        F.round(
-            dot(F.col("_qv"), F.col("_mv"), dim)
-            / F.greatest(F.col("_qn") * F.col("_mn"), F.lit(1e-12)),
-            round_digits,
-        ).alias("_cos"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell_id")
-    )
-
-    # per-query ADC lookup table over the codebooks (fixed-point)
-    sub = dim // n_subspaces
-    cb = codebooks.select("subspace", "code", F.col("subvec").alias("_cv"))
-    qex = (
-        q.select(
-            "query_id",
-            "_qn",
-            F.explode(
-                _subspace_slices(F.col("_qv"), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            "query_id",
-            "_qn",
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_qsv"),
-        )
-    )
-    lut = qex.join(cb, "subspace").select(
-        "query_id",
-        "_qn",
-        "subspace",
-        "code",
-        F.round(dot(F.col("_qsv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_pd"),
-        F.round(dot(F.col("_cv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_cn2"),
-    )
-
+    cent = _centroid_vecs(centroids, vec_col)
+    q = _query_vecs(queries, id_col, vec_col)
+    probes = _probe_cells(q, cent, nprobe)
+    lut = _adc_lut(q, codebooks, n_subspaces, dim // n_subspaces)
     # ADC over probed cells only
     probed = (
         assigned.select("cell_id", F.col(id_col))
@@ -2321,69 +2137,21 @@ def ivf_pq_topk(
         .filter(F.col("query_id") != F.col(id_col))
         .select("query_id", id_col)
     )
-    adc = (
-        probed.join(codes, id_col)
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", id_col)
-        .agg(
-            F.sum("_pd").alias("_sd"),
-            F.sum("_cn2").alias("_sn2"),
-            F.max("_qn").alias("_qn"),
-        )
-    )
-    approx = F.round(
-        (F.col("_sd").cast("double") / KMEANS_SCALE)
-        / F.greatest(
-            F.col("_qn")
-            * F.sqrt(F.col("_sn2").cast("double") / KMEANS_SCALE),
-            F.lit(1e-12),
+    adc = _adc_sums(
+        probed.join(codes, id_col).join(
+            F.broadcast(lut), ["query_id", "subspace", "code"]
         ),
-        round_digits,
+        id_col,
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        adc.withColumn("approx_cosine", approx)
-        .withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= candidates)
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "approx_cosine"
-        )
-    )
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvf")
-    ).withColumn("_cn", l2_norm(F.col("_cvf"), dim))
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvf")
-    ).withColumn("_qnf", l2_norm(F.col("_qvf"), dim))
-    rer = (
-        cand.join(corpus, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.round(
-                dot(F.col("_qvf"), F.col("_cvf"), dim)
-                / F.greatest(F.col("_qnf") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "approx_cosine",
-            F.col("_rn").alias("rank"),
-        )
+    return _rerank_top_k(
+        adc,
+        _approx_cos(F.col("_sd"), F.col("_sn2")),
+        candidates,
+        embeddings,
+        queries,
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -2402,7 +2170,6 @@ def ivf_pq_residual_topk(
     codebooks: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — the full FAISS ``IVFx,PQy``
@@ -2441,9 +2208,7 @@ def ivf_pq_residual_topk(
     Returns ``(query_id, neighbor_id, cosine, approx_cosine, rank)``.
     """
     if centroids is None:
-        centroids = embeddings.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).cast("long").alias("cell_id"), F.col(vec_col)
-        )
+        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
     if codebooks is None:
         codebooks = pq_train_residual_local(
             embeddings,
@@ -2454,17 +2219,15 @@ def ivf_pq_residual_topk(
             dim=dim,
             id_col=id_col,
             vec_col=vec_col,
-            round_digits=round_digits,
         )
     if assigned is None:
         assigned = ivf_assign(
             embeddings.filter(F.col(id_col).isNotNull()),
-            centroids, dim, id_col, vec_col, round_digits,
-            cell_col="cell_id",
+            centroids,
+            id_col,
+            vec_col,
         )
-    cent = centroids.select(
-        F.col("cell_id"), F.col(vec_col).alias("_mv")
-    ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
+    cent = _centroid_vecs(centroids, vec_col)
 
     # residual vectors (elementwise IEEE subtraction) -> PQ codes
     res = assigned.join(
@@ -2478,98 +2241,29 @@ def ivf_pq_residual_topk(
             lambda x, y: x.cast("double") - y.cast("double"),
         ).alias("_res"),
     )
-    codes = pq_encode_arrow(
-        res, codebooks, n_subspaces, dim, id_col, "_res", round_digits
-    )
+    codes = pq_encode_arrow(res, codebooks, n_subspaces, dim, id_col, "_res")
 
-    # per-query nprobe cell probes
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    probe_scored = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "cell_id",
-        F.round(
-            dot(F.col("_qv"), F.col("_mv"), dim)
-            / F.greatest(F.col("_qn") * F.col("_mn"), F.lit(1e-12)),
-            round_digits,
-        ).alias("_cos"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell_id")
-    )
+    q = _query_vecs(queries, id_col, vec_col)
+    probes = _probe_cells(q, cent, nprobe)
 
     # broadcast lookup tables (all fixed-point int64)
     sub = dim // n_subspaces
     cb = codebooks.select("subspace", "code", F.col("subvec").alias("_cv"))
     qc = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "_qn",
-        "cell_id",
-        F.round(dot(F.col("_qv"), F.col("_mv"), dim) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_qc"),
+        "query_id", "_qn", "cell_id", _fixed_dot("_qv", "_mv").alias("_qc")
     )
-    cc = cent.select(
-        "cell_id",
-        F.round(dot(F.col("_mv"), F.col("_mv"), dim) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_cc"),
-    )
-    qex = (
-        q.select(
-            "query_id",
-            F.explode(
-                _subspace_slices(F.col("_qv"), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            "query_id",
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_qsv"),
-        )
-    )
+    cc = cent.select("cell_id", _fixed_dot("_mv", "_mv").alias("_cc"))
+    qex = _explode_subspaces(q, ["query_id"], "_qv", "_qsv", n_subspaces, sub)
     qr = qex.join(cb, "subspace").select(
-        "query_id",
-        "subspace",
-        "code",
-        F.round(dot(F.col("_qsv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_qr"),
+        "query_id", "subspace", "code", _fixed_dot("_qsv", "_cv").alias("_qr")
     )
-    cslice = (
-        cent.select(
-            "cell_id",
-            F.explode(
-                _subspace_slices(F.col("_mv"), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            "cell_id",
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_cmv"),
-        )
+    cslice = _explode_subspaces(
+        cent, ["cell_id"], "_mv", "_cmv", n_subspaces, sub
     )
     cr = cslice.join(cb, "subspace").select(
-        "cell_id",
-        "subspace",
-        "code",
-        F.round(dot(F.col("_cmv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_cr"),
+        "cell_id", "subspace", "code", _fixed_dot("_cmv", "_cv").alias("_cr")
     )
-    rr = cb.select(
-        "subspace",
-        "code",
-        F.round(dot(F.col("_cv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_rr"),
-    )
+    rr = cb.select("subspace", "code", _fixed_dot("_cv", "_cv").alias("_rr"))
 
     # ADC over probed cells only
     probed = (
@@ -2597,61 +2291,15 @@ def ivf_pq_residual_topk(
     n2 = (
         F.col("_cc") + F.lit(2) * F.col("_scr") + F.col("_srr")
     ).cast("long")
-    approx = F.round(
-        (sd.cast("double") / KMEANS_SCALE)
-        / F.greatest(
-            F.col("_qn")
-            * F.sqrt(
-                F.greatest(n2, F.lit(0)).cast("double") / KMEANS_SCALE
-            ),
-            F.lit(1e-12),
-        ),
-        round_digits,
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        adc.withColumn("approx_cosine", approx)
-        .withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= candidates)
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "approx_cosine"
-        )
-    )
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvf")
-    ).withColumn("_cn", l2_norm(F.col("_cvf"), dim))
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvf")
-    ).withColumn("_qnf", l2_norm(F.col("_qvf"), dim))
-    rer = (
-        cand.join(corpus, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.round(
-                dot(F.col("_qvf"), F.col("_cvf"), dim)
-                / F.greatest(F.col("_qnf") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "approx_cosine",
-            F.col("_rn").alias("rank"),
-        )
+    return _rerank_top_k(
+        adc,
+        _approx_cos(sd, F.greatest(n2, F.lit(0))),
+        candidates,
+        embeddings,
+        queries,
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -2664,7 +2312,6 @@ def ivf_pq_write_index(
     n_subspaces: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     mode: str = "overwrite",
     target_recall: float | None = 0.9,
     recall_kwargs: dict | None = None,
@@ -2692,16 +2339,10 @@ def ivf_pq_write_index(
     # Arrow/BLAS assignment (cell-identical by the ivf_assign_arrow
     # parity contract): the build scores the corpus against ALL
     # cells, where the expression form's O(N·C·dim) pass dominates.
-    assigned = ivf_assign_arrow(
-        embeddings, centroids, dim, id_col, vec_col, round_digits,
-        cell_col="cell_id",
-    )
-    # Arrow/BLAS encode (18x the expression path at sf10: 50.6 s ->
-    # 2.8 s, PERF.md) — code-identical by the parity contract pinned
-    # in tests/test_pq.py; the expression encoder remains the
-    # zero-Python baseline.
+    assigned = ivf_assign_arrow(embeddings, centroids, id_col, vec_col)
+    # Arrow/BLAS encode, as in pq_topk
     codes = pq_encode_arrow(
-        embeddings, codebooks, n_subspaces, dim, id_col, vec_col, round_digits
+        embeddings, codebooks, n_subspaces, dim, id_col, vec_col
     )
     packed = codes.groupBy(id_col).agg(
         F.transform(
@@ -2728,10 +2369,10 @@ def ivf_pq_write_index(
             else embeddings
         )
         ann_recall_estimate(
-            spark, path, src, centroids, dim,
+            spark, path, src, centroids,
             kind="ivf_pq", codebooks=codebooks, n_subspaces=n_subspaces,
-            target_recall=target_recall, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits, **(recall_kwargs or {}),
+            dim=dim, target_recall=target_recall, id_col=id_col,
+            vec_col=vec_col, **(recall_kwargs or {}),
         )
 
 
@@ -2748,7 +2389,6 @@ def ivf_pq_topk_from_index(
     candidates: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """ANN top-k against a persisted IVF-PQ index
     (:func:`ivf_pq_write_index`) — identical semantics to
@@ -2775,8 +2415,7 @@ def ivf_pq_topk_from_index(
         )
         if nprobe is None:
             exact = exact_topk_from_index(
-                spark, index_path, queries, k, id_col=id_col,
-                vec_col=vec_col, round_digits=round_digits,
+                spark, index_path, queries, k, id_col=id_col, vec_col=vec_col
             )
             return exact.select(
                 "query_id",
@@ -2787,136 +2426,32 @@ def ivf_pq_topk_from_index(
             )
         if auto_cand is not None:
             candidates = auto_cand
-    cent = centroids.select(
-        F.col("cell_id"), F.col(vec_col).alias("_mv")
-    ).withColumn("_mn", l2_norm(F.col("_mv"), dim))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_qn", l2_norm(F.col("_qv"), dim))
-    probe_scored = q.join(F.broadcast(cent)).select(
-        "query_id",
-        "cell_id",
-        F.round(
-            dot(F.col("_qv"), F.col("_mv"), dim)
-            / F.greatest(F.col("_qn") * F.col("_mn"), F.lit(1e-12)),
-            round_digits,
-        ).alias("_cos"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cell_id")
-        # same two-consumer materialization as ivf_topk_from_index
-        .localCheckpoint(eager=True)
-    )
-    probed_cells = sorted(
-        {r.cell_id for r in probes.select("cell_id").distinct().collect()}
-    )
-    index = spark.read.parquet(index_path).filter(
-        F.col("cell_id").isin(probed_cells)
-    )
-
-    sub = dim // n_subspaces
-    cb = codebooks.select("subspace", "code", F.col("subvec").alias("_cv"))
-    qex = (
-        q.select(
-            "query_id",
-            "_qn",
-            F.explode(
-                _subspace_slices(F.col("_qv"), n_subspaces, sub)
-            ).alias("_e"),
-        )
-        .select(
-            "query_id",
-            "_qn",
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_qsv"),
-        )
-    )
-    lut = qex.join(cb, "subspace").select(
-        "query_id",
-        "_qn",
-        "subspace",
-        "code",
-        F.round(dot(F.col("_qsv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_pd"),
-        F.round(dot(F.col("_cv"), F.col("_cv")) * KMEANS_SCALE)
-        .cast("long")
-        .alias("_cn2"),
-    )
+    cent = _centroid_vecs(centroids, vec_col)
+    q = _query_vecs(queries, id_col, vec_col)
+    probes = _probe_cells(q, cent, nprobe).localCheckpoint(eager=True)
+    # ^ same two-consumer materialization as ivf_topk_from_index
+    index = _read_cells(spark, index_path, probes)
+    lut = _adc_lut(q, codebooks, n_subspaces, dim // n_subspaces)
     code_rows = index.select(
         "cell_id",
         F.col(id_col),
         F.posexplode(F.col("pq_codes")).alias("subspace", "code"),
     )
-    adc = (
+    adc = _adc_sums(
         code_rows.join(F.broadcast(probes), "cell_id")
         .filter(F.col("query_id") != F.col(id_col))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", id_col)
-        .agg(
-            F.sum("_pd").alias("_sd"),
-            F.sum("_cn2").alias("_sn2"),
-            F.max("_qn").alias("_qn"),
-        )
+        .join(F.broadcast(lut), ["query_id", "subspace", "code"]),
+        id_col,
     )
-    approx = F.round(
-        (F.col("_sd").cast("double") / KMEANS_SCALE)
-        / F.greatest(
-            F.col("_qn")
-            * F.sqrt(F.col("_sn2").cast("double") / KMEANS_SCALE),
-            F.lit(1e-12),
-        ),
-        round_digits,
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        adc.withColumn("approx_cosine", approx)
-        .withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= candidates)
-        .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "approx_cosine"
-        )
-    )
-    corpus = index.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvf")
-    ).withColumn("_cn", l2_norm(F.col("_cvf"), dim))
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvf")
-    ).withColumn("_qnf", l2_norm(F.col("_qvf"), dim))
-    rer = (
-        cand.join(corpus, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.round(
-                dot(F.col("_qvf"), F.col("_cvf"), dim)
-                / F.greatest(F.col("_qnf") * F.col("_cn"), F.lit(1e-12)),
-                round_digits,
-            ).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "approx_cosine",
-            F.col("_rn").alias("rank"),
-        )
+    return _rerank_top_k(
+        adc,
+        _approx_cos(F.col("_sd"), F.col("_sn2")),
+        candidates,
+        index,
+        queries,
+        k,
+        id_col,
+        vec_col,
     )
 
 
@@ -2939,11 +2474,11 @@ def ann_recall_estimate(
     index_path: str,
     embeddings: DataFrame,
     centroids: DataFrame,
-    dim: int,
     *,
     kind: str = "ivf",
     codebooks: DataFrame | None = None,
     n_subspaces: int | None = None,
+    dim: int | None = None,
     k: int = 10,
     n_queries: int = 32,
     target_recall: float = 0.9,
@@ -2951,7 +2486,6 @@ def ann_recall_estimate(
     candidates_base: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
     write_marker: bool = True,
 ) -> dict:
     """Measure the just-built index's recall@k on a sampled exact
@@ -2989,13 +2523,19 @@ def ann_recall_estimate(
     ``nprobe="auto"`` probes must take the exact-scan path
     (:func:`exact_topk_from_index`). The marker is advisory for
     integer-nprobe callers and binding for ``"auto"``.
+
+    ``kind="ivf_pq"`` also needs the index's ``codebooks``,
+    ``n_subspaces`` and ``dim`` (the PQ subspace width is
+    ``dim // n_subspaces``).
     """
     import json as _json
 
     if kind not in ("ivf", "ivf_pq"):
         raise ValueError(f"kind must be ivf|ivf_pq: {kind}")
-    if kind == "ivf_pq" and (codebooks is None or n_subspaces is None):
-        raise ValueError("kind='ivf_pq' requires codebooks + n_subspaces")
+    if kind == "ivf_pq" and (
+        codebooks is None or n_subspaces is None or dim is None
+    ):
+        raise ValueError("kind='ivf_pq' requires codebooks + n_subspaces + dim")
     n_cells = centroids.count()
     base = candidates_base if candidates_base is not None else 10 * k
 
@@ -3007,8 +2547,7 @@ def ann_recall_estimate(
         .localCheckpoint(eager=True)
     )
     truth = brute_force_topk_arrow(
-        embeddings, q, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
+        embeddings, q, k=k, id_col=id_col, vec_col=vec_col
     ).collect()
     want = {(r.query_id, r.neighbor_id) for r in truth}
 
@@ -3021,15 +2560,13 @@ def ann_recall_estimate(
         if kind == "ivf":
             got_rows = ivf_topk_from_index(
                 spark, index_path, q, centroids, k=k, nprobe=nprobe,
-                dim=dim, id_col=id_col, vec_col=vec_col,
-                round_digits=round_digits,
+                id_col=id_col, vec_col=vec_col,
             ).collect()
         else:
             got_rows = ivf_pq_topk_from_index(
                 spark, index_path, q, centroids, codebooks, k=k,
                 nprobe=nprobe, n_subspaces=n_subspaces, dim=dim,
                 candidates=cand, id_col=id_col, vec_col=vec_col,
-                round_digits=round_digits,
             ).collect()
         got = {(r.query_id, r.neighbor_id) for r in got_rows}
         recall = len(got & want) / max(len(want), 1)
@@ -3095,7 +2632,6 @@ def exact_topk_from_index(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 5,
 ) -> DataFrame:
     """Exact top-k over a persisted IVF / IVF-PQ index — the enforced
     fallback when the build-time recall estimate shows NO nprobe rung
@@ -3106,8 +2642,7 @@ def exact_topk_from_index(
     the honest price of data no partitioning scheme can prune."""
     index = spark.read.parquet(index_path).select(id_col, vec_col)
     return brute_force_topk_arrow(
-        index, queries, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
+        index, queries, k=k, id_col=id_col, vec_col=vec_col
     )
 
 

@@ -482,7 +482,7 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The operator's production default (centroids=None) trains cells
     # ∝ corpus on the BLAS path, the measured 2-3x/decade recipe.
     return sim.semantic_dedup(
-        e, centroids, dim=DIM, threshold=_SD_THRESHOLD, assign="expr"
+        e, centroids, threshold=_SD_THRESHOLD, assign="expr"
     )
 
 
@@ -1222,10 +1222,7 @@ def sim_pq_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("vec_id")
     )
     assigned_shared = sim.ivf_assign(
-        e.filter(F.col("vec_id").isNotNull()),
-        centroids,
-        DIM,
-        cell_col="cell_id",
+        e.filter(F.col("vec_id").isNotNull()), centroids
     )
     pq = sim.pq_topk(
         e, queries, k=5, n_subspaces=_PQ_M, n_codes=_PQ_CODES,
@@ -1364,13 +1361,12 @@ def semdedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     idx = os.path.join(tempfile.gettempdir(), f"vbb_sdi_idx_{key}")
     sim.ivf_write_index(
-        corpus, cents, idx, dim=DIM, round_digits=5,
+        corpus, cents, idx,
         # oracle harness: the probe below is cell-exact (no nprobe),
         # so the builder's certify-on-build default would only add an
         # estimator pass per gate/bench run — skipped explicitly
         target_recall=None,
     )
     return sim.semdedup_incremental(
-        batch, idx, cents, dim=DIM, threshold=_SDI_THRESHOLD,
-        round_digits=5,
+        batch, idx, cents, threshold=_SDI_THRESHOLD
     )

@@ -92,7 +92,6 @@ def corpus_ingest_batch(
     vec_col: str | None = None,
     embedding_index_path: str | None = None,
     centroids=None,
-    dim: int | None = None,
     semantic_threshold: float = 0.9,
 ) -> None:
     """Ingest ONE micro-batch (also usable for plain batch loads).
@@ -104,9 +103,9 @@ def corpus_ingest_batch(
     the index(es).
 
     Semantic tier (optional): pass ``vec_col`` + ``embedding_index_
-    path`` + ``centroids`` + ``dim`` and docs surviving the text
-    tiers are additionally probed against the corpus's at-rest IVF
-    index (``operators/similarity.semdedup_incremental`` — catches
+    path`` + ``centroids`` and docs surviving the text tiers are
+    additionally probed against the corpus's at-rest IVF index
+    (``operators/similarity.semdedup_incremental`` — catches
     paraphrases/translations that share no shingles); survivors'
     vectors append to that index partition-aligned.
 
@@ -237,7 +236,6 @@ def corpus_ingest_batch(
                 cand.select(id_col, vec_col),
                 embedding_index_path,
                 centroids,
-                dim=dim,
                 threshold=semantic_threshold,
                 id_col=id_col,
                 vec_col=vec_col,
@@ -302,7 +300,6 @@ def corpus_ingest_batch(
             vec_survivors.select(id_col, vec_col),
             centroids,
             embedding_index_path,
-            dim=dim,
             id_col=id_col,
             vec_col=vec_col,
             mode="append",
