@@ -14,6 +14,7 @@ from vbb_data_pipeline_spark.sources.catalog import (
     dedup_archives,
     new_runs,
     scan_landing,
+    url_changed,
 )
 
 
@@ -125,3 +126,17 @@ def test_distributed_scan_enforces_layout_depth(spark, tmp_path):
         for r in scan_landing_distributed(spark, str(base)).collect()
     )
     assert drv == dist == [("vbb", "2024-01-01")]
+
+
+def test_url_changed_compares_latest_seen_url(spark):
+    catalog = spark.createDataFrame(
+        [
+            ("vbb", "https://vbb.de/gtfs-v1.zip", "2024-01-01 00:00:00"),
+            ("vbb", "https://vbb.de/gtfs-v2.zip", "2024-02-01 00:00:00"),
+        ],
+        "provider_id string, url string, seen_at string",
+    ).selectExpr("provider_id", "url", "cast(seen_at as timestamp) as seen_at")
+    assert url_changed("https://vrs.de/gtfs.zip", catalog, "vrs")
+    assert not url_changed("https://vbb.de/gtfs-v2.zip", catalog, "vbb")
+    # an older row carries this URL; only the latest seen_at counts
+    assert url_changed("https://vbb.de/gtfs-v1.zip", catalog, "vbb")

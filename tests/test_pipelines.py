@@ -10,6 +10,7 @@ from pathlib import Path
 
 import pytest
 
+from vbb_data_pipeline_spark import schemas
 from vbb_data_pipeline_spark.pipelines import Warehouse, e1_extract, e2_load, e3_arrivals
 
 STOPS = (
@@ -84,6 +85,10 @@ def test_e3_arrivals_expansion(spark, landing):
     assert {r.stop_name for r in rows} == {"Alexanderplatz", "Potsdam Hbf"}
     # 08:00:00 arrival lands on the service day at 8am
     assert rows[0].ts.hour == 8
+    # the event record is ARRIVAL_EVENT's, under the warehouse's names
+    assert [f.dataType for f in out.schema] == [
+        f.dataType for f in schemas.ARRIVAL_EVENT
+    ]
 
     wire = e3_arrivals(wh, dt.date(2024, 1, 1), dt.date(2024, 1, 8), as_wire=True)
     first = wire.collect()[0].value

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Scale-validation bench: run the headline queries PLUS the iterative
-/ pipeline operators (dedup_clusters, line_dedup_corpus, cdc_scd2,
-pagerank, E4 end-to-end) at an arbitrary sf dir, with bench.py's exact
-measurement method (fresh session, first_run + steady best-of-2,
-noop-format writes).
+"""Scale-validation bench: run the headline queries (perfbench/spec.json)
+PLUS the iterative / pipeline operators (dedup_clusters,
+line_dedup_corpus, cdc_scd2, pagerank, E4 end-to-end) at an arbitrary
+sf dir: one session, first_run + steady best-of-2, noop-format writes,
+under SPARK_GRAFT_FAST_HASH=1 (the production xxhash64 path).
 
 Usage:
     python tools/bench_scale.py SF_DIR OUT_JSON
@@ -23,12 +23,12 @@ import time
 
 os.environ.setdefault("SPARK_GRAFT_FAST_HASH", "1")
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import HEADLINE, OPTIONAL  # noqa: E402
 from vbb_data_pipeline_spark.queries import (  # noqa: E402
     all_queries,
     legacy_queries,
@@ -36,7 +36,7 @@ from vbb_data_pipeline_spark.queries import (  # noqa: E402
 )
 from vbb_data_pipeline_spark.session import get_spark  # noqa: E402
 
-#: registry entries beyond bench.py's list whose scale behavior the
+#: registry entries beyond the headline list whose scale behavior the
 #: round-3 verdict asked to prove empirically
 EXTRA_REGISTRY = [
     "dedup_clusters",
@@ -159,7 +159,9 @@ def main() -> None:
     # merge JSONs (long batteries can exceed one wrapper timeout)
     registry = {n: spec.fn for n, spec in all_queries().items()}
     registry.update(legacy_queries())
-    names = [n for n in HEADLINE + OPTIONAL + EXTRA_REGISTRY if n in registry]
+    with open(os.path.join(ROOT, "perfbench", "spec.json")) as fh:
+        headline = json.load(fh)["workloads"]["headline"]["entries"]
+    names = [n for n in headline + EXTRA_REGISTRY if n in registry]
     spark = get_spark("bench-scale")
     for t in ("orders", "lineitem", "events", "customer", "documents"):
         load_table(spark, sf_dir, t).count()

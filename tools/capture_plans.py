@@ -1,30 +1,31 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") output per query for the round's
-before/after plan evidence (plans/r<N>/<query>_<suffix>.txt).
+"""Capture .explain("formatted") output per query, for before/after
+plan evidence (<out>/<query>_<suffix>.txt).
 
 Usage:
-    python tools/capture_plans.py --out plans/r10 --suffix before [names...]
+    python tools/capture_plans.py --out DIR --suffix before [names...]
 
-Names may be registry entries or legacy leg names (bench.py set). With
-no names, captures the bench headline set. Plans are built at
-$SPARK_GRAFT_SF_DIR (default sf0.1 — the bench scale) and, like the
-bench, under SPARK_GRAFT_FAST_HASH=1 so the plan matches what the
-bench times.
+Names may be registry entries or legacy leg names. With no names,
+captures the headline entries of perfbench/spec.json. Plans are built
+at $SPARK_GRAFT_SF_DIR (default sf0.1) and under
+SPARK_GRAFT_FAST_HASH=1 unless the variable is already set.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="plans/r10")
+    ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -33,16 +34,16 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_FAST_HASH", "1")
 
-    from bench import HEADLINE, OPTIONAL
     from vbb_data_pipeline_spark.plans.explain import formatted
     from vbb_data_pipeline_spark.queries import all_queries, legacy_queries
     from vbb_data_pipeline_spark.session import get_spark
 
     registry = {n: spec.fn for n, spec in all_queries().items()}
     registry.update(legacy_queries())
-    names = args.names or [n for n in HEADLINE + OPTIONAL if n in registry]
+    bench_spec = json.loads((ROOT / "perfbench" / "spec.json").read_text())
+    names = args.names or bench_spec["workloads"]["headline"]["entries"]
 
-    out_dir = Path(__file__).resolve().parent.parent / args.out
+    out_dir = ROOT / args.out
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("capture-plans")
     for name in names:

@@ -8,13 +8,13 @@ star-edge LSH candidates + density HTML extraction) with E4 enabled,
 at the default heap budget (driver 16 g / local[32] ≈ 0.5 GB per
 task), and appends the run row to CRAWL_E2E.json.
 
-The corpus construction matches tools/crawl_throughput.py's (unique
-ids/URLs per replica, one-token perturbation, hosts keyed on the base
-doc id so per-host populations grow with reps — the mega-family crawl
-shape that OOMed all-pairs mode at 1 GB), but the build fans out over
-a process pool (reps sliced round-robin across archives, one worker
-per archive) so a 10 GB corpus builds in minutes instead of the
-driver-side hour.
+Each replica gets unique ids/URLs and a one-token perturbation, and
+hosts are keyed on the base doc id so per-host populations grow with
+reps (the mega-family crawl shape that OOMed all-pairs mode at 1 GB).
+The build fans out over a process pool (reps sliced round-robin across
+archives, one worker per archive) so a 10 GB corpus builds in minutes
+instead of the driver-side hour. perfbench/datagen.py reuses
+``_build_one`` for the crawl_to_shards landing.
 
 Usage:
     python tools/crawl_e2e.py [--reps 5000] [--sf /root/testdata/sf0.1]

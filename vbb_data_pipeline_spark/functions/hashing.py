@@ -28,9 +28,9 @@ def default_hash_mode() -> str:
 
     ``"oracle"`` (default) = md5-derived hashing, bit-identical in
     DuckDB, so the driver's value-hash comparison verifies every stage.
-    ``"fast"`` (set ``SPARK_GRAFT_FAST_HASH=1``; bench.py does) =
-    JVM-native ``xxhash64``, the production path — no Python, no hex
-    string round-trip, one codegen expression per hash.
+    ``"fast"`` (set ``SPARK_GRAFT_FAST_HASH=1``; tools/bench_scale.py
+    does) = JVM-native ``xxhash64``, the production path — no Python,
+    no hex string round-trip, one codegen expression per hash.
     """
     return "fast" if os.environ.get("SPARK_GRAFT_FAST_HASH") == "1" else "oracle"
 

@@ -16,9 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Non-alphanumeric split — portable between Java regex and RE2.
-TOKEN_SPLIT_RE = "[^a-z0-9]+"
-
 #: Tiny deterministic stopword lists for the language-ID heuristic.
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it"],

@@ -765,9 +765,9 @@ def e6_crawl_corpus(
         docs = docs.filter(F.col("lang").isin(list(langs)))
     if not run_e4 and materialize_dir is None:
         # curated documents only (steps 1-6) — the URL-level plane, a
-        # measurement/inspection surface (tools/crawl_throughput.py)
-        # and the hand-off point for callers running their own corpus
-        # assembly; no checkpoint since nothing fans out from here
+        # measurement/inspection surface and the hand-off point for
+        # callers running their own corpus assembly; no checkpoint
+        # since nothing fans out from here
         return docs
     if materialize_dir is not None:
         # AT-REST hand-off: write the curated documents to parquet and

@@ -161,9 +161,9 @@ def legacy_queries() -> dict[str, QueryFn]:
     The r5 registry consolidation folded same-shaped legs into
     battery entries so all of them fit the driver's 50-entry
     CORRECTNESS window; the leg functions themselves are unchanged.
-    bench.py / tools/bench_scale.py keep timing the legs under their
-    ORIGINAL names through this map so round-over-round and
-    scale-decade series stay comparable.
+    tools/bench_scale.py keeps timing the legs under their ORIGINAL
+    names through this map so round-over-round and scale-decade series
+    stay comparable.
     """
     from vbb_data_pipeline_spark.queries import (  # noqa: PLC0415
         cdc_q,

@@ -264,8 +264,9 @@ def _minhash_oracle() -> str:
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash_mode: "oracle" under driver verification (md5 = DuckDB
-    # parity); bench.py flips SPARK_GRAFT_FAST_HASH=1 for the
-    # production xxhash64 path (same plan shape, ~no hex round-trips).
+    # parity); tools/bench_scale.py flips SPARK_GRAFT_FAST_HASH=1 for
+    # the production xxhash64 path (same plan shape, ~no hex
+    # round-trips).
     mode = default_hash_mode()
     d = load_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures(

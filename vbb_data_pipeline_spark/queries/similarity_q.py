@@ -307,11 +307,11 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default_hash_mode): oracle mode (the driver's CORRECTNESS run)
     # keeps the sample covering the whole corpus so the DuckDB
     # full-corpus training replay is bit-identical; fast mode
-    # (SPARK_GRAFT_FAST_HASH=1 — bench.py, production posture) bounds
-    # it at 32 vectors/cell, the FAISS training-budget guidance — the
-    # deliberately-unbounded interpreted trainer was the single
-    # largest first-run cost in the bench (r6 diag: 20.4 s wall vs
-    # 1.4 s executor CPU).
+    # (SPARK_GRAFT_FAST_HASH=1 — tools/bench_scale.py, production
+    # posture) bounds it at 32 vectors/cell, the FAISS training-budget
+    # guidance — the deliberately-unbounded interpreted trainer was
+    # the single largest first-run cost in the bench (r6 diag: 20.4 s
+    # wall vs 1.4 s executor CPU).
     fast = default_hash_mode() == "fast"
     sample_n = max(512, 32 * _IVF_CELLS) if fast else 1 << 18
     centroids = _ivf_centroids(e, sf_dir, sample_n)

@@ -13,8 +13,8 @@ Two families:
   exactly as the reference loader adds them
   (``airflow/plugins/database_loader/operators.py:156-165``).
 
-* Test tables — the driver's TPC-H-ish corpus (see TESTDATA.md /
-  FIXTURES.md §A), declared so readers never rely on inference.
+* Arrival events — the producer's event record and its JSON wire
+  shape (``domain/GtfsArrival.java``).
 
 ``PRIMARY_KEYS`` / ``FOREIGN_KEYS`` mirror the reference's PK/FK web
 (``05-create-schema.sh:39,59,76,95,118,136,157-160,174-181,192-194``).
@@ -54,18 +54,6 @@ TS = T.TimestampType()
 # ---------------------------------------------------------------------------
 # GTFS tables (05-create-schema.sh:10-195)
 # ---------------------------------------------------------------------------
-
-PROVIDER = T.StructType(
-    [
-        _f("provider_id", S),
-        _f("created", TS),
-        _f("feed_publisher_name", S),
-        _f("feed_publisher_url", S),
-        _f("feed_lang", S),
-    ]
-)
-
-RUN = T.StructType([_f("run_id", I), _f("run_date", S), _f("provider_id", S)])
 
 AGENCY = _gtfs(
     [
@@ -267,87 +255,3 @@ ARRIVAL_JSON = T.StructType(
         _f("local-time", S),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# Driver test tables (TESTDATA.md / FIXTURES.md §A)
-# ---------------------------------------------------------------------------
-
-TEST_TABLES: dict[str, T.StructType] = {
-    "region": T.StructType([_f("r_regionkey", I), _f("r_name", S)]),
-    "nation": T.StructType(
-        [_f("n_nationkey", I), _f("n_name", S), _f("n_regionkey", I)]
-    ),
-    "customer": T.StructType(
-        [
-            _f("c_custkey", L),
-            _f("c_name", S),
-            _f("c_nationkey", I),
-            _f("c_acctbal", D),
-            _f("c_mktsegment", S),
-        ]
-    ),
-    "supplier": T.StructType(
-        [_f("s_suppkey", L), _f("s_name", S), _f("s_nationkey", I), _f("s_acctbal", D)]
-    ),
-    "part": T.StructType(
-        [
-            _f("p_partkey", L),
-            _f("p_name", S),
-            _f("p_brand", S),
-            _f("p_type", S),
-            _f("p_size", I),
-            _f("p_retailprice", D),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            _f("o_orderkey", L),
-            _f("o_custkey", L),
-            _f("o_orderstatus", S),
-            _f("o_totalprice", D),
-            _f("o_orderdate", TS),
-            _f("o_orderpriority", S),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            _f("l_orderkey", L),
-            _f("l_partkey", L),
-            _f("l_suppkey", L),
-            _f("l_linenumber", I),
-            _f("l_quantity", D),
-            _f("l_extendedprice", D),
-            _f("l_discount", D),
-            _f("l_tax", D),
-            _f("l_returnflag", S),
-            _f("l_linestatus", S),
-            _f("l_shipdate", TS),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            _f("event_id", L),
-            _f("ts", TS),
-            _f("user_id", L),
-            _f("event_type", S),
-            _f("value", D),
-            _f("props", S),
-        ]
-    ),
-    "documents": T.StructType(
-        [
-            _f("doc_id", L),
-            _f("text", S),
-            _f("lang", S),
-            _f("source", S),
-            _f("n_chars", L),
-        ]
-    ),
-    "embeddings": T.StructType(
-        [
-            _f("vec_id", L),
-            _f("embedding", T.ArrayType(T.FloatType())),
-            _f("label", I),
-        ]
-    ),
-}

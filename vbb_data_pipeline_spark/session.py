@@ -14,9 +14,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 #: Session conf for crawl-scale (E6) workloads — merge into
 #: ``get_spark(extra_conf=...)`` when the job shuffles full-document
 #: crawl text. spark.io.compression.codec is a JVM-start knob, so it

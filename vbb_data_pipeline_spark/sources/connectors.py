@@ -95,32 +95,6 @@ def kafka_sink_spec(bootstrap: str, topic: str, **options: str) -> ConnectorSpec
     return ConnectorSpec("kafka", opts)
 
 
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    predicates: list[str] | None = None,
-    num_partitions: int = 8,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """Execute an S10 read (see :func:`jdbc_source_spec`)."""
-    return jdbc_source_spec(
-        url, table, num_partitions, partition_column, lower_bound,
-        upper_bound, **options,
-    ).load(spark)
-
-
-def write_jdbc(
-    df: DataFrame, url: str, table: str, mode: str = "append",
-    batchsize: int = 100_000, **options: str,
-) -> None:
-    """Execute an S7 write (see :func:`jdbc_sink_spec`)."""
-    jdbc_sink_spec(url, table, mode, batchsize, **options).save(df)
-
-
 def write_kafka_batch(
     df: DataFrame, bootstrap: str, topic: str, **options: str
 ) -> None:
