@@ -16,6 +16,15 @@ other of those files, in README.md or under ``.claude/skills/``. The
 history docs (PERF.md, CHANGES.md, ROADMAP.md, ...) do not count: a
 script that only they name produced an old artifact and nothing runs
 it now.
+
+A defaulted parameter of a public top-level package function must be
+passed by some call in those files: by keyword, by more positional
+arguments than its index, or by a ``*``/``**`` splat (a ``**name``
+whose ``name`` the file binds only to dict literals passes just their
+keys). A function referenced as a value (a callback, a dict entry, a
+``functools.partial`` argument) passes every parameter. A parameter
+no call passes has one value in use: it belongs in the body as a
+constant.
 """
 
 from __future__ import annotations
@@ -121,4 +130,125 @@ def test_no_unnamed_tools():
     assert not dead, (
         "tools named by no code, test, tool, README or skill:\n"
         + "\n".join(dead)
+    )
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """``(name, positional index or None)`` of each parameter of ``fn``
+    that has a default."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    first = len(pos) - len(a.defaults)
+    return [(p.arg, i) for i, p in enumerate(pos) if i >= first] + [
+        (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+
+
+def _literal_keys(v: ast.expr | None) -> set[str] | None:
+    """Keys of a dict literal with constant string keys or of a
+    ``dict(k=...)`` call; ``None`` for anything else."""
+    if isinstance(v, ast.Dict) and all(
+        isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+    ):
+        return {k.value for k in v.keys}
+    if (isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+            and v.func.id == "dict" and not v.args
+            and all(k.arg for k in v.keywords)):
+        return {k.arg for k in v.keywords}
+    return None
+
+
+def _dict_keys(tree: ast.AST) -> dict[str, set[str] | None]:
+    """For each name the file binds, the keys it can hold if every
+    binding is a dict literal or ``dict(k=...)`` (constant-key item
+    stores add their key), else ``None``."""
+    parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    keys: dict[str, set[str] | None] = {}
+
+    def bind(name: str, ks: set[str] | None) -> None:
+        old = keys.get(name, set())
+        keys[name] = None if old is None or ks is None else old | ks
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            p = parent[node]
+            bind(node.id, _literal_keys(
+                p.value if isinstance(p, (ast.Assign, ast.AnnAssign)) else None))
+        elif isinstance(node, ast.arg):
+            bind(node.arg, None)
+        elif (isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store)
+              and isinstance(node.value, ast.Name)):
+            s = node.slice
+            bind(node.value.id, {s.value} if isinstance(s, ast.Constant)
+                 and isinstance(s.value, str) else None)
+        elif (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+              and node.attr in ("update", "setdefault")):
+            bind(node.value.id, None)
+    return keys
+
+
+def _callee(f: ast.expr) -> str | None:
+    return f.id if isinstance(f, ast.Name) else (
+        f.attr if isinstance(f, ast.Attribute) else None)
+
+
+def unpassed_parameters() -> tuple[int, list[str]]:
+    """The number of defaulted parameters of the package's public
+    top-level functions, and ``path:line function.param`` for each one
+    that no call in the searched files passes."""
+    passed: dict[str, set[str] | None] = {}  # None: every parameter
+    npos: Counter[str] = Counter()
+
+    def mark(name: str, ks: set[str] | None) -> None:
+        old = passed.get(name, set())
+        passed[name] = None if old is None or ks is None else old | ks
+
+    trees = {p: ast.parse(p.read_text(encoding="utf-8"))
+             for p in _py_files(SEARCH)}
+    for tree in trees.values():
+        dicts = _dict_keys(tree)
+        funcs = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or not _callee(node.func):
+                continue
+            name = _callee(node.func)
+            funcs.add(node.func)
+            npos[name] = max(npos[name], len(node.args))
+            kws: set[str] | None = set()
+            for k in node.keywords:
+                if k.arg:
+                    kws.add(k.arg)
+                elif isinstance(k.value, ast.Name) and dicts.get(k.value.id):
+                    kws |= dicts[k.value.id]
+                else:
+                    kws = None
+                    break
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                kws = None
+            mark(name, kws)
+        for node in ast.walk(tree):  # referenced as a value
+            if (isinstance(node, (ast.Name, ast.Attribute)) and node not in funcs
+                    and isinstance(node.ctx, ast.Load)):
+                mark(_callee(node), None)
+    total, flagged = 0, []
+    for path in _py_files([PACKAGE]):
+        for node in trees[path].body:
+            if not _public_names(node, _FUNC):
+                continue
+            ks = passed.get(node.name, set())
+            for param, idx in _defaulted(node):
+                total += 1
+                if ks is not None and param not in ks and not (
+                        idx is not None and npos[node.name] > idx):
+                    flagged.append(
+                        f"{path.relative_to(ROOT)}:{node.lineno} {node.name}.{param}")
+    return total, flagged
+
+
+def test_no_unpassed_public_parameters():
+    total, flagged = unpassed_parameters()
+    assert not flagged, (
+        f"{len(flagged)} of {total} defaulted parameters of public functions"
+        " are passed by no call (make each a constant):\n" + "\n".join(flagged)
     )

@@ -49,6 +49,21 @@ def landing(tmp_path: Path) -> str:
     return str(tmp_path)
 
 
+def test_extract_zip_honours_dest(tmp_path):
+    """``extract_zip(dest=...)`` lands the known GTFS members in the
+    given staging directory, in FK-safe load order (Spark-free)."""
+    from vbb_data_pipeline_spark.sources.gtfs import extract_zip
+
+    z = tmp_path / "feed.zip"
+    _write_zip(z)
+    dest = tmp_path / "staging"
+    out = extract_zip(str(z), dest=str(dest))
+    assert list(out) == [t for t in schemas.GTFS_LOAD_ORDER if t in out]
+    assert set(out) == {"stops", "calendar", "trips", "stop_times"}
+    for path in out.values():
+        assert Path(path).parent == dest and Path(path).is_file()
+
+
 def test_e1_checksum_and_catalog_dedup(spark, landing):
     wh = Warehouse()
     fresh = e1_extract(spark, landing, wh)
@@ -991,13 +1006,12 @@ def test_e6_curation_only_materialize_writes_marker(spark, tmp_path):
     assert sorted((r.doc_id, r.url) for r in resumed.collect()) == docs
 
 
-def test_e6_resume_tolerates_legacy_marker(spark, tmp_path):
-    """Markers written before hash_mode was RESOLVED into the record
-    carry hash_mode null, and WET-run markers used to record the
-    (unconsulted) extractor string. A resume against such a marker
-    must normalize instead of forcing a full re-curation of a frame
-    that IS valid (round-9 ADVICE item 3) — while a genuinely
-    different config still refuses."""
+def test_e6_resume_refuses_unresolved_marker(spark, tmp_path):
+    """A marker whose hash_mode is null (not RESOLVED to the hash
+    family that curated the frame) does not match any configuration
+    this code records, so resume refuses it as a different
+    configuration instead of guessing the family; a genuinely
+    different config refuses too, naming the mismatched key."""
     import gzip
     import json
 
@@ -1034,30 +1048,17 @@ def test_e6_resume_tolerates_legacy_marker(spark, tmp_path):
     )
     marker = mat.rstrip("/") + "/_e6_curation.json"
     rec = json.loads(hadoop_read_text(spark, marker))
-    # rewrite the marker in the legacy form: unresolved hash_mode,
-    # extractor recorded on a WET run
-    legacy = dict(rec, hash_mode=None, extractor="density")
-    hadoop_write_text(spark, marker, json.dumps(legacy, sort_keys=True))
-
+    # the committed marker resumes
     resumed = sorted(
         r["doc_id"]
         for r in e6_crawl_corpus(spark, str(d), resume=True, **kw).collect()
     )
     assert resumed == first
-    # tolerance is NOT blanket acceptance: a real config mismatch in
-    # the legacy marker still refuses
+    # rewrite it with an unresolved hash_mode: resume refuses
+    unresolved = dict(rec, hash_mode=None)
+    hadoop_write_text(spark, marker, json.dumps(unresolved, sort_keys=True))
+    with pytest.raises(ValueError, match=r"different configuration.*hash_mode"):
+        e6_crawl_corpus(spark, str(d), resume=True, **kw)
+    # a real config mismatch names its key
     with pytest.raises(ValueError, match="min_chars"):
         e6_crawl_corpus(spark, str(d), resume=True, min_chars=999, **kw)
-    # ...and a legacy (null-hash_mode) marker whose run used
-    # max_per_host refuses outright: the per-host winners were
-    # elected under an UNKNOWABLE write-time hash family, so
-    # normalizing null to the current default would silently resume
-    # a frame this configuration might not produce
-    legacy_capped = dict(legacy, max_per_host=3)
-    hadoop_write_text(
-        spark, marker, json.dumps(legacy_capped, sort_keys=True)
-    )
-    with pytest.raises(ValueError, match="unknowable"):
-        e6_crawl_corpus(
-            spark, str(d), resume=True, max_per_host=3, **kw
-        )

@@ -75,7 +75,7 @@ def _build_one(args) -> tuple[int, int]:
                     _http(html.encode()),
                     f"http://{host}/p/{did}?utm_source=x",
                 )
-                blob = gzip.compress(rec, compresslevel=1)
+                blob = gzip.compress(rec, compresslevel=1, mtime=0)
                 f.write(blob)
                 total += len(blob)
                 n_docs += 1
@@ -232,9 +232,7 @@ def main() -> None:
         # params only — cross-check the corpus BUILD params too, or a
         # --resume with different --sf/--reps/--files silently reuses
         # the old corpus and records the new args against it
-        want = {"reps": args.reps, "files": args.files}
-        if "sf" in meta:  # older markers predate the sf record
-            want["sf"] = args.sf
+        want = {"reps": args.reps, "files": args.files, "sf": args.sf}
         have = {k: meta.get(k) for k in want}
         if have != want:
             raise SystemExit(
@@ -247,9 +245,7 @@ def main() -> None:
         print(json.dumps({"resumed": True, "built": meta}), flush=True)
     elif args.reuse_corpus and os.path.exists(meta_path):
         meta = json.load(open(meta_path))
-        want = {"reps": args.reps, "files": args.files}
-        if "sf" in meta:
-            want["sf"] = args.sf
+        want = {"reps": args.reps, "files": args.files, "sf": args.sf}
         have = {k: meta.get(k) for k in want}
         if have != want:
             raise SystemExit(

@@ -72,12 +72,12 @@ _WEEKDAY_COLS = [
 ]
 
 
-def weekday_flag(day: Column, prefix: str = "") -> Column:
+def weekday_flag(day: Column) -> Column:
     """Boolean: does the calendar row's weekday flag for ``day`` hold?
 
     Re-expresses the per-weekday set membership of GtfsDAO.java:108-112
     as ``element_at`` over the seven flag columns — codegen-friendly,
     no UDF.
     """
-    flags = F.array(*[F.col(prefix + c) for c in _WEEKDAY_COLS])
+    flags = F.array(*[F.col(c) for c in _WEEKDAY_COLS])
     return F.element_at(flags, iso_dow(day))

@@ -201,12 +201,16 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(BPE_SPLIT_RE))
 
 
+#: Decimal digits (HALF_UP) ``tf_idf_top_terms`` rounds each score to;
+#: the DuckDB oracle rounds the same.
+_TFIDF_DIGITS = 6
+
+
 def tf_idf_top_terms(
     df,
     text_col: str,
     id_col: str,
     k: int = 5,
-    round_digits: int = 6,
     tf: "DataFrame | None" = None,
 ):
     """Top-``k`` TF-IDF terms per document — corpus keyword profiling.
@@ -259,7 +263,7 @@ def tf_idf_top_terms(
         id_col,
         "term",
         "tf",
-        F.round(F.col("tf") * idf, round_digits).alias("tfidf"),
+        F.round(F.col("tf") * idf, _TFIDF_DIGITS).alias("tfidf"),
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
@@ -331,7 +335,7 @@ def clean_text(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def redact_pii(col: Column | str, kinds: list[str] | None = None) -> Column:
+def redact_pii(col: Column | str) -> Column:
     """Replace PII spans with ``<KIND>`` placeholders.
 
     A chain of ``regexp_replace`` passes — scalar, codegen-native, no
@@ -342,7 +346,7 @@ def redact_pii(col: Column | str, kinds: list[str] | None = None) -> Column:
     'g')`` chain in the same order.
     """
     c = F.col(col) if isinstance(col, str) else col
-    for kind in kinds or list(PII_PATTERNS):
+    for kind in PII_PATTERNS:
         c = F.regexp_replace(c, PII_PATTERNS[kind], f"<{kind}>")
     return c
 

@@ -129,7 +129,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 10,
     min_pair_count: int = 2,
-    eow: bool = True,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merges; returns (merge table, final vocab).
 
@@ -139,7 +138,7 @@ def bpe_train(
     the plan flat. Stops early when no pair reaches
     ``min_pair_count``.
     """
-    vocab = initial_vocab(word_counts(df, text_col), eow=eow)
+    vocab = initial_vocab(word_counts(df, text_col))
     vocab = vocab.localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -175,7 +174,7 @@ def _sql_str(s: str) -> str:
 
 
 def bpe_encode_words(
-    words: DataFrame, merges: list[tuple[str, str]], eow: bool = True
+    words: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """Apply a learned merge table to a (word, ...) table → subword
     arrays.
@@ -190,7 +189,7 @@ def bpe_encode_words(
     @F.pandas_udf("array<string>")
     def encode(col: pd.Series) -> pd.Series:
         def one(word):
-            syms = list(word) + ([EOW] if eow else [])
+            syms = list(word) + [EOW]
             for a, b in merge_list:
                 out = []
                 i, n = 0, len(syms)
@@ -233,17 +232,11 @@ def bpe_vocab(encoded_words: DataFrame) -> DataFrame:
 def bpe_encode_corpus(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eow: bool = True,
-    vocab: DataFrame | None = None,
-    broadcast_words: bool = True,
-    unk_id: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Tokenize a corpus into integer token ids with a trained merge
     table: returns ``(encoded, vocab)`` where ``encoded`` is
-    ``(id_col, token_ids array<bigint>, n_tokens)`` and ``vocab`` is
-    the ``(subword, token_id)`` table actually used.
+    ``(doc_id, token_ids array<bigint>, n_tokens)`` over the ``text``
+    column and ``vocab`` is the ``(subword, token_id)`` table used.
 
     This is the corpus half the trainer deliberately never does
     (``bpe_train`` touches only the distinct-word table); together
@@ -263,59 +256,24 @@ def bpe_encode_corpus(
       structs restores order deterministically regardless of
       partitioning (no window over the corpus, no global sort).
     * ``vocab`` ids are dense lexicographic ranks (vocab-scale
-      window), so the id space is stable across engines and runs; a
-      precomputed ``vocab`` can be passed to pin ids across corpus
-      batches (new subwords would otherwise reshuffle ranks —
-      incremental batches should reuse the training vocab). Subwords
-      NOT in a supplied vocab (new characters in an incremental batch)
-      are never silently dropped: they map to ``unk_id`` when given,
-      else the encode RAISES at execution time naming the unseen
-      subword — silent data loss is not an option either way.
-    * ``broadcast_words`` hints the word→ids join. Default True
-      (distinct words comfortably broadcast at any tested scale);
-      flip to False when the distinct-word table outgrows executor
-      memory (billions of distinct "words" — CJK or noisy bytes) and
-      the join becomes a word-keyed shuffle instead, still never
-      re-running the merge loop per occurrence.
+      window) over this corpus's subwords, so the id space is stable
+      across engines and runs.
+    * The word→ids join is broadcast: distinct words comfortably
+      broadcast at any tested scale.
     """
+    id_col = "doc_id"
     toks = docs.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "word")
+        F.col(id_col), F.posexplode(tokens("text")).alias("pos", "word")
     )
     distinct_words = toks.select("word").distinct()
-    encoded_words = bpe_encode_words(distinct_words, merges, eow=eow)
-    supplied_vocab = vocab is not None
-    if vocab is None:
-        vocab = bpe_vocab(encoded_words)
-    # word -> ordered id list, via the (vocab-scale) subword table.
-    # With a SUPPLIED vocab an inner join would silently drop subwords
-    # the vocab has never seen (and with them whole word occurrences
-    # downstream) — so join LEFT and either route misses to unk_id or
-    # raise inside the plan (no extra validation scan; the error
-    # surfaces the first time the encode actually executes).
-    tid = F.col("token_id")
-    if supplied_vocab:
-        if unk_id is not None:
-            tid = F.coalesce(tid, F.lit(int(unk_id)).cast("long"))
-        else:
-            tid = F.when(
-                tid.isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "bpe_encode_corpus: subword not in supplied"
-                            " vocab (pass unk_id to route unseen"
-                            " subwords): "
-                        ),
-                        F.col("subword"),
-                    )
-                ),
-            ).otherwise(tid)
+    encoded_words = bpe_encode_words(distinct_words, merges)
+    vocab = bpe_vocab(encoded_words)
+    # word -> ordered id list, via the (vocab-scale) subword table
     word_ids = (
         encoded_words.select(
             "word", F.posexplode("subwords").alias("sp", "subword")
         )
         .join(F.broadcast(vocab), "subword", "left")
-        .withColumn("token_id", tid)
         .groupBy("word")
         .agg(
             F.transform(
@@ -326,9 +284,8 @@ def bpe_encode_corpus(
             ).alias("ids")
         )
     )
-    wi = F.broadcast(word_ids) if broadcast_words else word_ids
     encoded = (
-        toks.join(wi, "word")
+        toks.join(F.broadcast(word_ids), "word")
         .groupBy(id_col)
         .agg(
             F.flatten(

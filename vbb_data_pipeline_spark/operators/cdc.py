@@ -206,8 +206,6 @@ def scd2_apply(
     keys: Sequence[str],
     attr_cols: Sequence[str],
     as_of: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
     digest_bits: int = 64,
 ) -> DataFrame:
     """Fold one snapshot into a type-2 slowly-changing dimension.
@@ -242,9 +240,9 @@ def scd2_apply(
     ts = F.to_timestamp(F.lit(as_of))
     high = F.to_timestamp(F.lit(HIGH_TS))
 
-    is_open = F.coalesce(F.col(valid_to) == high, F.lit(True))
+    is_open = F.coalesce(F.col("valid_to") == high, F.lit(True))
     history = dim.filter(~is_open)
-    current = dim.filter(is_open).withColumn(valid_to, high)
+    current = dim.filter(is_open).withColumn("valid_to", high)
 
     # The diff — changed keys only, small by CDC nature — feeds three
     # consumers (close / pass-through / open). Without materialization
@@ -271,7 +269,7 @@ def scd2_apply(
     closed = (
         current.alias("_l")
         .join(changed, _key_eq("_l", "_d", ks), "left_semi")
-        .withColumn(valid_to, ts)
+        .withColumn("valid_to", ts)
     )
     untouched = current.alias("_l").join(
         changed, _key_eq("_l", "_d", ks), "left_anti"
@@ -280,8 +278,8 @@ def scd2_apply(
         snapshot.alias("_l")
         .join(arrived, _key_eq("_l", "_d", ks), "left_semi")
         .select(*ks, *attrs)
-        .withColumn(valid_from, ts)
-        .withColumn(valid_to, high)
+        .withColumn("valid_from", ts)
+        .withColumn("valid_to", high)
     )
     return (
         history.unionByName(closed)

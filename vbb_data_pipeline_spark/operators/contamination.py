@@ -38,14 +38,12 @@ def _gram_hashes(
 def contamination_report(
     docs: DataFrame,
     eval_df: DataFrame,
-    doc_id_col: str = "doc_id",
-    doc_text_col: str = "text",
-    eval_text_col: str = "text",
     n: int = 3,
     min_matches: int = 1,
     hash_mode: str | None = None,
 ) -> DataFrame:
-    """Per-document contamination evidence.
+    """Per-document contamination evidence over the ``text`` columns of
+    ``docs`` and ``eval_df``.
 
     Returns ``(doc_id, n_contaminated_grams)`` for every training
     document sharing at least ``min_matches`` distinct word ``n``-grams
@@ -59,18 +57,16 @@ def contamination_report(
     """
     mode = hash_mode or default_hash_mode()
     eval_grams = (
-        _gram_hashes(
-            eval_df.select(eval_text_col), eval_text_col, n, mode, "gram_hash"
-        )
+        _gram_hashes(eval_df.select("text"), "text", n, mode, "gram_hash")
         .select("gram_hash")
         .distinct()
     )
     doc_grams = _gram_hashes(
-        docs.select(doc_id_col, doc_text_col), doc_text_col, n, mode, "gram_hash"
-    ).select(doc_id_col, "gram_hash")
+        docs.select("doc_id", "text"), "text", n, mode, "gram_hash"
+    ).select("doc_id", "gram_hash")
     matches = doc_grams.join(F.broadcast(eval_grams), "gram_hash")
     return (
-        matches.groupBy(doc_id_col)
+        matches.groupBy("doc_id")
         .agg(F.count_distinct("gram_hash").alias("n_contaminated_grams"))
         .filter(F.col("n_contaminated_grams") >= F.lit(min_matches))
     )
@@ -79,24 +75,19 @@ def contamination_report(
 def decontaminate(
     docs: DataFrame,
     eval_df: DataFrame,
-    doc_id_col: str = "doc_id",
-    doc_text_col: str = "text",
-    eval_text_col: str = "text",
     n: int = 3,
     min_matches: int = 1,
     hash_mode: str | None = None,
 ) -> DataFrame:
     """Drop contaminated documents: ``docs`` minus every row flagged by
-    :func:`contamination_report` (left-anti on ``doc_id_col``), wide
+    :func:`contamination_report` over the ``text`` columns (left-anti
+    on ``doc_id``), wide
     columns untouched — only ids move through the anti-join."""
     flagged = contamination_report(
         docs,
         eval_df,
-        doc_id_col=doc_id_col,
-        doc_text_col=doc_text_col,
-        eval_text_col=eval_text_col,
         n=n,
         min_matches=min_matches,
         hash_mode=hash_mode,
-    ).select(doc_id_col)
-    return docs.join(flagged, doc_id_col, "left_anti")
+    ).select("doc_id")
+    return docs.join(flagged, "doc_id", "left_anti")

@@ -30,16 +30,9 @@ def equi_join(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    how: str = "inner",
-    broadcast_right: bool = False,
 ) -> DataFrame:
-    """J1 composite-key equi-join (GtfsDAO.java:44-46).
-
-    ``broadcast_right`` hints a map-side join for dimension tables —
-    at 100 TB the fact side never shuffles for a broadcastable dim.
-    """
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, list(on), how)
+    """J1 composite-key equi-join (GtfsDAO.java:44-46)."""
+    return left.join(right, list(on), "inner")
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
@@ -97,7 +90,6 @@ def range_bucket_join(
     lo_col: str,
     hi_col: str,
     bucket_width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Range join (fact.value ∈ [range.lo, range.hi)) rewritten as a
     bucket equi-join — the 100 TB technique for interval predicates
@@ -107,15 +99,9 @@ def range_bucket_join(
     overlaps; the fact side computes its single bucket; the equi-join
     on the bucket key shuffles hash-partitioned, and the exact interval
     predicate filters residuals. Cost: |ranges| × avg_span/width extra
-    rows — choose ``bucket_width`` near the median range span.
+    rows — choose ``bucket_width`` near the median range span. Inner
+    join only: the exact interval residual drops NULL-extended rows.
     """
-    if how != "inner":
-        # The exact interval residual below drops NULL-extended rows,
-        # silently collapsing outer joins to inner semantics.
-        raise ValueError(
-            "range_bucket_join supports how='inner' only; outer modes "
-            "would need a null-tolerant residual predicate"
-        )
     lo_b = F.floor(F.col(lo_col) / bucket_width).cast("long")
     # hi is exclusive: the last covered bucket is the one holding the
     # largest value strictly below hi
@@ -127,7 +113,7 @@ def range_bucket_join(
     keyed_fact = fact.withColumn(
         "_bucket", F.floor(F.col(value_col) / bucket_width).cast("long")
     )
-    joined = keyed_fact.join(exploded, "_bucket", how)
+    joined = keyed_fact.join(exploded, "_bucket", "inner")
     return joined.filter(
         (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
     ).drop("_bucket")

@@ -374,13 +374,11 @@ def simhash(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    bits: int = 16,
-    hash_mode: str = "fast",
 ) -> DataFrame:
-    """SimHash (Charikar) over word tokens with ``bits``-bit output.
+    """16-bit SimHash (Charikar) over word tokens.
 
     Bit b of the hash is the sign of Σ_tokens (±1 depending on bit b of
-    the token's hash — ``xxhash64`` fast / md5-derived oracle).
+    the token's ``xxhash64``).
     Near-duplicates have small Hamming distance
     (compare with ``bit_count(simhash_a ^ simhash_b)``).
     One explode + one groupBy; the per-bit sums are algebraic
@@ -389,18 +387,18 @@ def simhash(
     from vbb_data_pipeline_spark.functions.hashing import hash_long
 
     tok = df.select(F.col(id_col), F.explode_outer(tokens(text_col)).alias("_t"))
-    h = hash_long(F.col("_t"), hash_mode)
+    h = hash_long(F.col("_t"), "fast")
     bit_sums = [
         F.sum(
             F.when(F.col("_t").isNull(), F.lit(0)).otherwise(
                 (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1)
             )
         ).alias(f"_s{b}")
-        for b in range(bits)
+        for b in range(16)
     ]
     summed = tok.groupBy(id_col).agg(*bit_sums)
     sim = None
-    for b in range(bits):
+    for b in range(16):
         term = F.when(F.col(f"_s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return summed.select(F.col(id_col), sim.cast("long").alias("simhash"))
@@ -503,12 +501,10 @@ def line_dedup_corpus(
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Group near-duplicate pairs into clusters: connected components
-    by iterative min-label propagation.
+    """Group near-duplicate ``(id_a, id_b)`` pairs into clusters:
+    connected components by iterative min-label propagation.
 
     Each node starts labeled with itself; every iteration takes the
     min label over itself, its neighbors, AND its label's label
@@ -541,8 +537,10 @@ def connected_components(
     # mid-loop can't leak a cache entry. The cost: losing an executor
     # loses the edge/label blocks and fails the job (CKPT_SER).
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
         .localCheckpoint(storageLevel=CKPT_SER)
     )
     labels = (
@@ -812,10 +810,9 @@ def span_removal_fixed_point(
     text_col: str,
     id_col: str,
     window: int = 15,
-    hash_mode: str = "fast",
     max_rounds: int = 8,
 ) -> DataFrame:
-    """Iterate :func:`span_removal` to a FIXED POINT: after
+    """Iterate :func:`span_removal` (fast hash) to a FIXED POINT: after
     convergence no ``window``-token span occurs in more than one
     document (each duplicated region survives exactly once, in its
     owner) — the closure a single pass cannot promise, because every
@@ -840,7 +837,7 @@ def span_removal_fixed_point(
     rounds = 0
     for _ in range(max_rounds):
         out = span_removal(
-            cur, "text", id_col, window=window, hash_mode=hash_mode
+            cur, "text", id_col, window=window, hash_mode="fast"
         ).localCheckpoint(eager=True, storageLevel=CKPT_SER)
         rounds += 1
         acc = (
@@ -1013,15 +1010,13 @@ def _index_params(
 def dedup_index_write(
     df: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
-    shingle_n: int = 3,
     bands: int = 4,
     hash_mode: str = "fast",
     mode: str = "overwrite",
 ) -> None:
-    """Materialize the corpus's DEDUP STATE as an at-rest index so new
+    """Materialize the corpus's DEDUP STATE (``doc_id``, ``text``;
+    3-token shingles) as an at-rest index so new
     ingest batches dedupe against the whole corpus WITHOUT re-milling
     it (the append-only pattern of ``pack_token_shards_incremental``,
     applied to dedup).
@@ -1060,6 +1055,7 @@ def dedup_index_write(
     which does the checks and the writes; a caller that already holds
     both frames (the streaming ingest loop) calls that core directly.
     """
+    text_col, id_col, shingle_n = "text", "doc_id", 3
     params = _index_params(num_hashes, bands, shingle_n, hash_mode)
     # An overwrite REBUILD over an existing marked index flips the
     # marker to a 'rebuilding' sentinel FIRST: a crash at any point
@@ -1185,16 +1181,14 @@ def dedup_index_write_frames(
 def dedup_incremental(
     new_df: DataFrame,
     index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
-    shingle_n: int = 3,
     bands: int = 4,
     threshold: float = 0.7,
     hash_mode: str = "fast",
     max_bucket_size: int | None = 100_000,
 ) -> DataFrame:
-    """Classify a new ingest batch against an at-rest dedup index
+    """Classify a new ``(doc_id, text)`` ingest batch (3-token shingles)
+    against an at-rest dedup index
     (:func:`dedup_index_write`) — every input row comes back with a
     verdict, nothing is silently dropped:
 
@@ -1219,7 +1213,7 @@ def dedup_incremental(
     The caller appends survivors (``status = 'new'``) back with
     ``dedup_index_write(..., mode="append")``; intra-batch dedup is
     the existing batch operators' job, run before or after this probe.
-    ``id_col`` must be numeric (the corpus id convention everywhere in
+    ``doc_id`` must be numeric (the corpus id convention everywhere in
     this package) — the near-dup tie-break negates it inside a
     max(struct) to pick the smallest matching corpus id.
 
@@ -1227,6 +1221,7 @@ def dedup_incremental(
     frames from its text and hands them to
     :func:`dedup_incremental_frames`, the probe proper.
     """
+    text_col, id_col, shingle_n = "text", "doc_id", 3
     new_fp = new_df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
     # zero-token docs (NULL fingerprint) carry no content evidence in
     # EITHER tier: the exact join can't match them (NULL = never

@@ -65,20 +65,18 @@ def hashed_ngram_features(
     text_col: str,
     id_col: str,
     n_buckets: int,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """Per-document hashed n-gram bag: ``(id_col, bucket, c)``.
 
     Unigrams and bigrams (joined with ``_``) share one bucket space,
     as in the paper's ``hashed n-gram`` featurization. One explode +
-    one map-side-combinable groupBy per corpus scan. ``hash_mode``
-    defaults to the repo-wide switch (oracle md5 for driver parity;
+    one map-side-combinable groupBy per corpus scan. The hash is the
+    repo-wide switch (oracle md5 for driver parity;
     ``SPARK_GRAFT_FAST_HASH=1`` flips to JVM xxhash64 — any hash
     family yields valid DSIR features, only the oracle replay needs
     md5).
     """
-    if hash_mode is None:
-        hash_mode = default_hash_mode()
+    hash_mode = default_hash_mode()
     toks = docs.select(F.col(id_col), tokens(text_col).alias("_t"))
     grams = toks.select(
         id_col,
@@ -115,14 +113,12 @@ def dsir_logweights(
     text_col: str,
     id_col: str,
     n_buckets: int = 10_000,
-    alpha: float = 1.0,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """Importance log-weights for every raw document:
     ``(id_col, logw_u)`` in integer micro-units.
 
-    ``p_b = (c_target_b + α) / (N_target + α·B)`` and likewise ``q``
-    over the raw corpus (add-α smoothing over the bucket space, so
+    ``p_b = (c_target_b + 1) / (N_target + B)`` and likewise ``q``
+    over the raw corpus (add-one smoothing over the bucket space, so
     unseen buckets carry the floor rather than −inf). The two totals
     are single-row model metadata (same posture as
     ``operators/lm.unigram_model``); the log-ratio table is ≤ B rows
@@ -134,11 +130,12 @@ def dsir_logweights(
     # them once so each corpus is genuinely scanned ONCE for features;
     # (id, bucket, c) rows are orders of magnitude smaller than text
     feat_raw = hashed_ngram_features(
-        raw, text_col, id_col, n_buckets, hash_mode
+        raw, text_col, id_col, n_buckets
     ).localCheckpoint(eager=True)
     feat_tgt = hashed_ngram_features(
-        target, text_col, id_col, n_buckets, hash_mode
+        target, text_col, id_col, n_buckets
     ).localCheckpoint(eager=True)
+    alpha = 1.0
     tgt_b = _bucket_counts(feat_tgt)
     raw_b = _bucket_counts(feat_raw)
     n_t = (tgt_b.agg(F.sum("n")).collect()[0][0]) or 0
@@ -183,12 +180,10 @@ def gumbel_topk(
     n: int,
     seed: str,
     id_col: str,
-    logw_col: str = "logw_u",
-    round_digits: int = 6,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """Gumbel-top-k resampling WITHOUT replacement from the importance
-    distribution: ``(id_col, key, rank)`` for the ``n`` winners.
+    distribution (``logw_u``): ``(id_col, key, rank)`` for the ``n``
+    winners.
 
     The Gumbel-max trick: adding i.i.d. Gumbel noise ``g = −ln(−ln u)``
     to each log-weight and taking the top n draws exactly from the
@@ -198,13 +193,12 @@ def gumbel_topk(
 
     ``u`` derives deterministically from ``hash(seed|id)`` mapped into
     (0, 1), so reruns and engines agree; keys round before ranking and
-    ids break ties. The top-n is a TakeOrdered (limit), never a global
-    sort materialization.
+    ids break ties (keys round to 6 digits). The top-n is a TakeOrdered
+    (limit), never a global sort materialization.
     """
-    if hash_mode is None:
-        hash_mode = default_hash_mode()
     h = hash_long(
-        F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")), hash_mode
+        F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")),
+        default_hash_mode(),
     )
     # map to (0, 1) strictly: fold into [0, 2^60) first — a no-op for
     # the 60-bit md5 oracle path (so the SQL replay is unchanged), a
@@ -212,7 +206,7 @@ def gumbel_topk(
     # -ln(-ln u) NaN)
     u = (h % (1 << 60) + 1).cast("double") / float((1 << 60) + 1)
     g = -F.log(-F.log(u))
-    key = F.round(F.col(logw_col).cast("double") / LOGW_SCALE + g, round_digits)
+    key = F.round(F.col("logw_u").cast("double") / LOGW_SCALE + g, 6)
     ranked = (
         weights.select(F.col(id_col), key.alias("key"))
         .orderBy(F.col("key").desc(), F.col(id_col).asc())

@@ -26,12 +26,9 @@ def pagerank(
     edges: DataFrame,
     iters: int = 10,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    round_digits: int = 6,
-    scale: int | None = PR_SCALE,
 ) -> DataFrame:
-    """Fixed-iteration PageRank → ``(node, rank)``.
+    """Fixed-iteration PageRank over ``(src, dst)`` edges → ``(node,
+    rank)``, ranks rounded to 6 digits.
 
     Construction (the standard power iteration, Brin & Page 1998):
     every node starts at ``1/N``; each round a node's rank is
@@ -51,18 +48,16 @@ def pagerank(
     without lineage truncation. Out-degrees compute once, before the
     loop.
 
-    Deterministic: fixed ``iters`` (no convergence race), and — with
-    the default ``scale`` — CROSS-ENGINE deterministic: both shuffled
-    sums (in-contributions per node, global dangling mass) accumulate
-    ``round(x · scale)`` int64 fixed-point values, so the aggregation
+    Deterministic: fixed ``iters`` (no convergence race), and
+    CROSS-ENGINE deterministic: both shuffled sums (in-contributions
+    per node, global dangling mass) accumulate ``round(x · PR_SCALE)``
+    int64 fixed-point values, so the aggregation
     is an exact, order-independent integer sum (the k-means recipe);
     every other step is scalar IEEE arithmetic in a fixed operation
-    order. The quantization error is ≤ 0.5/scale per summand — eleven
-    orders below the final rounding — and the DuckDB oracle replays
-    all ``iters`` rounds as chained CTEs bit-identically
-    (``queries/graph_q.py``). ``scale=None`` restores plain double
-    sums (fractionally faster, engine-order-dependent in the last
-    ulps).
+    order. The quantization error is ≤ 0.5/PR_SCALE per summand —
+    eleven orders below the final rounding — and the DuckDB oracle
+    replays all ``iters`` rounds as chained CTEs bit-identically
+    (``queries/graph_q.py``).
     """
     # Edge-partition reuse (guide §2.2/§2.4, r11): the edge list is
     # the one big table and every iteration joins it on ``src`` — but
@@ -92,7 +87,7 @@ def pagerank(
     # cut, so losing an executor (preemption, dynamic allocation)
     # loses them and fails the job instead of recomputing.
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
         .repartition("src")
         .localCheckpoint()
     )
@@ -120,24 +115,18 @@ def pagerank(
         # (BroadcastNestedLoopJoin of 1 row — constant cost), folding
         # what used to be a second full scan + driver round-trip into
         # the same job as the rank update.
-        if scale is None:
-            dang_val = F.coalesce(F.sum("rank"), F.lit(0.0))
-            contrib_val = F.sum(F.col("rank") / F.col("_deg"))
-            in_val = F.coalesce(F.col("_in"), F.lit(0.0))
-            dang_term = F.col("_dangling") / F.lit(float(n_total))
-        else:
-            dang_val = F.coalesce(
-                F.sum(F.round(F.col("rank") * scale).cast("long")), F.lit(0)
-            ).cast("long")
-            contrib_val = F.sum(
-                F.round((F.col("rank") / F.col("_deg")) * scale).cast("long")
-            )
-            in_val = F.coalesce(F.col("_in"), F.lit(0)).cast("double") / F.lit(
-                float(scale)
-            )
-            dang_term = (
-                F.col("_dangling").cast("double") / F.lit(float(scale))
-            ) / F.lit(float(n_total))
+        dang_val = F.coalesce(
+            F.sum(F.round(F.col("rank") * PR_SCALE).cast("long")), F.lit(0)
+        ).cast("long")
+        contrib_val = F.sum(
+            F.round((F.col("rank") / F.col("_deg")) * PR_SCALE).cast("long")
+        )
+        in_val = F.coalesce(F.col("_in"), F.lit(0)).cast("double") / F.lit(
+            float(PR_SCALE)
+        )
+        dang_term = (
+            F.col("_dangling").cast("double") / F.lit(float(PR_SCALE))
+        ) / F.lit(float(n_total))
         dangling = with_deg.filter(F.col("_deg").isNull()).agg(
             dang_val.alias("_dangling")
         )
@@ -159,4 +148,4 @@ def pagerank(
             )
             .localCheckpoint()
         )
-    return ranks.select("node", F.round("rank", round_digits).alias("rank"))
+    return ranks.select("node", F.round("rank", 6).alias("rank"))

@@ -76,9 +76,9 @@ def score_documents(
     oov_logprob: float,
     text_col: str,
     id_col: str,
-    round_digits: int = 4,
 ) -> DataFrame:
-    """Mean token log-prob per document (higher = more corpus-like).
+    """Mean token log-prob per document (higher = more corpus-like),
+    rounded to 4 digits.
 
     The token explode broadcast-joins the model (left join; misses
     take the OOV floor), then one groupBy(doc) averages — the
@@ -114,7 +114,7 @@ def score_documents(
         .join(per_doc, id_col, "left")
         .select(
             id_col,
-            F.round(F.coalesce(F.col("_mean"), F.lit(oov_logprob)), round_digits)
+            F.round(F.coalesce(F.col("_mean"), F.lit(oov_logprob)), 4)
             .alias("lm_score"),
         )
     )
@@ -125,16 +125,13 @@ def lm_quality_scores(
     text_col: str,
     id_col: str,
     vocab_size: int = 50_000,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Self-trained variant: train the unigram model on ``docs`` and
     score the same corpus (the usual bootstrap when no external
     reference corpus exists). Returns ``(id_col, lm_score, n_tokens)``
     — feed a percentile cut downstream (CCNet keeps the middle)."""
     model, oov = unigram_model(docs, text_col, vocab_size)
-    scores = score_documents(
-        docs, model, oov, text_col, id_col, round_digits
-    )
+    scores = score_documents(docs, model, oov, text_col, id_col)
     return scores.join(
         docs.select(F.col(id_col), token_count(text_col).alias("n_tokens")),
         id_col,

@@ -45,11 +45,11 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Test-fixture adapter: treat UTF-8 bytes of a text column as the
+def attach_payload(df: DataFrame) -> DataFrame:
+    """Test-fixture adapter: treat UTF-8 bytes of the ``text`` column as the
     opaque binary payload (the real pipeline reads
     ``spark.read.format('binaryFile')``)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
@@ -102,7 +102,7 @@ def parse_image_header(payload: bytes) -> tuple[int, int, int] | None:
     return None
 
 
-def decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Decode stage: binary payload → typed image metadata.
 
     Arrow-batched ``mapInPandas``: each task receives pandas batches,
@@ -122,7 +122,7 @@ def decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": payloads.map(len).astype("int64"),
                     "width": [d[0] for d in dims],
                     "height": [d[1] for d in dims],
@@ -133,7 +133,7 @@ def decode_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(batches, DECODED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(batches, DECODED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +235,7 @@ RESIZED_SCHEMA = T.StructType(
 
 
 def resize_images(
-    df: DataFrame, width: int, height: int, id_col: str = "doc_id"
+    df: DataFrame, width: int, height: int
 ) -> DataFrame:
     """Resize stage: Arrow-batched ``mapInPandas`` over
     ``(doc_id, payload)``. Total function: payloads whose format needs
@@ -246,7 +246,7 @@ def resize_images(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out_rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 resized = resize_payload(payload, width, height)
                 if resized is None:
                     out_rows.append((doc_id, "unsupported", None, None, payload))
@@ -257,7 +257,7 @@ def resize_images(
                 columns=["doc_id", "status", "width", "height", "payload"],
             )
 
-    return df.select(id_col, "payload").mapInPandas(batches, RESIZED_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(batches, RESIZED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -332,7 +332,7 @@ def _iter_y4m_frames(payload: bytes):
 
 
 def frame_sample(
-    df: DataFrame, every_n: int, id_col: str = "doc_id"
+    df: DataFrame, every_n: int
 ) -> DataFrame:
     """Frame-sampling stage: one output row per sampled frame
     (``frame_idx % every_n == 0``) of each video payload.
@@ -346,7 +346,7 @@ def frame_sample(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 for idx, w, h, frame in _iter_y4m_frames(payload):
                     if idx % every_n == 0:
                         rows.append((doc_id, idx, w, h, frame))
@@ -354,7 +354,7 @@ def frame_sample(
                 rows, columns=["doc_id", "frame_idx", "width", "height", "frame"]
             )
 
-    return df.select(id_col, "payload").mapInPandas(batches, FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(batches, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -422,7 +422,7 @@ def decode_wav(payload: bytes):
     return meta, x
 
 
-def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Audio feature stage: binary payload → typed metadata + signal
     features (RMS, peak, zero-crossing rate), one Arrow-batched
     ``mapInPandas`` pass, no shuffle.
@@ -438,7 +438,7 @@ def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in it:
             rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n_bytes = len(payload)
                 decoded = decode_wav(payload)
                 if decoded is None:
@@ -470,4 +470,4 @@ def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_SCHEMA])
 
-    return df.select(id_col, "payload").mapInPandas(batches, AUDIO_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(batches, AUDIO_SCHEMA)

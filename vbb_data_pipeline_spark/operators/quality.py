@@ -28,7 +28,6 @@ _ORDERED_TYPES = ("int", "bigint", "smallint", "tinyint", "double", "float",
 
 def profile_table(
     df: DataFrame,
-    cols: Sequence[str] | None = None,
     exact_distinct: bool = False,
 ) -> DataFrame:
     """One-pass column profile: ``(column, dtype, n, n_null,
@@ -46,7 +45,7 @@ def profile_table(
     schema is column-count-independent; complex types (arrays,
     structs, maps, binary) profile counts only.
     """
-    names = [c for c in (cols or df.columns)]
+    names = list(df.columns)
     dtypes = dict(df.dtypes)
     # Aliases and labels are indexed, not name-derived, and the
     # unpivot is built from typed Column expressions (F.stack +

@@ -80,13 +80,10 @@ def bm25_topk(
     df: DataFrame,
     queries: list[tuple[int, list[str]]],
     k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
     tf_all: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k BM25 matches per query → (qid, rank, doc_id, score).
+    """Top-k BM25 matches per query over ``df``'s ``(doc_id, text)`` →
+    (qid, rank, doc_id, score).
 
     ``queries``: (qid, [term, ...]) with terms already normalized the
     way :func:`vbb_data_pipeline_spark.functions.text.tokens` would
@@ -122,7 +119,7 @@ def bm25_topk(
         doclen = tf_all.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
         tf = tf_all.join(F.broadcast(qterm_set), "term", "left_semi")
     else:
-        toks = _token_stream(df, id_col, text_col)
+        toks = _token_stream(df, "doc_id", "text")
         # corpus-wide per-doc length: map-side combinable
         doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
         # filter the token stream to query terms BEFORE aggregating
@@ -141,8 +138,8 @@ def bm25_topk(
         1.0
         + (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
     )
-    tf_norm = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl)
+    tf_norm = (F.col("tf") * (K1 + 1)) / (
+        F.col("tf") + K1 * (1 - B + B * F.col("dl") / avgdl)
     )
     comp = (
         tf.join(F.broadcast(qterms), "term")
@@ -191,11 +188,10 @@ def _term_bucket(term, n_buckets: int):
 def bm25_write_index(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 64,
 ) -> None:
-    """Materialize the inverted index at ``path``.
+    """Materialize the inverted index of ``df``'s ``(doc_id, text)`` at
+    ``path``.
 
     ``postings/`` is partitioned by ``bucket = xxhash64(term) mod
     n_buckets`` — repartitioned on the bucket before the write so each
@@ -204,7 +200,7 @@ def bm25_write_index(
     the single-row ``stats/`` table complete the scoring inputs.
     """
     spark = df.sparkSession
-    postings, doclen = build_postings(df, id_col, text_col)
+    postings, doclen = build_postings(df, "doc_id", "text")
     (
         postings.withColumn("bucket", _term_bucket(F.col("term"), n_buckets))
         .repartition("bucket")
@@ -226,8 +222,6 @@ def bm25_topk_from_index(
     path: str,
     queries: list[tuple[int, list[str]]],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Top-k BM25 from the at-rest index — identical results to
     :func:`bm25_topk` on the indexed corpus.
@@ -271,8 +265,8 @@ def bm25_topk_from_index(
         1.0
         + (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
     )
-    tf_norm = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl)
+    tf_norm = (F.col("tf") * (K1 + 1)) / (
+        F.col("tf") + K1 * (1 - B + B * F.col("dl") / avgdl)
     )
     comp = (
         postings.join(F.broadcast(qterms), "term")

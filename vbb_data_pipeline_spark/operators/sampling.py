@@ -85,7 +85,6 @@ def deterministic_split(
     weights: dict[str, float],
     seed: str | int = 0,
     hash_mode: str | None = None,
-    split_col: str = "split",
 ) -> DataFrame:
     """Assign every row to exactly one named split (train/val/test/…).
 
@@ -114,7 +113,7 @@ def deterministic_split(
         acc += weights[name] / total
         threshold = int(round(acc * N_BUCKETS))
         branches.append((bucket < F.lit(threshold), F.lit(name)))
-    return df.withColumn(split_col, _case_chain(branches, F.lit(names[-1])))
+    return df.withColumn("split", _case_chain(branches, F.lit(names[-1])))
 
 
 def stratified_sample(
@@ -124,13 +123,12 @@ def stratified_sample(
     key_col: str,
     seed: str | int = 0,
     hash_mode: str | None = None,
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Keep a deterministic per-stratum fraction of rows.
 
     The engine-portable ``sampleBy``: row survives iff
     ``bucket(seed, key) < fraction[stratum] * 10000``. Strata not in
-    ``fractions`` (including NULL strata) get ``default_fraction``.
+    ``fractions`` (including NULL strata) are dropped.
     The fraction map compiles to a ``CASE`` chain (strata maps are
     human-written and tiny — no join, no broadcast, stays inside the
     scan's codegen stage), so this is a pure filter: zero shuffles,
@@ -148,7 +146,7 @@ def stratified_sample(
             )
             for stratum, frac in fractions.items()
         ],
-        F.lit(int(round(default_fraction * N_BUCKETS))),
+        F.lit(0),
     )
     return df.filter(bucket < threshold)
 
@@ -210,7 +208,6 @@ def pack_token_shards(
     order_col: str | list[str],
     token_col: str,
     budget: int,
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Greedy sequential packing of documents into token-budget shards.
 
@@ -256,7 +253,7 @@ def pack_token_shards(
     return (
         df.withColumn("_shard_raw", raw)
         .withColumn(
-            shard_col,
+            "shard_id",
             (F.dense_rank().over(
                 Window.partitionBy(*group_cols).orderBy("_shard_raw")
             ) - 1).cast("long"),
@@ -273,7 +270,6 @@ def weighted_domain_mix(
     epoch: int = 0,
     seed: str | int = 0,
     hash_mode: str | None = None,
-    copy_col: str = "copy_idx",
 ) -> DataFrame:
     """Re-weight domains by fractional repeat factors (epoch-aware).
 
@@ -288,7 +284,7 @@ def weighted_domain_mix(
 
     Expansion is ``explode(sequence(1, n_copies))`` — generated
     map-side inside the scan stage, zero shuffles, no Python. Output
-    gains ``copy_col`` (1-based) so downstream shuffles can re-salt
+    gains ``copy_idx`` (1-based) so downstream shuffles can re-salt
     repeats apart.
     """
     for domain, r in factors.items():
@@ -312,7 +308,7 @@ def weighted_domain_mix(
         df.withColumn("_n_copies", n_copies)
         .filter(F.col("_n_copies") > 0)
         .withColumn(
-            copy_col,
+            "copy_idx",
             F.explode(
                 F.sequence(
                     F.lit(1).cast("long"),
@@ -330,14 +326,13 @@ def shard_manifest(
     packed: DataFrame,
     group_cols: list[str],
     token_col: str,
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Per-shard loader manifest: ``(group_cols…, shard_id, n_docs,
     n_tokens)``. One map-side-combinable aggregation over the packed
     output; training loaders enumerate it instead of listing files,
     and :func:`pack_token_shards_incremental` resumes from it.
     """
-    return packed.groupBy(*group_cols, shard_col).agg(
+    return packed.groupBy(*group_cols, "shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col(token_col)).cast("long").alias("n_tokens"),
     )
@@ -346,7 +341,6 @@ def shard_manifest(
 def merge_manifests(
     manifests: list[DataFrame],
     group_cols: list[str],
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Combine per-batch :func:`shard_manifest` outputs into one.
 
@@ -361,7 +355,7 @@ def merge_manifests(
     out = manifests[0]
     for m in manifests[1:]:
         out = out.unionByName(m)
-    return out.groupBy(*group_cols, shard_col).agg(
+    return out.groupBy(*group_cols, "shard_id").agg(
         F.sum(F.col("n_docs")).cast("long").alias("n_docs"),
         F.sum(F.col("n_tokens")).cast("long").alias("n_tokens"),
     )
@@ -374,7 +368,6 @@ def pack_token_shards_incremental(
     order_col: str | list[str],
     token_col: str,
     budget: int,
-    shard_col: str = "shard_id",
 ) -> DataFrame:
     """Pack a NEW batch of documents without repacking existing shards.
 
@@ -417,15 +410,15 @@ def pack_token_shards_incremental(
     # manifests (see merge_manifests) carries duplicate (group, shard)
     # rows for a topped-up tail shard — sum them before picking the
     # tail, or max_by would read an arbitrary duplicate
-    manifest = manifest.groupBy(*group_cols, shard_col).agg(
+    manifest = manifest.groupBy(*group_cols, "shard_id").agg(
         F.sum(F.col("n_tokens")).cast("long").alias("n_tokens")
     )
     last = (
         manifest.groupBy(*group_cols)
         .agg(
-            F.max(F.col(shard_col)).alias("_last_shard"),
+            F.max(F.col("shard_id")).alias("_last_shard"),
             F.sum(F.col("n_tokens")).cast("long").alias("_total"),
-            F.max_by(F.col("n_tokens"), F.col(shard_col)).alias("_tail_tokens"),
+            F.max_by(F.col("n_tokens"), F.col("shard_id")).alias("_tail_tokens"),
         )
         .select(
             *group_cols,
@@ -473,7 +466,7 @@ def pack_token_shards_incremental(
     ) - 1
     return (
         joined.withColumn("_shard_raw", raw)
-        .withColumn(shard_col, (F.col("_base_shard") + dense).cast("long"))
+        .withColumn("shard_id", (F.col("_base_shard") + dense).cast("long"))
         .drop("_shard_raw", "_base_shard", "_tail_fill")
     )
 
@@ -529,8 +522,6 @@ def export_shuffle(
     n_shards: int,
     seed: str | int = 0,
     hash_mode: str | None = None,
-    shard_col: str = "shard",
-    pos_col: str = "pos",
     group_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Deterministic global shuffle + sharding for training export.
@@ -572,13 +563,13 @@ def export_shuffle(
     )
     h = hash_long(F.concat(F.lit(f"{seed}|"), key_str), mode)
     out = df.withColumn("_h", h).withColumn(
-        shard_col, (F.col("_h") % F.lit(n_shards)).cast("long")
+        "shard", (F.col("_h") % F.lit(n_shards)).cast("long")
     )
-    w = Window.partitionBy(*group_cols, shard_col).orderBy(
+    w = Window.partitionBy(*group_cols, "shard").orderBy(
         F.col("_h"), key_str
     )
     return out.withColumn(
-        pos_col, F.row_number().over(w).cast("long")
+        "pos", F.row_number().over(w).cast("long")
     ).drop("_h")
 
 

@@ -176,8 +176,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
@@ -189,8 +187,8 @@ def brute_force_topk(
     Cosine is rounded before ranking so ordering is stable across
     engines/summation orders; ties break on neighbor id.
     """
-    q = _query_vecs(queries, id_col, vec_col)
-    c = _neighbor_vecs(embeddings, id_col, vec_col)
+    q = _query_vecs(queries, "vec_id", "embedding")
+    c = _neighbor_vecs(embeddings, "vec_id", "embedding")
     # norms are computed once per vector (before the join); the pairwise
     # expression is a single codegen'd dot product + divide
     return _exact_top_k(F.broadcast(q).crossJoin(c), k)
@@ -537,8 +535,6 @@ def kmeans_centroids_local(
     embeddings: DataFrame,
     n_cells: int,
     iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -559,7 +555,7 @@ def kmeans_centroids_local(
     rows) ships back as a broadcastable DataFrame.
 
     Deterministic and engine-replayable: the sample is the
-    ``sample_n`` lowest-``id_col`` vectors, seeds are ids
+    ``sample_n`` lowest-``vec_id`` vectors, seeds are ids
     ``< n_cells``, cosines round HALF_UP at ``ROUND_DIGITS`` before
     the argmax (tie → smallest cell), means are fixed-point integer
     sums at ``KMEANS_SCALE`` — the identical arithmetic, in the
@@ -572,7 +568,7 @@ def kmeans_centroids_local(
     :func:`_cached_trainer` (train once, query many).
     """
     spark = embeddings.sparkSession
-    vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
+    vecs = _collect_sample(embeddings, "vec_id", "embedding", sample_n)
     cents: list[tuple[int, list[float]]] = [
         (int(i), v) for i, v in vecs if i < n_cells
     ]
@@ -609,7 +605,7 @@ def kmeans_centroids_local(
     return literal_rows_df(
         spark,
         [(cid, cv) for cid, cv in cents],
-        f"cell_id long, {vec_col} array<double>",
+        "cell_id long, embedding array<double>",
     )
 
 
@@ -625,15 +621,11 @@ def _sample_matrix(
     return np.asarray([v for _, v in vecs], dtype="float64")
 
 
-@_cached_trainer
 def kmeans_centroids_numpy(
     embeddings: DataFrame,
     n_cells: int,
     iters: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 1 << 18,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """BLAS coarse-quantizer trainer → ``(cell_id, vec)`` table.
 
@@ -657,7 +649,7 @@ def kmeans_centroids_numpy(
     import numpy as np
 
     spark = embeddings.sparkSession
-    X = _sample_matrix(embeddings, id_col, vec_col, sample_n)
+    X = _sample_matrix(embeddings, "vec_id", "embedding", sample_n)
     if X.shape[0] < n_cells:
         raise ValueError(
             f"kmeans_centroids_numpy: sample has {X.shape[0]} vectors "
@@ -683,21 +675,17 @@ def kmeans_centroids_numpy(
     return literal_rows_df(
         spark,
         [(cid, C[cid].tolist()) for cid in live_cells],
-        f"cell_id long, {vec_col} array<double>",
+        "cell_id long, embedding array<double>",
     )
 
 
-@_cached_trainer
 def pq_train_numpy(
     embeddings: DataFrame,
     n_subspaces: int,
     n_codes: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 1 << 18,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """BLAS PQ-codebook trainer → ``(subspace, code, subvec)`` table.
 
@@ -714,7 +702,7 @@ def pq_train_numpy(
 
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
-    X = _sample_matrix(embeddings, id_col, vec_col, sample_n)
+    X = _sample_matrix(embeddings, "vec_id", "embedding", sample_n)
     if X.shape[0] < n_codes:
         raise ValueError(
             f"pq_train_numpy: sample has {X.shape[0]} vectors for "
@@ -756,8 +744,6 @@ def ivf_topk(
     n_cells: int,
     nprobe: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate nearest neighbors.
@@ -768,7 +754,7 @@ def ivf_topk(
     the inverted lists are the storage partitioning (write the corpus
     bucketed by cell_id) so a probe touches nprobe/n_cells of the data.
 
-    ``centroids``: a ``(cell_id, vec_col)`` table — typically
+    ``centroids``: a ``(cell_id, embedding)`` table — typically
     :func:`kmeans_centroids_local`. Default: the ``n_cells`` lowest-id
     vectors (deterministic stand-in); the operator is agnostic to how
     centroids were produced.
@@ -778,10 +764,10 @@ def ivf_topk(
     has no cell assignment and no cosine — it cannot probe or be
     probed.
     """
-    embeddings = embeddings.filter(F.col(vec_col).isNotNull())
-    queries = queries.filter(F.col(vec_col).isNotNull())
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())
+    queries = queries.filter(F.col("embedding").isNotNull())
     if centroids is None:
-        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
+        centroids = _lowest_id_centroids(embeddings, n_cells, "vec_id", "embedding")
 
     # r10 optimization (guide §2.4 — remove shuffles outright): with a
     # bounded trained centroid set, both centroid-facing steps fold
@@ -810,7 +796,7 @@ def ivf_topk(
     if n_cells * dim <= IVF_LITERAL_MAX_EXPRS:
         cent_rows = sorted(
             (int(r[0]), [float(x) for x in r[1]])
-            for r in centroids.select("cell_id", vec_col).collect()
+            for r in centroids.select("cell_id", "embedding").collect()
         )  # bounded model-scale collect (n_cells rows), repo convention
     if cent_rows:
         from math import sqrt as _sqrt
@@ -846,7 +832,7 @@ def ivf_topk(
                 for cid, cv in cent_rows
             ]
 
-        q = _query_vecs(queries, id_col, vec_col)
+        q = _query_vecs(queries, "vec_id", "embedding")
         # ascending sort on (−cos, cell_id) ≡ (cos desc, cell_id asc);
         # negate as 0.0 − c, not −c: the window SortOrder this replaces
         # normalizes −0.0 = +0.0 before comparing, while array_sort's
@@ -875,9 +861,9 @@ def ivf_topk(
         )
 
         cand = embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            l2_norm(F.col(vec_col)).alias("_cn"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("_cv"),
+            l2_norm(F.col("embedding")).alias("_cn"),
         ).withColumn(
             "cell_id",
             F.expr(
@@ -887,11 +873,11 @@ def ivf_topk(
             ),
         )
     else:
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-        cent = _centroid_vecs(centroids, vec_col)
-        q = _query_vecs(queries, id_col, vec_col)
+        assigned = ivf_assign(embeddings, centroids, "vec_id", "embedding")
+        cent = _centroid_vecs(centroids, "embedding")
+        q = _query_vecs(queries, "vec_id", "embedding")
         probes = _probe_cells(q, cent, nprobe, "_qv", "_qn")
-        cand = _neighbor_vecs(assigned, id_col, vec_col, "cell_id")
+        cand = _neighbor_vecs(assigned, "vec_id", "embedding", "cell_id")
     return _exact_top_k(F.broadcast(probes).join(cand, "cell_id"), k)
 
 
@@ -1170,8 +1156,6 @@ def lsh_topk(
     k: int,
     num_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate corpus×corpus top-k: candidates = same LSH bucket,
     re-ranked by exact cosine. Bucket join replaces the cross join.
@@ -1183,10 +1167,10 @@ def lsh_topk(
     A crawl corpus WILL carry NULL embeddings; they cannot be
     neighbors or queries here by definition.
     """
-    embeddings = embeddings.filter(F.col(vec_col).isNotNull())
-    b = hyperplane_lsh_buckets(embeddings, num_planes, dim, id_col, vec_col)
-    a = _query_vecs(b, id_col, vec_col, "bucket")
-    c = _neighbor_vecs(b, id_col, vec_col, "bucket")
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())
+    b = hyperplane_lsh_buckets(embeddings, num_planes, dim, "vec_id", "embedding")
+    a = _query_vecs(b, "vec_id", "embedding", "bucket")
+    c = _neighbor_vecs(b, "vec_id", "embedding", "bucket")
     return _exact_top_k(a.join(c, "bucket"), k)
 
 
@@ -1263,18 +1247,14 @@ def embedding_neardup_pairs(
 
 @_cached_trainer
 def _semdedup_centroids(
-    embeddings: DataFrame,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    vecs_per_cell: int,
-    sample_n: int,
-    cache_key: str | None = None,
+    embeddings: DataFrame, cache_key: str | None = None
 ) -> DataFrame | None:
-    """:func:`semantic_dedup`'s default quantizer: cells ∝ corpus via
-    the BLAS trainer, or ``None`` when no vector is non-NULL. The
-    corpus count that sizes the cells sits inside the cached trainer,
-    so a warm ``cache_key`` runs no Spark job at all."""
+    """:func:`semantic_dedup`'s default quantizer: ~128 vectors per
+    cell via the BLAS trainer (3 Lloyd rounds on a 2^18 sample), or
+    ``None`` when no vector is non-NULL. The corpus count that sizes
+    the cells sits inside the cached trainer, so a warm ``cache_key``
+    runs no Spark job at all."""
+    vecs_per_cell, sample_n = 128, 1 << 18
     # size cells from NON-NULL vectors only (NULL-vector docs skip
     # assignment entirely and would otherwise inflate n_cells), and
     # cap n_cells so each cell trains on >= 4 sample vectors — the
@@ -1282,22 +1262,17 @@ def _semdedup_centroids(
     # ~sample_n*vecs_per_cell/4 corpus vectors and raise. For
     # genuinely huge corpora raise ``sample_n`` with the corpus (FAISS
     # guidance: ~100-1000 training points per cell).
-    n = embeddings.filter(F.col(vec_col).isNotNull()).count()
+    n = embeddings.filter(F.col("embedding").isNotNull()).count()
     if n == 0:
         return None
     # never ask for more cells than there are vectors — the floor of 16
     # previously made any corpus with < 16 non-null vectors raise
     # inside the trainer instead of deduping it
-    n_cells = max(16, int(n // max(1, vecs_per_cell)))
+    n_cells = max(16, n // vecs_per_cell)
     n_cells = min(n_cells, max(16, sample_n // 4))
     n_cells = min(n_cells, n)
     return kmeans_centroids_numpy(
-        embeddings,
-        n_cells=n_cells,
-        iters=iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_n=sample_n,
+        embeddings, n_cells=n_cells, iters=3, sample_n=sample_n
     )
 
 
@@ -1305,15 +1280,10 @@ def semantic_dedup(
     embeddings: DataFrame,
     centroids: DataFrame | None,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell_size: int | None = None,
     checkpoint: bool = True,
     assign: str = "arrow",
-    vecs_per_cell: int = 128,
-    train_iters: int = 3,
     train_cache_key: str | None = None,
-    train_sample_n: int = 1 << 18,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication") — cluster-scoped
@@ -1371,7 +1341,7 @@ def semantic_dedup(
     parity contract, pinned by ``tests/test_semdedup.py``).
 
     ``centroids=None`` (the PRODUCTION default) trains them here with
-    cells ∝ corpus — ``max(16, N/vecs_per_cell)`` cells via the BLAS
+    cells ∝ corpus — ``max(16, N/128)`` cells via the BLAS
     trainer (:func:`kmeans_centroids_numpy`) — the paper's recipe
     (110k cells for LAION-440M ≈ 4k vec/cell; 128 is this engine's
     measured 2–3×/decade knob, SCALE_sf*.json). A FIXED cell count
@@ -1383,15 +1353,7 @@ def semantic_dedup(
     sizing count and no training.
     """
     if centroids is None:
-        centroids = _semdedup_centroids(
-            embeddings,
-            iters=train_iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            vecs_per_cell=int(vecs_per_cell),
-            sample_n=int(train_sample_n),
-            cache_key=train_cache_key,
-        )
+        centroids = _semdedup_centroids(embeddings, cache_key=train_cache_key)
     if centroids is None:
         # nothing to train on: every doc is a NULL-vector pass-through
         # row. Empty centroid table + expression assignment (the BLAS
@@ -1406,7 +1368,7 @@ def semantic_dedup(
                 [
                     T.StructField("cell_id", T.LongType()),
                     T.StructField(
-                        vec_col, embeddings.schema[vec_col].dataType
+                        "embedding", embeddings.schema["embedding"].dataType
                     ),
                 ]
             ),
@@ -1414,25 +1376,25 @@ def semantic_dedup(
         assign = "expr"
     if assign == "arrow":
         assigned = ivf_assign_arrow(
-            embeddings, centroids, id_col, vec_col, keep_cos=True
+            embeddings, centroids, "vec_id", "embedding", keep_cos=True
         ).select(
-            id_col, "cell_id", "_ccos", F.col(vec_col).alias("_v")
+            "vec_id", "cell_id", "_ccos", F.col("embedding").alias("_v")
         )
     else:
         cent = centroids.select(
             F.col("cell_id").cast("long").alias("cell_id"),
-            F.col(vec_col).alias("_mv"),
+            F.col("embedding").alias("_mv"),
         ).withColumn("_mn", l2_norm(F.col("_mv")))
-        v = embeddings.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col), F.col(vec_col).alias("_v")
+        v = embeddings.filter(F.col("embedding").isNotNull()).select(
+            F.col("vec_id"), F.col("embedding").alias("_v")
         ).withColumn("_n", l2_norm(F.col("_v")))
         scored = v.join(F.broadcast(cent)).select(
-            id_col,
+            "vec_id",
             "_v",
             "cell_id",
             _rcos("_v", "_mv", "_n", "_mn").alias("_ccos"),
         )
-        assigned = scored.groupBy(id_col).agg(
+        assigned = scored.groupBy("vec_id").agg(
             F.max(
                 F.struct(
                     F.col("_ccos").alias("c"),
@@ -1441,7 +1403,7 @@ def semantic_dedup(
                 )
             ).alias("_m")
         ).select(
-            id_col,
+            "vec_id",
             (-F.col("_m.negid")).alias("cell_id"),
             F.col("_m.c").alias("_ccos"),
             F.col("_m.v").alias("_v"),
@@ -1450,8 +1412,8 @@ def semantic_dedup(
     # NULL-vector docs and docs in oversized (capped) cells are KEPT
     # (dropped=false) with NULL rank/cosine — a caller who filters
     # ~dropped never silently loses documents the pair stage skipped.
-    skipped = embeddings.filter(F.col(vec_col).isNull()).select(
-        F.col(id_col),
+    skipped = embeddings.filter(F.col("embedding").isNull()).select(
+        F.col("vec_id"),
         F.lit(None).cast("long").alias("cell_id"),
         F.lit(None).cast("int").alias("rnk"),
         F.lit(None).cast("double").alias("max_cos_better"),
@@ -1471,7 +1433,7 @@ def semantic_dedup(
             .select("cell_id")
         )
         over = assigned.join(F.broadcast(ok), "cell_id", "left_anti").select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("cell_id"),
             F.lit(None).cast("int").alias("rnk"),
             F.lit(None).cast("double").alias("max_cos_better"),
@@ -1480,7 +1442,7 @@ def semantic_dedup(
         skipped = skipped.unionByName(over)
         assigned = assigned.join(F.broadcast(ok), "cell_id", "left_semi")
     w = Window.partitionBy("cell_id").orderBy(
-        F.col("_ccos").asc(), F.col(id_col).asc()
+        F.col("_ccos").asc(), F.col("vec_id").asc()
     )
     ranked = assigned.withColumn("rnk", F.row_number().over(w)).withColumn(
         "_vn", l2_norm(F.col("_v"))
@@ -1501,13 +1463,13 @@ def semantic_dedup(
             (F.col("a.cell_id") == F.col("b.cell_id"))
             & (F.col("b.rnk") < F.col("a.rnk")),
         )
-        .groupBy(F.col(f"a.{id_col}").alias(id_col))
+        .groupBy(F.col("a.vec_id").alias("vec_id"))
         .agg(F.max(pair_cos).alias("max_cos_better"))
     )
     return (
-        ranked.join(best, id_col, "left")
+        ranked.join(best, "vec_id", "left")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("cell_id"),
             F.col("rnk").cast("int").alias("rnk"),
             F.col("max_cos_better"),
@@ -1540,8 +1502,6 @@ def pq_train_local(
     n_codes: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -1565,7 +1525,7 @@ def pq_train_local(
     """
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
-    vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
+    vecs = _collect_sample(embeddings, "vec_id", "embedding", sample_n)
     return _pq_lloyd_from_vecs(spark, vecs, n_subspaces, n_codes, iters, sub)
 
 
@@ -1688,8 +1648,6 @@ def pq_train_residual_local(
     n_codes: int,
     iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_n: int = 1 << 18,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -1708,11 +1666,11 @@ def pq_train_residual_local(
     """
     spark = embeddings.sparkSession
     sub = dim // n_subspaces
-    vecs = _collect_sample(embeddings, id_col, vec_col, sample_n)
+    vecs = _collect_sample(embeddings, "vec_id", "embedding", sample_n)
     norms = _with_norms(
         sorted(
             (int(r[0]), [float(x) for x in r[1]])
-            for r in centroids.select("cell_id", vec_col).collect()
+            for r in centroids.select("cell_id", "embedding").collect()
         )
     )
     residuals: list[tuple[int, list[float]]] = []
@@ -1845,10 +1803,8 @@ def pq_encode(
     codebooks: DataFrame,
     n_subspaces: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Quantize each vector → ``(id_col, subspace, code)``.
+    """Quantize each vector → ``(vec_id, subspace, code)``.
 
     Codebooks broadcast (``n_subspaces × n_codes`` rows), so scoring
     is a map-side pass; the argmin is a ``min(struct(d², code))``
@@ -1865,9 +1821,9 @@ def pq_encode(
     # arithmetic keeps the exact cross-engine IEEE order
     # ``(x·x − 2·x·c) + c·c``.
     ex = _explode_subspaces(
-        embeddings.filter(F.col(vec_col).isNotNull()),
-        [id_col],
-        vec_col,
+        embeddings.filter(F.col("embedding").isNotNull()),
+        ["vec_id"],
+        "embedding",
         "_sv",
         n_subspaces,
         sub,
@@ -1880,14 +1836,14 @@ def pq_encode(
         ROUND_DIGITS,
     )
     scored = ex.join(F.broadcast(cb), "subspace").select(
-        id_col, "subspace", F.col("code"), d2.alias("_d2")
+        "vec_id", "subspace", F.col("code"), d2.alias("_d2")
     )
-    best = scored.groupBy(id_col, "subspace").agg(
+    best = scored.groupBy("vec_id", "subspace").agg(
         F.min(
             F.struct(F.col("_d2").alias("d"), F.col("code").alias("c"))
         ).alias("_m")
     )
-    return best.select(id_col, "subspace", F.col("_m.c").alias("code"))
+    return best.select("vec_id", "subspace", F.col("_m.c").alias("code"))
 
 
 def pq_encode_arrow(
@@ -1995,9 +1951,6 @@ def pq_topk(
     dim: int = 64,
     candidates: int = 20,
     codebooks: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cache_key: str | None = None,
     codes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC (asymmetric-distance) top-k over PQ codes + exact re-rank.
@@ -2019,7 +1972,7 @@ def pq_topk(
     C×|Q| candidate rows; at billion-vector scale the ADC scan touches
     M bytes per vector instead of dim×4.
 
-    ``codes``: optional precomputed ``(id_col, subspace, code)`` frame
+    ``codes``: optional precomputed ``(vec_id, subspace, code)`` frame
     — the :func:`pq_encode_arrow` output for the SAME corpus and
     codebooks. sim_pq_battery encodes once and shares the frame with
     its ivfpq rung (guide §2.4: one materialized exchange replaces a
@@ -2035,9 +1988,6 @@ def pq_topk(
             n_codes=n_codes,
             iters=iters,
             dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            cache_key=cache_key,
         )
     if codes is None:
         # Arrow/BLAS encode (18x the expression path at sf10: 50.6 s ->
@@ -2045,20 +1995,22 @@ def pq_topk(
         # in tests/test_pq.py; the expression encoder remains the
         # zero-Python baseline.
         codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, id_col, vec_col
+            embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
         )
-    q = _query_vecs(queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col)
+    q = _query_vecs(
+        queries.filter(F.col("embedding").isNotNull()), "vec_id", "embedding"
+    )
     lut = _adc_lut(q, codebooks, n_subspaces, dim // n_subspaces)
-    adc = _adc_sums(codes.join(F.broadcast(lut), ["subspace", "code"]), id_col)
+    adc = _adc_sums(codes.join(F.broadcast(lut), ["subspace", "code"]), "vec_id")
     return _rerank_top_k(
-        adc.filter(F.col("query_id") != F.col(id_col)),
+        adc.filter(F.col("query_id") != F.col("vec_id")),
         _approx_cos(F.col("_sd"), F.col("_sn2")),
         candidates,
         embeddings,
         queries,
         k,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
     )
 
 
@@ -2075,8 +2027,6 @@ def ivf_pq_topk(
     candidates: int = 20,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codes: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -2109,7 +2059,7 @@ def ivf_pq_topk(
     Returns ``(query_id, neighbor_id, cosine, approx_cosine, rank)``.
     """
     if centroids is None:
-        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
+        centroids = _lowest_id_centroids(embeddings, n_cells, "vec_id", "embedding")
     if codebooks is None:
         codebooks = pq_train_local(
             embeddings,
@@ -2117,31 +2067,29 @@ def ivf_pq_topk(
             n_codes=n_codes,
             iters=iters,
             dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
         )
     if assigned is None:
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+        assigned = ivf_assign(embeddings, centroids, "vec_id", "embedding")
     if codes is None:
         codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, id_col, vec_col
+            embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
         )
-    cent = _centroid_vecs(centroids, vec_col)
-    q = _query_vecs(queries, id_col, vec_col)
+    cent = _centroid_vecs(centroids, "embedding")
+    q = _query_vecs(queries, "vec_id", "embedding")
     probes = _probe_cells(q, cent, nprobe)
     lut = _adc_lut(q, codebooks, n_subspaces, dim // n_subspaces)
     # ADC over probed cells only
     probed = (
-        assigned.select("cell_id", F.col(id_col))
+        assigned.select("cell_id", F.col("vec_id"))
         .join(F.broadcast(probes), "cell_id")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col)
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", "vec_id")
     )
     adc = _adc_sums(
-        probed.join(codes, id_col).join(
+        probed.join(codes, "vec_id").join(
             F.broadcast(lut), ["query_id", "subspace", "code"]
         ),
-        id_col,
+        "vec_id",
     )
     return _rerank_top_k(
         adc,
@@ -2150,8 +2098,8 @@ def ivf_pq_topk(
         embeddings,
         queries,
         k,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
     )
 
 
@@ -2168,8 +2116,6 @@ def ivf_pq_residual_topk(
     candidates: int = 20,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — the full FAISS ``IVFx,PQy``
@@ -2208,7 +2154,7 @@ def ivf_pq_residual_topk(
     Returns ``(query_id, neighbor_id, cosine, approx_cosine, rank)``.
     """
     if centroids is None:
-        centroids = _lowest_id_centroids(embeddings, n_cells, id_col, vec_col)
+        centroids = _lowest_id_centroids(embeddings, n_cells, "vec_id", "embedding")
     if codebooks is None:
         codebooks = pq_train_residual_local(
             embeddings,
@@ -2217,33 +2163,31 @@ def ivf_pq_residual_topk(
             n_codes=n_codes,
             iters=iters,
             dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
         )
     if assigned is None:
         assigned = ivf_assign(
-            embeddings.filter(F.col(id_col).isNotNull()),
+            embeddings.filter(F.col("vec_id").isNotNull()),
             centroids,
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
         )
-    cent = _centroid_vecs(centroids, vec_col)
+    cent = _centroid_vecs(centroids, "embedding")
 
     # residual vectors (elementwise IEEE subtraction) -> PQ codes
     res = assigned.join(
         F.broadcast(cent.select("cell_id", "_mv")), "cell_id"
     ).select(
-        id_col,
+        "vec_id",
         "cell_id",
         F.zip_with(
-            F.col(vec_col),
+            F.col("embedding"),
             F.col("_mv"),
             lambda x, y: x.cast("double") - y.cast("double"),
         ).alias("_res"),
     )
-    codes = pq_encode_arrow(res, codebooks, n_subspaces, dim, id_col, "_res")
+    codes = pq_encode_arrow(res, codebooks, n_subspaces, dim, "vec_id", "_res")
 
-    q = _query_vecs(queries, id_col, vec_col)
+    q = _query_vecs(queries, "vec_id", "embedding")
     probes = _probe_cells(q, cent, nprobe)
 
     # broadcast lookup tables (all fixed-point int64)
@@ -2267,17 +2211,17 @@ def ivf_pq_residual_topk(
 
     # ADC over probed cells only
     probed = (
-        assigned.select("cell_id", F.col(id_col))
+        assigned.select("cell_id", F.col("vec_id"))
         .join(F.broadcast(probes), "cell_id")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col, "cell_id")
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .select("query_id", "vec_id", "cell_id")
     )
     sums = (
-        probed.join(codes.select(id_col, "subspace", "code"), id_col)
+        probed.join(codes.select("vec_id", "subspace", "code"), "vec_id")
         .join(F.broadcast(qr), ["query_id", "subspace", "code"])
         .join(F.broadcast(cr), ["cell_id", "subspace", "code"])
         .join(F.broadcast(rr), ["subspace", "code"])
-        .groupBy("query_id", id_col, "cell_id")
+        .groupBy("query_id", "vec_id", "cell_id")
         .agg(
             F.sum("_qr").alias("_sqr"),
             F.sum("_cr").alias("_scr"),
@@ -2298,8 +2242,8 @@ def ivf_pq_residual_topk(
         embeddings,
         queries,
         k,
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
     )
 
 
@@ -2310,9 +2254,6 @@ def ivf_pq_write_index(
     path: str,
     dim: int,
     n_subspaces: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
     target_recall: float | None = 0.9,
     recall_kwargs: dict | None = None,
 ) -> None:
@@ -2339,12 +2280,12 @@ def ivf_pq_write_index(
     # Arrow/BLAS assignment (cell-identical by the ivf_assign_arrow
     # parity contract): the build scores the corpus against ALL
     # cells, where the expression form's O(N·C·dim) pass dominates.
-    assigned = ivf_assign_arrow(embeddings, centroids, id_col, vec_col)
+    assigned = ivf_assign_arrow(embeddings, centroids, "vec_id", "embedding")
     # Arrow/BLAS encode, as in pq_topk
     codes = pq_encode_arrow(
-        embeddings, codebooks, n_subspaces, dim, id_col, vec_col
+        embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
     )
-    packed = codes.groupBy(id_col).agg(
+    packed = codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(
                 F.collect_list(F.struct(F.col("subspace"), F.col("code")))
@@ -2356,23 +2297,14 @@ def ivf_pq_write_index(
     # ivf_write_index): one file per cell instead of tasks × cells
     # stragglers — at a billion vectors the difference between a
     # probe that opens nprobe files and one that opens thousands.
-    assigned.join(packed, id_col).repartition(F.col("cell_id")).write.partitionBy(
+    assigned.join(packed, "vec_id").repartition(F.col("cell_id")).write.partitionBy(
         "cell_id"
-    ).mode(mode).parquet(path)
+    ).mode("overwrite").parquet(path)
     if target_recall is not None:
-        spark = embeddings.sparkSession
-        # see ivf_write_index: on append, estimate over the FULL index
-        # (probes walk all of it), never the appended batch alone
-        src = (
-            spark.read.parquet(path).select(id_col, vec_col)
-            if mode == "append"
-            else embeddings
-        )
         ann_recall_estimate(
-            spark, path, src, centroids,
+            embeddings.sparkSession, path, embeddings, centroids,
             kind="ivf_pq", codebooks=codebooks, n_subspaces=n_subspaces,
-            dim=dim, target_recall=target_recall, id_col=id_col,
-            vec_col=vec_col, **(recall_kwargs or {}),
+            dim=dim, target_recall=target_recall, **(recall_kwargs or {}),
         )
 
 
@@ -2483,7 +2415,6 @@ def ann_recall_estimate(
     n_queries: int = 32,
     target_recall: float = 0.9,
     nprobe_ladder: tuple[int, ...] = ANN_NPROBE_LADDER,
-    candidates_base: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     write_marker: bool = True,
@@ -2510,7 +2441,7 @@ def ann_recall_estimate(
     assignment+encode scans the build already ran), then the ladder
     is walked with cheap partition-pruned probes until a rung's
     measured recall reaches the target. For IVF-PQ the re-rank pool
-    scales with the rung (``candidates = max(base, k * nprobe)``):
+    scales with the rung (``candidates = max(10 * k, k * nprobe)``):
     a fixed pool drowns in ADC quantization noise as more cells are
     probed — the measured cause of ANN_recall.json's recall DROPPING
     with nprobe on uniform data.
@@ -2537,7 +2468,7 @@ def ann_recall_estimate(
     ):
         raise ValueError("kind='ivf_pq' requires codebooks + n_subspaces + dim")
     n_cells = centroids.count()
-    base = candidates_base if candidates_base is not None else 10 * k
+    base = 10 * k
 
     q = (
         embeddings.filter(F.col(vec_col).isNotNull())

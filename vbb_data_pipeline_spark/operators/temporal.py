@@ -53,7 +53,6 @@ def expand_arrivals(
     stops: DataFrame,
     start: dt.date,
     end: dt.date,
-    broadcast_stops: bool = False,
 ) -> DataFrame:
     """G1: the scheduled-arrivals table function (GtfsDAO.java:83-123).
 
@@ -74,9 +73,7 @@ def expand_arrivals(
     cal = service_window_filter(calendar, start_int, end_int)
     joined = equi_join(cal, trips, ["run_id", "service_id"])
     joined = equi_join(joined, stop_times, ["run_id", "trip_id"])
-    joined = equi_join(
-        joined, stops, ["run_id", "stop_id"], broadcast_right=broadcast_stops
-    )
+    joined = equi_join(joined, stops, ["run_id", "stop_id"])
 
     # Window ∩ service-validity day range, enumerated as real dates.
     day_lo = F.greatest(F.lit(start), date_from_int("start_date"))

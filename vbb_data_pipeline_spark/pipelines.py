@@ -141,14 +141,11 @@ def e3_arrivals(
 def e4_corpus_prep(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_quality: float = 0.3,
     normalize: bool = False,
     redact: bool = False,
     line_dedup_min_chars: int | None = None,
     lm_band: tuple[float, float] | None = None,
-    lm_vocab_size: int = 50_000,
     max_dup_line_frac: float | None = None,
     max_cross_dup_span_frac: float | None = None,
     remove_cross_dup_spans: bool = False,
@@ -156,21 +153,18 @@ def e4_corpus_prep(
     span_winnow: int | None = 4,
     compression_bounds: tuple[float, float] | None = None,
     eval_df: DataFrame | None = None,
-    eval_text_col: str = "text",
     decontam_min_matches: int = 5,
     jaccard_threshold: float = 0.8,
     lsh_max_bucket_size: int | None = None,
     lsh_pair_mode: str = "all",
     embedding_col: str | None = None,
     embedding_dim: int = 64,
-    embedding_planes: int = 8,
     cosine_threshold: float = 0.9,
     split_weights: dict[str, float] | None = None,
     shard_budget: int = 50_000,
     pack_seq_len: int | None = None,
     pack_seq_shards: int = 8,
     mix_factors: dict[str, float] | None = None,
-    mix_split: str = "train",
     epoch: int = 0,
     seed: str | int = 0,
     hash_mode: str | None = None,
@@ -243,16 +237,16 @@ def e4_corpus_prep(
        near-dup pairs (hyperplane-LSH-blocked cosine strictly above
        ``cosine_threshold``) union with the text pairs before cluster
        assembly — paraphrases duplicate meaning without sharing
-       shingles, and only the embedding signal catches them. Size
-       ``embedding_planes`` to the corpus: the within-bucket join is
-       quadratic per bucket, so 2^planes must keep buckets small.
+       shingles, and only the embedding signal catches them. The
+       hyperplane LSH uses 8 planes (256 buckets); the within-bucket
+       join is quadratic per bucket.
        ``lsh_max_bucket_size`` is the degenerate-bucket backstop for
        BOTH candidate generators (MinHash bands and hyperplane
        buckets) — see ``operators/dedup.lsh_candidate_pairs``.
     5. **Split** — hash-deterministic train/val/test assignment, stable
        under corpus growth.
     6. **Mix** (optional) — epoch-aware weighted domain up/down-sampling
-       of the ``mix_split`` split ONLY (train by default): re-weighting
+       of the ``train`` split ONLY: re-weighting
        is a training-set operation — val/test must stay an unweighted
        sample of the corpus, so other splits pass through with
        ``copy_idx = 1``.
@@ -266,7 +260,8 @@ def e4_corpus_prep(
        ``(seq_shard, seq_pos, start_off, end_off, first_seq,
        last_seq)`` — everything a per-shard token writer needs.
 
-    Returns one row per packed document copy:
+    ``docs`` carries ``doc_id`` (unique, non-null), ``text``, ``lang``
+    and ``source``. Returns one row per packed document copy:
     ``(doc_id, lang, source, n_tokens, quality, split[, copy_idx],
     shard_id)``. Feed it to ``sources/layout.write_partitioned``
     partitioned by ``(split, shard_id)`` to land actual shard files.
@@ -304,22 +299,22 @@ def e4_corpus_prep(
         from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
 
         docs = docs.withColumn(
-            text_col, clean_text(normalize_unicode(text_col))
+            "text", clean_text(normalize_unicode("text"))
         )
     if redact:
         from vbb_data_pipeline_spark.functions.text import redact_pii
 
-        docs = docs.withColumn(text_col, redact_pii(text_col))
+        docs = docs.withColumn("text", redact_pii("text"))
     if line_dedup_min_chars is not None:
         from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
 
         deduped_text = line_dedup_corpus(
-            docs.select(id_col, text_col),
-            text_col,
-            id_col,
+            docs.select("doc_id", "text"),
+            "text",
+            "doc_id",
             min_chars=line_dedup_min_chars,
         )
-        docs = docs.drop(text_col).join(deduped_text, id_col)
+        docs = docs.drop("text").join(deduped_text, "doc_id")
     if remove_cross_dup_spans:
         from vbb_data_pipeline_spark.operators.dedup import span_removal
 
@@ -333,22 +328,22 @@ def e4_corpus_prep(
         # once, same rationale as the span-gate localCheckpoint below.
         docs = docs.localCheckpoint(storageLevel=CKPT_SER)
         rewritten = span_removal(
-            docs.select(id_col, text_col),
-            text_col,
-            id_col,
+            docs.select("doc_id", "text"),
+            "text",
+            "doc_id",
             window=span_window,
             hash_mode=mode,
-        ).select(id_col, text_col)
-        docs = docs.drop(text_col).join(rewritten, id_col)
-    profiled = docs.withColumn("n_tokens", bpe_token_count(text_col)).withColumn(
-        "quality", quality_score(text_col)
+        ).select("doc_id", "text")
+        docs = docs.drop("text").join(rewritten, "doc_id")
+    profiled = docs.withColumn("n_tokens", bpe_token_count("text")).withColumn(
+        "quality", quality_score("text")
     )
     kept = profiled.filter(F.col("quality") >= F.lit(min_quality))
     if max_dup_line_frac is not None:
         from vbb_data_pipeline_spark.functions.text import dup_line_fraction
 
         kept = kept.filter(
-            dup_line_fraction(text_col) <= F.lit(float(max_dup_line_frac))
+            dup_line_fraction("text") <= F.lit(float(max_dup_line_frac))
         )
     if max_cross_dup_span_frac is not None:
         from vbb_data_pipeline_spark.operators.dedup import (
@@ -363,9 +358,9 @@ def e4_corpus_prep(
         # band, MinHash) inherit the truncated lineage too.
         kept = kept.localCheckpoint(storageLevel=CKPT_SER)
         span_stats = substring_span_stats(
-            kept.select(id_col, text_col),
-            text_col,
-            id_col,
+            kept.select("doc_id", "text"),
+            "text",
+            "doc_id",
             window=span_window,
             winnow=span_winnow,
             hash_mode=mode,
@@ -376,22 +371,21 @@ def e4_corpus_prep(
         heavy_nonowner = span_stats.filter(
             (F.col("dup_frac") > F.lit(float(max_cross_dup_span_frac)))
             & (F.col("owned_dup_spans") < F.col("dup_spans"))
-        ).select(id_col)
-        kept = kept.join(heavy_nonowner, id_col, "left_anti")
+        ).select("doc_id")
+        kept = kept.join(heavy_nonowner, "doc_id", "left_anti")
     if compression_bounds is not None:
         from vbb_data_pipeline_spark.functions.udfs import compression_signals
 
         lo, hi = compression_bounds
-        ratio = compression_signals(F.col(text_col)).getField("ratio")
+        ratio = compression_signals(F.col("text")).getField("ratio")
         kept = kept.filter(ratio.between(F.lit(float(lo)), F.lit(float(hi))))
     if lm_band is not None:
         from vbb_data_pipeline_spark.operators.lm import lm_quality_scores
 
         lo_pct, hi_pct = lm_band
         scores = lm_quality_scores(
-            kept.select(id_col, text_col), text_col, id_col,
-            vocab_size=lm_vocab_size,
-        ).select(id_col, "lm_score")
+            kept.select("doc_id", "text"), "text", "doc_id"
+        ).select("doc_id", "lm_score")
         # two corpus-level scalars (the band edges) — model metadata,
         # like the unigram totals themselves
         edges = scores.agg(
@@ -400,28 +394,25 @@ def e4_corpus_prep(
         ).collect()[0]
         in_band = scores.filter(
             F.col("lm_score").between(F.lit(edges.lo), F.lit(edges.hi))
-        ).select(id_col)
-        kept = kept.join(in_band, id_col, "left_semi")
+        ).select("doc_id")
+        kept = kept.join(in_band, "doc_id", "left_semi")
     if eval_df is not None:
         from vbb_data_pipeline_spark.operators.contamination import decontaminate
 
         kept = decontaminate(
             kept,
             eval_df,
-            doc_id_col=id_col,
-            doc_text_col=text_col,
-            eval_text_col=eval_text_col,
             min_matches=decontam_min_matches,
             hash_mode=mode,
         )
-    exact = fingerprint_dedup(kept, text_col, id_col)
+    exact = fingerprint_dedup(kept, "text", "doc_id")
 
-    sigs = minhash_signatures(exact, text_col, id_col, hash_mode=mode)
+    sigs = minhash_signatures(exact, "text", "doc_id", hash_mode=mode)
     cands = lsh_candidate_pairs(
-        sigs, id_col, hash_mode=mode, max_bucket_size=lsh_max_bucket_size,
+        sigs, "doc_id", hash_mode=mode, max_bucket_size=lsh_max_bucket_size,
         pair_mode=lsh_pair_mode,
     )
-    near = jaccard_pairs(exact, cands, text_col, id_col, hash_mode=mode).filter(
+    near = jaccard_pairs(exact, cands, "text", "doc_id", hash_mode=mode).filter(
         F.col("jaccard") >= F.lit(jaccard_threshold)
     ).select("id_a", "id_b")
     if embedding_col is not None:
@@ -430,11 +421,10 @@ def e4_corpus_prep(
         )
 
         semantic = embedding_neardup_pairs(
-            exact.select(id_col, embedding_col),
+            exact.select("doc_id", embedding_col),
             dim=embedding_dim,
-            num_planes=embedding_planes,
             threshold=cosine_threshold,
-            id_col=id_col,
+            id_col="doc_id",
             vec_col=embedding_col,
             max_bucket_size=lsh_max_bucket_size,
         ).select("id_a", "id_b")
@@ -444,32 +434,33 @@ def e4_corpus_prep(
         exact = exact.drop(embedding_col)
     clusters = connected_components(near)
     losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    canonical = exact.join(losers, id_col, "left_anti")
+    canonical = exact.join(losers, "doc_id", "left_anti")
 
     split = deterministic_split(
-        canonical, id_col, weights, seed=seed, hash_mode=mode
+        canonical, "doc_id", weights, seed=seed, hash_mode=mode
     )
     if mix_factors:
-        if mix_split not in weights:
+        if "train" not in weights:
             raise ValueError(
-                f"mix_split {mix_split!r} is not a split name in {list(weights)}"
+                f"mix_factors re-weight the 'train' split, which is not a "
+                f"split name in {list(weights)}"
             )
         mixed = weighted_domain_mix(
-            split.filter(F.col("split") == F.lit(mix_split)),
+            split.filter(F.col("split") == F.lit("train")),
             "source",
             mix_factors,
-            id_col,
+            "doc_id",
             epoch=epoch,
             seed=seed,
             hash_mode=mode,
         )
-        rest = split.filter(F.col("split") != F.lit(mix_split)).withColumn(
+        rest = split.filter(F.col("split") != F.lit("train")).withColumn(
             "copy_idx", F.lit(1).cast("long")
         )
         split = mixed.unionByName(rest)
-    pack_order = [id_col, "copy_idx"] if mix_factors else [id_col]
+    pack_order = ["doc_id", "copy_idx"] if mix_factors else ["doc_id"]
     packed = pack_token_shards(
         split, ["split", "lang"], pack_order, "n_tokens", budget=shard_budget
     )
@@ -484,12 +475,12 @@ def e4_corpus_prep(
         if mix_factors:
             packed = packed.withColumn(
                 "_seq_key",
-                F.concat_ws("#", F.col(id_col).cast("string"),
+                F.concat_ws("#", F.col("doc_id").cast("string"),
                             F.col("copy_idx").cast("string")),
             )
             skey = "_seq_key"
         else:
-            skey = id_col
+            skey = "doc_id"
         packed = (
             pack_sequences(
                 packed, skey, "n_tokens", seq_len=pack_seq_len,
@@ -501,14 +492,13 @@ def e4_corpus_prep(
         )
         if mix_factors:
             packed = packed.drop("_seq_key")
-    return packed.drop(text_col)
+    return packed.drop("text")
 
 
 def e6_crawl_corpus(
     spark: SparkSession,
     warc_path: str,
     *,
-    url_dedup: bool = True,
     input_format: str = "warc",
     extractor: str = "density",
     max_per_host: int | None = None,
@@ -516,10 +506,7 @@ def e6_crawl_corpus(
     boilerplate_min_docs: int | None = None,
     langs: tuple[str, ...] | None = None,
     min_chars: int = 1,
-    seed: str | int = 0,
-    hash_mode: str | None = None,
     run_e4: bool = True,
-    lsh_pair_mode: str = "star",
     ranged_chunk_bytes: int | None = None,
     materialize_dir: str | None = None,
     resume: bool = False,
@@ -542,13 +529,13 @@ def e6_crawl_corpus(
        form (tracking params, fragments, default ports stripped);
        documents whose URL has no parseable host are dropped (crawl
        junk — non-http schemes, mangled URIs).
-    3. **URL dedup** (``url_dedup=True``) — keep the min-doc-id fetch
+    3. **URL dedup** — keep the min-doc-id fetch
        per canonical URL: re-crawls of the same page are the single
        biggest duplicate class in a multi-snapshot crawl, and URL
        identity removes them for the price of one window exchange
        before any text ever hashes.
     4. **Host cap** (``max_per_host``) — at most N documents per host,
-       seeded-hash-chosen (``functions/urls.host_cap``), so no single
+       hash-chosen (``functions/urls.host_cap``), so no single
        domain dominates the corpus. ``host_cap_mode="approx"`` swaps
        in the windowless :func:`~vbb_data_pipeline_spark.functions.
        urls.host_cap_approx` (expected-N binomial cap) — the right
@@ -564,7 +551,9 @@ def e6_crawl_corpus(
        domain key for E4's ``mix_factors`` re-weighting.
     7. **E4** — everything else (quality gates, exact/near/semantic
        dedup, decontamination, split/mix/pack) is a pass-through to
-       :func:`e4_corpus_prep` via ``**e4_kwargs``.
+       :func:`e4_corpus_prep` via ``**e4_kwargs``, with star-edge LSH
+       candidates (``lsh_pair_mode="star"``, see the note at the
+       call).
 
     The document set is ``localCheckpoint``-ed once after curation:
     the WARC parse + HTML extraction is the most expensive Arrow stage
@@ -575,7 +564,7 @@ def e6_crawl_corpus(
 
     Returns E4's packed rows, with ``url`` riding along for
     traceability. Deterministic end-to-end: ids, URL winners, host
-    caps and every E4 decision are seeded hashes, so two runs — or a
+    caps and every E4 decision are fixed-seed hashes, so two runs — or a
     resumed run — produce identical shards.
 
     **Resume** (``resume=True``, requires ``materialize_dir``): if the
@@ -631,18 +620,16 @@ def e6_crawl_corpus(
         # so a restart that spells it differently doesn't force a
         # spurious re-curation
         "extractor": extractor if input_format == "warc" else None,
-        "url_dedup": url_dedup,
         "max_per_host": max_per_host,
         "host_cap_mode": host_cap_mode,
         "boilerplate_min_docs": boilerplate_min_docs,
         "langs": list(langs) if langs is not None else None,
         "min_chars": min_chars,
-        "seed": str(seed),
-        # RESOLVED mode: hash_mode=None resolves through the
-        # environment (default_hash_mode), and a resume in a
-        # different environment must not silently reuse a frame whose
-        # per-host winners were elected under the other hash family
-        "hash_mode": hash_mode or default_hash_mode(),
+        # RESOLVED mode: the hash family comes from the environment
+        # (default_hash_mode), and a resume in a different environment
+        # must not silently reuse a frame whose per-host winners were
+        # elected under the other hash family
+        "hash_mode": default_hash_mode(),
     }
     marker = (
         materialize_dir.rstrip("/") + "/_e6_curation.json"
@@ -659,41 +646,11 @@ def e6_crawl_corpus(
             raise ValueError("resume=True requires materialize_dir")
         if hadoop_exists(spark, marker):
             recorded = _json.loads(hadoop_read_text(spark, marker))
-            # legacy-marker tolerance (mirrors crawl_e2e's optional
-            # 'sf'): markers written before hash_mode/extractor were
-            # RESOLVED into the record carry hash_mode null (meaning
-            # "the environment default AT WRITE TIME") and, on WET
-            # runs, whatever extractor string the caller passed even
-            # though the WET path never consults it. Normalizing null
-            # to the CURRENT default is only sound when the recorded
-            # run never consulted the hash at all — inside curation
-            # that is exclusively the host cap (url_dedup elects
-            # winners by min doc_id, hash-free) — because the writing
-            # environment's default is unknowable here, and resuming
-            # a frame whose per-host winners were elected under the
-            # other hash family is the exact silent reuse the
-            # resolved record exists to prevent.
-            if recorded.get("hash_mode") is None:
-                if recorded.get("max_per_host") is None:
-                    recorded["hash_mode"] = default_hash_mode()
-                else:
-                    raise ValueError(
-                        f"resume: the marker at {marker} predates "
-                        "hash_mode resolution (records null) and its "
-                        "run used max_per_host, so the hash family "
-                        "that elected the per-host winners is "
-                        "unknowable. Re-curate with resume=False (or "
-                        "a fresh materialize_dir); if the original "
-                        "environment's hash mode is known, rewrite "
-                        "the marker's hash_mode to it explicitly."
-                    )
-            if recorded.get("input_format") == "wet":
-                recorded["extractor"] = None
             if recorded != curation_conf:
                 diff = sorted(
                     k
-                    for k in curation_conf
-                    if recorded.get(k) != curation_conf[k]
+                    for k in curation_conf.keys() | recorded.keys()
+                    if recorded.get(k) != curation_conf.get(k)
                 )
                 raise ValueError(
                     f"resume: {materialize_dir} holds curated documents "
@@ -704,13 +661,7 @@ def e6_crawl_corpus(
             docs = spark.read.parquet(materialize_dir)
             if not run_e4:
                 return docs
-            return e4_corpus_prep(
-                docs,
-                seed=seed,
-                hash_mode=hash_mode,
-                lsh_pair_mode=lsh_pair_mode,
-                **e4_kwargs,
-            )
+            return e4_corpus_prep(docs, lsh_pair_mode="star", **e4_kwargs)
         # no marker -> nothing committed to resume from: fresh run
 
     # ranged_chunk_bytes: opt into the byte-range tier when archives
@@ -731,13 +682,12 @@ def e6_crawl_corpus(
     docs = docs.withColumn("url", normalize_url("url")).filter(
         url_host("url").isNotNull()
     )
-    if url_dedup:
-        w = Window.partitionBy("url").orderBy(F.col("doc_id").asc())
-        docs = (
-            docs.withColumn("_u_rn", F.row_number().over(w))
-            .filter(F.col("_u_rn") == 1)
-            .drop("_u_rn")
-        )
+    w = Window.partitionBy("url").orderBy(F.col("doc_id").asc())
+    docs = (
+        docs.withColumn("_u_rn", F.row_number().over(w))
+        .filter(F.col("_u_rn") == 1)
+        .drop("_u_rn")
+    )
     if max_per_host is not None:
         if host_cap_mode not in ("exact", "approx"):
             raise ValueError(
@@ -745,10 +695,7 @@ def e6_crawl_corpus(
                 f"got {host_cap_mode!r}"
             )
         capper = host_cap if host_cap_mode == "exact" else host_cap_approx
-        docs = capper(
-            docs, "url", max_per_host, seed=f"e6hostcap|{seed}",
-            hash_mode=hash_mode,
-        )
+        docs = capper(docs, "url", max_per_host, seed="e6hostcap|0")
     if boilerplate_min_docs is not None:
         docs = site_boilerplate_removal(
             docs, "url", "text", "doc_id", min_docs=boilerplate_min_docs
@@ -800,7 +747,7 @@ def e6_crawl_corpus(
         docs = docs.localCheckpoint(storageLevel=CKPT_SER)
     # crawl corpora carry mega-families of near-identical pages
     # (mirrors, templates, re-crawl variants): star-edge candidate
-    # generation (lsh_pair_mode="star", an explicit E6 parameter
+    # generation (lsh_pair_mode="star", a deliberate E6 choice
     # because it trades recall — a member below-threshold vs its
     # bucket hub detaches even if near another member) keeps the
     # near-dup tier linear per LSH bucket — measured: the 1 GB /
@@ -808,10 +755,4 @@ def e6_crawl_corpus(
     # mode (~2.5e9 candidate rows) and completes in "star"; the
     # measured recall delta on a mixed near-threshold corpus is in
     # PERF.md (star-mode recall table).
-    return e4_corpus_prep(
-        docs,
-        seed=seed,
-        hash_mode=hash_mode,
-        lsh_pair_mode=lsh_pair_mode,
-        **e4_kwargs,
-    )
+    return e4_corpus_prep(docs, lsh_pair_mode="star", **e4_kwargs)

@@ -28,8 +28,6 @@ def write_bucketed(
     path: str,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a bucketed (and bucket-sorted) table.
 
@@ -38,17 +36,19 @@ def write_bucketed(
     shuffle happens once here, not per query. Sorting within buckets
     additionally removes the sort of a sort-merge join.
     """
-    writer = df.write.bucketBy(n_buckets, *bucket_cols)
-    writer = writer.sortBy(*(sort_cols or bucket_cols))
-    writer.option("path", path).mode(mode).saveAsTable(table)
+    (
+        df.write.bucketBy(n_buckets, *bucket_cols)
+        .sortBy(*bucket_cols)
+        .option("path", path)
+        .mode("overwrite")
+        .saveAsTable(table)
+    )
 
 
 def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str],
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
 ) -> None:
     """Write ``df`` hive-partitioned by ``partition_cols``.
 
@@ -57,10 +57,7 @@ def write_partitioned(
     partition cardinality bounded (≤ ~10k directories) — high-
     cardinality keys belong in bucketing, not partitioning.
     """
-    writer = df.write.partitionBy(*partition_cols).mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)
+    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:
@@ -74,7 +71,6 @@ def write_range_sorted(
     path: str,
     sort_cols: Sequence[str],
     num_files: int,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet range-partitioned and sorted on ``sort_cols`` —
     the poor-man's clustering/Z-order for ONE sort dimension.
@@ -87,7 +83,7 @@ def write_range_sorted(
     (
         df.repartitionByRange(num_files, *sort_cols)
         .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -484,13 +480,16 @@ def hilbert_key_2d(x: Column, y: Column, bits: int = 12) -> Column:
     return F.aggregate(svals, init, step, lambda acc: acc["d"])
 
 
+#: Bits per column of the space-filling-curve keys below (4096 buckets
+#: per dimension).
+_CURVE_BITS = 12
+
+
 def write_hilbert_clustered(
     df: DataFrame,
     path: str,
     cols: Sequence[str],
     num_files: int,
-    bits: int = 12,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet Hilbert-clustered on exactly TWO integer-ish
     columns (the dominant layout case: id × event-time). Same
@@ -520,15 +519,15 @@ def write_hilbert_clustered(
                 "(no min/max); clustering on it is meaningless"
             )
     bx, by = (
-        int_bucket(F.col(c), stats[f"min_{c}"], stats[f"max_{c}"], bits)
+        int_bucket(F.col(c), stats[f"min_{c}"], stats[f"max_{c}"], _CURVE_BITS)
         for c in cols
     )
-    keyed = df.withColumn("_hkey", hilbert_key_2d(bx, by, bits))
+    keyed = df.withColumn("_hkey", hilbert_key_2d(bx, by, _CURVE_BITS))
     (
         keyed.repartitionByRange(num_files, "_hkey")
         .sortWithinPartitions("_hkey")
         .drop("_hkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -538,8 +537,6 @@ def write_zordered(
     path: str,
     cols: Sequence[str],
     num_files: int,
-    bits: int = 12,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet Z-order-clustered on 2+ integer-ish columns.
 
@@ -567,15 +564,15 @@ def write_zordered(
             )
     buckets = [
         int_bucket(
-            F.col(c), stats[f"min_{c}"], stats[f"max_{c}"], bits
+            F.col(c), stats[f"min_{c}"], stats[f"max_{c}"], _CURVE_BITS
         ).cast("long")
         for c in cols
     ]
-    keyed = df.withColumn("_zkey", zorder_key(buckets, bits))
+    keyed = df.withColumn("_zkey", zorder_key(buckets, _CURVE_BITS))
     (
         keyed.repartitionByRange(num_files, "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

@@ -512,7 +512,6 @@ def warc_member_chunks(
     spark: SparkSession,
     path: str,
     chunk_bytes: int = 64 << 20,
-    block_bytes: int = 4 << 20,
     files: list | None = None,
     reader=None,
 ) -> DataFrame:
@@ -525,7 +524,7 @@ def warc_member_chunks(
     tier's per-task memory bound holds for uncompressed archives too,
     instead of degrading to one whole-file chunk).
 
-    The walk STREAMS each file in ``block_bytes`` reads — peak memory
+    The walk STREAMS each file in 4 MB reads — peak memory
     is a few blocks, and the archive's bytes never enter the JVM
     (contrast ``binaryFile``, which holds the whole file per task).
     One pass per file is the index's cost; Common Crawl ships the
@@ -556,12 +555,10 @@ def warc_member_chunks(
                 try:
                     head = fh.read(2)
                     if head == b"\x1f\x8b":
-                        boundaries = _gzip_boundary_walk(
-                            fh, head, block_bytes
-                        )
+                        boundaries = _gzip_boundary_walk(fh, head)
                     else:
                         offs, end = _plain_warc_record_offsets(
-                            _Prepend(head, fh), block_bytes
+                            _Prepend(head, fh)
                         )
                         boundaries = offs + [end] if offs else [0]
                 finally:
@@ -612,14 +609,11 @@ class _Prepend:
         return self._fh.read(n)
 
 
-def _gzip_boundary_walk(fh, head: bytes, block_bytes: int) -> list:
+def _gzip_boundary_walk(fh, head: bytes) -> list:
     """Member-boundary offsets of a concatenated-member gzip stream
     read sequentially from ``fh`` (``head`` = bytes already sniffed).
-    Decompressed output is discarded — only offsets are kept.
-    ``block_bytes`` is unused for gzip (the stream walk feeds 64 KB
-    slices — see :func:`_gzip_member_stream`); kept for signature
-    parity with the plain-warc scanner."""
-    del block_bytes
+    Decompressed output is discarded — only offsets are kept (the
+    stream walk feeds 64 KB slices — see :func:`_gzip_member_stream`)."""
     boundaries = [0]
     src = _Prepend(head, fh)
     for end_off, _ in _gzip_member_stream(src, emit=False):
@@ -632,7 +626,6 @@ def read_warc_ranged(
     path: str,
     types: tuple[str, ...] = ("response",),
     chunk_bytes: int = 64 << 20,
-    chunks: DataFrame | None = None,
     files: list | None = None,
     reader=None,
 ) -> DataFrame:
@@ -656,19 +649,13 @@ def read_warc_ranged(
     (warc_file, target_uri) — the contract the corpus builder keys
     doc ids on.
 
-    Pass a precomputed ``chunks`` frame (e.g. persisted once per
-    snapshot, like Common Crawl's cdx) to skip the indexing pass —
-    persist it yourself if you reuse it. When this function builds
-    the index itself it localCheckpoints it, so the one-decompression-
-    pass walk runs ONCE (the count below would otherwise recompute
-    it through the repartition job)."""
-    if chunks is not None:
-        idx = chunks
-    else:
-        idx = warc_member_chunks(
-            spark, path, chunk_bytes=chunk_bytes, files=files,
-            reader=reader,
-        ).localCheckpoint(eager=True)
+    The chunk index (:func:`warc_member_chunks`) is localCheckpointed,
+    so the one-decompression-pass walk runs ONCE (the count below
+    would otherwise recompute it through the repartition job)."""
+    idx = warc_member_chunks(
+        spark, path, chunk_bytes=chunk_bytes, files=files,
+        reader=reader,
+    ).localCheckpoint(eager=True)
     types_set = set(types)
 
     def parse_ranges(batches):
@@ -756,7 +743,6 @@ def read_warc_stream(
     spark: SparkSession,
     path: str,
     types: tuple[str, ...] = ("response",),
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of :func:`read_warc`: watch a LANDING DIRECTORY
     for crawl archives and parse each new file exactly once — the
@@ -767,17 +753,11 @@ def read_warc_stream(
     so plan shape, framing posture and extractor knobs are identical;
     the file-stream source tracks processed files in the query
     checkpoint, which is what makes per-file exactly-once replay
-    possible downstream. ``max_files_per_trigger`` bounds a
-    micro-batch (one WARC file ≈ 1 GB in production — a trigger's
-    work should be a handful of files per executor, not the backlog).
+    possible downstream.
     """
     reader = spark.readStream.format("binaryFile").schema(
         BINARYFILE_SCHEMA
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
     return parse_warc_records(reader.load(path), types)
 
 

@@ -29,13 +29,12 @@ def geo_filter_arrivals(
     center_lat: float,
     center_lon: float,
     radius_m: float,
-    json_col: str = "value",
 ) -> DataFrame:
-    """T4: the geo stream filter. Input: one string column of arrival
-    JSON; output: the same wire format, only events within the radius.
+    """T4: the geo stream filter. Input: a ``value`` string column of
+    arrival JSON; output: the same wire format, only events within the radius.
     Malformed payloads and null coordinates are dropped
     (GeoPredicate.java:42-48 semantics)."""
-    arr = parsed_arrivals(df, json_col)
+    arr = parsed_arrivals(df, "value")
     kept = arr.filter(
         within_radius(
             F.col("latitude"), F.col("longitude"), center_lat, center_lon, radius_m
@@ -58,10 +57,10 @@ def arrivals_as_wire(df: DataFrame) -> DataFrame:
     )
 
 
-def replay_paced(df: DataFrame, emit, speedup: float = 1.0) -> int:
+def replay_paced(df: DataFrame, emit) -> int:
     """T2 demo harness (NOT part of the correctness surface, SURVEY.md
     §7 hard-part 5): iterate a *small, already time-ordered* result in
-    event-time pace — sleep max(0, Δevent − Δwall·speedup) between
+    event-time pace — sleep max(0, Δevent − Δwall) between
     emits, equal timestamps back-to-back (GtfsArrivalsProducer.java:
     158-182). Driver-side by design: pacing is inherently sequential.
     Returns the number of emitted rows."""
@@ -74,7 +73,7 @@ def replay_paced(df: DataFrame, emit, speedup: float = 1.0) -> int:
         if t0_wall is None:
             t0_wall, t0_event = time.monotonic(), ts
         else:
-            d_event = (ts - t0_event).total_seconds() / speedup
+            d_event = (ts - t0_event).total_seconds()
             d_wall = time.monotonic() - t0_wall
             if d_event > d_wall:
                 time.sleep(d_event - d_wall)

@@ -81,8 +81,6 @@ def corpus_ingest_batch(
     corpus_path: str,
     index_path: str,
     audit_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_quality: float = 0.3,
     num_hashes: int = 16,
     shingle_n: int = 3,
@@ -94,7 +92,8 @@ def corpus_ingest_batch(
     centroids=None,
     semantic_threshold: float = 0.9,
 ) -> None:
-    """Ingest ONE micro-batch (also usable for plain batch loads).
+    """Ingest ONE micro-batch of ``(doc_id, text, ...)`` documents (also
+    usable for plain batch loads).
 
     Verdicts appended to ``audit_path`` per input doc:
     ``low_quality`` / ``batch_dup`` / ``exact_dup`` / ``near_dup`` /
@@ -133,6 +132,7 @@ def corpus_ingest_batch(
         minhash_signatures,
     )
 
+    text_col, id_col = "text", "doc_id"
     spark = batch.sparkSession
     null_l = F.lit(None).cast("long")
     null_d = F.lit(None).cast("double")
@@ -407,10 +407,6 @@ def stream_crawl_corpus_ingest(
     audit_path: str,
     checkpoint: str,
     input_format: str = "warc",
-    extractor: str = "density",
-    url_normalize: bool = True,
-    max_files_per_trigger: int | None = None,
-    trigger_available_now: bool = True,
     **opts,
 ):
     """E6's streaming tier — continuous crawl-to-corpus ingestion:
@@ -419,9 +415,9 @@ def stream_crawl_corpus_ingest(
     (quality gate + incremental dedup against the at-rest index +
     idempotent appends).
 
-    ``input_format``: ``"warc"`` (HTTP responses, HTML extracted with
-    ``extractor``) or ``"wet"`` (pre-extracted ``conversion`` records,
-    zero Python in the bridge). URLs are normalized per-row
+    ``input_format``: ``"warc"`` (HTTP responses, HTML extracted by the
+    ``"density"`` extractor) or ``"wet"`` (pre-extracted ``conversion``
+    records, zero Python in the bridge). URLs are normalized per-row
     (``functions/urls.normalize_url``) before ingest so the corpus
     key-space matches the batch E6 pipeline; the CORPUS-level URL
     stages (host caps, site boilerplate removal) are deliberately NOT
@@ -443,41 +439,27 @@ def stream_crawl_corpus_ingest(
     )
 
     if input_format == "warc":
-        recs = read_warc_stream(
-            spark,
-            landing_path,
-            types=("response",),
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        docs = warc_to_documents(recs, extractor=extractor)
+        recs = read_warc_stream(spark, landing_path, types=("response",))
+        docs = warc_to_documents(recs, extractor="density")
     elif input_format == "wet":
-        recs = read_warc_stream(
-            spark,
-            landing_path,
-            types=("conversion",),
-            max_files_per_trigger=max_files_per_trigger,
-        )
+        recs = read_warc_stream(spark, landing_path, types=("conversion",))
         docs = wet_to_documents(recs)
     else:
         raise ValueError(f"input_format must be warc|wet: {input_format}")
-    if url_normalize:
-        from vbb_data_pipeline_spark.functions.urls import (
-            normalize_url,
-            url_host,
-        )
+    from vbb_data_pipeline_spark.functions.urls import normalize_url, url_host
 
-        docs = docs.withColumn("url", normalize_url(F.col("url")))
-        # per-row hygiene parity with batch E6: rows whose host does
-        # not parse (about:blank, mangled URIs) are dropped there
-        # BEFORE curation — without the same drop here the streaming
-        # corpus accumulates crawl junk a batch pass would exclude
-        docs = docs.filter(url_host(F.col("url")).isNotNull())
+    docs = docs.withColumn("url", normalize_url(F.col("url")))
+    # per-row hygiene parity with batch E6: rows whose host does
+    # not parse (about:blank, mangled URIs) are dropped there
+    # BEFORE curation — without the same drop here the streaming
+    # corpus accumulates crawl junk a batch pass would exclude
+    docs = docs.filter(url_host(F.col("url")).isNotNull())
     return write_stream_corpus_ingest(
         docs,
         corpus_path=corpus_path,
         index_path=index_path,
         audit_path=audit_path,
         checkpoint=checkpoint,
-        trigger_available_now=trigger_available_now,
+        trigger_available_now=True,
         **opts,
     )

@@ -27,14 +27,12 @@ def interval_join(
     right_ts: str,
     lower_seconds: int,
     upper_seconds: int,
-    watermark: str = "1 hour",
-    how: str = "inner",
 ) -> DataFrame:
     """Event-time interval join: attach right rows with
     ``right_ts ∈ [left_ts + lower, left_ts + upper]`` per key group.
 
     Works identically for two batch DataFrames (the oracle twin) and
-    two streaming DataFrames (watermarks applied, bounded state).
+    two streaming DataFrames (1-hour watermarks applied, bounded state).
     Column-name collisions: rename before joining except the ``on``
     keys and the two timestamp columns, which are disambiguated here.
     """
@@ -43,9 +41,9 @@ def interval_join(
     lt = F.col(f"__l.{left_ts}")
     rt = F.col(f"__r.{right_ts}")
     if left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
+        left = left.withWatermark(left_ts, "1 hour")
     if right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
+        right = right.withWatermark(right_ts, "1 hour")
     l_ = left.alias("__l")
     r_ = right.alias("__r")
     key_cond: Column | None = None
@@ -57,4 +55,4 @@ def interval_join(
         & (rt >= lt + F.expr(f"INTERVAL {lower_seconds} SECOND"))
         & (rt <= lt + F.expr(f"INTERVAL {upper_seconds} SECOND"))
     )
-    return l_.join(r_, cond, how)
+    return l_.join(r_, cond, "inner")

@@ -55,22 +55,21 @@ def write_stream_idempotent(
     path: str,
     key_cols: Sequence[str],
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """S8 streaming twin: file-sink append that ignores conflicts on
-    ``key_cols`` via foreachBatch. Returns the started query."""
+    ``key_cols`` via foreachBatch, run as an available-now trigger.
+    Returns the started query."""
 
     def _on_batch(batch: DataFrame, _batch_id: int) -> None:
         idempotent_batch_append(batch, path, key_cols)
 
-    writer = (
+    return (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_on_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def scd2_batch_fold(
@@ -79,8 +78,6 @@ def scd2_batch_fold(
     keys: Sequence[str],
     attr_cols: Sequence[str],
     as_of: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> None:
     """Fold one snapshot micro-batch into an SCD2 dimension stored at
     ``dim_path`` (streaming CDC — the incremental-reconciliation leg
@@ -112,13 +109,10 @@ def scd2_batch_fold(
         dim = None
     if dim is None:
         out = snapshot.withColumn(
-            valid_from, F.to_timestamp(F.lit(as_of))
-        ).withColumn(valid_to, F.to_timestamp(F.lit(HIGH_TS)))
+            "valid_from", F.to_timestamp(F.lit(as_of))
+        ).withColumn("valid_to", F.to_timestamp(F.lit(HIGH_TS)))
     else:
-        out = scd2_apply(
-            dim, snapshot, list(keys), list(attr_cols), as_of,
-            valid_from, valid_to,
-        )
+        out = scd2_apply(dim, snapshot, list(keys), list(attr_cols), as_of)
     tmp = sibling_path(dim_path, f".scd2_{uuid.uuid4().hex[:8]}")
     out.write.mode("overwrite").parquet(tmp)
     # Hadoop-FS rename swap (HDFS/object-store portable; shutil is
@@ -132,32 +126,22 @@ def write_stream_scd2(
     keys: Sequence[str],
     attr_cols: Sequence[str],
     checkpoint: str,
-    ts_of_batch=None,
-    trigger_available_now: bool = True,
 ):
     """Streaming SCD2 sink: each micro-batch is treated as a full
     snapshot observation and folded into the dimension at
-    ``dim_path`` via foreachBatch. ``ts_of_batch(batch_id) -> str``
-    supplies the ``as_of`` timestamp per batch (default: batch id
-    encoded as seconds since 2024-01-01 — deterministic for tests;
-    production passes wall-clock or an event-time watermark).
-    Returns the started query."""
-
-    def _default_ts(batch_id: int) -> str:
-        return f"2024-01-01 00:00:{batch_id % 60:02d}"
-
-    ts_fn = ts_of_batch or _default_ts
+    ``dim_path`` via foreachBatch, run as an available-now trigger.
+    Each batch's ``as_of`` timestamp is its batch id encoded as
+    seconds since 2024-01-01 (deterministic). Returns the started
+    query."""
 
     def _on_batch(batch: DataFrame, batch_id: int) -> None:
-        scd2_batch_fold(
-            batch, dim_path, keys, attr_cols, ts_fn(batch_id)
-        )
+        as_of = f"2024-01-01 00:00:{batch_id % 60:02d}"
+        scd2_batch_fold(batch, dim_path, keys, attr_cols, as_of)
 
-    writer = (
+    return (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_on_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

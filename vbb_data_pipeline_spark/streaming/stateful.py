@@ -76,10 +76,9 @@ class RunningCountsProcessor(StatefulProcessor):
         pass
 
 
-def running_counts_tws(
-    stream: DataFrame, key_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
-    """Running per-key counters on the transformWithStateInPandas API.
+def running_counts_tws(stream: DataFrame) -> DataFrame:
+    """Running per-``user_id`` counters of ``ts`` events on the
+    transformWithStateInPandas API.
 
     Raises a capability error up front when the environment cannot
     host the streaming Python runner (missing protobuf) — failing at
@@ -95,8 +94,8 @@ def running_counts_tws(
             "applyInPandasWithState path (stream_stateful_counts) here"
         )
     return (
-        stream.select(key_col, ts_col)
-        .groupBy(key_col)
+        stream.select("user_id", "ts")
+        .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=RunningCountsProcessor(),
             outputStructType="user_id long, n_events long, last_ts timestamp",

@@ -66,11 +66,8 @@ def session(
     gap: str,
     keys: Sequence[str],
     *aggs: Column,
-    watermark: str | None = None,
 ) -> DataFrame:
     """Session windows (gap-merged); window end = last event + gap."""
-    if watermark:
-        df = with_watermark(df, ts_col, watermark)
     out = df.groupBy(F.session_window(ts_col, gap).alias("w"), *keys).agg(*aggs)
     return _unpack(out, "session_start", "session_end")
 
