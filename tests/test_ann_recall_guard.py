@@ -126,7 +126,7 @@ def test_pq_auto_scales_candidates_or_falls_back(spark, clustered, tmp_path):
     ).localCheckpoint()
     ivf_pq_write_index(
         clustered, cents, cbs, path, dim=DIM, n_subspaces=4,
-        target_recall=0.9, recall_kwargs={"k": K, "n_queries": 16},
+        recall_kwargs={"k": K, "n_queries": 16},
     )
     rec = json.loads(open(f"{path}/{ANN_RECALL_MARKER}").read())
     assert rec["kind"] == "ivf_pq"

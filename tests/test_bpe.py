@@ -79,7 +79,7 @@ def test_train_matches_sequential_reference(spark, docs):
     texts = [r["text"] for r in docs.select("text").collect()]
     want_merges, want_vocab = _py_bpe_train(texts, n_merges=12)
 
-    got_merges, got_vocab = bpe_train(docs, "text", n_merges=12)
+    got_merges, got_vocab = bpe_train(docs, n_merges=12)
     assert got_merges == want_merges
 
     got = {
@@ -95,7 +95,7 @@ def test_word_counts_match_python(spark, docs):
     for t in texts:
         wc.update(_py_tokens(t))
     got = {
-        r["word"]: r["n"] for r in word_counts(docs, "text").collect()
+        r["word"]: r["n"] for r in word_counts(docs).collect()
     }
     assert got == dict(wc)
 
@@ -103,7 +103,7 @@ def test_word_counts_match_python(spark, docs):
 def test_encode_replays_merges(spark, docs):
     """Encoding a word with the learned merge table equals the final
     vocab's symbol sequence for that word."""
-    merges, vocab = bpe_train(docs, "text", n_merges=8)
+    merges, vocab = bpe_train(docs, n_merges=8)
     words = vocab.select("word")
     enc = bpe_encode_words(words, merges)
     got = {
@@ -119,8 +119,8 @@ def test_encode_replays_merges(spark, docs):
 
 def test_merge_determinism_across_partitionings(spark, docs):
     """The merge table must not depend on physical partitioning."""
-    m1, _ = bpe_train(docs.repartition(1), "text", n_merges=6)
-    m2, _ = bpe_train(docs.repartition(7, "doc_id"), "text", n_merges=6)
+    m1, _ = bpe_train(docs.repartition(1), n_merges=6)
+    m2, _ = bpe_train(docs.repartition(7, "doc_id"), n_merges=6)
     assert m1 == m2
 
 
@@ -130,7 +130,7 @@ def test_corpus_scanned_once(spark, docs):
     localCheckpoint, never the corpus. Guard: the pair-count plan over
     the trained vocab contains no parquet/LocalTableScan of documents
     columns (text) — it scans checkpointed (word, syms, n) rows."""
-    _, vocab = bpe_train(docs, "text", n_merges=3)
+    _, vocab = bpe_train(docs, n_merges=3)
     plan = pair_counts(vocab)._jdf.queryExecution().executedPlan().toString()
     assert "text" not in plan
     assert "Scan parquet" not in plan
@@ -142,7 +142,7 @@ def test_fully_merged_word_does_not_crash(spark):
     walks backwards into syms[-1] under ANSI — regression caught by
     the sf0.1 trainer run)."""
     df = spark.createDataFrame([("ab ab ab ab",)], "text string")
-    merges, vocab = bpe_train(df, "text", n_merges=10, min_pair_count=1)
+    merges, vocab = bpe_train(df, n_merges=10, min_pair_count=1)
     rows = {r["word"]: tuple(r["syms"]) for r in vocab.collect()}
     assert rows["ab"] == ("ab" + EOW,)  # fully collapsed, single symbol
     # python replay agrees end-to-end
@@ -157,7 +157,7 @@ def test_pair_counts_weighting(spark):
     df = spark.createDataFrame(
         [("ab ab xy",)], "text string"
     )
-    vocab = initial_vocab(word_counts(df, "text"))
+    vocab = initial_vocab(word_counts(df))
     pc = {
         (r["a"], r["b"]): r["pair_n"]
         for r in pair_counts(vocab).collect()
@@ -209,7 +209,7 @@ def _py_encode_corpus(texts_by_id, merges):
 def test_encode_corpus_matches_sequential_replay(spark, docs):
     from vbb_data_pipeline_spark.operators.bpe import bpe_encode_corpus
 
-    merges, _ = bpe_train(docs, "text", n_merges=10)
+    merges, _ = bpe_train(docs, n_merges=10)
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     want, want_ids = _py_encode_corpus(texts, merges)
 
@@ -227,7 +227,7 @@ def test_encode_corpus_matches_sequential_replay(spark, docs):
 def test_encode_corpus_partitioning_invariant(spark, docs):
     from vbb_data_pipeline_spark.operators.bpe import bpe_encode_corpus
 
-    merges, _ = bpe_train(docs, "text", n_merges=6)
+    merges, _ = bpe_train(docs, n_merges=6)
     a, _ = bpe_encode_corpus(docs.repartition(1), merges)
     b, _ = bpe_encode_corpus(docs.repartition(9, "doc_id"), merges)
     ga = {r["doc_id"]: list(r["token_ids"]) for r in a.collect()}
@@ -240,7 +240,7 @@ def test_encode_corpus_roundtrip_decodes(spark, docs):
     token stream (the EOW marker makes decoding unambiguous)."""
     from vbb_data_pipeline_spark.operators.bpe import bpe_encode_corpus
 
-    merges, _ = bpe_train(docs, "text", n_merges=10)
+    merges, _ = bpe_train(docs, n_merges=10)
     encoded, vocab = bpe_encode_corpus(docs, merges)
     inv = {r["token_id"]: r["subword"] for r in vocab.collect()}
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
@@ -270,7 +270,7 @@ def test_encode_feeds_pack_sequences(spark, docs):
     from vbb_data_pipeline_spark.operators.bpe import bpe_encode_corpus
     from vbb_data_pipeline_spark.operators.sampling import pack_sequences
 
-    merges, _ = bpe_train(docs, "text", n_merges=6)
+    merges, _ = bpe_train(docs, n_merges=6)
     encoded, _ = bpe_encode_corpus(docs, merges)
     plan = pack_sequences(
         encoded, "doc_id", "n_tokens", seq_len=128, n_shards=4, seed="t"

@@ -58,7 +58,7 @@ def test_report_matches_duckdb(docs, eval_df):
         got = {
             (r.doc_id, r.n_contaminated_grams)
             for r in contamination_report(
-                docs, eval_df, n=3, min_matches=min_matches, hash_mode="oracle"
+                docs, eval_df, min_matches=min_matches, hash_mode="oracle"
             ).collect()
         }
         exp = set(
@@ -73,10 +73,10 @@ def test_decontaminate_drops_exactly_the_flagged(docs, eval_df):
     flagged = {
         r.doc_id
         for r in contamination_report(
-            docs, eval_df, n=3, min_matches=5, hash_mode="oracle"
+            docs, eval_df, min_matches=5, hash_mode="oracle"
         ).collect()
     }
-    clean = decontaminate(docs, eval_df, n=3, min_matches=5, hash_mode="oracle")
+    clean = decontaminate(docs, eval_df, min_matches=5, hash_mode="oracle")
     kept = {r.doc_id for r in clean.select("doc_id").collect()}
     all_ids = {r.doc_id for r in docs.select("doc_id").collect()}
     assert kept == all_ids - flagged

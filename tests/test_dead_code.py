@@ -18,13 +18,14 @@ script that only they name produced an old artifact and nothing runs
 it now.
 
 A defaulted parameter of a public top-level package function must be
-passed by some call in those files: by keyword, by more positional
-arguments than its index, or by a ``*``/``**`` splat (a ``**name``
-whose ``name`` the file binds only to dict literals passes just their
-keys). A function referenced as a value (a callback, a dict entry, a
-``functools.partial`` argument) passes every parameter. A parameter
-no call passes has one value in use: it belongs in the body as a
-constant.
+passed by some call in those files: by keyword, by a positional
+argument at its index, or by a ``*``/``**`` splat (a ``**name`` whose
+``name`` the file binds only to dict literals passes just their keys).
+A keyword or positional argument that is a literal equal to the
+parameter's literal default does not pass it. A function referenced
+as a value (a callback, a dict entry, a ``functools.partial``
+argument) passes every parameter. A parameter no call passes has one
+value in use: it belongs in the body as a constant.
 """
 
 from __future__ import annotations
@@ -133,16 +134,26 @@ def test_no_unnamed_tools():
     )
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """``(name, positional index or None)`` of each parameter of ``fn``
-    that has a default."""
+def _defaulted(fn: ast.FunctionDef) -> dict[str, str | None]:
+    """``{name: literal default}`` of each parameter of ``fn`` that has
+    a default (``None`` when the default is no literal)."""
     a = fn.args
     pos = [*a.posonlyargs, *a.args]
-    first = len(pos) - len(a.defaults)
-    return [(p.arg, i) for i, p in enumerate(pos) if i >= first] + [
-        (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
-        if d is not None
-    ]
+    return {
+        p.arg: _literal(d) for p, d in [
+            *zip(pos[len(pos) - len(a.defaults):], a.defaults),
+            *zip(a.kwonlyargs, a.kw_defaults),
+        ] if d is not None
+    }
+
+
+def _literal(v: ast.expr) -> str | None:
+    """``repr`` of a literal expression's value (so ``1``, ``1.0`` and
+    ``True`` differ), or ``None`` for anything else."""
+    try:
+        return repr(ast.literal_eval(v))
+    except (ValueError, TypeError, SyntaxError, RecursionError):
+        return None
 
 
 def _literal_keys(v: ast.expr | None) -> set[str] | None:
@@ -198,7 +209,6 @@ def unpassed_parameters() -> tuple[int, list[str]]:
     top-level functions, and ``path:line function.param`` for each one
     that no call in the searched files passes."""
     passed: dict[str, set[str] | None] = {}  # None: every parameter
-    npos: Counter[str] = Counter()
 
     def mark(name: str, ks: set[str] | None) -> None:
         old = passed.get(name, set())
@@ -206,6 +216,19 @@ def unpassed_parameters() -> tuple[int, list[str]]:
 
     trees = {p: ast.parse(p.read_text(encoding="utf-8"))
              for p in _py_files(SEARCH)}
+    gated = [(path, node) for path in _py_files([PACKAGE])
+             for node in trees[path].body if _public_names(node, _FUNC)]
+    sigs: dict[str, list[tuple[list[str], dict[str, str | None]]]] = {}
+    for _, fn in gated:
+        sigs.setdefault(fn.name, []).append(
+            ([p.arg for p in [*fn.args.posonlyargs, *fn.args.args]],
+             _defaulted(fn)))
+
+    def passes(param: str, value: ast.expr,
+               defaults: dict[str, str | None]) -> bool:
+        lit = _literal(value)
+        return lit is None or lit != defaults.get(param)
+
     for tree in trees.values():
         dicts = _dict_keys(tree)
         funcs = set()
@@ -214,12 +237,16 @@ def unpassed_parameters() -> tuple[int, list[str]]:
                 continue
             name = _callee(node.func)
             funcs.add(node.func)
-            npos[name] = max(npos[name], len(node.args))
             kws: set[str] | None = set()
+            for pos, defaults in sigs.get(name, []):
+                kws |= {p for p, a in zip(pos, node.args)
+                        if passes(p, a, defaults)}
+                kws |= {k.arg for k in node.keywords
+                        if k.arg and passes(k.arg, k.value, defaults)}
             for k in node.keywords:
                 if k.arg:
-                    kws.add(k.arg)
-                elif isinstance(k.value, ast.Name) and dicts.get(k.value.id):
+                    continue
+                if isinstance(k.value, ast.Name) and dicts.get(k.value.id):
                     kws |= dicts[k.value.id]
                 else:
                     kws = None
@@ -232,17 +259,13 @@ def unpassed_parameters() -> tuple[int, list[str]]:
                     and isinstance(node.ctx, ast.Load)):
                 mark(_callee(node), None)
     total, flagged = 0, []
-    for path in _py_files([PACKAGE]):
-        for node in trees[path].body:
-            if not _public_names(node, _FUNC):
-                continue
-            ks = passed.get(node.name, set())
-            for param, idx in _defaulted(node):
-                total += 1
-                if ks is not None and param not in ks and not (
-                        idx is not None and npos[node.name] > idx):
-                    flagged.append(
-                        f"{path.relative_to(ROOT)}:{node.lineno} {node.name}.{param}")
+    for path, fn in gated:
+        ks = passed.get(fn.name, set())
+        for param in _defaulted(fn):
+            total += 1
+            if ks is not None and param not in ks:
+                flagged.append(
+                    f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}.{param}")
     return total, flagged
 
 

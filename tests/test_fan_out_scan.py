@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+from vbb_data_pipeline_spark import queries
 from vbb_data_pipeline_spark.queries import fan_out_scan, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -33,7 +34,7 @@ def test_fan_out_caps_at_default_parallelism(spark, monkeypatch):
     # a 1-byte target makes the bytes-derived width enormous; the cap
     # must clamp it to the live core count (scale-down safety: the
     # driver benches at lower core counts too)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_TARGET_BYTES", "1")
+    monkeypatch.setattr(queries, "FAN_OUT_TARGET_BYTES", 1)
     d = load_table(spark, SF_DIR, "documents")
     cores = spark.sparkContext.defaultParallelism
     assert fan_out_scan(d).rdd.getNumPartitions() == cores
@@ -89,3 +90,17 @@ def test_fan_out_noop_on_multi_split_scan(spark, tmp_path):
     d = spark.read.parquet(path)
     assert d.rdd.getNumPartitions() >= cores
     assert fan_out_scan(d) is d
+
+
+def test_stream_state_partitions_use_session_width(spark, monkeypatch):
+    """Stream state stores size by the fan_out_scan rule against the
+    session's own defaultParallelism, not an environment core count
+    (a session wider than SPARK_GRAFT_CPUS is not clamped to it)."""
+    from vbb_data_pipeline_spark.queries import streaming_q
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    monkeypatch.setattr(streaming_q, "_STATE_PARTITIONS_MEMO", {})
+    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    cores = spark.sparkContext.defaultParallelism
+    expected = min(cores, max(2, math.ceil(_stats_bytes(events) / (64 << 10))))
+    assert streaming_q._stream_state_partitions(spark, SF_DIR) == expected

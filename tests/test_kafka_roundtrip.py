@@ -52,8 +52,8 @@ def test_arrival_wire_roundtrip_through_broker(spark):
     assert received == sent
 
     # and the parser recovers the same rows the batch twin parses
-    parsed_rt = parsed_arrivals(got, "value")
-    parsed_twin = parsed_arrivals(wire, "value")
+    parsed_rt = parsed_arrivals(got)
+    parsed_twin = parsed_arrivals(wire)
     assert sorted(map(str, parsed_rt.collect())) == sorted(
         map(str, parsed_twin.collect())
     )

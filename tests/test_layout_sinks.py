@@ -415,7 +415,7 @@ def test_file_stats_and_compact_auto_plain(spark, tmp_path):
         )
     before = file_stats(spark, path)
     assert before["n_files"] >= 12
-    res = compact_auto(spark, path, target_file_mb=128)
+    res = compact_auto(spark, path)
     assert res["after"]["n_files"] == 1  # ~KBs of data, one file
     assert res["after"]["total_bytes"] > 0
     got = {r["id"] for r in spark.read.parquet(path).collect()}

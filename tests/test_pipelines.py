@@ -289,7 +289,6 @@ def test_e4_semantic_dedup_via_embeddings(spark):
         jaccard_threshold=0.99,  # texts are shingle-disjoint anyway
         embedding_col="embedding",
         embedding_dim=4,
-        cosine_threshold=0.9,
         shard_budget=10**6,
         hash_mode="oracle",
     )
@@ -310,8 +309,9 @@ def test_e4_semantic_dedup_via_embeddings(spark):
 
 
 def test_e4_hygiene_knobs(spark):
-    """redact=True rewrites PII before hashing; max_dup_line_frac
+    """PII redacted before E4 is what E4 hashes; max_dup_line_frac
     drops repetitive documents."""
+    from vbb_data_pipeline_spark.functions.text import redact_pii
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     rows = [
@@ -323,9 +323,8 @@ def test_e4_hygiene_knobs(spark):
         rows, "doc_id long, text string, lang string, source string"
     )
     out = e4_corpus_prep(
-        docs,
+        docs.withColumn("text", redact_pii("text")),
         min_quality=0.0,
-        redact=True,
         max_dup_line_frac=0.5,
         jaccard_threshold=1.01,
         shard_budget=10**6,
@@ -364,11 +363,12 @@ def test_e4_compression_band(spark):
 
 
 def test_e4_line_dedup_stage(spark):
-    """line_dedup_min_chars strips cross-corpus boilerplate before
-    profiling: token counts and dedup keys see the stripped text, and
-    a doc that was pure boilerplate survives with zero tokens (the
-    quality/min-token gates downstream decide its fate, not the dedup
-    stage)."""
+    """Corpus line dedup before E4 strips cross-corpus boilerplate
+    before profiling: token counts and dedup keys see the stripped
+    text, and a doc that was pure boilerplate survives with zero
+    tokens (the quality/min-token gates downstream decide its fate,
+    not the dedup stage)."""
+    from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     header = "SPDX license header line that repeats everywhere"
@@ -380,10 +380,12 @@ def test_e4_line_dedup_stage(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     )
+    deduped = line_dedup_corpus(
+        docs.select("doc_id", "text"), "text", "doc_id", min_chars=5
+    )
     out = e4_corpus_prep(
-        docs,
+        docs.drop("text").join(deduped, "doc_id"),
         min_quality=0.01,
-        line_dedup_min_chars=5,
         jaccard_threshold=1.01,
         shard_budget=10**6,
         hash_mode="oracle",
@@ -429,8 +431,10 @@ def test_e4_lm_band(spark):
 
 
 def test_e4_normalize_stage(spark):
-    """normalize=True makes NFKC-divergent duplicates collapse in the
-    fingerprint dedup stage."""
+    """Normalizing text before E4 makes NFKC-divergent duplicates
+    collapse in the fingerprint dedup stage."""
+    from vbb_data_pipeline_spark.functions.text import clean_text
+    from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     rows = [
@@ -451,7 +455,8 @@ def test_e4_normalize_stage(spark):
     kept_norm = {
         r.doc_id
         for r in e4_corpus_prep(
-            docs, min_quality=0.0, normalize=True, jaccard_threshold=1.01,
+            docs.withColumn("text", clean_text(normalize_unicode("text"))),
+            min_quality=0.0, jaccard_threshold=1.01,
             shard_budget=10**6, hash_mode="oracle",
         ).select("doc_id").collect()
     }
@@ -461,10 +466,14 @@ def test_e4_normalize_stage(spark):
 
 def test_e4_all_stages_compose(spark):
     """Kitchen-sink run: every optional stage enabled at once on the
-    sf0.001 corpus — stages must compose without column/plan conflicts
-    and stay deterministic."""
+    sf0.001 corpus, after normalization, PII redaction and corpus line
+    dedup — stages must compose without column/plan conflicts and
+    stay deterministic."""
     from pyspark.sql import functions as F
 
+    from vbb_data_pipeline_spark.functions.text import clean_text, redact_pii
+    from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
+    from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
     from vbb_data_pipeline_spark.queries import load_table
 
@@ -478,6 +487,12 @@ def test_e4_all_stages_compose(spark):
     )
     docs = docs.join(emb, "doc_id", "left")
     eval_df = docs.filter("doc_id < 3").select("text")
+    docs = docs.withColumn("text", clean_text(normalize_unicode("text")))
+    docs = docs.withColumn("text", redact_pii("text"))
+    deduped = line_dedup_corpus(
+        docs.select("doc_id", "text"), "text", "doc_id", min_chars=8
+    )
+    docs = docs.drop("text").join(deduped, "doc_id")
 
     # lm_band and compression_bounds are omitted: both have dedicated
     # composition tests (test_e4_lm_band / test_e4_compression_band)
@@ -485,9 +500,6 @@ def test_e4_all_stages_compose(spark):
     # stage-heavy run
     kwargs = dict(
         min_quality=0.2,
-        normalize=True,
-        redact=True,
-        line_dedup_min_chars=8,
         max_dup_line_frac=0.9,
         eval_df=eval_df,
         decontam_min_matches=5,
@@ -543,11 +555,12 @@ def test_e4_cross_dup_span_gate(spark):
 
 
 def test_e4_remove_cross_dup_spans(spark):
-    """remove_cross_dup_spans=True excises duplicated spans instead of
+    """span_removal before E4 excises duplicated spans instead of
     dropping documents: the min-id owner keeps its copy, quoters keep
     their ORIGINAL material with only the quoted run removed (E4's
     output carries profiled token counts, so assert through those —
-    profiling runs AFTER the removal stage by design)."""
+    E4 profiles the text it is given, after the removal)."""
+    from vbb_data_pipeline_spark.operators.dedup import CKPT_SER, span_removal
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     run = " ".join(f"shared{i}" for i in range(12))
@@ -562,11 +575,14 @@ def test_e4_remove_cross_dup_spans(spark):
     )
 
     def run_e4():
+        held = docs.localCheckpoint(storageLevel=CKPT_SER)
+        rewritten = span_removal(
+            held.select("doc_id", "text"), "text", "doc_id", window=6,
+            hash_mode="oracle",
+        ).select("doc_id", "text")
         return e4_corpus_prep(
-            docs,
+            held.drop("text").join(rewritten, "doc_id"),
             min_quality=0.0,
-            remove_cross_dup_spans=True,
-            span_window=6,
             jaccard_threshold=1.01,
             shard_budget=10**6,
             hash_mode="oracle",
@@ -590,19 +606,25 @@ def test_e4_remove_cross_dup_spans(spark):
 
 
 def test_e4_sequence_packing_plan(spark):
-    """pack_seq_len: output rows carry a per-split concat-and-chunk
-    plan; streams tile exactly and never cross a split boundary."""
+    """pack_sequences per split on E4's output: rows carry a
+    concat-and-chunk plan; streams tile exactly and never cross a
+    split boundary."""
+    from vbb_data_pipeline_spark.operators.sampling import pack_sequences
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
     from vbb_data_pipeline_spark.queries import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = e4_corpus_prep(
+    e4 = e4_corpus_prep(
         docs,
         min_quality=0.0,
         split_weights={"train": 8, "val": 1, "test": 1},
-        pack_seq_len=512,
-        pack_seq_shards=4,
-    ).collect()
+    )
+    out = (
+        pack_sequences(e4, "doc_id", "n_tokens", 512, 4, group_cols=["split"])
+        .withColumnRenamed("shard", "seq_shard")
+        .withColumnRenamed("pos", "seq_pos")
+        .collect()
+    )
     for col in ("seq_shard", "seq_pos", "start_off", "end_off",
                 "first_seq", "last_seq"):
         assert col in out[0].asDict()

@@ -311,3 +311,43 @@ def test_packing_plan_single_exchange_no_python(spark, reg):
     plan = formatted(df)
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan
+
+
+def test_capture_plans_normalizes_session_counters():
+    """tools/capture_plans.py writes plans with the session counters
+    (expression ids, exchange plan ids, checkpoint RDD ids) replaced,
+    and leaves every other character alone (Spark-free)."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "tools" / "capture_plans.py"
+    spec = importlib.util.spec_from_file_location("capture_plans", path)
+    capture_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(capture_plans)
+    normalize_plan = capture_plans.normalize_plan
+
+    a = (
+        "(3) Exchange\nArguments: hashpartitioning(doc_id#12L, 8), "
+        "ENSURE_REQUIREMENTS, [plan_id=41]\n"
+        "(1) Scan ExistingRDD\nOutput [2]: [doc_id#12L, text#13]\n"
+        "Arguments: [doc_id#12L, text#13], MapPartitionsRDD[107] at "
+        "localCheckpoint\n"
+    )
+    b = (
+        "(3) Exchange\nArguments: hashpartitioning(doc_id#903L, 8), "
+        "ENSURE_REQUIREMENTS, [plan_id=7]\n"
+        "(1) Scan ExistingRDD\nOutput [2]: [doc_id#903L, text#904]\n"
+        "Arguments: [doc_id#903L, text#904], MapPartitionsRDD[5] at "
+        "localCheckpoint\n"
+    )
+    assert normalize_plan(a) == normalize_plan(b)
+    assert normalize_plan(a) == (
+        "(3) Exchange\nArguments: hashpartitioning(doc_id#NL, 8), "
+        "ENSURE_REQUIREMENTS, [plan_id=N]\n"
+        "(1) Scan ExistingRDD\nOutput [2]: [doc_id#NL, text#N]\n"
+        "Arguments: [doc_id#NL, text#N], MapPartitionsRDD[N] at "
+        "localCheckpoint\n"
+    )
+    # operator numbers, counts and literals are plan content, not counters
+    other = "(4) Project\nOutput [2]: [x#1, 8]\nconcat_ws(#, a)\n"
+    assert normalize_plan(other) == "(4) Project\nOutput [2]: [x#N, 8]\nconcat_ws(#, a)\n"

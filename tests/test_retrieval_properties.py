@@ -65,7 +65,7 @@ def test_bm25_matches_replay_on_any_corpus(spark, texts, terms):
 def test_bpe_train_matches_replay_on_any_corpus(spark, texts):
     docs = _docs(spark, texts)
     want_merges, want_vocab = _py_bpe_train(texts, n_merges=6)
-    got_merges, got_vocab = bpe_train(docs, "text", n_merges=6)
+    got_merges, got_vocab = bpe_train(docs, n_merges=6)
     assert got_merges == want_merges
     got = {
         r["word"]: tuple(r["syms"])

@@ -823,4 +823,4 @@ def test_chunk_rejects_stride_larger_than_chunk(spark):
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="stride"):
-        chunk_documents(df, "text", "doc_id", chunk_tokens=2, stride=3)
+        chunk_documents(df, chunk_tokens=2, stride=3)

@@ -236,7 +236,7 @@ def test_boilerplate_null_host_and_null_text(spark):
     out = {
         r["doc_id"]: r["text"]
         for r in site_boilerplate_removal(
-            df, "url", "text", "doc_id", min_docs=3
+            df, "url", min_docs=3
         ).collect()
     }
     assert out[4] is None

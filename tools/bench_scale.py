@@ -91,19 +91,24 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_e4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 corpus prep, every major optional stage on: hygiene
-    (normalize + corpus line dedup + repetition cap + compression
-    band), CCNet LM band, quality gate, decontamination, fingerprint +
-    MinHash near-dup, split, pack."""
+    """E4 corpus prep with every major optional stage on: hygiene
+    (NFKC normalization and corpus line dedup before E4, then the
+    repetition cap and compression band), CCNet LM band, quality gate,
+    decontamination, fingerprint + MinHash near-dup, split, pack."""
+    from vbb_data_pipeline_spark.functions.text import clean_text
+    from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
+    from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     docs = load_table(spark, sf_dir, "documents")
     eval_df = docs.orderBy("doc_id").limit(100).select("text")
+    docs = docs.withColumn("text", clean_text(normalize_unicode("text")))
+    deduped = line_dedup_corpus(
+        docs.select("doc_id", "text"), "text", "doc_id", min_chars=6
+    )
     return e4_corpus_prep(
-        docs,
+        docs.drop("text").join(deduped, "doc_id"),
         min_quality=0.2,
-        normalize=True,
-        line_dedup_min_chars=6,
         lm_band=(0.05, 1.0),
         max_dup_line_frac=0.9,
         compression_bounds=(1.05, 10.0),
@@ -113,17 +118,23 @@ def q_e4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_e4_spangate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 with the round-4 cross-document span gate enabled on top of
-    every other optional stage (the full hygiene composition)."""
+    """``q_e4`` with the round-4 cross-document span gate enabled on
+    top of every other optional stage (the full hygiene
+    composition)."""
+    from vbb_data_pipeline_spark.functions.text import clean_text
+    from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
+    from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
     docs = load_table(spark, sf_dir, "documents")
     eval_df = docs.orderBy("doc_id").limit(100).select("text")
+    docs = docs.withColumn("text", clean_text(normalize_unicode("text")))
+    deduped = line_dedup_corpus(
+        docs.select("doc_id", "text"), "text", "doc_id", min_chars=6
+    )
     return e4_corpus_prep(
-        docs,
+        docs.drop("text").join(deduped, "doc_id"),
         min_quality=0.2,
-        normalize=True,
-        line_dedup_min_chars=6,
         lm_band=(0.05, 1.0),
         max_dup_line_frac=0.9,
         max_cross_dup_span_frac=0.8,

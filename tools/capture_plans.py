@@ -9,6 +9,10 @@ Names may be registry entries or legacy leg names. With no names,
 captures the headline entries of perfbench/spec.json. Plans are built
 at $SPARK_GRAFT_SF_DIR (default sf0.1) and under
 SPARK_GRAFT_FAST_HASH=1 unless the variable is already set.
+
+Each file is written through :func:`normalize_plan`, so two captures
+of one commit are byte-identical and a diff between two commits shows
+only plan changes.
 """
 
 from __future__ import annotations
@@ -16,11 +20,24 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
+
+#: session-wide counters a formatted plan prints: expression ids
+#: (``doc_id#12L``), exchange ids (``plan_id=7``) and checkpointed-RDD
+#: ids (``RDD[42]``). Jobs run while a plan is built (a connected-
+#: components loop, a collected scalar) advance them for every later
+#: plan in the session.
+_COUNTERS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with every session-wide counter replaced by ``N``."""
+    return _COUNTERS.sub(r"\1N", text)
 
 
 def main() -> None:
@@ -52,7 +69,7 @@ def main() -> None:
             continue
         df = registry[name](spark, args.sf)
         path = out_dir / f"{name}_{args.suffix}.txt"
-        path.write_text(formatted(df))
+        path.write_text(normalize_plan(formatted(df)))
         print(f"wrote {path}")
 
 

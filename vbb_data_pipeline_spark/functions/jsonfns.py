@@ -38,10 +38,10 @@ def parse_arrival_json(col: Column | str) -> Column:
     return F.from_json(c, ARRIVAL_JSON)
 
 
-def parsed_arrivals(df: DataFrame, json_col: str = "value") -> DataFrame:
+def parsed_arrivals(df: DataFrame) -> DataFrame:
     """JSON-parse-or-drop (GeoPredicate.java:42-48): keep only rows
-    whose payload parses and carries coordinates."""
-    parsed = df.withColumn("_arr", parse_arrival_json(json_col))
+    whose ``value`` payload parses and carries coordinates."""
+    parsed = df.withColumn("_arr", parse_arrival_json("value"))
     return (
         parsed.filter(F.col("_arr").isNotNull())
         .filter(F.col("_arr.latitude").isNotNull() & F.col("_arr.longitude").isNotNull())

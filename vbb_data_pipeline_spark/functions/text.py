@@ -102,9 +102,9 @@ def _stopword_re(lang: str) -> str:
     return "(?<![a-z0-9])(" + "|".join(STOPWORDS[lang]) + ")(?![a-z0-9])"
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    return stopword_hits(col, lang) / F.greatest(token_count(col), F.lit(1))
+def stopword_ratio(col: Column | str) -> Column:
+    """Fraction of tokens that are English stopwords."""
+    return stopword_hits(col, "en") / F.greatest(token_count(col), F.lit(1))
 
 
 def stopword_hits(col: Column | str, lang: str) -> Column:
@@ -125,7 +125,7 @@ def quality_score(col: Column | str) -> Column:
     n_tok = token_count(c).cast("double")
     len_score = F.least(n_tok / F.lit(64.0), F.lit(1.0))
     noise = punct_ratio(c)
-    sw = stopword_ratio(c, "en")
+    sw = stopword_ratio(c)
     return F.round(
         F.lit(0.5) * len_score
         + F.lit(0.3) * (F.lit(1.0) - F.least(noise * 5, F.lit(1.0)))

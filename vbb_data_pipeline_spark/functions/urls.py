@@ -85,7 +85,6 @@ def host_cap(
     url_col: str,
     max_per_host: int,
     seed: str = "hostcap",
-    id_col: str = "doc_id",
     hash_mode: str | None = None,
 ) -> DataFrame:
     """Keep at most ``max_per_host`` documents per host, chosen by a
@@ -94,7 +93,7 @@ def host_cap(
     subset reproducible across engines and reruns).
 
     One exchange keyed on the host; the window ranks
-    ``(hash(seed|id), id)`` within each host partition. Per-host caps
+    ``(hash(seed|doc_id), doc_id)`` within each host partition. Per-host caps
     are the standard guard against a single boilerplate-heavy domain
     dominating the corpus (C4 and successors all apply one).
     """
@@ -108,10 +107,10 @@ def host_cap(
     if hash_mode is None:
         hash_mode = default_hash_mode()
     h = hash_long(
-        F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")), hash_mode
+        F.concat(F.lit(f"{seed}|"), F.col("doc_id").cast("string")), hash_mode
     )
     w = Window.partitionBy(url_host(url_col)).orderBy(
-        h.asc(), F.col(id_col).asc()
+        h.asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("_hc_rn", F.row_number().over(w))
@@ -125,7 +124,6 @@ def host_cap_approx(
     url_col: str,
     max_per_host: int,
     seed: str = "hostcap",
-    id_col: str = "doc_id",
     hash_mode: str | None = None,
 ) -> DataFrame:
     """Approximately ``max_per_host`` documents per host WITHOUT a
@@ -150,7 +148,8 @@ def host_cap_approx(
     Deterministic: the kept set is a pure function of (seed, id), so
     reruns, engines, and partitionings agree row-for-row. Use the
     exact window variant when the cap must be exact and hosts are
-    bounded; use this at crawl scale.
+    bounded; use this at crawl scale. Documents are keyed by
+    ``doc_id``.
     """
     from vbb_data_pipeline_spark.functions.hashing import (
         default_hash_mode,
@@ -173,7 +172,7 @@ def host_cap_approx(
         .agg(F.count(F.lit(1)).alias("_hca_n"))
     )
     h = hash_long(
-        F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string")), hash_mode
+        F.concat(F.lit(f"{seed}|"), F.col("doc_id").cast("string")), hash_mode
     )
     # hash ranges differ by mode (md5_long is 60-bit, xxhash64 masked
     # is 63-bit); the LOW 52 bits are uniform in both, and 52 bits fit
@@ -197,12 +196,9 @@ def host_cap_approx(
 def site_boilerplate_removal(
     df: DataFrame,
     url_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_docs: int = 3,
-    min_chars: int = 1,
 ) -> DataFrame:
-    """Remove lines that repeat across ≥ ``min_docs`` DISTINCT
+    """Remove lines of ``text`` that repeat across ≥ ``min_docs`` DISTINCT
     documents of the same host — per-site boilerplate (nav bars,
     footers, cookie banners) that survives document-level dedup
     because every page differs in its body.
@@ -215,8 +211,8 @@ def site_boilerplate_removal(
     aggregate counts distinct docs (map-side combinable), flagged
     lines anti-join back, and each document reassembles with one
     groupBy — text never shuffles except as its own (doc, line) rows.
-    Short lines below ``min_chars`` are always kept (empty-ish lines
-    would count as boilerplate everywhere).
+    Empty lines are always kept (they would count as boilerplate
+    everywhere). Documents are keyed by ``doc_id``.
     """
     # NULL hosts coalesce to a sentinel (host_cap_approx's posture):
     # the aggregate groups NULL hosts together anyway, but the
@@ -224,9 +220,9 @@ def site_boilerplate_removal(
     # boilerplate would survive for exactly the unparseable-host group
     host = F.coalesce(url_host(url_col), F.lit("\x00<no-host>"))
     lines = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         host.alias("_host"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("_ln", "_line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("_ln", "_line"),
     ).withColumn("_lh", F.xxhash64("_line"))
     # The count-distinct and the anti-join key on the 8-byte line
     # HASH, never the line text: Spark plans count(distinct doc)
@@ -242,15 +238,15 @@ def site_boilerplate_removal(
     # collision (~lines²/2^64, negligible) — the jaccard_pairs hashed-
     # shingle posture, and the DuckDB oracles keep matching on text.
     flagged = (
-        lines.filter(F.length("_line") >= min_chars)
+        lines.filter(F.length("_line") >= 1)
         .groupBy("_host", "_lh")
-        .agg(F.count_distinct(F.col(id_col)).alias("_ndocs"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("_ndocs"))
         .filter(F.col("_ndocs") >= min_docs)
         .select("_host", "_lh")
     )
     kept = lines.join(flagged, ["_host", "_lh"], "left_anti")
     rebuilt = (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -277,11 +273,11 @@ def site_boilerplate_removal(
     # had no business touching); '' is only for docs whose every line
     # was flagged
     return (
-        df.join(rebuilt.hint("merge"), id_col, "left")
+        df.join(rebuilt.hint("merge"), "doc_id", "left")
         .withColumn(
-            text_col,
+            "text",
             F.when(
-                F.col(text_col).isNotNull(),
+                F.col("text").isNotNull(),
                 F.coalesce(F.col("_new_text"), F.lit("")),
             ),
         )

@@ -55,14 +55,15 @@ __all__ = [
 EOW = "</w>"
 
 
-def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus → (word, n) frequency table; the ONLY corpus-wide pass.
+def word_counts(df: DataFrame) -> DataFrame:
+    """Corpus ``text`` → (word, n) frequency table; the ONLY
+    corpus-wide pass.
 
     One explode + one hash aggregate: partial counts combine map-side,
     so the exchange is bounded by distinct words per partition.
     """
     return (
-        df.select(F.explode(tokens(text_col)).alias("word"))
+        df.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -92,11 +93,9 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
     )
 
 
-def initial_vocab(words: DataFrame, eow: bool = True) -> DataFrame:
-    """(word, n) → (word, syms, n) with chars (+ end-of-word mark)."""
-    syms = F.split(F.col("word"), "")
-    if eow:
-        syms = F.concat(syms, F.array(F.lit(EOW)))
+def initial_vocab(words: DataFrame) -> DataFrame:
+    """(word, n) → (word, syms, n) with chars + end-of-word mark."""
+    syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit(EOW)))
     return words.select("word", syms.alias("syms"), "n")
 
 
@@ -126,11 +125,11 @@ def _merge_round_udf(a: str, b: str):
 
 def bpe_train(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 10,
     min_pair_count: int = 2,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn ``n_merges`` BPE merges; returns (merge table, final vocab).
+    """Learn ``n_merges`` BPE merges over the ``text`` column; returns
+    (merge table, final vocab).
 
     Each round: vocab-scale pair aggregate → single-row deterministic
     argmax to the driver (count desc, then (a, b) asc) → Arrow rewrite
@@ -138,7 +137,7 @@ def bpe_train(
     the plan flat. Stops early when no pair reaches
     ``min_pair_count``.
     """
-    vocab = initial_vocab(word_counts(df, text_col))
+    vocab = initial_vocab(word_counts(df))
     vocab = vocab.localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):

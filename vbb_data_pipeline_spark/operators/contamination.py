@@ -38,7 +38,6 @@ def _gram_hashes(
 def contamination_report(
     docs: DataFrame,
     eval_df: DataFrame,
-    n: int = 3,
     min_matches: int = 1,
     hash_mode: str | None = None,
 ) -> DataFrame:
@@ -46,9 +45,9 @@ def contamination_report(
     ``docs`` and ``eval_df``.
 
     Returns ``(doc_id, n_contaminated_grams)`` for every training
-    document sharing at least ``min_matches`` distinct word ``n``-grams
+    document sharing at least ``min_matches`` distinct word trigrams
     with the eval set. ``min_matches`` > 1 guards against generic
-    n-grams flagging everything when ``n`` is small.
+    trigrams flagging everything.
 
     Plan: eval grams dedup to one tiny frame → broadcast inner join
     against the corpus gram stream → count distinct matching grams per
@@ -57,12 +56,12 @@ def contamination_report(
     """
     mode = hash_mode or default_hash_mode()
     eval_grams = (
-        _gram_hashes(eval_df.select("text"), "text", n, mode, "gram_hash")
+        _gram_hashes(eval_df.select("text"), "text", 3, mode, "gram_hash")
         .select("gram_hash")
         .distinct()
     )
     doc_grams = _gram_hashes(
-        docs.select("doc_id", "text"), "text", n, mode, "gram_hash"
+        docs.select("doc_id", "text"), "text", 3, mode, "gram_hash"
     ).select("doc_id", "gram_hash")
     matches = doc_grams.join(F.broadcast(eval_grams), "gram_hash")
     return (
@@ -75,18 +74,17 @@ def contamination_report(
 def decontaminate(
     docs: DataFrame,
     eval_df: DataFrame,
-    n: int = 3,
     min_matches: int = 1,
     hash_mode: str | None = None,
 ) -> DataFrame:
     """Drop contaminated documents: ``docs`` minus every row flagged by
-    :func:`contamination_report` over the ``text`` columns (left-anti
+    :func:`contamination_report` over word trigrams of the ``text``
+    columns (left-anti
     on ``doc_id``), wide
     columns untouched — only ids move through the anti-join."""
     flagged = contamination_report(
         docs,
         eval_df,
-        n=n,
         min_matches=min_matches,
         hash_mode=hash_mode,
     ).select("doc_id")

@@ -296,11 +296,10 @@ def jaccard_pairs(
     candidates: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     hash_mode: str = "fast",
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (the re-rank step
-    after LSH): join token-shingle sets in, compute
+    after LSH): join word-trigram shingle sets in, compute
     |∩| / |∪| with array built-ins.
 
     The sets are HASHED shingles (8-byte longs), not the shingle
@@ -343,7 +342,7 @@ def jaccard_pairs(
         F.col(id_col),
         F.array_distinct(
             F.transform(
-                ngrams(tokens(text_col), shingle_n),
+                ngrams(tokens(text_col), 3),
                 lambda g: hash_long(g, hash_mode),
             )
         ).alias("_set"),

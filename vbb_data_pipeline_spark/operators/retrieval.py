@@ -58,16 +58,15 @@ def _token_stream(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).filter(F.col("doc_id").isNotNull())
 
 
-def build_postings(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """Inverted index: ((term, doc_id, tf), (doc_id, dl)).
+def build_postings(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Inverted index of ``df``'s ``(doc_id, text)``: ((term, doc_id,
+    tf), (doc_id, dl)).
 
     Two hash aggregates over the exploded token stream; both partial-
     aggregate map-side. Write the postings partitioned by a term-hash
     bucket for an at-rest index that query terms can prune.
     """
-    toks = _token_stream(df, id_col, text_col)
+    toks = _token_stream(df, "doc_id", "text")
     postings = toks.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -200,7 +199,7 @@ def bm25_write_index(
     the single-row ``stats/`` table complete the scoring inputs.
     """
     spark = df.sparkSession
-    postings, doclen = build_postings(df, "doc_id", "text")
+    postings, doclen = build_postings(df)
     (
         postings.withColumn("bucket", _term_bucket(F.col("term"), n_buckets))
         .repartition("bucket")

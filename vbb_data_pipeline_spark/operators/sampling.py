@@ -643,12 +643,10 @@ def pack_sequences(
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_tokens: int = 128,
     stride: int | None = None,
 ) -> DataFrame:
-    """Split long documents into token-window chunks — the long-doc
+    """Split long ``text`` documents into token-window chunks — the long-doc
     preprocessing step of both training-data prep (context-length
     splitting before :func:`pack_token_shards`) and retrieval
     indexing (RAG passages; chunks are what BM25/ANN index, not whole
@@ -665,7 +663,7 @@ def chunk_documents(
     codegen projection and one explode, no shuffle, no Python; output
     rows are ∝ input tokens / stride.
 
-    Returns ``(id_col, chunk_idx, start_token, n_chunk_tokens,
+    Returns ``(doc_id, chunk_idx, start_token, n_chunk_tokens,
     chunk_text)``.
     """
     from vbb_data_pipeline_spark.functions.text import tokens
@@ -684,12 +682,12 @@ def chunk_documents(
             "would never appear in any chunk"
         )
     toked = df.select(
-        F.col(id_col), tokens(text_col).alias("_tk")
+        F.col("doc_id"), tokens("text").alias("_tk")
     ).withColumn("_n", F.size("_tk"))
     exploded = (
         toked.filter(F.col("_n") > 0)
         .select(
-            id_col,
+            "doc_id",
             "_tk",
             F.posexplode(
                 F.sequence(F.lit(0), F.col("_n") - 1, F.lit(step))
@@ -698,7 +696,7 @@ def chunk_documents(
     )
     piece = F.slice(F.col("_tk"), F.col("_start") + 1, chunk_tokens)
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("_start").cast("long").alias("start_token"),
         F.size(piece).cast("int").alias("n_chunk_tokens"),

@@ -1851,10 +1851,9 @@ def pq_encode_arrow(
     codebooks: DataFrame,
     n_subspaces: int,
     dim: int,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Quantize each vector → ``(id_col, subspace, code)`` on the
+    """Quantize each vector → ``(vec_id, subspace, code)`` on the
     Arrow/numpy path — the scale formulation of :func:`pq_encode`
     (same recipe as :func:`brute_force_topk_arrow`).
 
@@ -1898,7 +1897,7 @@ def pq_encode_arrow(
     sc = embeddings.sparkSession.sparkContext
     bc = sc.broadcast((cmats, ccods))
 
-    out_schema = f"{id_col} long, subspace int, code long"
+    out_schema = "vec_id long, subspace int, code long"
 
     def encode(batches):
         import numpy as np
@@ -1910,7 +1909,7 @@ def pq_encode_arrow(
             pdf = pdf[pdf[vec_col].notna()]
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy(dtype="int64")
+            ids = pdf["vec_id"].to_numpy(dtype="int64")
             x = np.stack(
                 [np.asarray(v, dtype="float64") for v in pdf[vec_col]]
             )
@@ -1930,14 +1929,14 @@ def pq_encode_arrow(
                 out_code.append(best)
             yield pd.DataFrame(
                 {
-                    id_col: np.concatenate(out_ids),
+                    "vec_id": np.concatenate(out_ids),
                     "subspace": np.concatenate(out_sub),
                     "code": np.concatenate(out_code),
                 }
             )
 
     return embeddings.select(
-        F.col(id_col).cast("long").alias(id_col), vec_col
+        F.col("vec_id").cast("long").alias("vec_id"), vec_col
     ).mapInPandas(encode, schema=out_schema)
 
 
@@ -1994,9 +1993,7 @@ def pq_topk(
         # 2.8 s, PERF.md) — code-identical by the parity contract pinned
         # in tests/test_pq.py; the expression encoder remains the
         # zero-Python baseline.
-        codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
-        )
+        codes = pq_encode_arrow(embeddings, codebooks, n_subspaces, dim)
     q = _query_vecs(
         queries.filter(F.col("embedding").isNotNull()), "vec_id", "embedding"
     )
@@ -2071,9 +2068,7 @@ def ivf_pq_topk(
     if assigned is None:
         assigned = ivf_assign(embeddings, centroids, "vec_id", "embedding")
     if codes is None:
-        codes = pq_encode_arrow(
-            embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
-        )
+        codes = pq_encode_arrow(embeddings, codebooks, n_subspaces, dim)
     cent = _centroid_vecs(centroids, "embedding")
     q = _query_vecs(queries, "vec_id", "embedding")
     probes = _probe_cells(q, cent, nprobe)
@@ -2185,7 +2180,7 @@ def ivf_pq_residual_topk(
             lambda x, y: x.cast("double") - y.cast("double"),
         ).alias("_res"),
     )
-    codes = pq_encode_arrow(res, codebooks, n_subspaces, dim, "vec_id", "_res")
+    codes = pq_encode_arrow(res, codebooks, n_subspaces, dim, "_res")
 
     q = _query_vecs(queries, "vec_id", "embedding")
     probes = _probe_cells(q, cent, nprobe)
@@ -2254,17 +2249,15 @@ def ivf_pq_write_index(
     path: str,
     dim: int,
     n_subspaces: int,
-    target_recall: float | None = 0.9,
     recall_kwargs: dict | None = None,
 ) -> None:
     """Materialize the IVF-PQ index as storage layout: the corpus
     written hive-partitioned by ``cell_id``, each row carrying its
     ``pq_codes`` array (subspace-ordered) next to the raw vector.
 
-    ``target_recall`` (DEFAULT 0.9 since r10 — certify-on-build is
-    the default posture; ``None`` is the explicit skip) runs
-    :func:`ann_recall_estimate` after
-    the write — see :func:`ivf_write_index`; the IVF-PQ ladder also
+    Every build certifies itself: :func:`ann_recall_estimate` runs
+    at ``target_recall=0.9`` after the write — see
+    :func:`ivf_write_index`; the IVF-PQ ladder also
     scales the exact-re-rank pool with nprobe (a fixed pool drowns in
     ADC noise as probed cells grow), and ``nprobe="auto"`` probes
     consume the recorded (nprobe, candidates) pair or the exact-scan
@@ -2282,9 +2275,7 @@ def ivf_pq_write_index(
     # cells, where the expression form's O(N·C·dim) pass dominates.
     assigned = ivf_assign_arrow(embeddings, centroids, "vec_id", "embedding")
     # Arrow/BLAS encode, as in pq_topk
-    codes = pq_encode_arrow(
-        embeddings, codebooks, n_subspaces, dim, "vec_id", "embedding"
-    )
+    codes = pq_encode_arrow(embeddings, codebooks, n_subspaces, dim)
     packed = codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(
@@ -2300,12 +2291,11 @@ def ivf_pq_write_index(
     assigned.join(packed, "vec_id").repartition(F.col("cell_id")).write.partitionBy(
         "cell_id"
     ).mode("overwrite").parquet(path)
-    if target_recall is not None:
-        ann_recall_estimate(
-            embeddings.sparkSession, path, embeddings, centroids,
-            kind="ivf_pq", codebooks=codebooks, n_subspaces=n_subspaces,
-            dim=dim, target_recall=target_recall, **(recall_kwargs or {}),
-        )
+    ann_recall_estimate(
+        embeddings.sparkSession, path, embeddings, centroids,
+        kind="ivf_pq", codebooks=codebooks, n_subspaces=n_subspaces,
+        dim=dim, target_recall=0.9, **(recall_kwargs or {}),
+    )
 
 
 def ivf_pq_topk_from_index(

@@ -142,13 +142,9 @@ def e4_corpus_prep(
     docs: DataFrame,
     *,
     min_quality: float = 0.3,
-    normalize: bool = False,
-    redact: bool = False,
-    line_dedup_min_chars: int | None = None,
     lm_band: tuple[float, float] | None = None,
     max_dup_line_frac: float | None = None,
     max_cross_dup_span_frac: float | None = None,
-    remove_cross_dup_spans: bool = False,
     span_window: int = 15,
     span_winnow: int | None = 4,
     compression_bounds: tuple[float, float] | None = None,
@@ -159,11 +155,8 @@ def e4_corpus_prep(
     lsh_pair_mode: str = "all",
     embedding_col: str | None = None,
     embedding_dim: int = 64,
-    cosine_threshold: float = 0.9,
     split_weights: dict[str, float] | None = None,
     shard_budget: int = 50_000,
-    pack_seq_len: int | None = None,
-    pack_seq_shards: int = 8,
     mix_factors: dict[str, float] | None = None,
     epoch: int = 0,
     seed: str | int = 0,
@@ -175,17 +168,7 @@ def e4_corpus_prep(
 
     1. **Profile** — token count (BPE-ish) + heuristic quality score,
        one codegen pass over the scan.
-    1b. **Hygiene** (optional) — ``normalize=True`` applies NFKC
-       unicode normalization + control-char/whitespace cleanup first
-       (``functions/udfs.normalize_unicode`` + ``text.clean_text``) so
-       visually identical texts share dedup keys; ``redact=True``
-       rewrites PII spans to placeholders BEFORE anything hashes the
-       text (so dedup keys and shards see the redacted form);
-       ``line_dedup_min_chars`` runs
-       corpus-WIDE line dedup (the C4 construction,
-       ``operators/dedup.line_dedup_corpus``) before profiling, so
-       token counts, quality scores and every downstream hash see the
-       boilerplate-stripped text; ``max_dup_line_frac`` drops
+    1b. **Hygiene gates** (optional) — ``max_dup_line_frac`` drops
        documents whose duplicate-line fraction exceeds the cap (the
        Gopher repetition filter, ``functions/text.py``);
        ``max_cross_dup_span_frac`` drops documents whose
@@ -195,13 +178,6 @@ def e4_corpus_prep(
        with winnowed fingerprint selection — catches long quoted runs
        that line dedup misses when line boundaries differ; the
        canonical first holder always survives);
-       ``remove_cross_dup_spans=True`` is the SURGICAL alternative:
-       instead of dropping span-heavy documents it excises the
-       duplicated spans themselves (``operators/dedup.span_removal``,
-       Lee et al.'s keep-one policy — the min-id owner keeps its
-       copy, every other holder loses exactly the covered tokens),
-       applied in the hygiene stage so all downstream profiling and
-       hashing see the excised token stream;
        ``compression_bounds=(lo, hi)`` keeps only documents whose zlib
        compression ratio falls inside the band — below ``lo`` is
        repetitive/templated garbage, above ``hi`` is random/binary
@@ -235,7 +211,7 @@ def e4_corpus_prep(
        branches each re-ran the signature shuffle). When
        ``embedding_col`` names a vector column on ``docs``, SEMANTIC
        near-dup pairs (hyperplane-LSH-blocked cosine strictly above
-       ``cosine_threshold``) union with the text pairs before cluster
+       0.9) union with the text pairs before cluster
        assembly — paraphrases duplicate meaning without sharing
        shingles, and only the embedding signal catches them. The
        hyperplane LSH uses 8 planes (256 buckets); the within-bucket
@@ -252,13 +228,17 @@ def e4_corpus_prep(
        ``copy_idx = 1``.
     7. **Pack** — greedy token-budget sharding per (split, lang): the
        physical training-shard layout, one window shuffle.
-    7b. **Sequence plan** (optional, ``pack_seq_len``) — the
-       concat-and-chunk packing plan per SPLIT
-       (``operators/sampling.pack_sequences``, ``group_cols=
-       ["split"]`` so no training sequence ever spans a split
-       boundary): each output row additionally carries
-       ``(seq_shard, seq_pos, start_off, end_off, first_seq,
-       last_seq)`` — everything a per-shard token writer needs.
+
+    E4 hashes exactly the text it is given. A caller that rewrites
+    text does so on ``docs`` before the call, so that profiling and
+    every dedup key see the rewritten form: NFKC + control-char
+    cleanup (``text.clean_text(udfs.normalize_unicode("text"))``),
+    PII placeholders (``text.redact_pii``), corpus-wide line dedup
+    (``operators/dedup.line_dedup_corpus``) or surgical span excision
+    (``operators/dedup.span_removal``), the latter two joined back on
+    ``doc_id``. A caller that wants a sequence-packing plan calls
+    ``operators/sampling.pack_sequences`` on the output, with
+    ``group_cols=["split"]`` so that no sequence spans a split.
 
     ``docs`` carries ``doc_id`` (unique, non-null), ``text``, ``lang``
     and ``source``. Returns one row per packed document copy:
@@ -290,51 +270,6 @@ def e4_corpus_prep(
     mode = hash_mode or default_hash_mode()
     weights = split_weights or {"train": 0.9, "val": 0.05, "test": 0.05}
 
-    if normalize:
-        # NFKC + control-char/whitespace cleanup FIRST: every
-        # downstream hash (fingerprints, MinHash shingles, line
-        # hashes) must see the normalized form or visually identical
-        # texts land in different dedup groups
-        from vbb_data_pipeline_spark.functions.text import clean_text
-        from vbb_data_pipeline_spark.functions.udfs import normalize_unicode
-
-        docs = docs.withColumn(
-            "text", clean_text(normalize_unicode("text"))
-        )
-    if redact:
-        from vbb_data_pipeline_spark.functions.text import redact_pii
-
-        docs = docs.withColumn("text", redact_pii("text"))
-    if line_dedup_min_chars is not None:
-        from vbb_data_pipeline_spark.operators.dedup import line_dedup_corpus
-
-        deduped_text = line_dedup_corpus(
-            docs.select("doc_id", "text"),
-            "text",
-            "doc_id",
-            min_chars=line_dedup_min_chars,
-        )
-        docs = docs.drop("text").join(deduped_text, "doc_id")
-    if remove_cross_dup_spans:
-        from vbb_data_pipeline_spark.operators.dedup import span_removal
-
-        # surgical Lee et al. removal (keep-one at the min-id owner)
-        # instead of / before the coarser whole-document span gate;
-        # runs in the hygiene stage so profiling, quality scores and
-        # every downstream hash see the excised text. Stride-1 span
-        # hashing (removal needs every duplicated position, so the
-        # winnowed selection the ACCOUNTING gate uses does not apply).
-        # Branches docs (hash side + rebuild side): truncate lineage
-        # once, same rationale as the span-gate localCheckpoint below.
-        docs = docs.localCheckpoint(storageLevel=CKPT_SER)
-        rewritten = span_removal(
-            docs.select("doc_id", "text"),
-            "text",
-            "doc_id",
-            window=span_window,
-            hash_mode=mode,
-        ).select("doc_id", "text")
-        docs = docs.drop("text").join(rewritten, "doc_id")
     profiled = docs.withColumn("n_tokens", bpe_token_count("text")).withColumn(
         "quality", quality_score("text")
     )
@@ -352,8 +287,8 @@ def e4_corpus_prep(
 
         # the gate BRANCHES from `kept` (span stats + the anti-join
         # back onto it), so without truncation the expensive upstream
-        # lineage (Arrow NFKC, line-dedup shuffles) re-executes once
-        # per consumer — measured 275 s vs 120 s at sf1. One
+        # lineage (a caller's Arrow NFKC or line-dedup shuffles)
+        # re-executes once per consumer — measured 275 s vs 120 s at sf1. One
         # localCheckpoint computes it once; downstream stages (LM
         # band, MinHash) inherit the truncated lineage too.
         kept = kept.localCheckpoint(storageLevel=CKPT_SER)
@@ -423,7 +358,7 @@ def e4_corpus_prep(
         semantic = embedding_neardup_pairs(
             exact.select("doc_id", embedding_col),
             dim=embedding_dim,
-            threshold=cosine_threshold,
+            threshold=0.9,
             id_col="doc_id",
             vec_col=embedding_col,
             max_bucket_size=lsh_max_bucket_size,
@@ -464,34 +399,6 @@ def e4_corpus_prep(
     packed = pack_token_shards(
         split, ["split", "lang"], pack_order, "n_tokens", budget=shard_budget
     )
-    if pack_seq_len is not None:
-        # 8c. Sequence-packing plan per SPLIT (streams never cross a
-        # split boundary — a val token inside a train sequence would
-        # leak). Key = (id, copy_idx) when epoch mixing duplicated
-        # rows; the plan columns ride on the output so the token
-        # writer is one per-(split, seq_shard) pass.
-        from vbb_data_pipeline_spark.operators.sampling import pack_sequences
-
-        if mix_factors:
-            packed = packed.withColumn(
-                "_seq_key",
-                F.concat_ws("#", F.col("doc_id").cast("string"),
-                            F.col("copy_idx").cast("string")),
-            )
-            skey = "_seq_key"
-        else:
-            skey = "doc_id"
-        packed = (
-            pack_sequences(
-                packed, skey, "n_tokens", seq_len=pack_seq_len,
-                n_shards=pack_seq_shards, seed=seed, hash_mode=hash_mode,
-                group_cols=["split"],
-            )
-            .withColumnRenamed("shard", "seq_shard")
-            .withColumnRenamed("pos", "seq_pos")
-        )
-        if mix_factors:
-            packed = packed.drop("_seq_key")
     return packed.drop("text")
 
 
@@ -698,7 +605,7 @@ def e6_crawl_corpus(
         docs = capper(docs, "url", max_per_host, seed="e6hostcap|0")
     if boilerplate_min_docs is not None:
         docs = site_boilerplate_removal(
-            docs, "url", "text", "doc_id", min_docs=boilerplate_min_docs
+            docs, "url", min_docs=boilerplate_min_docs
         )
     docs = docs.filter(F.length("text") >= F.lit(min_chars))
     docs = docs.select(

@@ -19,7 +19,6 @@ Cross-engine determinism rules (every query here follows them):
 from __future__ import annotations
 
 import importlib
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -61,6 +60,12 @@ def register(name: str, oracle: str | None, survey: str, note: str = ""):
         return fn
 
     return deco
+
+
+#: bytes of scanned data per task when a small scan fans out
+#: (:func:`fan_out_scan`) or a replayed stream sizes its state stores
+#: (``streaming_q._stream_state_partitions``)
+FAN_OUT_TARGET_BYTES = 64 << 10
 
 
 def fan_out_scan(df: DataFrame) -> DataFrame:
@@ -105,8 +110,7 @@ def fan_out_scan(df: DataFrame) -> DataFrame:
     stats_bytes = int(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
-    target = int(os.environ.get("SPARK_GRAFT_FANOUT_TARGET_BYTES", 64 << 10))
-    n = min(cores, max(2, -(-stats_bytes // max(target, 1))))
+    n = min(cores, max(2, -(-stats_bytes // FAN_OUT_TARGET_BYTES)))
     return df.repartition(n)
 
 

@@ -275,7 +275,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.lsh_candidate_pairs(
         sigs, "doc_id", num_hashes=NUM_HASHES, bands=BANDS, hash_mode=mode
     )
-    return dd.jaccard_pairs(d, pairs, "text", "doc_id", shingle_n=3)
+    return dd.jaccard_pairs(d, pairs, "text", "doc_id")
 
 
 
@@ -571,11 +571,9 @@ def line_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     liney = with_url.withColumn(
         "text", F.regexp_replace("text", " ", "\n")
     )
-    boiler = site_boilerplate_removal(
-        liney, "url", "text", "doc_id", min_docs=3, min_chars=1
-    ).select("doc_id", "text")
+    boiler = site_boilerplate_removal(liney, "url", min_docs=3).select("doc_id", "text")
     capped = host_cap(
-        with_url, "url", 3, seed="e6cap", id_col="doc_id",
+        with_url, "url", 3, seed="e6cap",
         hash_mode="oracle",
     ).select("doc_id", F.col("url").alias("text"))
     mega_host = F.when(
@@ -587,7 +585,7 @@ def line_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     capped_approx = host_cap_approx(
         d.withColumn("url", mega_url), "url", HOST_CAP_APPROX_N,
-        seed="e6capx", id_col="doc_id", hash_mode="oracle",
+        seed="e6capx", hash_mode="oracle",
     ).select("doc_id", F.col("url").alias("text"))
     return tag_union(
         [
@@ -644,7 +642,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigs, "doc_id", num_hashes=NUM_HASHES, bands=BANDS, hash_mode=mode
     )
     pairs = (
-        dd.jaccard_pairs(d, cand, "text", "doc_id", shingle_n=3)
+        dd.jaccard_pairs(d, cand, "text", "doc_id")
         .filter(F.col("jaccard") > 0.5)
         .select("id_a", "id_b")
     )
@@ -863,7 +861,6 @@ def decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_report(
         d,
         eval_df,
-        n=3,
         min_matches=_DECON_MIN,
         hash_mode=default_hash_mode(),
     )
@@ -1164,7 +1161,7 @@ def dedup_star_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_mode=mode, pair_mode="star",
     )
     pairs = (
-        dd.jaccard_pairs(d, star, "text", "doc_id", shingle_n=3)
+        dd.jaccard_pairs(d, star, "text", "doc_id")
         .filter(F.col("jaccard") > 0.5)
         .select("id_a", "id_b")
     )

@@ -883,7 +883,7 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"vbb_compact_{key}")
     e.repartition(64).write.mode("overwrite").parquet(path)
-    stats = compact_auto(spark, path, target_file_mb=128)
+    stats = compact_auto(spark, path)
     shrunk = (
         stats["after"]["n_files"] < stats["before"]["n_files"]
         and stats["after"]["total_bytes"] > 0

@@ -16,7 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vbb_data_pipeline_spark.queries import exact_sum, exact_sum_sql, register
+from vbb_data_pipeline_spark.queries import (
+    FAN_OUT_TARGET_BYTES,
+    exact_sum,
+    exact_sum_sql,
+    register,
+)
 from vbb_data_pipeline_spark.streaming.windows import (
     dedup_within_watermark,
     run_to_memory,
@@ -32,8 +37,9 @@ _STATE_PARTITIONS_MEMO: dict[tuple[str, str], int] = {}
 
 def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     """State-store partition count sized to the replayed source's
-    bytes (ceil(bytes / 64 KB), capped at the env core count) — the
-    fan_out_scan sizing rule applied to streaming state. Every state
+    bytes (ceil(bytes / FAN_OUT_TARGET_BYTES), capped at the session's
+    ``defaultParallelism``) — the fan_out_scan sizing rule applied to
+    streaming state. Every state
     store pays per-micro-batch open/commit I/O whether or not it holds
     rows, so a fixture-scale replay with core-count stores spends its
     wall in store commits (measured r10: 14 s -> 3.6 s per leg at
@@ -45,14 +51,12 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     (session, sf_dir); only a missing/unreadable source path
     (AnalysisException) falls back to the core count — anything else
     surfaces instead of silently mis-sizing state stores."""
-    import os
-
     from pyspark.errors import AnalysisException
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     key = (spark._jsparkSession.sessionUUID(), sf_dir)
     if key in _STATE_PARTITIONS_MEMO:
         return _STATE_PARTITIONS_MEMO[key]
+    cores = spark.sparkContext.defaultParallelism
     try:
         nbytes = int(
             spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -63,7 +67,7 @@ def _stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
         )
     except AnalysisException:
         return cores
-    n = min(cores, max(2, -(-nbytes // (64 << 10))))
+    n = min(cores, max(2, -(-nbytes // FAN_OUT_TARGET_BYTES)))
     _STATE_PARTITIONS_MEMO[key] = n
     return n
 

@@ -103,7 +103,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         null_s.alias("pair"),
         null_l.alias("pair_n"),
     )
-    vocab = initial_vocab(word_counts(d, "text"), eow=True)
+    vocab = initial_vocab(word_counts(d))
     top_pairs = (
         pair_counts(vocab)
         .select(
@@ -467,7 +467,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for tag, chunk, stride in _CHUNK_VARIANTS:
         leg = chunk_documents(
-            d, "text", "doc_id", chunk_tokens=chunk, stride=stride
+            d, chunk_tokens=chunk, stride=stride
         ).select(F.lit(tag).alias("variant"), "*")
         out = leg if out is None else out.unionByName(leg)
     return out

@@ -156,7 +156,6 @@ def file_stats(spark: SparkSession, path: str) -> dict:
 def compact_auto(
     spark: SparkSession,
     path: str,
-    target_file_mb: int = 128,
     partition_by: Sequence[str] = (),
     sort_cols: Sequence[str] | None = None,
 ) -> dict:
@@ -170,7 +169,7 @@ def compact_auto(
     columns and break both partition pruning and the replay guard's
     partition-pruned anti-join). This variant:
 
-    * unpartitioned: file count = ceil(total_bytes / target_file_mb)
+    * unpartitioned: file count = ceil(total_bytes / 128 MB)
       from the ACTUAL on-disk listing (optionally range-sorted via
       ``sort_cols`` to preserve clustering);
     * ``partition_by``: rows are hash-repartitioned on the partition
@@ -178,7 +177,7 @@ def compact_auto(
       into ONE file inside its own directory — layout, pruning and
       replay guards all survive. (Per-partition output is one file by
       design: streaming partitions are micro-batch-sized; a table
-      whose single partition outgrows ``target_file_mb`` should be
+      whose single partition outgrows 128 MB should be
       partitioned on something else, not compacted harder.)
 
     Same crash posture as :func:`compact`: rewrite into a temp
@@ -220,7 +219,7 @@ def compact_auto(
         )
     else:
         n_files = max(
-            1, math.ceil(before["total_bytes"] / (target_file_mb << 20))
+            1, math.ceil(before["total_bytes"] / (128 << 20))
         )
         if sort_cols:
             write_range_sorted(df, tmp, sort_cols, n_files)

@@ -34,7 +34,7 @@ def geo_filter_arrivals(
     arrival JSON; output: the same wire format, only events within the radius.
     Malformed payloads and null coordinates are dropped
     (GeoPredicate.java:42-48 semantics)."""
-    arr = parsed_arrivals(df, "value")
+    arr = parsed_arrivals(df)
     kept = arr.filter(
         within_radius(
             F.col("latitude"), F.col("longitude"), center_lat, center_lon, radius_m
