@@ -14,6 +14,7 @@ from vbb_data_pipeline_spark.sources.connectors import (
     jdbc_sink_spec,
     jdbc_source_spec,
     kafka_sink_spec,
+    kafka_source_spec,
 )
 
 URL = "jdbc:postgresql://db:5432/gtfs"
@@ -78,6 +79,21 @@ def test_kafka_sink_options():
     assert spec.options["kafka.bootstrap.servers"] == "broker:9092"
     assert spec.options["topic"] == "gtfs-arrivals"
     assert spec.options["kafka.acks"] == "all"
+
+
+def test_kafka_source_options():
+    spec = kafka_source_spec("broker:9092", "gtfs-arrivals")
+    assert spec.format == "kafka"
+    assert spec.options == {
+        "kafka.bootstrap.servers": "broker:9092",
+        "subscribe": "gtfs-arrivals",
+        "startingOffsets": "earliest",
+    }
+    # options still override the starting offsets
+    spec = kafka_source_spec(
+        "broker:9092", "gtfs-arrivals", startingOffsets="latest"
+    )
+    assert spec.options["startingOffsets"] == "latest"
 
 
 def test_jdbc_load_fails_fast_without_driver(spark):

@@ -2,7 +2,8 @@
 formula — every key here exists because a specific decade-ladder
 failure measured it (CRAWL_E2E.json rows; PERF.md rounds 8-10).
 A drive-by "simplification" of CRAWL_CONF should fail loudly, with
-the measurement that put the key there one grep away.
+the measurement that put the key there one grep away. The local
+session's default width and driver heap follow the host.
 """
 import os
 import sys
@@ -67,3 +68,29 @@ def test_auto_shuffle_partitions_boundaries():
     for b in (12 * GB, 21_597_709_750, 64 * GB):
         parts = auto_shuffle_partitions(b)
         assert b / parts <= 61 * MB  # proven-good per-partition bound
+
+
+def test_local_sizing_follows_the_host(monkeypatch):
+    """Unset SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM: every core, and
+    half of physical memory in whole GiB clamped to 1g-16g (Spark-free;
+    the host is faked)."""
+    from vbb_data_pipeline_spark import session
+
+    gib = 2**30
+    phys = {"n": 0}
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    monkeypatch.setattr(
+        os, "sysconf",
+        lambda name: {"SC_PAGE_SIZE": 4096,
+                      "SC_PHYS_PAGES": phys["n"] // 4096}[name],
+    )
+    for total, mem in ((15.7 * gib, "7g"), (gib, "1g"), (64 * gib, "16g")):
+        phys["n"] = int(total)
+        assert session._local_sizing(None) == (6, mem)
+    # an explicit width, then the environment, win over the host
+    assert session._local_sizing(3)[0] == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session._local_sizing(None) == (5, "2g")

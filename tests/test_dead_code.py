@@ -20,12 +20,19 @@ it now.
 A defaulted parameter of a public top-level package function must be
 passed by some call in those files: by keyword, by a positional
 argument at its index, or by a ``*``/``**`` splat (a ``**name`` whose
-``name`` the file binds only to dict literals passes just their keys).
-A keyword or positional argument that is a literal equal to the
+``name`` the file binds only to dict literals passes just their keys;
+a ``**name`` that forwards the enclosing package function's own
+``**`` parameter passes the extra keywords its callers pass). A
+keyword or positional argument that is a literal equal to the
 parameter's literal default does not pass it. A function referenced
 as a value (a callback, a dict entry, a ``functools.partial``
 argument) passes every parameter. A parameter no call passes has one
 value in use: it belongs in the body as a constant.
+
+The pipeline entry points (``pipelines.py``, ``streaming/ingest.py``)
+meet the same rule with test files left out of the search: an option
+that only tests set has one value in use too, unless it is the only
+route to a stage or an input kind (``TEST_ONLY_ROUTES``).
 """
 
 from __future__ import annotations
@@ -204,68 +211,110 @@ def _callee(f: ast.expr) -> str | None:
         f.attr if isinstance(f, ast.Attribute) else None)
 
 
-def unpassed_parameters() -> tuple[int, list[str]]:
-    """The number of defaulted parameters of the package's public
-    top-level functions, and ``path:line function.param`` for each one
-    that no call in the searched files passes."""
-    passed: dict[str, set[str] | None] = {}  # None: every parameter
+def _named(fn: ast.FunctionDef) -> set[str]:
+    a = fn.args
+    return {p.arg for p in [*a.posonlyargs, *a.args, *a.kwonlyargs]}
 
-    def mark(name: str, ks: set[str] | None) -> None:
-        old = passed.get(name, set())
-        passed[name] = None if old is None or ks is None else old | ks
 
+def unpassed_parameters(
+    search: list[Path] = SEARCH, gated_files: list[Path] = [PACKAGE]
+) -> tuple[int, list[str]]:
+    """The number of defaulted parameters of the public top-level
+    functions in ``gated_files`` (package files or directories), and
+    ``path:line function.param`` for each one that no call in the
+    ``search`` files passes.
+
+    A ``**name`` splat whose ``name`` is the enclosing top-level
+    package function's own ``**`` parameter passes the keywords that
+    calls of that function pass beyond its named parameters (E6's
+    ``**e4_kwargs`` passes to E4 what E6's callers add); the rule is
+    applied until no forwarded set grows."""
     trees = {p: ast.parse(p.read_text(encoding="utf-8"))
-             for p in _py_files(SEARCH)}
-    gated = [(path, node) for path in _py_files([PACKAGE])
-             for node in trees[path].body if _public_names(node, _FUNC)]
+             for p in _py_files([*search, PACKAGE])}
+    package_fns = [node for path in _py_files([PACKAGE])
+                   for node in trees[path].body if isinstance(node, _FUNC)]
     sigs: dict[str, list[tuple[list[str], dict[str, str | None]]]] = {}
-    for _, fn in gated:
-        sigs.setdefault(fn.name, []).append(
-            ([p.arg for p in [*fn.args.posonlyargs, *fn.args.args]],
-             _defaulted(fn)))
+    for fn in package_fns:
+        if _public_names(fn, _FUNC):
+            sigs.setdefault(fn.name, []).append(
+                ([p.arg for p in [*fn.args.posonlyargs, *fn.args.args]],
+                 _defaulted(fn)))
+    splatting = {fn.name: fn for fn in package_fns if fn.args.kwarg}
+    # call node -> (enclosing package function, its ``**`` parameter)
+    enclosing = {call: (fn.name, fn.args.kwarg.arg)
+                 for fn in splatting.values() for call in ast.walk(fn)
+                 if isinstance(call, ast.Call)}
+    search_trees = [trees[p] for p in _py_files(search)]
 
     def passes(param: str, value: ast.expr,
                defaults: dict[str, str | None]) -> bool:
         lit = _literal(value)
         return lit is None or lit != defaults.get(param)
 
-    for tree in trees.values():
-        dicts = _dict_keys(tree)
-        funcs = set()
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call) or not _callee(node.func):
-                continue
-            name = _callee(node.func)
-            funcs.add(node.func)
-            kws: set[str] | None = set()
-            for pos, defaults in sigs.get(name, []):
-                kws |= {p for p, a in zip(pos, node.args)
-                        if passes(p, a, defaults)}
-                kws |= {k.arg for k in node.keywords
-                        if k.arg and passes(k.arg, k.value, defaults)}
-            for k in node.keywords:
-                if k.arg:
+    def scan(forwarded: dict[str, set[str] | None]):
+        passed: dict[str, set[str] | None] = {}  # None: every parameter
+
+        def mark(name: str, ks: set[str] | None) -> None:
+            old = passed.get(name, set())
+            passed[name] = None if old is None or ks is None else old | ks
+
+        for tree in search_trees:
+            dicts = _dict_keys(tree)
+            funcs = set()
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call) or not _callee(node.func):
                     continue
-                if isinstance(k.value, ast.Name) and dicts.get(k.value.id):
-                    kws |= dicts[k.value.id]
-                else:
+                name = _callee(node.func)
+                funcs.add(node.func)
+                kws: set[str] | None = set()
+                for pos, defaults in sigs.get(name, []):
+                    kws |= {p for p, a in zip(pos, node.args)
+                            if passes(p, a, defaults)}
+                    kws |= {k.arg for k in node.keywords
+                            if k.arg and passes(k.arg, k.value, defaults)}
+                outer, own = enclosing.get(node, (None, None))
+                for k in node.keywords:
+                    if k.arg:
+                        continue
+                    v = k.value.id if isinstance(k.value, ast.Name) else None
+                    ks = (forwarded.get(outer, set()) if v and v == own
+                          else dicts.get(v) or None)
+                    if ks is None:
+                        kws = None
+                        break
+                    kws |= ks
+                if any(isinstance(a, ast.Starred) for a in node.args):
                     kws = None
-                    break
-            if any(isinstance(a, ast.Starred) for a in node.args):
-                kws = None
-            mark(name, kws)
-        for node in ast.walk(tree):  # referenced as a value
-            if (isinstance(node, (ast.Name, ast.Attribute)) and node not in funcs
-                    and isinstance(node.ctx, ast.Load)):
-                mark(_callee(node), None)
+                mark(name, kws)
+            for node in ast.walk(tree):  # referenced as a value
+                if (isinstance(node, (ast.Name, ast.Attribute))
+                        and node not in funcs
+                        and isinstance(node.ctx, ast.Load)):
+                    mark(_callee(node), None)
+        return passed
+
+    forwarded: dict[str, set[str] | None] = {}
+    while True:
+        passed = scan(forwarded)
+        grown = {
+            name: None if passed.get(name, set()) is None
+            else passed.get(name, set()) - _named(fn)
+            for name, fn in splatting.items()
+        }
+        if grown == forwarded:
+            break
+        forwarded = grown
     total, flagged = 0, []
-    for path, fn in gated:
-        ks = passed.get(fn.name, set())
-        for param in _defaulted(fn):
-            total += 1
-            if ks is not None and param not in ks:
-                flagged.append(
-                    f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}.{param}")
+    for path in _py_files(gated_files):
+        for fn in trees[path].body:
+            if not _public_names(fn, _FUNC):
+                continue
+            ks = passed.get(fn.name, set())
+            for param in _defaulted(fn):
+                total += 1
+                if ks is not None and param not in ks:
+                    flagged.append(
+                        f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}.{param}")
     return total, flagged
 
 
@@ -274,4 +323,41 @@ def test_no_unpassed_public_parameters():
     assert not flagged, (
         f"{len(flagged)} of {total} defaulted parameters of public functions"
         " are passed by no call (make each a constant):\n" + "\n".join(flagged)
+    )
+
+
+#: pipeline options that only tests set, each kept because it is the
+#: only route to a stage or an input kind
+TEST_ONLY_ROUTES = {
+    "e3_arrivals.as_wire": "the wire-JSON output",
+    "e4_corpus_prep.embedding_col": "the semantic near-dup tier",
+    "e4_corpus_prep.embedding_dim": "the semantic tier; must match the input vectors",
+    "e4_corpus_prep.mix_factors": "the train-split domain mix",
+    "e4_corpus_prep.epoch": "the train-split domain mix",
+    "corpus_ingest_batch.min_quality":
+        "0.0 is the only way a zero-token document reaches the index",
+    "corpus_ingest_batch.vec_col": "the semantic tier",
+    "corpus_ingest_batch.embedding_index_path": "the semantic tier",
+    "corpus_ingest_batch.centroids": "the semantic tier",
+    "e6_crawl_corpus.input_format": "WET input",
+    "e6_crawl_corpus.host_cap_mode": "the mega-host approximate cap",
+    "stream_crawl_corpus_ingest.input_format": "WET input for the stream",
+}
+
+
+def test_pipeline_options_have_non_test_callers():
+    """An option of a pipeline entry point that only tests set has one
+    value in use; it is a constant unless it routes to a capability
+    (``TEST_ONLY_ROUTES``)."""
+    total, flagged = unpassed_parameters(
+        [f for f in _py_files(SEARCH)
+         if "tests" not in f.relative_to(ROOT).parts],
+        [PACKAGE / "pipelines.py", PACKAGE / "streaming" / "ingest.py"],
+    )
+    unkept = [f for f in flagged if f.split()[-1] not in TEST_ONLY_ROUTES]
+    assert not unkept, (
+        f"{len(unkept)} of {total} defaulted pipeline parameters are set"
+        " by tests only (make each a constant, or add it to"
+        " TEST_ONLY_ROUTES with the capability it reaches):\n"
+        + "\n".join(unkept)
     )

@@ -130,10 +130,7 @@ def test_e4_corpus_prep_end_to_end(spark):
     out = e4_corpus_prep(
         docs,
         min_quality=0.3,
-        jaccard_threshold=0.8,
         shard_budget=5_000,
-        seed=7,
-        hash_mode="oracle",
     ).persist()
     rows = out.collect()
     assert rows, "pipeline must keep some documents"
@@ -166,10 +163,7 @@ def test_e4_corpus_prep_end_to_end(spark):
     again = e4_corpus_prep(
         docs,
         min_quality=0.3,
-        jaccard_threshold=0.8,
         shard_budget=5_000,
-        seed=7,
-        hash_mode="oracle",
     ).collect()
     key = lambda r: (r.doc_id,)  # noqa: E731
     assert sorted(map(tuple, rows), key=lambda t: t[:1]) == sorted(
@@ -190,12 +184,9 @@ def test_e4_mixing_packs_copies_deterministically(spark):
     out = e4_corpus_prep(
         docs,
         min_quality=0.0,
-        jaccard_threshold=1.01,  # keep everything: isolate the mix+pack path
         shard_budget=3_000,
         mix_factors={src: 2.5},
         epoch=1,
-        seed=7,
-        hash_mode="oracle",
     )
     rows = out.collect()
     per_doc: dict[int, list] = {}
@@ -227,10 +218,7 @@ def test_e4_decontamination_stage(spark):
         docs,
         min_quality=0.0,
         eval_df=eval_df,
-        decontam_min_matches=1,
-        jaccard_threshold=1.01,
         shard_budget=10**9,
-        hash_mode="oracle",
     )
     ids = {r.doc_id for r in out.select("doc_id").collect()}
     assert ids and not (ids & {0, 1, 2, 3, 4})
@@ -248,9 +236,7 @@ def test_e4_shards_land_as_partitioned_files(spark, tmp_path):
     from vbb_data_pipeline_spark.sources.layout import write_partitioned
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = e4_corpus_prep(
-        docs, min_quality=0.3, shard_budget=5_000, seed=7, hash_mode="oracle"
-    )
+    out = e4_corpus_prep(docs, min_quality=0.3, shard_budget=5_000)
     dest = str(tmp_path / "shards")
     write_partitioned(out, dest, ["split", "shard_id"])
 
@@ -286,11 +272,9 @@ def test_e4_semantic_dedup_via_embeddings(spark):
     out = e4_corpus_prep(
         docs,
         min_quality=0.0,
-        jaccard_threshold=0.99,  # texts are shingle-disjoint anyway
         embedding_col="embedding",
         embedding_dim=4,
         shard_budget=10**6,
-        hash_mode="oracle",
     )
     kept = {r.doc_id for r in out.select("doc_id").collect()}
     # 1 and 2 are semantic duplicates -> canonical (min id) 1 survives
@@ -300,9 +284,7 @@ def test_e4_semantic_dedup_via_embeddings(spark):
     out2 = e4_corpus_prep(
         docs.drop("embedding"),
         min_quality=0.0,
-        jaccard_threshold=0.99,
         shard_budget=10**6,
-        hash_mode="oracle",
     )
     assert {r.doc_id for r in out2.select("doc_id").collect()} == {1, 2, 3, 4}
     spark.catalog.clearCache()
@@ -326,9 +308,7 @@ def test_e4_hygiene_knobs(spark):
         docs.withColumn("text", redact_pii("text")),
         min_quality=0.0,
         max_dup_line_frac=0.5,
-        jaccard_threshold=1.01,
         shard_budget=10**6,
-        hash_mode="oracle",
     )
     kept = {r.doc_id for r in out.select("doc_id").collect()}
     # doc 2: 5 non-empty lines, 3 duplicates -> 0.6 > 0.5 -> dropped
@@ -354,9 +334,7 @@ def test_e4_compression_band(spark):
         docs,
         min_quality=0.0,
         compression_bounds=(0.3, 1.0),
-        jaccard_threshold=1.01,
         shard_budget=10**6,
-        hash_mode="oracle",
     )
     assert {r.doc_id for r in out.select("doc_id").collect()} == {1}
     spark.catalog.clearCache()
@@ -386,9 +364,7 @@ def test_e4_line_dedup_stage(spark):
     out = e4_corpus_prep(
         docs.drop("text").join(deduped, "doc_id"),
         min_quality=0.01,
-        jaccard_threshold=1.01,
         shard_budget=10**6,
-        hash_mode="oracle",
     ).collect()
     kept = {r.doc_id: r for r in out}
     assert set(kept) == {1, 2, 3}
@@ -420,9 +396,7 @@ def test_e4_lm_band(spark):
         docs,
         min_quality=0.0,
         lm_band=(0.2, 1.0),
-        jaccard_threshold=1.01,
         shard_budget=10**6,
-        hash_mode="oracle",
     )
     kept = {r.doc_id for r in out.select("doc_id").collect()}
     assert 99 not in kept
@@ -447,8 +421,7 @@ def test_e4_normalize_stage(spark):
     kept_raw = {
         r.doc_id
         for r in e4_corpus_prep(
-            docs, min_quality=0.0, jaccard_threshold=1.01,
-            shard_budget=10**6, hash_mode="oracle",
+            docs, min_quality=0.0, shard_budget=10**6,
         ).select("doc_id").collect()
     }
     assert kept_raw == {1, 2}  # ligature splits the fingerprint group
@@ -456,8 +429,7 @@ def test_e4_normalize_stage(spark):
         r.doc_id
         for r in e4_corpus_prep(
             docs.withColumn("text", clean_text(normalize_unicode("text"))),
-            min_quality=0.0, jaccard_threshold=1.01,
-            shard_budget=10**6, hash_mode="oracle",
+            min_quality=0.0, shard_budget=10**6,
         ).select("doc_id").collect()
     }
     assert kept_norm == {1}  # normalized duplicates collapse, lowest id wins
@@ -502,13 +474,8 @@ def test_e4_all_stages_compose(spark):
         min_quality=0.2,
         max_dup_line_frac=0.9,
         eval_df=eval_df,
-        decontam_min_matches=5,
-        jaccard_threshold=0.8,
-        lsh_max_bucket_size=1000,
         embedding_col="embedding",
         shard_budget=5_000,
-        seed=11,
-        hash_mode="oracle",
     )
     out = e4_corpus_prep(docs, **kwargs).collect()
     assert out, "composition must keep some documents"
@@ -525,12 +492,16 @@ def test_e4_cross_dup_span_gate(spark):
     min-id owner of the duplicated content."""
     from vbb_data_pipeline_spark.pipelines import e4_corpus_prep
 
-    run = " ".join(f"shared{i}" for i in range(12))
+    # 24 tokens: longer than the 15-token span window plus the winnow
+    # (15 + 4 - 1), so the winnowed spans of both holders meet
+    run = " ".join(f"shared{i}" for i in range(24))
     rows = [
         # doc 1 owns the run (min id) plus original tail
-        (1, run + " original tail about trains and schedules", "en", "wiki"),
+        (1, run + " original tail about trains and schedules in the city",
+         "en", "wiki"),
         # doc 2 is almost entirely the quoted run -> high dup_frac,
-        # not the owner -> dropped
+        # not the owner -> dropped. Its trigram Jaccard with doc 1 is
+        # 22/32, under the 0.8 near-dup cut
         (2, "intro " + run, "en", "web"),
         # doc 3: ordinary unshared text -> kept
         (3, "a perfectly ordinary document about signals and stations "
@@ -539,18 +510,16 @@ def test_e4_cross_dup_span_gate(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     )
-    out = e4_corpus_prep(
-        docs,
-        min_quality=0.0,
-        max_cross_dup_span_frac=0.5,
-        span_window=6,
-        span_winnow=2,
-        jaccard_threshold=1.01,  # isolate the span gate from minhash
-        shard_budget=10**6,
-        hash_mode="oracle",
-    )
-    kept = {r.doc_id for r in out.select("doc_id").collect()}
-    assert kept == {1, 3}
+
+    def kept(**gate):
+        out = e4_corpus_prep(
+            docs, min_quality=0.0, shard_budget=10**6, **gate
+        )
+        return {r.doc_id for r in out.select("doc_id").collect()}
+
+    assert kept(max_cross_dup_span_frac=0.5) == {1, 3}
+    # the span gate, not the near-dup tier, drops doc 2
+    assert kept() == {1, 2, 3}
     spark.catalog.clearCache()
 
 
@@ -583,9 +552,7 @@ def test_e4_remove_cross_dup_spans(spark):
         return e4_corpus_prep(
             held.drop("text").join(rewritten, "doc_id"),
             min_quality=0.0,
-            jaccard_threshold=1.01,
             shard_budget=10**6,
-            hash_mode="oracle",
         )
 
     out = {r.doc_id: r for r in run_e4().collect()}
@@ -617,7 +584,6 @@ def test_e4_sequence_packing_plan(spark):
     e4 = e4_corpus_prep(
         docs,
         min_quality=0.0,
-        split_weights={"train": 8, "val": 1, "test": 1},
     )
     out = (
         pack_sequences(e4, "doc_id", "n_tokens", 512, 4, group_cols=["split"])
@@ -758,9 +724,7 @@ def test_e6_crawl_corpus_end_to_end(spark, tmp_path):
         str(d),
         max_per_host=4,
         boilerplate_min_docs=3,
-        langs=("en", "de"),
         min_quality=0.0,
-        split_weights={"train": 1.0},
     )
     rows = out.collect()
     by_host: dict[str, list] = {}
@@ -783,9 +747,7 @@ def test_e6_crawl_corpus_end_to_end(spark, tmp_path):
         str(d),
         max_per_host=4,
         boilerplate_min_docs=3,
-        langs=("en", "de"),
         min_quality=0.0,
-        split_weights={"train": 1.0},
     ).collect()
     key = lambda r: (r.doc_id, r.shard_id, r.split)  # noqa: E731
     assert sorted(map(key, rows2)) == sorted(map(key, rows))
@@ -818,9 +780,7 @@ def test_e6_host_cap_mode_approx(spark, tmp_path):
 
     kw = dict(
         max_per_host=50,
-        langs=("en", "de"),
         min_quality=0.0,
-        split_weights={"train": 1.0},
     )
     exact = e6_crawl_corpus(spark, str(d), host_cap_mode="exact", **kw)
     approx = e6_crawl_corpus(spark, str(d), host_cap_mode="approx", **kw)
@@ -895,9 +855,7 @@ def test_e6_ranged_reader_equals_whole_file(spark, tmp_path):
         )
     (d / "a.warc.gz").write_bytes(b"".join(members))
 
-    kw = dict(
-        langs=("en", "de"), min_quality=0.0, split_weights={"train": 1.0}
-    )
+    kw = dict(min_quality=0.0)
     whole = e6_crawl_corpus(spark, str(d), **kw)
     ranged = e6_crawl_corpus(spark, str(d), ranged_chunk_bytes=512, **kw)
     key = lambda r: (r.url, r.doc_id)  # noqa: E731
@@ -935,9 +893,7 @@ def test_e6_resume_from_materialized_curation(spark, tmp_path):
     mat = str(tmp_path / "curated")
     kw = dict(
         materialize_dir=mat,
-        langs=("en", "de"),
         min_quality=0.0,
-        split_weights={"train": 1.0},
     )
 
     key = lambda r: (r.doc_id, r.url, r.shard_id, r.split)  # noqa: E731
@@ -984,7 +940,9 @@ def test_e6_curation_only_materialize_writes_marker(spark, tmp_path):
     """run_e4=False + materialize_dir is the curate-once hand-off:
     the at-rest frame AND its marker must land (previously the
     curation-only return skipped both, so a later resume silently
-    re-parsed the archives), and the marker records the RESOLVED
+    re-parsed the archives), and the marker records every key that
+    shapes the curated frame: the options, the constants under their
+    old option names (so older markers still resume), and the RESOLVED
     hash mode, never null."""
     import json
     import shutil
@@ -1002,28 +960,33 @@ def test_e6_curation_only_materialize_writes_marker(spark, tmp_path):
             ),
             f"http://a.example/p{i}",
         )
-        for i, body in enumerate(EN_BODIES)
+        for i, body in enumerate(DE_BODIES)
     ]
     (d / "a.warc").write_bytes(b"".join(records))
     mat = str(tmp_path / "curated")
 
-    # naive extractor: the fixture pages are single short paragraphs,
-    # which the density classifier (correctly) scores as boilerplate
-    out = e6_crawl_corpus(
-        spark, str(d), run_e4=False, materialize_dir=mat, extractor="naive"
-    )
+    out = e6_crawl_corpus(spark, str(d), run_e4=False, materialize_dir=mat)
     docs = sorted((r.doc_id, r.url) for r in out.collect())
-    assert docs
+    assert len(docs) == len(DE_BODIES)
     marker = json.loads(
         hadoop_read_text(spark, mat.rstrip("/") + "/_e6_curation.json")
     )
-    assert marker["hash_mode"] == default_hash_mode()  # resolved, not null
+    assert marker == {
+        "warc_path": str(d),
+        "input_format": "warc",
+        "extractor": "density",
+        "max_per_host": None,
+        "host_cap_mode": "exact",
+        "boilerplate_min_docs": None,
+        "langs": None,
+        "min_chars": 1,
+        "hash_mode": default_hash_mode(),  # resolved, not null
+    }
 
     # archives gone: the curation-only run left enough to resume from
     shutil.rmtree(d)
     resumed = e6_crawl_corpus(
-        spark, str(d), run_e4=False, materialize_dir=mat, resume=True,
-        extractor="naive",
+        spark, str(d), run_e4=False, materialize_dir=mat, resume=True
     )
     assert sorted((r.doc_id, r.url) for r in resumed.collect()) == docs
 
@@ -1082,5 +1045,7 @@ def test_e6_resume_refuses_unresolved_marker(spark, tmp_path):
     with pytest.raises(ValueError, match=r"different configuration.*hash_mode"):
         e6_crawl_corpus(spark, str(d), resume=True, **kw)
     # a real config mismatch names its key
-    with pytest.raises(ValueError, match="min_chars"):
-        e6_crawl_corpus(spark, str(d), resume=True, min_chars=999, **kw)
+    with pytest.raises(ValueError, match="boilerplate_min_docs"):
+        e6_crawl_corpus(
+            spark, str(d), resume=True, boilerplate_min_docs=2, **kw
+        )

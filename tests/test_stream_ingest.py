@@ -47,7 +47,6 @@ def kw(tmp_path):
         index_path=index,
         audit_path=audit,
         min_quality=0.3,
-        hash_mode="oracle",
     )
 
 
@@ -167,11 +166,9 @@ def test_semantic_tier_catches_paraphrase(spark, tmp_path):
         index_path=index,
         audit_path=audit,
         min_quality=0.0,
-        hash_mode="oracle",
         vec_col="embedding",
         embedding_index_path=str(tmp_path / "ivf"),
         centroids=cents,
-        semantic_threshold=0.98,
     )
 
     def batch(rows):
@@ -237,11 +234,9 @@ def test_semantic_tier_engages_on_uri_schemed_paths(spark, tmp_path):
         index_path=uri("index"),
         audit_path=uri("audit"),
         min_quality=0.0,
-        hash_mode="oracle",
         vec_col="embedding",
         embedding_index_path=uri("ivf"),
         centroids=cents,
-        semantic_threshold=0.98,
     )
 
     def batch(rows):
@@ -313,7 +308,6 @@ def test_stream_crawl_corpus_ingest_warc(spark, tmp_path, kw):
         audit_path=kw["audit_path"],
         checkpoint=str(tmp_path / "ckpt"),
         min_quality=0.3,
-        hash_mode="oracle",
     )
     q = stream_crawl_corpus_ingest(spark, str(landing), **ingest_kw)
     q.awaitTermination(120)
@@ -371,7 +365,6 @@ def test_stream_crawl_corpus_ingest_wet(spark, tmp_path, kw):
         checkpoint=str(tmp_path / "ckpt_wet"),
         input_format="wet",
         min_quality=0.3,
-        hash_mode="oracle",
     )
     q.awaitTermination(120)
     rows = spark.read.parquet(kw["corpus_path"]).collect()
@@ -577,7 +570,7 @@ def _seeded_batches(seed=7):
 
 
 def _reference_ingest(batch, batch_id, *, corpus_path, index_path,
-                      audit_path, min_quality, hash_mode):
+                      audit_path, min_quality):
     """The per-consumer composition the ingest loop replaced: the
     quality score and the fingerprint derived in each branch, then
     ``dedup_incremental`` + ``dedup_index_write`` re-deriving the
@@ -623,9 +616,9 @@ def _reference_ingest(batch, batch_id, *, corpus_path, index_path,
             F.lit(None).cast("double").alias("similarity"),
         )
     else:
-        verdicts = dedup_incremental(
-            uniq, index_path, hash_mode=hash_mode
-        ).select("doc_id", "status", "dup_of", "similarity")
+        verdicts = dedup_incremental(uniq, index_path).select(
+            "doc_id", "status", "dup_of", "similarity"
+        )
     verdicts = verdicts.localCheckpoint()
     survivors = uniq.join(
         verdicts.filter(F.col("status") == "new").select("doc_id"),
@@ -654,7 +647,7 @@ def _reference_ingest(batch, batch_id, *, corpus_path, index_path,
     ).withColumn("batch_id", F.lit(batch_id).cast("long")).write.partitionBy(
         "batch_id"
     ).mode("append").parquet(audit_path)
-    dedup_index_write(survivors, index_path, hash_mode=hash_mode, mode="append")
+    dedup_index_write(survivors, index_path, mode="append")
 
 
 def _table_rows(spark, path):
@@ -682,7 +675,7 @@ def test_ingest_matches_per_consumer_composition(spark, tmp_path):
             ingest(
                 _docs(spark, rows), b,
                 corpus_path=corpus, index_path=index, audit_path=audit,
-                min_quality=0.1, hash_mode="fast",
+                min_quality=0.1,
             )
     once, ref = _paths(tmp_path / "once"), _paths(tmp_path / "ref")
     for a, b in (

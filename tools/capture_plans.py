@@ -12,7 +12,10 @@ SPARK_GRAFT_FAST_HASH=1 unless the variable is already set.
 
 Each file is written through :func:`normalize_plan`, so two captures
 of one commit are byte-identical and a diff between two commits shows
-only plan changes.
+only plan changes. Plan identity is checked on these ``formatted()``
+plans, built before execution, and not on executed plans: under AQE
+the executed plans of ``operators/dedup.connected_components``' loop
+differ from one run to the next in which join side is broadcast.
 """
 
 from __future__ import annotations

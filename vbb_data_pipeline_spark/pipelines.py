@@ -145,22 +145,14 @@ def e4_corpus_prep(
     lm_band: tuple[float, float] | None = None,
     max_dup_line_frac: float | None = None,
     max_cross_dup_span_frac: float | None = None,
-    span_window: int = 15,
-    span_winnow: int | None = 4,
     compression_bounds: tuple[float, float] | None = None,
     eval_df: DataFrame | None = None,
-    decontam_min_matches: int = 5,
-    jaccard_threshold: float = 0.8,
-    lsh_max_bucket_size: int | None = None,
     lsh_pair_mode: str = "all",
     embedding_col: str | None = None,
     embedding_dim: int = 64,
-    split_weights: dict[str, float] | None = None,
     shard_budget: int = 50_000,
     mix_factors: dict[str, float] | None = None,
     epoch: int = 0,
-    seed: str | int = 0,
-    hash_mode: str | None = None,
 ) -> DataFrame:
     """E4: the training-corpus assembly pipeline — the north-star
     composition the reference never had, built entirely from this
@@ -174,10 +166,10 @@ def e4_corpus_prep(
        ``max_cross_dup_span_frac`` drops documents whose
        CROSS-document duplicated-span fraction exceeds the cap unless
        they own (min-id) every duplicated span they hold
-       (``operators/dedup.substring_span_stats``, Lee et al. 2021
-       with winnowed fingerprint selection — catches long quoted runs
-       that line dedup misses when line boundaries differ; the
-       canonical first holder always survives);
+       (``operators/dedup.substring_span_stats`` over 15-token spans,
+       Lee et al. 2021 with winnowed fingerprint selection, winnow 4 —
+       catches long quoted runs that line dedup misses when line
+       boundaries differ; the canonical first holder always survives);
        ``compression_bounds=(lo, hi)`` keeps only documents whose zlib
        compression ratio falls inside the band — below ``lo`` is
        repetitive/templated garbage, above ``hi`` is random/binary
@@ -192,7 +184,7 @@ def e4_corpus_prep(
     2. **Quality gate** — drop documents below ``min_quality``
        (C4/Gopher-style filtering).
     2b. **Decontamination** (when ``eval_df`` is given) — drop
-       documents sharing ≥ ``decontam_min_matches`` word trigrams with
+       documents sharing ≥ 5 word trigrams with
        the benchmark set (``operators/contamination.py``; eval grams
        broadcast, corpus text never shuffles).
     3. **Exact-ish dedup** — sorted-token-set fingerprint keep-lowest-id
@@ -202,8 +194,8 @@ def e4_corpus_prep(
        text-bearing frame, so every later branch below reads survivors
        without re-fingerprinting (``operators/dedup.fingerprint_dedup``).
     4. **Near-dup removal** — MinHash → LSH banding → exact-Jaccard
-       re-rank → connected components; every non-canonical cluster
-       member (cluster_id ≠ doc id) is dropped. Linear-cost at 100 TB:
+       re-rank (pairs at Jaccard ≥ 0.8) → connected components; every
+       non-canonical cluster member (cluster_id ≠ doc id) is dropped. Linear-cost at 100 TB:
        no O(n²) stage anywhere (see operators/dedup.py). MinHash runs
        once per doc in both pair modes: ``lsh_pair_mode="star"`` takes
        each bucket's hub as a window min over the banded signatures
@@ -215,12 +207,10 @@ def e4_corpus_prep(
        assembly — paraphrases duplicate meaning without sharing
        shingles, and only the embedding signal catches them. The
        hyperplane LSH uses 8 planes (256 buckets); the within-bucket
-       join is quadratic per bucket.
-       ``lsh_max_bucket_size`` is the degenerate-bucket backstop for
-       BOTH candidate generators (MinHash bands and hyperplane
-       buckets) — see ``operators/dedup.lsh_candidate_pairs``.
-    5. **Split** — hash-deterministic train/val/test assignment, stable
-       under corpus growth.
+       join is quadratic per bucket. Neither candidate generator caps
+       its bucket size.
+    5. **Split** — hash-deterministic 0.9/0.05/0.05 train/val/test
+       assignment (seed 0), stable under corpus growth.
     6. **Mix** (optional) — epoch-aware weighted domain up/down-sampling
        of the ``train`` split ONLY: re-weighting
        is a training-set operation — val/test must stay an unweighted
@@ -246,10 +236,12 @@ def e4_corpus_prep(
     shard_id)``. Feed it to ``sources/layout.write_partitioned``
     partitioned by ``(split, shard_id)`` to land actual shard files.
 
-    Every decision is deterministic (hash-membership, lowest-id
-    survivors, fixed tie-breaks), so two runs — or two engines — agree
-    row-for-row; ``tests/test_pipelines.py`` checks the composition
-    end-to-end and stage-by-stage.
+    Every hash comes from one family, ``default_hash_mode()``
+    (``SPARK_GRAFT_FAST_HASH``). Every decision is deterministic
+    (hash-membership, lowest-id survivors, fixed tie-breaks), so two
+    runs — or two engines — agree row-for-row;
+    ``tests/test_pipelines.py`` checks the composition end-to-end and
+    stage-by-stage.
     """
     from vbb_data_pipeline_spark.functions.hashing import default_hash_mode
     from vbb_data_pipeline_spark.functions.text import bpe_token_count, quality_score
@@ -267,8 +259,7 @@ def e4_corpus_prep(
     )
     from pyspark.sql import functions as F
 
-    mode = hash_mode or default_hash_mode()
-    weights = split_weights or {"train": 0.9, "val": 0.05, "test": 0.05}
+    mode = default_hash_mode()
 
     profiled = docs.withColumn("n_tokens", bpe_token_count("text")).withColumn(
         "quality", quality_score("text")
@@ -296,8 +287,7 @@ def e4_corpus_prep(
             kept.select("doc_id", "text"),
             "text",
             "doc_id",
-            window=span_window,
-            winnow=span_winnow,
+            winnow=4,
             hash_mode=mode,
         )
         # drop span-heavy documents UNLESS they are the min-id owner
@@ -337,18 +327,17 @@ def e4_corpus_prep(
         kept = decontaminate(
             kept,
             eval_df,
-            min_matches=decontam_min_matches,
+            min_matches=5,
             hash_mode=mode,
         )
     exact = fingerprint_dedup(kept, "text", "doc_id")
 
     sigs = minhash_signatures(exact, "text", "doc_id", hash_mode=mode)
     cands = lsh_candidate_pairs(
-        sigs, "doc_id", hash_mode=mode, max_bucket_size=lsh_max_bucket_size,
-        pair_mode=lsh_pair_mode,
+        sigs, "doc_id", hash_mode=mode, pair_mode=lsh_pair_mode
     )
     near = jaccard_pairs(exact, cands, "text", "doc_id", hash_mode=mode).filter(
-        F.col("jaccard") >= F.lit(jaccard_threshold)
+        F.col("jaccard") >= F.lit(0.8)
     ).select("id_a", "id_b")
     if embedding_col is not None:
         from vbb_data_pipeline_spark.operators.similarity import (
@@ -361,7 +350,6 @@ def e4_corpus_prep(
             threshold=0.9,
             id_col="doc_id",
             vec_col=embedding_col,
-            max_bucket_size=lsh_max_bucket_size,
         ).select("id_a", "id_b")
         near = near.unionByName(semantic).distinct()
         # the vector served its purpose: don't ship ~dim*8 bytes/row
@@ -374,21 +362,18 @@ def e4_corpus_prep(
     canonical = exact.join(losers, "doc_id", "left_anti")
 
     split = deterministic_split(
-        canonical, "doc_id", weights, seed=seed, hash_mode=mode
+        canonical,
+        "doc_id",
+        {"train": 0.9, "val": 0.05, "test": 0.05},
+        hash_mode=mode,
     )
     if mix_factors:
-        if "train" not in weights:
-            raise ValueError(
-                f"mix_factors re-weight the 'train' split, which is not a "
-                f"split name in {list(weights)}"
-            )
         mixed = weighted_domain_mix(
             split.filter(F.col("split") == F.lit("train")),
             "source",
             mix_factors,
             "doc_id",
             epoch=epoch,
-            seed=seed,
             hash_mode=mode,
         )
         rest = split.filter(F.col("split") != F.lit("train")).withColumn(
@@ -407,12 +392,9 @@ def e6_crawl_corpus(
     warc_path: str,
     *,
     input_format: str = "warc",
-    extractor: str = "density",
     max_per_host: int | None = None,
     host_cap_mode: str = "exact",
     boilerplate_min_docs: int | None = None,
-    langs: tuple[str, ...] | None = None,
-    min_chars: int = 1,
     run_e4: bool = True,
     ranged_chunk_bytes: int | None = None,
     materialize_dir: str | None = None,
@@ -425,13 +407,12 @@ def e6_crawl_corpus(
 
     1. **Ingest** — ``sources/warc.read_warc`` (one file = one task,
        the crawl parallelism model) → ``warc_to_documents`` (200-status
-       HTML → text, deterministic 60-bit doc ids). ``extractor``
-       selects the HTML tier: ``"naive"`` (all visible text) or
-       ``"density"`` (block word-count/link-density boilerplate
-       classification — higher body-text precision, same Arrow stage).
-       ``input_format="wet"`` starts from Common Crawl's pre-extracted
-       text distribution instead (``wet_to_documents`` — conversion
-       records, no HTML stage at all; ``extractor`` is ignored).
+       HTML → text, deterministic 60-bit doc ids) with the
+       ``"density"`` extractor (block word-count/link-density
+       boilerplate classification). ``input_format="wet"`` starts from Common
+       Crawl's pre-extracted text distribution instead
+       (``wet_to_documents`` — conversion records, no HTML stage at
+       all).
     2. **URL normalize** — ``functions/urls.normalize_url`` canonical
        form (tracking params, fragments, default ports stripped);
        documents whose URL has no parseable host are dropped (crawl
@@ -451,11 +432,16 @@ def e6_crawl_corpus(
     5. **Site boilerplate** (``boilerplate_min_docs``) — lines
        repeating across ≥ k documents of the same host are stripped
        (``functions/urls.site_boilerplate_removal``); documents left
-       with fewer than ``min_chars`` text characters drop out.
+       with empty text drop out.
     6. **Language ID** — ``lang`` column via the stopword-argmax
-       heuristic (``functions/text.lang_guess``); ``langs`` keeps only
-       those languages. ``source`` is the URL host — the natural
-       domain key for E4's ``mix_factors`` re-weighting.
+       heuristic (``functions/text.lang_guess``). No language is
+       dropped: the tag is a per-row column, so a caller that keeps
+       some languages calls with ``run_e4=False``, filters the curated
+       frame's ``lang`` column, and passes the result to
+       :func:`e4_corpus_prep` with ``lsh_pair_mode="star"`` — the same
+       rows a language filter inside E6 would keep. ``source`` is the
+       URL host — the natural domain key for E4's ``mix_factors``
+       re-weighting.
     7. **E4** — everything else (quality gates, exact/near/semantic
        dedup, decontamination, split/mix/pack) is a pass-through to
        :func:`e4_corpus_prep` via ``**e4_kwargs``, with star-edge LSH
@@ -514,7 +500,11 @@ def e6_crawl_corpus(
     # can stand in for a fresh curation pass. ranged_chunk_bytes is
     # deliberately absent: the ranged tier is byte-identical to the
     # whole-file read (parity-tested), so it never invalidates a
-    # resume.
+    # resume. The constant extractor, language set (none: no filter)
+    # and minimum text length stay in the marker under their option
+    # names, so that markers written while they were options still
+    # resume, and a change to one of them refuses an old frame
+    # instead of reusing it.
     import json as _json
 
     from vbb_data_pipeline_spark.functions.hashing import default_hash_mode
@@ -523,15 +513,13 @@ def e6_crawl_corpus(
         "warc_path": warc_path,
         "input_format": input_format,
         # the WET path never consults the extractor (conversion
-        # records are pre-extracted) — normalize it out of the marker
-        # so a restart that spells it differently doesn't force a
-        # spurious re-curation
-        "extractor": extractor if input_format == "warc" else None,
+        # records are pre-extracted)
+        "extractor": "density" if input_format == "warc" else None,
         "max_per_host": max_per_host,
         "host_cap_mode": host_cap_mode,
         "boilerplate_min_docs": boilerplate_min_docs,
-        "langs": list(langs) if langs is not None else None,
-        "min_chars": min_chars,
+        "langs": None,
+        "min_chars": 1,
         # RESOLVED mode: the hash family comes from the environment
         # (default_hash_mode), and a resume in a different environment
         # must not silently reuse a frame whose per-host winners were
@@ -583,7 +571,7 @@ def e6_crawl_corpus(
         return read_warc(spark, warc_path, types=types)
 
     if input_format == "warc":
-        docs = warc_to_documents(_read(), extractor=extractor)
+        docs = warc_to_documents(_read(), extractor="density")
     else:  # "wet" — validated above
         docs = wet_to_documents(_read(types=("conversion",)))
     docs = docs.withColumn("url", normalize_url("url")).filter(
@@ -607,7 +595,7 @@ def e6_crawl_corpus(
         docs = site_boilerplate_removal(
             docs, "url", min_docs=boilerplate_min_docs
         )
-    docs = docs.filter(F.length("text") >= F.lit(min_chars))
+    docs = docs.filter(F.length("text") >= F.lit(1))
     docs = docs.select(
         "doc_id",
         "url",
@@ -615,8 +603,6 @@ def e6_crawl_corpus(
         F.coalesce(url_host("url"), F.lit("unknown")).alias("source"),
         "text",
     )
-    if langs is not None:
-        docs = docs.filter(F.col("lang").isin(list(langs)))
     if not run_e4 and materialize_dir is None:
         # curated documents only (steps 1-6) — the URL-level plane, a
         # measurement/inspection surface and the hand-off point for

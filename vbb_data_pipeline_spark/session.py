@@ -26,7 +26,7 @@ from pyspark.sql import SparkSession
 #: (CRAWL_E2E.json round-8 disk_full row; 41 GB of lz4 shuffle blocks
 #: vs a zstd run that fit). Default-on for the e6 tooling since r9.
 #:
-#: shuffle.partitions: the engine default (= cpu count, 32 locally)
+#: shuffle.partitions: the engine default (= cpu count, 32 in that run)
 #: sizes per-task post-shuffle state at corpus_rows/32 — at the 55M-
 #: doc decade point the curation line aggregate's partial hash map
 #: hit UNABLE_TO_ACQUIRE_MEMORY under the 0.5 GB/task envelope
@@ -63,6 +63,22 @@ CRAWL_CONF = {
 }
 
 
+def _local_sizing(cpus: int | None) -> tuple[int, str]:
+    """``(cores, driver heap)`` of a local session: ``cpus``, else
+    ``SPARK_GRAFT_CPUS``, else every core of the host; and
+    ``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    in whole GiB, clamped to 1g-16g, so that two sessions on one box
+    fit in its memory."""
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
+        os.cpu_count() or 1
+    )
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{min(16, max(1, phys // 2 // 2**30))}g"
+    return cpus, mem
+
+
 def get_spark(
     app_name: str = "vbb-data-pipeline-spark",
     cpus: int | None = None,
@@ -76,7 +92,7 @@ def get_spark(
     so ``spark.sql.shuffle.partitions`` is an upper bound, not a tuning
     burden.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = _local_sizing(cpus)
     shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -87,7 +103,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

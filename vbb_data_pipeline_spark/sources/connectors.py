@@ -103,14 +103,12 @@ def write_kafka_batch(
 
 
 def kafka_source_spec(
-    bootstrap: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    **options: str,
+    bootstrap: str, topic: str, **options: str
 ) -> ConnectorSpec:
     """Batch Kafka read (the consume half of the S11/S12 round trip):
     ``spark.read.format("kafka")`` over the topic's full retained
-    range. Yields the standard Kafka columns (``key``, ``value``
+    range (``startingOffsets`` is ``"earliest"`` unless ``options``
+    sets it). Yields the standard Kafka columns (``key``, ``value``
     binary, ``topic``, ``partition``, ``offset``, ``timestamp``); cast
     ``value`` to string and feed the wire-format parser
     (``functions/jsonfns.parsed_arrivals``) to recover rows. Requires
@@ -119,7 +117,7 @@ def kafka_source_spec(
     opts = {
         "kafka.bootstrap.servers": bootstrap,
         "subscribe": topic,
-        "startingOffsets": starting_offsets,
+        "startingOffsets": "earliest",
     }
     opts.update(options)
     return ConnectorSpec("kafka", opts)

@@ -49,8 +49,7 @@ signature frame serves both the index probe and the index append
 (``operators/dedup.dedup_incremental_frames`` /
 ``dedup_index_write_frames``, the cores of the text-taking operators).
 The answer is the same as deriving them per consumer, because each
-is a deterministic function of ``(text, num_hashes, shingle_n,
-hash_mode)``.
+is a deterministic function of the text.
 """
 
 from __future__ import annotations
@@ -82,15 +81,9 @@ def corpus_ingest_batch(
     index_path: str,
     audit_path: str,
     min_quality: float = 0.3,
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-    bands: int = 4,
-    threshold: float = 0.7,
-    hash_mode: str = "fast",
     vec_col: str | None = None,
     embedding_index_path: str | None = None,
     centroids=None,
-    semantic_threshold: float = 0.9,
 ) -> None:
     """Ingest ONE micro-batch of ``(doc_id, text, ...)`` documents (also
     usable for plain batch loads).
@@ -101,12 +94,19 @@ def corpus_ingest_batch(
     where applicable). Only ``new`` docs reach ``corpus_path`` and
     the index(es).
 
+    The dedup tiers are fixed: 16 MinHash hashes over word 3-shingles
+    in 4 LSH bands, a near-dup at Jaccard ≥ 0.7 to an indexed doc, and
+    every hash is xxhash64 (hash mode ``"fast"``) whatever
+    ``SPARK_GRAFT_FAST_HASH`` says, so the at-rest index stays one
+    hash family across sessions.
+
     Semantic tier (optional): pass ``vec_col`` + ``embedding_index_
     path`` + ``centroids`` and docs surviving the text tiers are
     additionally probed against the corpus's at-rest IVF index
     (``operators/similarity.semdedup_incremental`` — catches
-    paraphrases/translations that share no shingles); survivors'
-    vectors append to that index partition-aligned.
+    paraphrases/translations that share no shingles) at cosine ≥ 0.9,
+    E4's semantic threshold; survivors' vectors append to that index
+    partition-aligned.
 
     Each text derivative is computed once per micro-batch: ``_q``
     (quality score) and ``_fp`` (fingerprint) are columns of the
@@ -116,11 +116,10 @@ def corpus_ingest_batch(
     the probe and the index append both read them. This is
     equivalent to the per-consumer derivation through
     ``dedup_incremental`` + ``dedup_index_write``: ``_q``, ``_fp`` and
-    the signature are deterministic functions of ``(text, num_hashes,
-    shingle_n, hash_mode)``, so each doc gets the same value whether it
-    is computed once or once per branch, and the survivors'
-    signatures are uniq's signatures restricted to the survivors
-    (survivors are a subset of uniq).
+    the signature are deterministic functions of the text, so each doc
+    gets the same value whether it is computed once or once per branch,
+    and the survivors' signatures are uniq's signatures restricted to
+    the survivors (survivors are a subset of uniq).
     """
     from vbb_data_pipeline_spark.functions.text import (
         fingerprint,
@@ -136,13 +135,6 @@ def corpus_ingest_batch(
     spark = batch.sparkSession
     null_l = F.lit(None).cast("long")
     null_d = F.lit(None).cast("double")
-    sig_params = dict(
-        id_col=id_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-        bands=bands,
-        hash_mode=hash_mode,
-    )
 
     # 0. replay guard: ids already ingested contribute nothing
     fps = _read_or_none(spark, f"{index_path}/fps")
@@ -197,8 +189,7 @@ def corpus_ingest_batch(
     # survivors, the index append. Narrow (id, mh_*) frame, pinned
     # because both consumers read it.
     sig = minhash_signatures(
-        uniq.filter(F.col("_fp").isNotNull()),
-        text_col, id_col, num_hashes, shingle_n, hash_mode,
+        uniq.filter(F.col("_fp").isNotNull()), text_col, id_col
     ).localCheckpoint(eager=True)
 
     # 3. probe the at-rest index (first batch: everything is new)
@@ -211,9 +202,7 @@ def corpus_ingest_batch(
         )
     else:
         verdicts = dedup_incremental_frames(
-            uniq_fp, uniq_fp, sig, index_path,
-            threshold=threshold,
-            **sig_params,
+            uniq_fp, uniq_fp, sig, index_path
         ).select(id_col, "status", "dup_of", "similarity")
     verdicts = verdicts.localCheckpoint(eager=True)
 
@@ -236,7 +225,7 @@ def corpus_ingest_batch(
                 cand.select(id_col, vec_col),
                 embedding_index_path,
                 centroids,
-                threshold=semantic_threshold,
+                threshold=0.9,
                 id_col=id_col,
                 vec_col=vec_col,
             ).select(
@@ -359,7 +348,6 @@ def corpus_ingest_batch(
         sig.join(F.broadcast(new_ids), id_col, "left_semi"),
         index_path,
         mode="append",
-        **sig_params,
     )
 
 
